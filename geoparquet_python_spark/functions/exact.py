@@ -24,6 +24,8 @@ codegen, no Python involved.
 from __future__ import annotations
 
 import gc
+import logging
+import threading
 import weakref
 
 from pyspark.sql import Column
@@ -156,6 +158,11 @@ def spread(df):
 # _KNN_EDGE_CACHE) hold the materialized wrapper itself, so their
 # weakrefs stay live and their blocks are never touched.
 _LIVE_CHECKPOINTS: list = []
+# materialize() appends from build_concurrently's threads while
+# release_dead_checkpoints() rewrites the list; one lock serializes both
+# so no entry appended mid-sweep is dropped (and its blocks leaked).
+_LIVE_LOCK = threading.Lock()
+_log = logging.getLogger(__name__)
 
 
 def materialize(df):
@@ -171,7 +178,8 @@ def materialize(df):
         # wrapping the persisted RDD — grab the JVM handle for the
         # dead-checkpoint sweeper.
         jrdd = out._jdf.queryExecution().analyzed().rdd()
-        _LIVE_CHECKPOINTS.append((weakref.ref(out), jrdd))
+        with _LIVE_LOCK:
+            _LIVE_CHECKPOINTS.append((weakref.ref(out), jrdd))
     except Exception:
         pass  # non-standard plan shape: fall back to async cleanup
     return out
@@ -198,24 +206,28 @@ def build_concurrently(*thunks):
     InheritableThread is PySpark's sanctioned wrapper so JVM
     thread-local properties (job description/group) are inherited and
     cleaned up. The one shared Python-side structure these thunks
-    touch, _LIVE_CHECKPOINTS, is only append()ed — atomic under the
-    GIL. The CALLER contracts that thunks are independent: none may
-    consume another's frames. Results are then identical to
-    sequential construction (each leg's plan and checkpoint content
-    depend only on its own inputs; pinned by
+    touch, _LIVE_CHECKPOINTS, is appended by materialize() and
+    rewritten by release_dead_checkpoints(); both hold _LIVE_LOCK, so
+    a sweep running beside a threaded build drops no entry. The
+    CALLER contracts that thunks are independent: none may consume
+    another's frames. Results are then identical to sequential
+    construction (each leg's plan and checkpoint content depend only
+    on its own inputs; pinned by
     tests/test_llm_ops.py::test_build_concurrently_matches_sequential).
-    The first thunk exception (if any) is re-raised after all threads
-    join, so no leg is silently dropped."""
+    After all threads join, the failure of the LOWEST-index failing
+    thunk is re-raised — the same one on every run, whatever order
+    the threads failed in — and every other failure is logged, so no
+    leg's error is silently dropped."""
     from pyspark import InheritableThread
 
     results: list = [None] * len(thunks)
-    errors: list = []
+    errors: list = [None] * len(thunks)
 
     def run(i, fn):
         try:
             results[i] = fn()
         except BaseException as e:  # noqa: BLE001 — re-raised below
-            errors.append(e)
+            errors[i] = e
 
     threads = [
         InheritableThread(target=run, args=(i, fn))
@@ -225,8 +237,11 @@ def build_concurrently(*thunks):
         t.start()
     for t in threads:
         t.join()
-    if errors:
-        raise errors[0]
+    failed = [(i, e) for i, e in enumerate(errors) if e is not None]
+    for i, e in failed[1:]:
+        _log.error("build_concurrently: leg %d failed too", i, exc_info=e)
+    if failed:
+        raise failed[0][1]
     return results
 
 
@@ -243,14 +258,15 @@ def release_dead_checkpoints() -> int:
     materialized DataFrame itself."""
     gc.collect()  # collect dropped wrappers so their weakrefs clear
     kept, freed = [], 0
-    for ref, jrdd in _LIVE_CHECKPOINTS:
-        if ref() is None:
-            try:
-                jrdd.unpersist(False)
-                freed += 1
-            except Exception:
-                pass
-        else:
-            kept.append((ref, jrdd))
-    _LIVE_CHECKPOINTS[:] = kept
+    with _LIVE_LOCK:
+        for ref, jrdd in _LIVE_CHECKPOINTS:
+            if ref() is None:
+                try:
+                    jrdd.unpersist(False)
+                    freed += 1
+                except Exception:
+                    pass
+            else:
+                kept.append((ref, jrdd))
+        _LIVE_CHECKPOINTS[:] = kept
     return freed

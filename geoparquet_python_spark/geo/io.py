@@ -37,6 +37,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geoparquet_python_spark.geo import wkb
 from geoparquet_python_spark.geo.functions import st_envelope
 
 GEO_KEY = b"geo"
@@ -45,17 +46,6 @@ GEO_KEY = b"geo"
 LEGACY_KEY = b"geometry_fields"
 
 SPEC_VERSION = "1.1.0"
-
-
-_WKB_TYPE_NAMES = {
-    1: "Point",
-    2: "LineString",
-    3: "Polygon",
-    4: "MultiPoint",
-    5: "MultiLineString",
-    6: "MultiPolygon",
-    7: "GeometryCollection",
-}
 
 
 def _geo_column_entry(
@@ -127,7 +117,7 @@ def _type_code_names(codes: set[int]) -> list[str]:
     variants (1000/2000/3000 offsets) map to the suffixed spec form."""
     names = []
     for c in sorted(codes):
-        base = _WKB_TYPE_NAMES.get(c % 1000)
+        base = wkb._NAMES.get(c % 1000)
         if base is None:
             continue
         suffix = {0: "", 1: " Z", 2: " M", 3: " ZM"}.get(c // 1000, "")

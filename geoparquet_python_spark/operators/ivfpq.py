@@ -5,13 +5,14 @@ of Jégou et al.'s "Product Quantization for Nearest Neighbor Search"
 deploys. (SURVEY.md §2.F3 [N]-scope; the reference has no vector
 surface.)
 
-Composition of two already-certified trainers, nothing new invented:
-- coarse quantizer: operators/kmeans.py's deterministic fixed-point
-  Lloyd cells (K=8, T=3) — unchanged, shared cache;
-- fine quantizer: operators/pq.py's per-subspace codebooks (M=8,
-  K=16, T=2), trained here on the coarse RESIDUALS x − c(cell)
-  rather than raw vectors (the residual trick: PQ spends its 32 bits
-  on the within-cell remainder, where the variance lives);
+Both quantizers come from the one shared fixed-point Lloyd trainer
+(kmeans._lloyd, one centroid cache), nothing new invented:
+- coarse quantizer: operators/kmeans.py's cells, the trainer at M = 1
+  (K=8, T=3);
+- fine quantizer: operators/pq.py's per-subspace codebooks, the
+  trainer at M = 8 (K=16, T=2), trained here on the coarse RESIDUALS
+  x − c(cell) rather than raw vectors (the residual trick: PQ spends
+  its 32 bits on the within-cell remainder, where the variance lives);
 - search: probe NPROBE cells per query, build the per-(query, cell)
   ADC lookup table against the QUERY residual, score candidates as M
   integer table lookups, shortlist by estimated distance, then exact
@@ -29,7 +30,7 @@ re-rank's shortlist fetch, exactly how a production IVFADC store
 lays out hot/cold columns.
 
 Determinism: residuals are int64 differences of already-exact
-fixed-point vectors, so both trainers and every distance below are
+fixed-point vectors, so both codebooks and every distance below are
 bit-identical in Spark, DuckDB, and the driver loop; ADC shortlist
 ties break to the lowest candidate id, final rank to
 (cosine DESC, cid).
@@ -90,15 +91,16 @@ def _residual_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _train_residual_pq(
     spark: SparkSession, sf_dir: str, res: DataFrame | None = None
 ) -> list[list[list[int]]]:
-    """``res``: an already-materialized residual frame to train on
-    (optimization r13: _encoded_corpus checkpoints the residuals once
-    and shares them between the PQ training iterations and the encode
-    projection — previously each Lloyd iteration re-executed the whole
-    scan → assign-UDF → residual lineage)."""
-    frame = res if res is not None else _residual_frame(spark, sf_dir)
+    """The residual codebook: pq's M = 8 use of the shared trainer
+    (kmeans._lloyd) over the coarse residuals. ``res``: an
+    already-materialized residual frame to train on — _encoded_corpus
+    checkpoints the residuals once and shares them between the PQ
+    training iterations and the encode projection."""
     return pq._train_pq_frame(
-        frame.select("vec_id", "xfix"),
-        f"ivfpq-residual|{sf_dir}|{pq._M}|{pq._K}|{pq._T}",
+        lambda: (
+            res if res is not None else _residual_frame(spark, sf_dir)
+        ).select("vec_id", "xfix"),
+        f"ivfpq-residual|{sf_dir}",
     )
 
 
@@ -117,12 +119,9 @@ def _encoded_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _ENC_CACHE:
         # One residual pass, checkpointed, feeds BOTH the PQ training
-        # iterations and the encode projection (optimization r13): the
-        # residual lineage (scan → assign UDF → zip_with) used to
-        # re-execute once per Lloyd iteration plus once for the encode.
-        # At 100 TB this is the explicit staging table an ingest
-        # pipeline writes between its quantizer-training and encode
-        # steps.
+        # iterations and the encode projection. At 100 TB this is the
+        # explicit staging table an ingest pipeline writes between its
+        # quantizer-training and encode steps.
         res = materialize(_residual_frame(spark, sf_dir))
         pq_cents = _train_residual_pq(spark, sf_dir, res)
         _ENC_CACHE[key] = materialize(

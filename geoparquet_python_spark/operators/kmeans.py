@@ -25,6 +25,13 @@ a few MB, still broadcast-friendly), iterations stay fixed, and the
 per-iteration shuffle stays K*dim keys. Empty clusters keep their
 previous centroid (same rule in the SQL mirror).
 
+Shared trainer: _lloyd is the one fixed-point Lloyd driver loop of
+the vector family — k-means here is its M = 1 case, and the PQ
+codebooks (pq.py) and the IVFADC residual codebooks (ivfpq.py) are
+its M = 8 case (a product quantizer is k-means in each of M
+subspaces, Jégou et al.). _SCALE, _XFIX and _tdiv below are the
+fixed-point contract of every vector operator.
+
 Determinism contract: fixed-point xfix = floor(x * 1e6) per dim;
 distances are int64 sums of squared int diffs (order-independent);
 argmin ties break to the lowest cid (array_position finds the FIRST
@@ -34,6 +41,8 @@ and the driver loop (_tdiv).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,16 +56,17 @@ from geoparquet_python_spark.functions.vector import (
     norm2_scaled,
     sql_pair_dot_scaled,
 )
-from geoparquet_python_spark.functions.exact import broadcast_bounded
+from geoparquet_python_spark.functions.exact import broadcast_bounded, materialize
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.registry import query
 
 _K = 8  # clusters (cells)
 _T = 3  # fixed Lloyd iterations
-_SCALE = 1_000_000  # per-dim fixed point
+_SCALE = 1_000_000  # per-dim fixed point of every vector operator
 _NQ = 10  # query vectors: vec_id < _NQ
 _NPROBE = 2  # cells probed per query
 _TOPK = 3
+_F64_SAFE = 1 << 23  # |int64| bound under which dgemm is exact (_assign_expr)
 
 _XFIX = (
     f"transform(embedding, x -> "
@@ -82,18 +92,16 @@ def _argmin_prep(cents: list[list[int]]):
 
     c = np.asarray(cents, dtype=np.int64)  # K×d
     c2 = (c * c).sum(axis=1)  # |c_k|^2, int64
-    _F64_SAFE = 1 << 23
     c_blas = c.astype(np.float64) if np.abs(c).max() < _F64_SAFE else None
     return c, c2, c_blas
 
 
 def _argmin_cells(x, c, c2, c_blas):
     """First-minimum nearest-centroid ids for an (n × d) int64 batch —
-    the exact math of _assign_expr, shared with the fused training
-    kernel so the two paths can never diverge."""
+    the exact math of _assign_expr, shared with the trainer's kernel
+    (via _argmin_subspaces) so the two paths can never diverge."""
     import numpy as np
 
-    _F64_SAFE = 1 << 23
     if c_blas is not None and (len(x) == 0 or np.abs(x).max() < _F64_SAFE):
         dots = (x.astype(np.float64) @ c_blas.T).astype(np.int64)
     else:  # exact fallback: naive int64 matmul
@@ -140,7 +148,7 @@ def _assign_expr(cents: list[list[int]]) -> F.Column:
     # sits far inside the bound; the guard re-checks per batch and
     # falls back to the exact int64 loop rather than trusting it.
     # (The math lives in _argmin_prep/_argmin_cells, shared with the
-    # fused training kernel in _train.)
+    # trainer's kernel, _lloyd_stats_kernel.)
     c, c2, c_blas = _argmin_prep(cents)
 
     # No type annotations on the UDF: the module's `from __future__
@@ -157,25 +165,37 @@ def _assign_expr(cents: list[list[int]]) -> F.Column:
     return assign(F.col("xfix"))
 
 
-def _train_stats_kernel(cents: list[list[int]]):
-    """mapInArrow kernel for one Lloyd update: assign each row to its
-    nearest centroid (the exact _argmin_cells math) AND reduce to
-    per-(cid, d) partial sums/counts INSIDE the task (guide §2.3 —
-    aggregate before you shuffle). Emits at most K×d partial rows per
-    task instead of n×d exploded value rows, so the per-iteration
-    exchange carries a few hundred rows at any corpus size; the
-    downstream groupBy(cid, d) merges task partials and the driver
-    collects K×d finals (the canonical k-means driver loop,
-    unchanged)."""
+def _argmin_subspaces(x, preps):
+    """(n × M) first-minimum centroid ids of each row's M equal-width
+    subvectors — one _argmin_cells call per subspace, ``preps`` holding
+    one _argmin_prep per subspace codebook. k-means is M = 1; the PQ
+    encoder (pq._codes_udf) and the trainer kernel share this loop."""
+    import numpy as np
+
+    subd = x.shape[1] // len(preps)
+    out = np.empty((len(x), len(preps)), dtype=np.int64)
+    for m, prep in enumerate(preps):
+        out[:, m] = _argmin_cells(x[:, m * subd : (m + 1) * subd], *prep)
+    return out
+
+
+def _lloyd_stats_kernel(cents: list[list[list[int]]]):
+    """mapInArrow kernel for one Lloyd update of an M-subspace codebook
+    ``cents[m][cid][d]``: assign each row's M subvectors to their
+    nearest centroids (_argmin_subspaces) AND reduce to per-(m, cid, d)
+    partial sums/counts INSIDE the task (guide §2.3 — aggregate before
+    you shuffle). Emits at most M×K×SUBD partial rows per task instead
+    of n×dim exploded value rows, so the per-iteration exchange stays
+    codebook-sized at any corpus size."""
 
     def kernel(it):
         import numpy as np
         import pyarrow as pa
 
-        c, c2, c_blas = _argmin_prep(cents)
-        k, d = c.shape
-        sv = np.zeros((k, d), dtype=np.int64)
-        n = np.zeros(k, dtype=np.int64)
+        preps = [_argmin_prep(sub) for sub in cents]
+        m_n, k, subd = len(cents), len(cents[0]), len(cents[0][0])
+        sv = np.zeros((m_n, k, subd), dtype=np.int64)
+        n = np.zeros((m_n, k), dtype=np.int64)
         seen = False
         for batch in it:
             if batch.num_rows == 0:
@@ -187,86 +207,104 @@ def _train_stats_kernel(cents: list[list[int]]):
             x = (
                 vals[off[0] : off[-1]]
                 .astype(np.int64, copy=False)
-                .reshape(len(col), d)
+                .reshape(len(col), m_n * subd)
             )
-            cid = _argmin_cells(x, c, c2, c_blas)
-            order = np.argsort(cid, kind="stable")
-            cs = cid[order]
-            xs = x[order]
-            starts = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
-            counts = np.diff(np.r_[starts, len(cs)])
-            np.add.at(sv, cs[starts], np.add.reduceat(xs, starts, axis=0))
-            np.add.at(n, cs[starts], counts)
+            codes = _argmin_subspaces(x, preps)
+            for m in range(m_n):
+                order = np.argsort(codes[:, m], kind="stable")
+                cs = codes[order, m]
+                xs = x[order, m * subd : (m + 1) * subd]
+                starts = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
+                counts = np.diff(np.r_[starts, len(cs)])
+                np.add.at(sv[m], cs[starts], np.add.reduceat(xs, starts, axis=0))
+                np.add.at(n[m], cs[starts], counts)
         if not seen:
             return
-        nz = np.flatnonzero(n)
+        ms, cids = np.nonzero(n)
         yield pa.RecordBatch.from_pydict(
             {
-                "cid": np.repeat(nz, d),
-                "d": np.tile(np.arange(d, dtype=np.int64), len(nz)),
-                "sv": sv[nz].ravel(),
-                "n": np.repeat(n[nz], d),
+                "m": np.repeat(ms, subd),
+                "cid": np.repeat(cids, subd),
+                "d": np.tile(np.arange(subd, dtype=np.int64), len(ms)),
+                "sv": sv[ms, cids].ravel(),
+                "n": np.repeat(n[ms, cids], subd),
             }
         )
 
     return kernel
 
 
-_CENT_CACHE: dict[str, list[list[int]]] = {}
+_CENT_CACHE: dict[str, list[list[list[int]]]] = {}
+
+
+def _lloyd(
+    frame: Callable[[], DataFrame], key: str, k: int, m: int, t: int
+) -> list[list[list[int]]]:
+    """The fixed-point Lloyd trainer shared by k-means (M = 1), PQ and
+    the IVFADC residual PQ (M = 8): ``t`` synchronous iterations over
+    the (vec_id, xfix) frame that ``frame()`` builds, returning the
+    codebook ``cents[m][cid][d]`` of each of the ``m`` equal-width
+    subspaces.
+
+    ``frame`` is called only on a cache miss, so the caller decides
+    what to materialize and a cached model costs no plan and no job.
+    Init is the ``k`` lowest vec_ids' subvectors; each iteration is one
+    _lloyd_stats_kernel pass plus a (m, cid, d) aggregate collected to
+    the driver, where the update is an int64 sum over a truncating
+    division (_tdiv) and an empty cluster keeps its centroid — the
+    rule of the unrolled-CTE oracles (_sql_kmeans_ctes,
+    pq._sql_pq_ctes)."""
+    key = f"{key}|{k}|{m}|{t}|{_SCALE}"
+    if key in _CENT_CACHE:
+        return _CENT_CACHE[key]
+    x = frame()
+    init = x.where(F.col("vec_id") < k).orderBy("vec_id").collect()
+    subd = len(init[0]["xfix"]) // m
+    cents = [
+        [list(r["xfix"][j * subd : (j + 1) * subd]) for r in init]
+        for j in range(m)
+    ]
+    for _ in range(t):
+        rows = (
+            x.select("xfix")
+            .mapInArrow(
+                _lloyd_stats_kernel(cents),
+                "m bigint, cid bigint, d bigint, sv bigint, n bigint",
+            )
+            .groupBy("m", "cid", "d")
+            .agg(F.sum("sv").alias("sv"), F.sum("n").alias("n"))
+            .collect()
+        )
+        # an empty cluster emits no partials and keeps its centroid
+        new = [[list(c) for c in sub] for sub in cents]
+        for r in rows:
+            new[r["m"]][r["cid"]][r["d"]] = _tdiv(r["sv"], r["n"])
+        cents = new
+    _CENT_CACHE[key] = cents
+    return cents
 
 
 def _train(
     spark: SparkSession, sf_dir: str, k: int | None = None
 ) -> list[list[int]]:
-    """T Lloyd iterations; returns the final k x dim int64 matrix.
+    """k-means centroids: the shared trainer (_lloyd) at M = 1, T = _T;
+    returns the final k x dim int64 matrix.
 
     ``k`` defaults to the module's fixed _K; callers whose contract
     scales the cell count with the corpus (SemDeDup — the paper runs
     50k clusters for LAION) pass their computed k and get a separate
-    cache entry. Everything downstream (_assign_expr, the driver
-    update loop) adapts to len(cents)."""
+    cache entry. Everything downstream (_assign_expr) adapts to
+    len(cents). The training input is materialized once and feeds the
+    init collect and every iteration (MLlib's persist-the-training-input
+    pattern)."""
     k = _K if k is None else k
-    key = f"{sf_dir}|{k}|{_T}|{_SCALE}"
-    if key in _CENT_CACHE:
-        return _CENT_CACHE[key]
-    from geoparquet_python_spark.functions.exact import materialize
-
-    # One scan+fixed-point pass feeds the init collect and every Lloyd
-    # iteration (optimization r13): T+1 executions of the
-    # scan→transform lineage become one pass + a persisted read per
-    # iteration — exactly MLlib's persist-the-training-input pattern
-    # (measured 1.09 → 0.99 s locally; at scale it removes T corpus
-    # scans).
-    x = materialize(_fixed_points(spark, sf_dir).select("vec_id", "xfix"))
-    init = x.where(F.col("vec_id") < k).orderBy("vec_id").collect()
-    cents = [list(r["xfix"]) for r in init]
-    for _ in range(_T):
-        # Optimization r13 (guide §2.3): assignment AND the per-(cid, d)
-        # partial reduction run in ONE Arrow pass (_train_stats_kernel)
-        # — the previous shape assigned in an ArrowEvalPython node, then
-        # posexploded n×d value rows into the update exchange; fused,
-        # the exchange carries ≤ K×d partial rows per task at any
-        # corpus size. Assignment math is byte-shared with _assign_expr
-        # (_argmin_cells), so the two paths cannot diverge; the update
-        # arithmetic (int64 sums, truncating division, empty cluster
-        # keeps its centroid) is unchanged and remains pinned by the
-        # unrolled-CTE oracles of every consumer.
-        stats = (
-            x.select("xfix")
-            .mapInArrow(
-                _train_stats_kernel(cents),
-                "cid bigint, d bigint, sv bigint, n bigint",
-            )
-            .groupBy("cid", "d")
-            .agg(F.sum("sv").alias("sv"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new = [list(c) for c in cents]  # empty cluster -> keep centroid
-        for r in stats:
-            new[r["cid"]][r["d"]] = _tdiv(r["sv"], r["n"])
-        cents = new
-    _CENT_CACHE[key] = cents
-    return cents
+    return _lloyd(
+        lambda: materialize(_fixed_points(spark, sf_dir).select("vec_id", "xfix")),
+        f"kmeans|{sf_dir}",
+        k,
+        1,
+        _T,
+    )[0]
 
 
 def _sql_assign(src_cents: str, out: str, where: str = "") -> str:

@@ -4,14 +4,15 @@ asymmetric distance computation (ADC) — the storage layout every
 100 TB-scale vector store uses (a billion 64-dim float32 vectors =
 256 GB raw; their PQ codes = 4 GB, RAM-resident).
 
-Training is the same deterministic fixed-point Lloyd scheme as
-operators/kmeans.py, run for all 8 subspaces IN ONE DataFrame pass
-per iteration (subspace id is just another aggregation key), so the
-cost is one corpus scan per iteration regardless of M. Codes are a
-map-only projection against the codebook literal; ADC search
-broadcasts the query-side lookup table (per (subspace, centroid)
-partial distances — M*K rows per query) and never shuffles the
-corpus except the (qid, vec) partial-distance rollup.
+Training is the shared fixed-point Lloyd trainer of
+operators/kmeans.py (kmeans._lloyd) at M = 8: all 8 subspaces run IN
+ONE DataFrame pass per iteration (subspace id is just another
+aggregation key), so the cost is one corpus scan per iteration
+regardless of M. Codes are a map-only projection against the codebook
+literal; ADC search broadcasts the query-side lookup table (per
+(subspace, centroid) partial distances — M*K rows per query) and
+never shuffles the corpus except the (qid, vec) partial-distance
+rollup.
 
 Everything is int64 fixed point (floor(x*1e6) per dim), truncating
 integer division for centroid updates — bit-identical in Spark,
@@ -21,37 +22,24 @@ ADC distances are all oracle-exact.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.exact import broadcast_narrow
-from geoparquet_python_spark.io import load_table
+from geoparquet_python_spark.operators import kmeans as km
 from geoparquet_python_spark.registry import query
 
 _M = 8  # subspaces
 _SUBD = 8  # dims per subspace (64 / _M)
 _K = 16  # centroids per subspace (4-bit codes)
 _T = 2  # Lloyd iterations
-_SCALE = 1_000_000
 _NQ = 10
 _TOPK = 3
 
-_XFIX = (
-    f"transform(embedding, x -> "
-    f"CAST(floor(CAST(x AS DOUBLE) * {_SCALE}) AS BIGINT))"
-)
 _POW16 = "array(" + ",".join(str(1 << (4 * m)) for m in range(_M)) + ")"
 _POW16_SQL = "[" + ",".join(str(1 << (4 * m)) for m in range(_M)) + "]"
-
-
-def _tdiv(s: int, n: int) -> int:
-    q = abs(s) // n
-    return q if s >= 0 else -q
-
-
-def _fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", F.expr(_XFIX).alias("xfix"))
 
 
 def _cb_lit(cents: list[list[list[int]]]) -> F.Column:
@@ -79,25 +67,14 @@ def _codes_udf(cents: list[list[list[int]]]) -> F.Column:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    from geoparquet_python_spark.operators.kmeans import (
-        _argmin_cells,
-        _argmin_prep,
-    )
-
-    preps = [_argmin_prep(sub) for sub in cents]
+    preps = [km._argmin_prep(sub) for sub in cents]
 
     @pandas_udf("array<bigint>")
     def codes(xf):
         if len(xf) == 0:
             return pd.Series([], dtype="object")
         x = np.vstack(xf.to_numpy()).astype(np.int64, copy=False)  # B×dim
-        out = np.empty((len(x), _M), dtype=np.int64)
-        for m in range(_M):
-            sub = x[:, m * _SUBD : (m + 1) * _SUBD]  # B×SUBD
-            # shared first-minimum argmin (kmeans._argmin_cells): same
-            # |c|²−2x·c scores, dgemm when every value is f64-exact
-            out[:, m] = _argmin_cells(sub, *preps[m])
-        return pd.Series(list(out))
+        return pd.Series(list(km._argmin_subspaces(x, preps)))
 
     return codes(F.col("xfix"))
 
@@ -111,111 +88,22 @@ def _codes_expr(cents: list[list[list[int]]]) -> tuple[F.Column, F.Column]:
     return _codes_udf(cents), _cb_lit(cents)
 
 
-def _pq_stats_kernel(cents: list[list[list[int]]]):
-    """mapInArrow kernel for one PQ Lloyd update across ALL subspaces:
-    per batch, code every row's M subvectors (the exact _codes_udf
-    argmin math, shared via kmeans._argmin_cells) and reduce to
-    per-(m, cid, d) partial sums/counts inside the task (guide §2.3) —
-    at most M×K×SUBD partial rows per task instead of n×M×SUBD
-    exploded value rows crossing the update exchange."""
-
-    def kernel(it):
-        import numpy as np
-        import pyarrow as pa
-
-        from geoparquet_python_spark.operators.kmeans import (
-            _argmin_cells,
-            _argmin_prep,
-        )
-
-        preps = [_argmin_prep(sub) for sub in cents]
-        sv = np.zeros((_M, _K, _SUBD), dtype=np.int64)
-        n = np.zeros((_M, _K), dtype=np.int64)
-        seen = False
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            seen = True
-            col = batch.column("xfix")
-            off = col.offsets.to_numpy(zero_copy_only=False)
-            vals = col.values.to_numpy(zero_copy_only=False)
-            x = (
-                vals[off[0] : off[-1]]
-                .astype(np.int64, copy=False)
-                .reshape(len(col), _M * _SUBD)
-            )
-            for m in range(_M):
-                sub = x[:, m * _SUBD : (m + 1) * _SUBD]
-                cid = _argmin_cells(sub, *preps[m])
-                order = np.argsort(cid, kind="stable")
-                cs = cid[order]
-                xs = sub[order]
-                starts = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
-                counts = np.diff(np.r_[starts, len(cs)])
-                np.add.at(
-                    sv[m], cs[starts], np.add.reduceat(xs, starts, axis=0)
-                )
-                np.add.at(n[m], cs[starts], counts)
-        if not seen:
-            return
-        ms, cids = np.nonzero(n)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "m": np.repeat(ms, _SUBD),
-                "cid": np.repeat(cids, _SUBD),
-                "d": np.tile(np.arange(_SUBD, dtype=np.int64), len(ms)),
-                "sv": sv[ms, cids].ravel(),
-                "n": np.repeat(n[ms, cids], _SUBD),
-            }
-        )
-
-    return kernel
-
-
-_PQ_CACHE: dict[str, list[list[list[int]]]] = {}
-
-
 def _train_pq(spark: SparkSession, sf_dir: str) -> list[list[list[int]]]:
-    return _train_pq_frame(_fixed(spark, sf_dir), f"{sf_dir}|{_M}|{_K}|{_T}")
+    return _train_pq_frame(
+        lambda: km._fixed_points(spark, sf_dir).select("vec_id", "xfix"),
+        f"pq|{sf_dir}",
+    )
 
 
-def _train_pq_frame(x: DataFrame, key: str) -> list[list[list[int]]]:
-    """Train the PQ codebook over any (vec_id, xfix) frame — the raw
-    fixed-point embeddings (q_pq_codes/q_pq_adc_topk) or the coarse
-    residuals (ivfpq.py). Same deterministic contract either way."""
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
-    init = x.where(F.col("vec_id") < _K).orderBy("vec_id").collect()
-    cents = [
-        [list(r["xfix"][m * _SUBD : (m + 1) * _SUBD]) for r in init]
-        for m in range(_M)
-    ]
-    for _ in range(_T):
-        # Optimization r13 (guide §2.3): coding AND the per-(m, cid, d)
-        # partial reduction run in ONE Arrow pass (_pq_stats_kernel) —
-        # the previous shape also built an M×K×SUBD codebook literal
-        # (`__cb`, ~1k py4j Column constructions per iteration) that
-        # the plan then dropped unused, and exploded n×M×SUBD value
-        # rows into the update exchange. Update arithmetic (int64 sums,
-        # truncating division, empty cluster keeps its centroid) is
-        # unchanged; coding math is byte-shared with _codes_udf via
-        # kmeans._argmin_cells.
-        rows = (
-            x.select("xfix")
-            .mapInArrow(
-                _pq_stats_kernel(cents),
-                "m bigint, cid bigint, d bigint, sv bigint, n bigint",
-            )
-            .groupBy("m", "cid", "d")
-            .agg(F.sum("sv").alias("sv"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new = [[list(c) for c in sub] for sub in cents]
-        for r in rows:
-            new[r["m"]][r["cid"]][r["d"]] = _tdiv(r["sv"], r["n"])
-        cents = new
-    _PQ_CACHE[key] = cents
-    return cents
+def _train_pq_frame(
+    frame: Callable[[], DataFrame], key: str
+) -> list[list[list[int]]]:
+    """The M×K×SUBD codebook from the shared fixed-point Lloyd trainer
+    (kmeans._lloyd at M = _M) over the (vec_id, xfix) frame that
+    ``frame()`` builds — the raw fixed-point embeddings
+    (q_pq_codes/q_pq_adc_topk) or the coarse residuals (ivfpq.py).
+    Same deterministic contract either way."""
+    return km._lloyd(frame, key, _K, _M, _T)
 
 
 def _sql_pq_ctes(src_xf: str | None = None, prefix: str = "") -> str:
@@ -248,7 +136,7 @@ def _sql_pq_ctes(src_xf: str | None = None, prefix: str = "") -> str:
         parts.append(f"""{src_xf} AS (
       SELECT vec_id,
              list_transform(embedding, x ->
-               CAST(floor(CAST(x AS DOUBLE) * {_SCALE}) AS BIGINT)) AS xfix
+               CAST(floor(CAST(x AS DOUBLE) * {km._SCALE}) AS BIGINT)) AS xfix
       FROM embeddings
     )""")
     parts.append(f"""{n("xs")} AS (
@@ -310,7 +198,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _train_pq(spark, sf_dir)
     codes, cb = _codes_expr(cents)
     enc = (
-        _fixed(spark, sf_dir)
+        km._fixed_points(spark, sf_dir)
         .withColumn("__cb", cb)
         .select("vec_id", "xfix", codes.alias("codes"))
     )
@@ -379,7 +267,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _train_pq(spark, sf_dir)
     codes, cb = _codes_expr(cents)
     enc = (
-        _fixed(spark, sf_dir)
+        km._fixed_points(spark, sf_dir)
         .withColumn("__cb", cb)
         .select("vec_id", codes.alias("codes"))
     )
@@ -392,7 +280,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("c"),
     ).select("cvec", F.col("c.m").alias("m"), F.col("c.cid").alias("cid"))
-    q = _fixed(spark, sf_dir).where(F.col("vec_id") < _NQ)
+    q = km._fixed_points(spark, sf_dir).where(F.col("vec_id") < _NQ)
     lut = (
         q.withColumn("__cb", cb)
         .select(

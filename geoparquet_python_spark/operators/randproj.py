@@ -40,20 +40,15 @@ from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.exact import broadcast_bounded, spread
 from geoparquet_python_spark.io import load_table
+from geoparquet_python_spark.operators.kmeans import _SCALE, _XFIX, _tdiv
 from geoparquet_python_spark.registry import query
 
 _DIM = 64
 _D = 16  # projected dimensionality
-_SCALE = 1_000_000
 _NQ = 10  # audit pair set: vec_id < _NQ (45 pairs)
 _PCA_T = 2  # power-iteration rounds
 _VNORM = 1 << 20  # v renormalization target: max|v| after each round
 _SDIV = 1 << 26  # mat-vec rescale divisor between the two half-steps
-
-_XFIX = (
-    f"transform(embedding, x -> "
-    f"CAST(floor(CAST(x AS DOUBLE) * {_SCALE}) AS BIGINT))"
-)
 
 
 def _sign_rows() -> list[list[int]]:
@@ -337,11 +332,6 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 64 rows collected per round: the trainer driver-loop contract.
         rows = {int(r["i"]): int(r["u"]) for r in u.collect()}
         mx = max((abs(x) for x in rows.values()), default=1) or 1
-
-        def _tdiv(a: int, b: int) -> int:
-            q = abs(a) // b
-            return q if a >= 0 else -q
-
         v = [(i, _tdiv(rows.get(i, 0) * _VNORM, mx)) for i in range(1, _DIM + 1)]
     out = spark.createDataFrame(v, "d bigint, v_fixed bigint")
     return out.orderBy("d")

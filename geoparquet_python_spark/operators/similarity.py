@@ -1322,9 +1322,10 @@ def _cell_knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """(qid, cid) edge frame of each vector's top-k cosine neighbors
     within its trained k-means cell — the Spark twin of
     _sql_cell_knn_ctes, computed by the vectorized per-cell kernel
-    (optimization r13; see _cell_knn_kernel for the exactness
-    argument; the replaced self-join + row_number form is kept as
-    _cell_knn_edges_reference and pinned equal by pytest).
+    (see _cell_knn_kernel for the exactness argument; the replaced
+    self-join + row_number form lives in
+    tests/test_llm_ops.py::test_cell_knn_kernel_matches_jvm_form,
+    which pins the two equal).
 
     Materialized (localCheckpoint) and cached per (session, corpus, k):
     the kNN graph is built once and consumed by label propagation,
@@ -1345,42 +1346,6 @@ def _cell_knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     )
     _KNN_EDGE_CACHE[cache_key] = edges
     return edges
-
-
-def _cell_knn_edges_reference(
-    spark: SparkSession, sf_dir: str, k: int
-) -> DataFrame:
-    """The pre-r13 JVM form (cell self-join + interpreted dot_scaled +
-    row_number top-k), kept UNCACHED as the equivalence reference for
-    the kernel's pin test."""
-    base = _cell_knn_base(spark, sf_dir).withColumn(
-        "n2", norm2_scaled("embedding")
-    )
-    a = base.select(
-        F.col("vec_id").alias("qid"),
-        F.col("cell").alias("q_cell"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("cid"),
-        F.col("cell").alias("c_cell"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
-    pairs = a.join(
-        b, (F.col("q_cell") == F.col("c_cell")) & (F.col("qid") != F.col("cid"))
-    )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("qid", "cid")
-    )
 
 
 def _sql_lp_oracle() -> str:

@@ -54,9 +54,9 @@ def clear_derived_caches() -> int:
     """Empty every module-level cache of trained/derived intermediates
     keyed on the testdata path; returns how many entries were dropped.
 
-    These caches (IVFPQ encodings/LUTs, kNN edges, k-means and PQ
-    centroids) exist so a long verification session does not retrain
-    identical models hundreds of times. For TIMING they are a hazard:
+    These caches (IVFPQ encodings/LUTs, kNN edges, and the Lloyd
+    trainer's k-means/PQ centroids) exist so a long verification
+    session does not retrain identical models hundreds of times. For TIMING they are a hazard:
     under a best-of-N protocol the minimum reflects the warm-cache
     path, so the recorded number measures query-over-prebuilt-index
     instead of the declared end-to-end computation (optimization r13,
@@ -70,7 +70,6 @@ def clear_derived_caches() -> int:
     """
     import geoparquet_python_spark.operators.ivfpq as _ivfpq
     import geoparquet_python_spark.operators.kmeans as _kmeans
-    import geoparquet_python_spark.operators.pq as _pq
     import geoparquet_python_spark.operators.similarity as _similarity
 
     dropped = 0
@@ -78,7 +77,6 @@ def clear_derived_caches() -> int:
         _ivfpq._ENC_CACHE,
         _ivfpq._LUT_CACHE,
         _kmeans._CENT_CACHE,
-        _pq._PQ_CACHE,
         _similarity._KNN_EDGE_CACHE,
     ):
         dropped += len(cache)

@@ -11,7 +11,6 @@ import pytest
 
 from geoparquet_python_spark import registry
 from geoparquet_python_spark.operators import kmeans as kmeans_mod
-from geoparquet_python_spark.operators import pq as pq_mod
 
 registry.load_all()
 
@@ -43,10 +42,9 @@ def test_partition_count_invariance(spark, sf_dir, name):
     try:
         for parts in ("7", "32"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-            # training caches memoize across runs — clear so each
-            # parallelism level actually retrains
+            # the Lloyd trainer's centroid cache memoizes across runs —
+            # clear it so each parallelism level actually retrains
             kmeans_mod._CENT_CACHE.clear()
-            pq_mod._PQ_CACHE.clear()
             rows = registry.QUERIES[name](spark, sf_dir).collect()
             results.append(sorted(map(tuple, rows)))
     finally:
@@ -79,6 +77,79 @@ def test_release_dead_checkpoints_frees_only_dead(spark):
     assert freed_again == 0, "sweep freed a still-live checkpoint"
     del live
     assert release_dead_checkpoints() >= 1
+
+
+class _FakeRDD:
+    unpersisted = False
+
+    def unpersist(self, blocking):
+        self.unpersisted = True
+
+
+class _FakeFrame:
+    """Stands in for a DataFrame in materialize(): localCheckpoint()
+    returns a frame whose analyzed plan's rdd() is a _FakeRDD."""
+
+    def localCheckpoint(self):
+        from types import SimpleNamespace
+
+        out = _FakeFrame()
+        out.rdd = rdd = _FakeRDD()
+        plan = SimpleNamespace(rdd=lambda: rdd)
+        qe = SimpleNamespace(analyzed=lambda: plan)
+        out._jdf = SimpleNamespace(queryExecution=lambda: qe)
+        return out
+
+
+def test_checkpoint_registry_survives_concurrent_sweeps(monkeypatch):
+    """ADVICE r13 #3: materialize() from many threads while
+    release_dead_checkpoints() sweeps. Every live frame's entry must
+    survive — without _LIVE_LOCK, an entry appended between a sweep's
+    scan and its rewrite of _LIVE_CHECKPOINTS would be dropped and its
+    blocks leaked — and no live frame may be unpersisted. Spark-free:
+    fake frames stand in for DataFrames."""
+    import sys
+    import threading
+
+    from geoparquet_python_spark.functions import exact
+
+    # skip the sweep's full gc pass so sweeps run back to back: every
+    # wrapper here stays live, so there is nothing for gc to clear
+    monkeypatch.setattr(exact.gc, "collect", lambda: 0)
+    live: list = []
+    stop = threading.Event()
+
+    def build():
+        for _ in range(200):
+            live.append(exact.materialize(_FakeFrame()))
+
+    def sweep():
+        while not stop.is_set():
+            exact.release_dead_checkpoints()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        sweeper = threading.Thread(target=sweep)
+        sweeper.start()
+        builders = [threading.Thread(target=build) for _ in range(8)]
+        for t in builders:
+            t.start()
+        for t in builders:
+            t.join(timeout=120)
+        stop.set()
+        sweeper.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not sweeper.is_alive()
+    assert not any(t.is_alive() for t in builders)
+    assert len(live) == 8 * 200
+    registered = {id(ref()) for ref, _ in exact._LIVE_CHECKPOINTS}
+    lost = [f for f in live if id(f) not in registered]
+    assert not lost, f"{len(lost)} live checkpoints dropped by a sweep"
+    assert not any(f.rdd.unpersisted for f in live)
+    live.clear()
+    exact.release_dead_checkpoints()
 
 
 def test_spread_skips_exchange_when_splits_suffice(spark):

@@ -4,6 +4,8 @@ multimodal decode determinism."""
 
 from __future__ import annotations
 
+import pytest
+
 from geoparquet_python_spark import registry
 
 registry.load_all()
@@ -2231,6 +2233,50 @@ def test_sig_bitcount_kernel_matches_sql_aggregate(spark, sf_dir_small):
         assert ref.exceptAll(got).count() == 0
 
 
+def _cell_knn_edges_reference(spark, sf_dir, k):
+    """The JVM form the per-cell kNN kernel replaced (cell self-join +
+    interpreted dot_scaled + row_number top-k), uncached: the
+    equivalence reference for the kernel's pin test below."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from geoparquet_python_spark.functions.vector import (
+        cosine_from_scaled,
+        dot_scaled,
+        norm2_scaled,
+    )
+    from geoparquet_python_spark.operators.similarity import _cell_knn_base
+
+    base = _cell_knn_base(spark, sf_dir).withColumn(
+        "n2", norm2_scaled("embedding")
+    )
+    a = base.select(
+        F.col("vec_id").alias("qid"),
+        F.col("cell").alias("q_cell"),
+        F.col("embedding").alias("q_emb"),
+        F.col("n2").alias("q_n2"),
+    )
+    b = base.select(
+        F.col("vec_id").alias("cid"),
+        F.col("cell").alias("c_cell"),
+        F.col("embedding").alias("c_emb"),
+        F.col("n2").alias("c_n2"),
+    )
+    pairs = a.join(
+        b, (F.col("q_cell") == F.col("c_cell")) & (F.col("qid") != F.col("cid"))
+    )
+    cos = cosine_from_scaled(
+        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
+    )
+    wk = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
+    return (
+        pairs.select("qid", "cid", cos.alias("cosine"))
+        .withColumn("rank", F.row_number().over(wk))
+        .where(F.col("rank") <= k)
+        .select("qid", "cid")
+    )
+
+
 def test_cell_knn_kernel_matches_jvm_form(spark, sf_dir_small):
     """r13 optimization guard: the vectorized per-cell kNN kernel
     (numpy fixed-point cosine + stable top-k) must produce the exact
@@ -2240,7 +2286,6 @@ def test_cell_knn_kernel_matches_jvm_form(spark, sf_dir_small):
     m−1)."""
     from geoparquet_python_spark.operators.similarity import (
         _cell_knn_edges,
-        _cell_knn_edges_reference,
         _KNN_EDGE_CACHE,
     )
 
@@ -2374,12 +2419,16 @@ def test_minhash_band_kernel_matches_hof_form(spark, sf_dir_small):
     assert ref.exceptAll(got).count() == 0
 
 
-def test_build_concurrently_matches_sequential(spark, sf_dir_small):
+def test_build_concurrently_matches_sequential(spark, sf_dir_small, caplog):
     """r13 optimization guard (guide §2.6): q_hybrid_rrf_topk builds
     its two independent ranker legs from driver threads so their
     materialize() jobs overlap. The threaded construction must yield
     the exact result of sequential construction — and thunk errors
-    must propagate, not vanish with the thread."""
+    must propagate, not vanish with the thread: the lowest-index
+    failure is raised and the others are logged."""
+    import logging
+    import time
+
     import pytest
     from pyspark.sql import functions as F
 
@@ -2415,37 +2464,158 @@ def test_build_concurrently_matches_sequential(spark, sf_dir_small):
             lambda: 1, lambda: (_ for _ in ()).throw(ValueError("leg boom"))
         )
 
+    # two legs fail, leg 0 last: leg 0's error is raised on every run
+    # (ADVICE r13 #1) and leg 2's is logged, not dropped
+    def fail(msg, delay=0.0):
+        def thunk():
+            time.sleep(delay)
+            raise ValueError(msg)
 
-def test_sig_bitcount_kernel_tolerates_empty_batches():
-    """ADVICE r12: MapInBatch paths may hand the kernel a zero-row
-    Arrow batch under future Spark versions; it must skip it instead of
-    crashing (np.r_[True, ...] on an empty array fabricates a start
-    index 0 and ds[starts] raises IndexError). Pure-Python: the kernel
-    closure is exercised directly, no Spark session."""
+        return thunk
+
+    for _ in range(3):
+        caplog.clear()
+        with caplog.at_level(logging.ERROR, "geoparquet_python_spark"):
+            with pytest.raises(ValueError, match="leg zero"):
+                build_concurrently(
+                    fail("leg zero", delay=0.2), lambda: 1, fail("leg two")
+                )
+        logged = [r for r in caplog.records if r.exc_info]
+        assert len(logged) == 1
+        assert str(logged[0].exc_info[1]) == "leg two"
+
+
+def _kernel_case(name):
+    """(kernel, zero-row batch, data batch) for one Arrow kernel."""
+    import numpy as np
     import pyarrow as pa
 
-    from geoparquet_python_spark.operators.dedup import (
-        _W240_COLS,
-        _W240_HASH_COLS,
-        _sig_bitcount_kernel,
-    )
+    if name == "sig_bitcount":
+        from geoparquet_python_spark.operators.dedup import (
+            _W240_COLS,
+            _W240_HASH_COLS,
+            _sig_bitcount_kernel,
+        )
 
-    schema = pa.schema(
-        [("doc_id", pa.int64())] + [(c, pa.int64()) for c in _W240_HASH_COLS]
-    )
+        kernel = _sig_bitcount_kernel(_W240_HASH_COLS, _W240_COLS)
+        schema = pa.schema(
+            [("doc_id", pa.int64())] + [(c, pa.int64()) for c in _W240_HASH_COLS]
+        )
+        data = {"doc_id": [1, 1, 2]}
+        for c in _W240_HASH_COLS:
+            data[c] = [3, 5, 7]
+    elif name.startswith("lloyd_m"):
+        from geoparquet_python_spark.operators.kmeans import _lloyd_stats_kernel
+
+        m = int(name[len("lloyd_m") :])
+        x = np.random.default_rng(3).integers(-1000, 1000, size=(20, 16))
+        subd = 16 // m
+        kernel = _lloyd_stats_kernel(
+            [x[:4, j * subd : (j + 1) * subd].tolist() for j in range(m)]
+        )
+        schema = pa.schema([("xfix", pa.list_(pa.int64()))])
+        data = {"xfix": x.tolist()}
+    elif name == "minhash_band":
+        from geoparquet_python_spark.operators.dedup import _minhash_band_kernel
+
+        kernel = _minhash_band_kernel()
+        schema = pa.schema(
+            [
+                ("doc_id", pa.int64()),
+                ("h1", pa.list_(pa.int64())),
+                ("h2", pa.list_(pa.int64())),
+            ]
+        )
+        data = {
+            "doc_id": [1, 2, 3],
+            "h1": [[11, 12, 13], [], [14]],
+            "h2": [[21, 22, 23], [], [24]],
+        }
+    else:
+        from geoparquet_python_spark.operators.similarity import _cell_knn_kernel
+
+        kernel = _cell_knn_kernel(2)
+        schema = pa.schema(
+            [
+                ("vec_id", pa.int64()),
+                ("cell", pa.int64()),
+                ("embedding", pa.list_(pa.float32())),
+            ]
+        )
+        emb = np.random.default_rng(5).normal(size=(7, 4)).astype(np.float32)
+        data = {
+            "vec_id": list(range(7)),
+            "cell": [0, 1, 0, 1, 0, 2, 1],  # cell 2 is a singleton
+            "embedding": emb.tolist(),
+        }
     empty = pa.RecordBatch.from_pydict(
         {n: [] for n in schema.names}, schema=schema
     )
-    data = {"doc_id": [1, 1, 2]}
-    for c in _W240_HASH_COLS:
-        data[c] = [3, 5, 7]
-    rb = pa.RecordBatch.from_pydict(data, schema=schema)
+    return kernel, empty, pa.RecordBatch.from_pydict(data, schema=schema)
 
-    kernel = _sig_bitcount_kernel(_W240_HASH_COLS, _W240_COLS)
-    # all-empty input: no output batches, no crash
+
+@pytest.mark.parametrize(
+    "name", ["sig_bitcount", "lloyd_m1", "lloyd_m8", "minhash_band", "cell_knn"]
+)
+def test_kernel_tolerates_empty_batches(name):
+    """ADVICE r12: MapInBatch paths may hand a kernel a zero-row Arrow
+    batch under future Spark versions; it must skip it instead of
+    crashing (np.r_[True, ...] on an empty array fabricates a start
+    index 0 and ds[starts] raises IndexError). For every mapInArrow
+    kernel: all-empty input yields no batch, and empty batches
+    interleaved with data give the output of the data alone.
+    Pure-Python: the kernel closures run directly, no Spark session."""
+    kernel, empty, rb = _kernel_case(name)
     assert list(kernel(iter([empty]))) == []
-    # empty batches interleaved with rows: same output as rows alone
+    assert list(kernel(iter([empty, empty]))) == []
     with_empties = list(kernel(iter([empty, rb, empty])))
     rows_only = list(kernel(iter([rb])))
-    assert len(with_empties) == len(rows_only) == 1
-    assert with_empties[0].equals(rows_only[0])
+    assert len(with_empties) == len(rows_only) >= 1
+    for got, want in zip(with_empties, rows_only):
+        assert got.equals(want)
+
+
+@pytest.mark.parametrize("m", [1, 8])
+def test_lloyd_stats_kernel_matches_brute_force(m):
+    """The shared Lloyd kernel's (m, cid, d, sv, n) partials equal a
+    brute-force numpy per-(m, cid, d) sum and count: nearest centroid
+    per subspace by exact int64 squared distance (first minimum), over
+    a random int64 matrix fed as uneven, offset-carrying Arrow slices.
+    Spark-free."""
+    import numpy as np
+    import pyarrow as pa
+
+    from geoparquet_python_spark.operators.kmeans import _lloyd_stats_kernel
+
+    rng = np.random.default_rng(11)
+    n_rows, dim, k = 101, 64, 16
+    subd = dim // m
+    x = rng.integers(-(1 << 20), 1 << 20, size=(n_rows, dim), dtype=np.int64)
+    cents = rng.integers(-(1 << 20), 1 << 20, size=(m, k, subd), dtype=np.int64)
+
+    sv = np.zeros((m, k, subd), dtype=np.int64)
+    cnt = np.zeros((m, k), dtype=np.int64)
+    for j in range(m):
+        sub = x[:, j * subd : (j + 1) * subd]
+        dist = ((sub[:, None, :] - cents[j][None, :, :]) ** 2).sum(axis=2)
+        for row, cid in enumerate(np.argmin(dist, axis=1)):
+            sv[j, cid] += sub[row]
+            cnt[j, cid] += 1
+    want = sorted(
+        (j, c, d, int(sv[j, c, d]), int(cnt[j, c]))
+        for j in range(m)
+        for c in range(k)
+        if cnt[j, c]
+        for d in range(subd)
+    )
+
+    whole = pa.RecordBatch.from_pydict(
+        {"xfix": x.tolist()}, schema=pa.schema([("xfix", pa.list_(pa.int64()))])
+    )
+    cuts = [0, 1, 7, 30, 31, n_rows]
+    batches = [whole.slice(a, b - a) for a, b in zip(cuts[:-1], cuts[1:])]
+    out = list(_lloyd_stats_kernel(cents.tolist())(iter(batches)))
+    assert len(out) == 1
+    cols = out[0].to_pydict()
+    got = sorted(zip(cols["m"], cols["cid"], cols["d"], cols["sv"], cols["n"]))
+    assert got == want
