@@ -247,7 +247,11 @@ def build_concurrently(*thunks):
 
 def release_dead_checkpoints() -> int:
     """Unpersist localCheckpoint blocks whose Python DataFrame wrapper
-    has been garbage-collected; returns how many were freed.
+    has been garbage-collected; returns how many were freed. Also drops
+    every ``sink_*`` temp view of the active session: each streaming
+    drain (run_to_memory_table) leaves one, holding its output in the
+    driver heap. A frame already built on such a view keeps its rows;
+    the view itself is needed only while a query is being built.
 
     SAFETY CONTRACT: call only BETWEEN queries (a derived DataFrame can
     outlive its materialized parent's Python wrapper WITHIN a query —
@@ -269,4 +273,21 @@ def release_dead_checkpoints() -> int:
             else:
                 kept.append((ref, jrdd))
         _LIVE_CHECKPOINTS[:] = kept
+    _drop_sink_views()
     return freed
+
+
+def _drop_sink_views() -> None:
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return
+    # The session catalog lists temp views in ~1 ms; the public
+    # spark.catalog.listTables costs ~0.2 s per call, which would add
+    # up over a release step that runs before every query.
+    views = (
+        spark._jsparkSession.sessionState().catalog().listLocalTempViews("sink_*")
+    )
+    for name in [views.apply(i).table() for i in range(views.size())]:
+        spark.catalog.dropTempView(name)

@@ -12,6 +12,19 @@ sums ≤ ~10^14 — far inside int64.
 
 Cost: one fused JVM expression per pair, inside whole-stage codegen;
 no Python, no explode, no shuffle for the arithmetic itself.
+
+Cosine search helpers, shared by every exact and approximate top-k,
+kNN-graph and near-duplicate query of the vector family:
+- :func:`vec_side` projects one side of a pair join: ``vec_id`` under
+  the side's id name, then the side's passthrough columns, then
+  ``embedding`` as ``<p>_emb`` and its fixed-point norm as ``<p>_n2``;
+- :func:`pair_cosine` is the fixed-point cosine of two such sides;
+- :func:`cosine_top_k` keeps each query's ``k`` best pairs.
+
+Tie-break policy: the top-k total order is ``(cosine DESC, cid ASC)``,
+spelled as ``row_number() OVER (PARTITION BY qid ORDER BY cosine DESC,
+cid)`` in every DuckDB oracle; :func:`cosine_top_k` is its only Spark
+spelling.
 """
 
 from __future__ import annotations
@@ -19,7 +32,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 FIXED_POINT = 1e12
@@ -45,6 +58,37 @@ def cosine_from_scaled(dot_s: Column, na_s: Column, nb_s: Column) -> Column:
     """Cosine from fixed-point dot + squared norms (IEEE-deterministic)."""
     to_d = lambda c: c.cast("double") / F.lit(FIXED_POINT)  # noqa: E731
     return to_d(dot_s) / (F.sqrt(to_d(na_s)) * F.sqrt(to_d(nb_s)))
+
+
+def vec_side(
+    df: DataFrame, id_col: str, p: str, *passthrough: Column | str
+) -> DataFrame:
+    """One side of a pair join: ``vec_id AS <id_col>``, the passthrough
+    columns, ``embedding AS <p>_emb`` and ``norm2_scaled AS <p>_n2``."""
+    return df.select(
+        F.col("vec_id").alias(id_col),
+        *passthrough,
+        F.col("embedding").alias(f"{p}_emb"),
+        norm2_scaled("embedding").alias(f"{p}_n2"),
+    )
+
+
+def pair_cosine(a: str, b: str, dot=dot_scaled) -> Column:
+    """Fixed-point cosine of the ``a`` and ``b`` sides built by
+    :func:`vec_side`. ``dot``: :func:`dot_scaled`, or its bit-identical
+    Arrow twin :func:`dot_scaled_arrow` for a join-refine hot path."""
+    return cosine_from_scaled(
+        dot(f"{a}_emb", f"{b}_emb"), F.col(f"{a}_n2"), F.col(f"{b}_n2")
+    )
+
+
+def cosine_top_k(pairs: DataFrame, k: int, cid: str = "cid") -> DataFrame:
+    """Each ``qid``'s ``k`` best pairs by ``(cosine DESC, <cid> ASC)``,
+    ranked 1..k in a ``rank`` column."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(cid))
+    return pairs.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def dot_scaled_arrow(a: Column | str, b: Column | str) -> Column:

@@ -127,7 +127,7 @@ def q_pyds_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batch", _STREAM_BATCH)
         .load()
     )
-    name = f"pyds_sink_{uuid.uuid4().hex[:12]}"
+    name = f"sink_{uuid.uuid4().hex[:12]}"
     q = (
         stream.writeStream.format("memory")
         .queryName(name)

@@ -49,10 +49,10 @@ from geoparquet_python_spark.functions.vector import (
     SQL_COSINE,
     SQL_FLAT_EMBEDDINGS,
     SQL_NORMS,
-    cosine_from_scaled,
-    dot_scaled,
-    norm2_scaled,
+    cosine_top_k,
+    pair_cosine,
     sql_pair_dot_scaled,
+    vec_side,
 )
 from geoparquet_python_spark.io import register_scratch
 from geoparquet_python_spark.operators import kmeans as km
@@ -134,22 +134,19 @@ def _encoded_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ENC_CACHE[key]
 
 
-def _encoded_code_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index exploded to (cvec, c_cell, m, cid) lookup rows."""
-    return (
-        _encoded_corpus(spark, sf_dir)
-        .select(
-            "cvec",
-            "c_cell",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {pq._M - 1}), "
-                    f"m -> struct(m AS m, codes[m] AS cid))"
-                )
-            ).alias("c"),
-        )
-        .select("cvec", "c_cell", F.col("c.m").alias("m"), F.col("c.cid").alias("cid"))
-    )
+def _code_rows(index: DataFrame, cell: str) -> DataFrame:
+    """An index frame (cvec, <cell>, codes) exploded to
+    (cvec, c_cell, m, cid) lookup rows."""
+    return index.select(
+        "cvec",
+        F.col(cell).alias("c_cell"),
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {pq._M - 1}), "
+                f"m -> struct(m AS m, codes[m] AS cid))"
+            )
+        ).alias("c"),
+    ).select("cvec", "c_cell", F.col("c.m").alias("m"), F.col("c.cid").alias("cid"))
 
 
 _LUT_CACHE: dict[tuple[str, str], tuple[list, list[int]]] = {}
@@ -314,13 +311,27 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     The full billion-scale ANN pipeline as one declarative plan: the
     cached index frame (_encoded_corpus) is the corpus side, the
     driver-built LUT (_driver_lut) the query side."""
-    code_rows = _encoded_code_rows(spark, sf_dir)
+    code_rows = _code_rows(_encoded_corpus(spark, sf_dir), "c_cell")
     lut, _ = _driver_lut(spark, sf_dir)
+    return _adc_rerank(spark, sf_dir, code_rows, lut)
 
-    # ADC: M lookups per candidate, summed; candidates stream
-    # cell-locally against the broadcast LUT — no corpus shuffle. The
-    # LUT is a local relation of exactly NQ×NPROBE×M×K atomic rows, so
-    # broadcast_narrow's structural guard applies.
+
+def _adc_rerank(
+    spark: SparkSession, sf_dir: str, code_rows: DataFrame, lut: DataFrame
+) -> DataFrame:
+    """The IVFADC search tail: ADC distance estimate, shortlist, exact
+    re-rank. ``code_rows``: (cvec, c_cell, m, cid) index lookup rows;
+    ``lut``: the driver-built (qid, q_cell, q_m, q_cid, pd) table.
+
+    ADC: M lookups per candidate, summed; candidates stream
+    cell-locally against the broadcast LUT — no corpus shuffle. The
+    LUT is a local relation of exactly NQ×NPROBE×M×K atomic rows, so
+    broadcast_narrow's structural guard applies. The shortlist is
+    bounded by construction — the rn <= _SHORTLIST WindowGroupLimit
+    caps rows per qid and the qid domain comes from the NQ-row LUT —
+    so it broadcasts structurally too, driver-sized at any corpus
+    size. Nothing here is materialized, so a partition-pruned store
+    scan stays visible in the final plan."""
     est = (
         code_rows.join(
             broadcast_narrow(lut),
@@ -333,14 +344,6 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("pd").alias("dist_est"))
     )
     ws = Window.partitionBy("qid").orderBy("dist_est", "cvec")
-    # Optimization r13: the shortlist is bounded BY CONSTRUCTION — the
-    # rn <= _SHORTLIST WindowGroupLimit caps rows per qid and the qid
-    # domain comes from the NQ-row LUT — so the structural
-    # broadcast_narrow (two atomic columns, no runtime count) replaces
-    # the broadcast_bounded count guard, which cost one extra action
-    # and forced a localCheckpoint (another action) to keep the count
-    # from re-executing the ADC rollup. Two driver-loop jobs saved per
-    # search; the broadcast stays driver-sized at any corpus size.
     short = (
         est.withColumn("rn", F.row_number().over(ws))
         .where(F.col("rn") <= _SHORTLIST)
@@ -348,34 +351,18 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Exact re-rank of the shortlist only.
-    emb = km._fixed_points(spark, sf_dir).select(
-        "vec_id", "embedding", norm2_scaled("embedding").alias("n2")
-    )
-    qe = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    ce = emb.select(
-        F.col("vec_id").alias("cvec"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
+    emb = km._fixed_points(spark, sf_dir)
     pairs = (
         broadcast_narrow(short)
-        .join(qe, "qid")
-        .join(ce, "cvec")
+        .join(vec_side(emb, "qid", "q"), "qid")
+        .join(vec_side(emb, "cvec", "c"), "cvec")
     )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    wr = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", F.col("cvec").alias("cid"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= _TOPK)
-        .orderBy("qid", "rank")
-    )
+    return cosine_top_k(
+        pairs.select(
+            "qid", F.col("cvec").alias("cid"), pair_cosine("q", "c").alias("cosine")
+        ),
+        _TOPK,
+    ).orderBy("qid", "rank")
 
 
 @query(
@@ -498,64 +485,4 @@ def q_ivfpq_cell_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same bounded-driver-literal class as the k-means/PQ trainers.
     lut, probed = _driver_lut(spark, sf_dir)
     store = spark.read.parquet(path).where(F.col("cell").isin(probed))
-    code_rows = store.select(
-        "cvec",
-        F.col("cell").alias("c_cell"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {pq._M - 1}), "
-                f"m -> struct(m AS m, codes[m] AS cid))"
-            )
-        ).alias("c"),
-    ).select("cvec", "c_cell", F.col("c.m").alias("m"), F.col("c.cid").alias("cid"))
-
-    est = (
-        code_rows.join(
-            broadcast_narrow(lut),
-            (F.col("c_cell") == F.col("q_cell"))
-            & (F.col("m") == F.col("q_m"))
-            & (F.col("cid") == F.col("q_cid")),
-        )
-        .where(F.col("cvec") != F.col("qid"))
-        .groupBy("qid", "cvec")
-        .agg(F.sum("pd").alias("dist_est"))
-    )
-    ws = Window.partitionBy("qid").orderBy("dist_est", "cvec")
-    # NO materialize here (unlike q_ann_topk_ivfpq): the guard's extra
-    # execution only re-reads the pruned store partitions (cheap), and
-    # a checkpoint would sever the lineage so the partition-pruned
-    # store scan disappears from the final executed plan — the exact
-    # property tests/test_plans.py asserts.
-    short = (
-        est.withColumn("rn", F.row_number().over(ws))
-        .where(F.col("rn") <= _SHORTLIST)
-        .select("qid", "cvec")
-    )
-    emb = km._fixed_points(spark, sf_dir).select(
-        "vec_id", "embedding", norm2_scaled("embedding").alias("n2")
-    )
-    qe = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    ce = emb.select(
-        F.col("vec_id").alias("cvec"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
-    pairs = (
-        broadcast_narrow(short)
-        .join(qe, "qid")
-        .join(ce, "cvec")
-    )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    wr = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", F.col("cvec").alias("cid"), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= _TOPK)
-        .orderBy("qid", "rank")
-    )
+    return _adc_rerank(spark, sf_dir, _code_rows(store, "cell"), lut)

@@ -44,16 +44,16 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.vector import (
     SQL_COSINE,
     SQL_FLAT_EMBEDDINGS,
     SQL_NORMS,
-    cosine_from_scaled,
-    dot_scaled,
+    cosine_top_k,
     norm2_scaled,
+    pair_cosine,
     sql_pair_dot_scaled,
 )
 from geoparquet_python_spark.functions.exact import broadcast_bounded, materialize
@@ -460,6 +460,8 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _fixed_points(spark, sf_dir).select(
         "vec_id", "embedding", "xfix", norm2_scaled("embedding").alias("n2")
     )
+    # Own side projections: the cell / probe-cell columns follow the
+    # norm here, where vec_side puts passthrough columns before it.
     corpus = base.select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("c_emb"),
@@ -497,13 +499,6 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus,
         (F.col("q_cell") == F.col("cell")) & (F.col("qid") != F.col("cid")),
     )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _TOPK)
-        .orderBy("qid", "rank")
-    )
+    return cosine_top_k(
+        pairs.select("qid", "cid", pair_cosine("q", "c").alias("cosine")), _TOPK
+    ).orderBy("qid", "rank")

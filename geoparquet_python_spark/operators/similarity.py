@@ -28,9 +28,12 @@ from geoparquet_python_spark.functions.vector import (
     SQL_FLAT_EMBEDDINGS,
     SQL_NORMS,
     cosine_from_scaled,
+    cosine_top_k,
     dot_scaled,
     dot_scaled_arrow,
     norm2_scaled,
+    pair_cosine,
+    vec_side,
 )
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.registry import query
@@ -79,30 +82,14 @@ def q_cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row_number pattern with (cosine DESC, cid) total order.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select("vec_id", "embedding", norm2_scaled("embedding").alias("n2"))
-    q = base.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    c = base.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
+    q = vec_side(e.where(F.col("vec_id") < 10), "qid", "q")
+    c = vec_side(e, "cid", "c")
     # Bounded-by-contract: the query set is vec_id < 10 — wide payload
     # (embeddings) is allowed through the runtime-asserted helper only.
     pairs = broadcast_bounded(q, max_rows=64).join(c, F.col("qid") != F.col("cid"))
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return cosine_top_k(
+        pairs.select("qid", "cid", pair_cosine("q", "c").alias("cosine")), 5
+    ).orderBy("qid", "rank")
 
 
 @query(
@@ -131,34 +118,16 @@ def q_ann_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse quantizer, same plan shape).
     """
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id", "label", "embedding", norm2_scaled("embedding").alias("n2")
+    q = vec_side(
+        e.where(F.col("vec_id") < 50), "qid", "q", F.col("label").alias("q_label")
     )
-    q = base.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    c = base.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("c_label"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
+    c = vec_side(e, "cid", "c", F.col("label").alias("c_label"))
     pairs = q.join(
         c, (F.col("q_label") == F.col("c_label")) & (F.col("qid") != F.col("cid"))
     )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .orderBy("qid", "rank")
-    )
+    return cosine_top_k(
+        pairs.select("qid", "cid", pair_cosine("q", "c").alias("cosine")), 3
+    ).orderBy("qid", "rank")
 
 
 @query(
@@ -180,23 +149,11 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a small, meaningful pair set.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select("vec_id", "embedding", norm2_scaled("embedding").alias("n2"))
-    a = base.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("n2").alias("a_n2"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("n2").alias("b_n2"),
-    )
-    cos = cosine_from_scaled(
-        dot_scaled("a_emb", "b_emb"), F.col("a_n2"), F.col("b_n2")
-    )
+    a = vec_side(e, "vec_a", "a")
+    b = vec_side(e, "vec_b", "b")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cos.alias("cosine"))
+        .select("vec_a", "vec_b", pair_cosine("a", "b").alias("cosine"))
         .where(F.col("cosine") >= 0.45)
         .orderBy("vec_a", "vec_b")
     )
@@ -641,23 +598,10 @@ def q_hyperplane_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select("vec_id", "embedding", norm2_scaled("embedding").alias("n2"))
-    a = base.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("n2").alias("a_n2"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("n2").alias("b_n2"),
-    )
-    cos = cosine_from_scaled(
-        dot_scaled_arrow("a_emb", "b_emb"), F.col("a_n2"), F.col("b_n2")
-    )
+    cos = pair_cosine("a", "b", dot=dot_scaled_arrow)
     return (
-        cand.join(a, "vec_a")
-        .join(b, "vec_b")
+        cand.join(vec_side(e, "vec_a", "a"), "vec_a")
+        .join(vec_side(e, "vec_b", "b"), "vec_b")
         .select("vec_a", "vec_b", cos.alias("cosine"))
         .where(F.col("cosine") >= _COSINE_T)
         .orderBy("vec_a", "vec_b")
@@ -975,39 +919,21 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-1.0 baseline the index-mined variant would be audited
     against, exactly like the ANN/LSH pairs."""
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id", "label", "embedding", norm2_scaled("embedding").alias("n2")
+    q = vec_side(
+        e.where(F.col("vec_id") < 50), "qid", "q", F.col("label").alias("q_label")
     )
-    q = base.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    c = base.select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("label").alias("neg_label"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
+    c = vec_side(e, "neg_id", "c", F.col("label").alias("neg_label"))
     pairs = broadcast_bounded(q, max_rows=64).join(
         c, F.col("q_label") != F.col("neg_label")
     )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("neg_id")
+    scored = pairs.select(
+        "qid",
+        "neg_id",
+        pair_cosine("q", "c").alias("cosine"),
+        F.col("neg_label").cast("bigint").alias("neg_label"),
     )
     return (
-        pairs.select(
-            "qid",
-            "neg_id",
-            cos.alias("cosine"),
-            F.col("neg_label").cast("bigint").alias("neg_label"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
+        cosine_top_k(scored, 3, cid="neg_id")
         .select("qid", "rank", "neg_id", "cosine", "neg_label")
         .orderBy("qid", "rank")
     )
@@ -1062,34 +988,16 @@ def q_ann_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
     )
-    base_cols = lambda df: df.select(  # noqa: E731
-        "vec_id", "label", "embedding", norm2_scaled("embedding").alias("n2")
+    q = vec_side(
+        e.where(F.col("vec_id") < 10), "qid", "q", F.col("label").alias("q_label")
     )
-    q = base_cols(e).where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    c = base_cols(eligible).select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("c_label"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
+    c = vec_side(eligible, "cid", "c", F.col("label").alias("c_label"))
     pairs = broadcast_bounded(q, max_rows=64).join(
         c, (F.col("q_label") == F.col("c_label")) & (F.col("qid") != F.col("cid"))
     )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .orderBy("qid", "rank")
-    )
+    return cosine_top_k(
+        pairs.select("qid", "cid", pair_cosine("q", "c").alias("cosine")), 3
+    ).orderBy("qid", "rank")
 
 
 _KNN_K = 2
@@ -1130,32 +1038,16 @@ def q_vector_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     query side replaced by the whole corpus; candidate volume is
     Σ|cell|², the quantity K is tuned to bound (|cell| ≈ n/K)."""
     e = load_table(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id", "label", "embedding", norm2_scaled("embedding").alias("n2")
-    )
-    a = base.select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("c_label"),
-        F.col("embedding").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-    )
+    a = vec_side(e, "qid", "q", F.col("label").alias("q_label"))
+    b = vec_side(e, "cid", "c", F.col("label").alias("c_label"))
     pairs = a.join(
         b, (F.col("q_label") == F.col("c_label")) & (F.col("qid") != F.col("cid"))
     )
-    cos = cosine_from_scaled(
-        dot_scaled("q_emb", "c_emb"), F.col("q_n2"), F.col("c_n2")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
     return (
-        pairs.select("qid", "cid", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _KNN_K)
+        cosine_top_k(
+            pairs.select("qid", "cid", pair_cosine("q", "c").alias("cosine")),
+            _KNN_K,
+        )
         .select(
             F.col("qid").alias("vec_id"),
             F.col("cid").alias("nbr"),
@@ -1688,15 +1580,8 @@ def q_matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def topk(cos: F.Column) -> DataFrame:
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cosine").desc(), F.col("cid")
-        )
-        return (
-            pairs.select("qid", "cid", cos.alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _MRL_K)
-            .select("qid", "cid")
-        )
+        scored = pairs.select("qid", "cid", cos.alias("cosine"))
+        return cosine_top_k(scored, _MRL_K).select("qid", "cid")
 
     topf = topk(
         cosine_from_scaled(

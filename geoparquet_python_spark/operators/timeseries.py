@@ -265,6 +265,7 @@ def q_stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoparquet_python_spark.streaming.source import (
         read_events_stream,
         run_to_memory_table,
+        table_rows,
     )
 
     stream = read_events_stream(spark, sf_dir)
@@ -293,7 +294,11 @@ def q_stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = run_to_memory_table(agg, output_mode="complete")
+    name = run_to_memory_table(
+        agg,
+        output_mode="complete",
+        source_rows=table_rows(spark, sf_dir, "events"),
+    )
     return spark.table(name).orderBy("event_type", "bucket")
 
 

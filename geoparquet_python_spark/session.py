@@ -8,6 +8,7 @@ cluster defaults; everything here is also safe to apply at runtime via
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -31,32 +32,40 @@ _RUNTIME_CONF = {
 }
 
 
+_PREPARE_LOCK = threading.Lock()
+
+
 def prepare(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-created session (idempotent).
 
     The verify driver hands us its own SparkSession; every query entry
     point calls this first so correctness does not depend on who built
-    the session.
+    the session. The body runs under one module-level lock, so the
+    check-then-set of ``spark.sql.shuffle.partitions`` below is atomic
+    when build_concurrently legs call load_table from several threads.
     """
-    for k, v in _RUNTIME_CONF.items():
+    with _PREPARE_LOCK:
+        for k, v in _RUNTIME_CONF.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                pass  # non-runtime conf on this build — leave session default
+        # Size reducer count to the session's real parallelism when the
+        # session is still on the stock 200 default (an explicitly tuned
+        # value — ours in get_spark, or a cluster admin's — is respected):
+        # 2× cores as the AQE *upper* bound (coalesce shrinks below it at
+        # runtime). Proportional, so the same rule holds on a
+        # 1000-executor cluster; also sizes streaming state-store
+        # partition count, which is NOT AQE-managed and costs a fixed
+        # per-partition overhead every microbatch.
         try:
-            spark.conf.set(k, v)
+            if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+                cores = spark.sparkContext.defaultParallelism
+                spark.conf.set(
+                    "spark.sql.shuffle.partitions", str(max(2 * cores, 16))
+                )
         except Exception:
-            pass  # non-runtime conf on this build — leave session default
-    # Size reducer count to the session's real parallelism when the
-    # session is still on the stock 200 default (an explicitly tuned
-    # value — ours in get_spark, or a cluster admin's — is respected):
-    # 2× cores as the AQE *upper* bound (coalesce shrinks below it at
-    # runtime). Proportional, so the same rule holds on a 1000-executor
-    # cluster; also sizes streaming state-store partition count, which
-    # is NOT AQE-managed and costs a fixed per-partition overhead every
-    # microbatch.
-    try:
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            cores = spark.sparkContext.defaultParallelism
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(2 * cores, 16)))
-    except Exception:
-        pass
+            pass
     return spark
 
 

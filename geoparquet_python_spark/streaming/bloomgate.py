@@ -43,7 +43,6 @@ from geoparquet_python_spark.operators.bloomjoin import (
     _sql_positions_list,
 )
 from geoparquet_python_spark.registry import query
-from geoparquet_python_spark.session import prepare
 from geoparquet_python_spark.streaming.source import (
     read_documents_stream,
     run_to_memory_table,
@@ -132,7 +131,6 @@ def q_stream_bloom_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frozen hash set, labelling each doc (bloom_hit, exact_dup,
     false_pos). No false negatives by construction — asserted in
     tests/test_streaming.py along with batch≡stream parity."""
-    prepare(spark)
     words, m = _filter_words(spark, sf_dir)
     words_lit = "array(" + ",".join(f"{w}L" for w in words) + ")"
 

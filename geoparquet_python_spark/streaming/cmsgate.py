@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from geoparquet_python_spark.functions.text import SQL_MD5_LONG
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.registry import query
-from geoparquet_python_spark.session import prepare
 from geoparquet_python_spark.streaming.source import (
     read_documents_stream,
     run_to_memory_table,
@@ -173,7 +172,6 @@ def q_stream_hot_term_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee makes the LOW side of hot_ppm trustworthy at any scale;
     tests/test_streaming.py asserts batch≡stream parity and the
     never-undercount property on planted hot terms."""
-    prepare(spark)
     dense, n_half = _sketch_arrays(spark, sf_dir)
     arrays_lit = [
         "array(" + ",".join(f"{c}L" for c in row) + ")" for row in dense

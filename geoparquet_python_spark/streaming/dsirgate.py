@@ -31,7 +31,6 @@ from geoparquet_python_spark.functions.text import tokens
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.operators.dsir import _TARGET_SOURCES
 from geoparquet_python_spark.registry import query
-from geoparquet_python_spark.session import prepare
 from geoparquet_python_spark.streaming.source import (
     read_documents_stream,
     run_to_memory_table,
@@ -134,7 +133,6 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     target than raw) is assembled on the drained table — the span
     screen's stateless-screen / batch-assemble composition applied to
     quality instead of duplication."""
-    prepare(spark)
     stream_docs = read_documents_stream(spark, sf_dir)
     stream_tok = stream_docs.select(
         "doc_id", F.explode(tokens("text")).alias("term")

@@ -42,7 +42,6 @@ from geoparquet_python_spark.operators.regression import (
     _sql_irls2_chain,
 )
 from geoparquet_python_spark.registry import query
-from geoparquet_python_spark.session import prepare
 from geoparquet_python_spark.streaming.source import (
     read_documents_stream,
     run_to_memory_table,
@@ -106,7 +105,6 @@ def q_stream_learned_quality_gate(
     unpartitioned corpus sort), then inline the 3 fitted coefficients
     + threshold as literals and score/gate the document stream with a
     STATELESS map-only projection (see module docstring)."""
-    prepare(spark)
     from pyspark.sql import Window
 
     _, beta2, scored = _irls2(_gate_feats(spark, sf_dir))

@@ -30,7 +30,6 @@ from geoparquet_python_spark.functions.text import shingles, sql_shingles_cte, t
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.operators.dedup import _sql_minhash, minhash_bands
 from geoparquet_python_spark.registry import query
-from geoparquet_python_spark.session import prepare
 from geoparquet_python_spark.streaming.source import (
     read_documents_stream,
     run_to_memory_table,
@@ -40,11 +39,6 @@ from geoparquet_python_spark.streaming.source import (
 # Static screening corpus: even doc_ids (deterministic half of the
 # table); the stream plays every document against it.
 _CORPUS_PRED = "doc_id % 2 = 0"
-
-
-def _read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    return read_documents_stream(spark, sf_dir)
 
 
 @query(
@@ -87,7 +81,7 @@ def q_stream_neardup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to every short corpus doc. The oracle's sh CTE naturally emits no
     # rows for them, so drop them here BEFORE banding — on both sides.
     stream_docs = (
-        _read_documents_stream(spark, sf_dir)
+        read_documents_stream(spark, sf_dir)
         .select("doc_id", tokens("text").alias("toks"))
         .select("doc_id", shingles("toks", k=3).alias("sh"))
         .where(F.size("sh") > 0)

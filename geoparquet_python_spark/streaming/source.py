@@ -30,9 +30,7 @@ from geoparquet_python_spark.session import prepare
 # metadata — zero jobs), clamped to the session's parallelism-derived
 # cap, so the same rule yields few partitions for a local test file
 # and the full parallelism at weak-scaling replicas / cluster scale.
-_ROWS_PER_STATE_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_STREAM_ROWS_PER_PART", "250000")
-)
+_ROWS_PER_STATE_PARTITION = 250_000
 # ADVICE r12: sizing used to flow through a module-level accumulator
 # (read_*_stream recorded, the next drain consumed), which leaked a
 # built-but-never-drained stream's count into the next unrelated

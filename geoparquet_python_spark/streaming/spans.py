@@ -33,7 +33,6 @@ from geoparquet_python_spark.operators.spans import (
     positional_shingles_frame,
 )
 from geoparquet_python_spark.registry import query
-from geoparquet_python_spark.session import prepare
 from geoparquet_python_spark.streaming.source import (
     read_documents_stream,
     run_to_memory_table,
@@ -115,7 +114,6 @@ def q_stream_span_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Self-matches are excluded exactly: a corpus doc streamed against
     the index it belongs to only counts shingles ANOTHER corpus doc
     also owns (min/max owner ≠ self)."""
-    prepare(spark)
     stream_docs = read_documents_stream(spark, sf_dir)
     stream_sh = positional_shingles_frame(stream_docs)
 

@@ -32,6 +32,10 @@ CASES = [
     "q_pagerank_neardup",  # unrolled int64 power iterations
     "q_weighted_priority_sample",  # A-ES keys, 1e-6-rounded ln, top-k
     "q_maxsim_late_interaction",  # int64 1e-9 max/sum interaction
+    # the shared (cosine DESC, cid) top-k order (functions/vector.py)
+    "q_ann_topk_ivf",  # trained cells + probe + exact re-rank
+    "q_vector_knn_graph",  # corpus-wide in-cell top-k
+    "q_hard_negative_mining",  # top-k keyed on neg_id
 ]
 
 
@@ -150,6 +154,48 @@ def test_checkpoint_registry_survives_concurrent_sweeps(monkeypatch):
     assert not any(f.rdd.unpersisted for f in live)
     live.clear()
     exact.release_dead_checkpoints()
+
+
+def test_prepare_is_atomic_across_threads(spark):
+    """ADVICE r13 #2: build_concurrently legs reach session.prepare (via
+    load_table) from several threads at once. On a session reset to the
+    stock "200", every thread must return without error and then read
+    the same sized shuffle-partition count."""
+    import sys
+    import threading
+
+    from geoparquet_python_spark.session import prepare
+
+    key = "spark.sql.shuffle.partitions"
+    want = str(max(2 * spark.sparkContext.defaultParallelism, 16))
+    start = threading.Barrier(8)
+    seen: list = []
+    errors: list = []
+
+    def run():
+        try:
+            start.wait()
+            prepare(spark)
+            seen.append(spark.conf.get(key))
+        except BaseException as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    old = spark.conf.get(key)
+    old_switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    spark.conf.set(key, "200")
+    try:
+        threads = [threading.Thread(target=run) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old_switch)
+        spark.conf.set(key, old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert seen == [want] * 8, seen
 
 
 def test_spread_skips_exchange_when_splits_suffice(spark):

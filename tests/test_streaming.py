@@ -42,6 +42,32 @@ def test_batch_stream_parity_tumbling(spark, sf_dir):
     assert a.equals(b), "batch and streaming window aggregation diverge"
 
 
+def test_release_drops_streaming_sink_views(spark, sf_dir):
+    """Every run_to_memory_table drain leaves a sink_* temp view that
+    holds its output in the driver heap. The between-queries release
+    step drops them all, and frames built on a sink before the release
+    still return their rows."""
+    from geoparquet_python_spark.functions.exact import release_dead_checkpoints
+
+    def sinks():
+        return [
+            t.name
+            for t in spark.catalog.listTables(pattern="sink_*")
+            if t.isTemporary
+        ]
+
+    release_dead_checkpoints()
+    q = registry.QUERIES["q_stream_tumbling_counts"]
+    frames = [q(spark, sf_dir) for _ in range(3)]
+    assert len(sinks()) == 3
+    expected = sorted(map(tuple, frames[0].collect()))
+    assert expected
+    release_dead_checkpoints()
+    assert sinks() == []
+    for df in (frames[0], frames[2]):
+        assert sorted(map(tuple, df.collect())) == expected
+
+
 def test_stateful_sessions_subset_of_session_windows(spark, sf_dir):
     """applyInPandasWithState emits exactly the sessions that a later
     event closed — i.e. every session from the batch session_window
