@@ -25,6 +25,12 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def md5_hi(col: Column) -> Column:
+    """The next 60 bits of md5 (hex chars 16-30), as int64: the second
+    word of a widened SimHash."""
+    return F.conv(F.substring(F.md5(col), 16, 15), 16, 10).cast("long")
+
+
 SQL_MD5_LONG = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 

@@ -184,8 +184,8 @@ def write_geoparquet(
         # exchange already has) and stamp true per-file stats at open.
         buffered: list[pa.RecordBatch] = []
         rows = 0
-        xmin = ymin = float("inf")
-        xmax = ymax = float("-inf")
+        inf = float("inf")
+        ext = [inf, inf, -inf, -inf]  # xmin, ymin, xmax, ymax
         codes: set[int] = set()
         sec_codes: dict[str, set[int]] = {c: set() for c in secondary}
         for batch in batches:
@@ -198,22 +198,12 @@ def write_geoparquet(
                 import pyarrow.compute as pc
 
                 box = batch.column("bbox")
-                for field, agg in (
-                    ("xmin", "min"), ("ymin", "min"), ("xmax", "max"), ("ymax", "max")
-                ):
-                    v = getattr(pc, agg)(pc.struct_field(box, field)).as_py()
-                    if v is None:
-                        continue
-                    if agg == "min":
-                        if field == "xmin":
-                            xmin = min(xmin, v)
-                        else:
-                            ymin = min(ymin, v)
-                    elif field == "xmax":
-                        xmax = max(xmax, v)
-                    else:
-                        ymax = max(ymax, v)
-        bbox = [xmin, ymin, xmax, ymax] if xmin <= xmax else None
+                for i, field in enumerate(("xmin", "ymin", "xmax", "ymax")):
+                    key, pick = ("min", min) if i < 2 else ("max", max)
+                    v = pc.min_max(pc.struct_field(box, field)).as_py()[key]
+                    if v is not None:
+                        ext[i] = pick(ext[i], v)
+        bbox = ext if ext[0] <= ext[2] else None
         meta_json = _geo_metadata_json(
             geometry_col,
             crs,
@@ -245,6 +235,12 @@ def write_geoparquet(
         )
 
     stats = df.mapInArrow(write_partition, "file string, rows long").collect()
+    committed = {os.path.basename(r.file) for r in stats} or {"part-00000.parquet"}
+    # A rewrite of an existing path must not leave the previous write's
+    # parts behind: readers would see their rows and footer bboxes.
+    for f in glob.glob(os.path.join(glob.escape(path), "part-*.parquet")):
+        if os.path.basename(f) not in committed:
+            os.remove(f)
     if not stats:
         # Every partition was empty: emit one schema-only part so the
         # directory is a valid (zero-row) GeoParquet dataset.

@@ -8,7 +8,12 @@ Scale design:
   are only docs sharing ≥1 shingle (never the n² cross join).
 - MinHash-LSH: band-bucket join — candidates are docs agreeing on a
   full band; b/r tune the recall/candidate-count tradeoff.
-- SimHash: 60-bit signature per doc; near-pairs by Hamming distance.
+- SimHash: one builder, `_simhash_signatures`, makes 60-, 120- and
+  240-bit signatures (one doc_id shuffle, then the numpy bit-count
+  kernel `_sig_bitcount_kernel`); one pair join,
+  `_blocked_hamming_pairs`, finds Hamming near-pairs by a pigeonhole
+  chunk equi-join over distinct signatures. `q_simhash_near_pairs`
+  keeps an all-pairs join as the small-scale cross-check.
 
 Hash determinism: everything uses md5-derived 60-bit integers
 (functions/text.md5_long), reproducible in the DuckDB oracle — so even
@@ -18,7 +23,9 @@ engines agree on exactly which candidate pairs the banding yields.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.exact import (
@@ -28,6 +35,7 @@ from geoparquet_python_spark.functions.exact import (
 )
 from geoparquet_python_spark.functions.text import (
     SQL_MD5_LONG,
+    md5_hi,
     md5_long,
     shingles,
     sql_shingles_cte,
@@ -647,43 +655,257 @@ def _sql_simhash_cte() -> str:
     )"""
 
 
-def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unsorted 60-bit SimHash per document (the building block the
-    pair queries materialize — no presentation sort in the hot path).
+# A signature is one 60-bit word per output column, each the majority
+# vote of one token hash: (column, hash, salt appended to the token
+# before hashing). The 120- and 240-bit words sit next to their queries.
+_SIMHASH_WORDS = (("simhash", md5_long, ""),)
 
-    bit_b(doc) = sign(Σ_words ±1 by hash-bit b): one explode + one
-    groupBy with 60 integer-sum aggregates — a single shuffle on
-    doc_id regardless of corpus size.
 
-    The ±1 sum is computed as set-bit count vs word count (sign(2*c1 -
-    n) ≡ sign(Σ ±1)): SUM((h >> b) & 1) is a branch-free shift+mask the
-    codegen compiles to pennies, where the literal CASE WHEN ... 1 ELSE
-    -1 form cost ~4x the whole aggregation wall (measured at sf0.1:
-    4.2 s -> 0.9 s for the 120-bit sibling). The oracle keeps the ±1
-    formulation — same signature either way, which the hash-match
-    certifies."""
+def _simhash_signatures(
+    spark: SparkSession,
+    sf_dir: str,
+    words: tuple[tuple[str, Callable[[Column], Column], str], ...],
+) -> DataFrame:
+    """Unsorted SimHash per document: (doc_id, one bigint per word).
+
+    Bit b of a word is set iff more than half of the doc's distinct
+    tokens set bit b of that word's hash, i.e. sign(Σ_tokens ±1); the
+    oracles spell the ±1 sum, which gives the same bits. One explode
+    hashes every token into narrow (doc_id, hash...) rows, one doc_id
+    shuffle groups them, and :func:`_sig_bitcount_kernel` counts and
+    packs each doc's bits in numpy. The N-sum SQL aggregate this
+    replaces cannot whole-stage-codegen past ~100 fields; the kernel is
+    pinned bit-identical to it in tests/test_llm_ops.py."""
     d = load_table(spark, sf_dir, "documents")
-    words = spread(d.select("doc_id", F.array_distinct(tokens("text")).alias("ws"))).select(
-        "doc_id", F.explode("ws").alias("w")
+    toks = spread(
+        d.select("doc_id", F.array_distinct(tokens("text")).alias("ws"))
+    ).select("doc_id", F.explode("ws").alias("w"))
+    w = F.col("w")
+    cols = tuple(c for c, _, _ in words)
+    hashed = toks.select(
+        "doc_id",
+        *[
+            h(F.concat(w, F.lit(salt)) if salt else w).alias(f"{c}_h")
+            for c, h, salt in words
+        ],
     )
-    hashed = words.select("doc_id", md5_long(F.col("w")).alias("h"))
-    # Sum+pack as ONE spark.sql call (see _simhash_w240_signatures:
-    # the Python-Column form of a 60-sum agg + 60-term pack tree costs
-    # ~1 s of py4j round-trips per plan build; the SQL string parses
-    # JVM-side in one call).
-    hashed.createOrReplaceTempView("__sg_w60_hashed")
-    sums = ", ".join(
-        f"SUM(((h >> {b}) & 1)) AS s{b}" for b in range(_SIMHASH_BITS)
+    return hashed.repartition("doc_id").mapInArrow(
+        _sig_bitcount_kernel(tuple(f"{c}_h" for c in cols), cols),
+        ", ".join(f"{c} bigint" for c in ("doc_id", *cols)),
     )
-    pack = " + ".join(
-        f"CASE WHEN s{b} * 2 > nw THEN {1 << b}L ELSE 0L END"
-        for b in range(_SIMHASH_BITS)
+
+
+# Per-task partial-merge threshold for _sig_bitcount_kernel: partial
+# (doc, counts) rows are compacted whenever they exceed this many rows,
+# bounding task memory at O(#docs) even for degenerate one-word docs.
+_SIG_PARTIAL_CAP = 1_500_000
+
+
+def _sig_bitcount_kernel(hash_cols: tuple[str, ...], out_cols: tuple[str, ...]):
+    """mapInArrow kernel factory behind :func:`_simhash_signatures`:
+    per task, reduce each Arrow batch to per-doc bit-position counts,
+    then merge the doc-sized partials and emit each doc's packed 60-bit
+    words with the exact integer majority rule (bit b set iff
+    2·count_b > n_words). The caller repartitions by doc_id, so every
+    doc's rows land wholly in one task and the packing here is final,
+    not partial.
+
+    Per-batch reduction is argsort + np.add.reduceat over the bit
+    matrix; the matrix itself comes from np.unpackbits on the raw
+    int64 bytes (little-endian: byte-order asserted at import of the
+    task, shift/mask fallback otherwise). Two's-complement bytes give
+    the identical bits 0..59 that (h >> b) & 1 read. Partials are
+    merged whenever they exceed _SIG_PARTIAL_CAP rows so task memory
+    stays O(#docs) even for degenerate one-word docs."""
+
+    def kernel(it):
+        import sys
+
+        import numpy as np
+        import pyarrow as pa
+
+        little = sys.byteorder == "little"
+        shifts = np.arange(60, dtype=np.int64)
+        cap = _SIG_PARTIAL_CAP
+        pids: list = []
+        pnw: list = []
+        pcnt: list = []
+        rows = 0
+
+        def merged():
+            ids = np.concatenate(pids)
+            nw = np.concatenate(pnw).astype(np.int64)
+            cnt = np.concatenate(pcnt)
+            order = np.argsort(ids, kind="stable")
+            ids, nw, cnt = ids[order], nw[order], cnt[order]
+            starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+            return (
+                ids[starts],
+                np.add.reduceat(nw, starts),
+                np.add.reduceat(cnt, starts, axis=0),
+            )
+
+        for batch in it:
+            if batch.num_rows == 0:
+                # An empty Arrow batch (possible under future MapInBatch
+                # versions) would otherwise crash below: np.r_[True, ...]
+                # on empty ds yields a spurious start index 0 and
+                # ds[starts] raises IndexError.
+                continue
+            doc = batch.column("doc_id").to_numpy(zero_copy_only=False)
+            order = np.argsort(doc, kind="stable")
+            ds = doc[order]
+            cols = []
+            for c in hash_cols:
+                h = (
+                    batch.column(c)
+                    .to_numpy(zero_copy_only=False)
+                    .astype(np.int64)[order]
+                )
+                if little:
+                    bits = np.unpackbits(
+                        h.view(np.uint8).reshape(-1, 8),
+                        axis=1,
+                        bitorder="little",
+                    )[:, :60]
+                else:  # pragma: no cover - big-endian fallback
+                    bits = ((h[:, None] >> shifts) & 1).astype(np.uint8)
+                cols.append(bits)
+            # int16 partial counts are safe while one batch holds
+            # < 32k rows (Arrow default 10k); guard larger batches
+            mat = np.hstack(cols).astype(
+                np.int16 if len(ds) < 32_000 else np.int64
+            )
+            starts = np.flatnonzero(np.r_[True, ds[1:] != ds[:-1]])
+            pids.append(ds[starts])
+            pnw.append(np.diff(np.r_[starts, len(ds)]))
+            # per-batch counts fit int16 only up to 32k rows; Arrow
+            # batches are ~10k rows, but cast up before merging anyway
+            pcnt.append(np.add.reduceat(mat, starts, axis=0).astype(np.int64))
+            rows += len(pids[-1])
+            if rows > cap:
+                ids, nw, cnt = merged()
+                pids, pnw, pcnt = [ids], [nw], [cnt]
+                rows = len(ids)
+        if not pids:
+            return
+        ids, nw, cnt = merged()
+        out = {"doc_id": ids.astype(np.int64)}
+        for k, name in enumerate(out_cols):
+            blk = cnt[:, k * 60 : (k + 1) * 60]
+            out[name] = (
+                (((blk * 2) > nw[:, None]).astype(np.int64) << shifts)
+            ).sum(axis=1)
+        yield pa.RecordBatch.from_pydict(out)
+
+    return kernel
+
+
+def _blocked_hamming_pairs(
+    sig: DataFrame,
+    sig_cols: tuple[str, ...],
+    chunks: list[tuple[str, int, int]],
+    t: int,
+) -> DataFrame:
+    """Exact-then-near blocked Hamming pair join: every pair of docs
+    whose signatures (the words in `sig_cols`) differ in at most `t`
+    bits, as unordered (doc_a < doc_b, hamming) rows.
+
+    (1) collapse identical signatures to min(doc_id) representatives;
+    (2) pigeonhole chunk equi-join over DISTINCT signatures with a
+    codegen Hamming gate; (3) expand back to doc pairs (cross-cluster
+    pairs inherit the rep-pair Hamming; intra-cluster pairs are
+    Hamming 0 by definition).
+
+    `chunks` is a list of (signature column, bit offset, width). With
+    len(chunks) > t, t flipped bits cannot touch every chunk, so each
+    qualifying pair agrees exactly on at least one chunk: recall is
+    exact and the brute-force oracles certify the output. Candidates
+    number ~Σ n²/2^w over the chunks, so chunk width sets the cost.
+
+    The collapse is what keeps duplicate-dense corpora (the normal
+    dedup input) cheap: at sf0.1, 5000 docs carry only 3930 distinct
+    120-bit signatures, and a per-doc chunk join paid O(c²) join rows
+    per identical-signature cluster (23.7 M candidates, more than the
+    12.5 M brute-force pairs)."""
+    wsig = Window.partitionBy(*sig_cols)
+    members = materialize(
+        sig.withColumn("rep_id", F.min("doc_id").over(wsig))
     )
-    return spark.sql(
-        f"SELECT doc_id, CAST({pack} AS BIGINT) AS simhash FROM "
-        f"(SELECT doc_id, COUNT(1) AS nw, {sums} FROM __sg_w60_hashed "
-        "GROUP BY doc_id)"
+    reps = members.where(F.col("doc_id") == F.col("rep_id")).select(
+        "rep_id", *sig_cols
     )
+    chunk_structs = F.array(
+        *[
+            F.struct(
+                F.lit(idx).alias("ci"),
+                F.shiftright(F.col(colname), off)
+                .bitwiseAND((1 << w) - 1)
+                .alias("cv"),
+            )
+            for idx, (colname, off, w) in enumerate(chunks)
+        ]
+    )
+    chunked = reps.select(
+        "rep_id", *sig_cols, F.explode(chunk_structs).alias("c")
+    ).select(
+        "rep_id",
+        *sig_cols,
+        F.col("c.ci").alias("ci"),
+        F.col("c.cv").alias("cv"),
+    )
+    a = chunked.alias("a")
+    b = chunked.alias("b")
+    hamming = None
+    for cname in sig_cols:
+        term = F.bit_count(
+            F.col(f"a.{cname}").bitwiseXOR(F.col(f"b.{cname}"))
+        )
+        hamming = term if hamming is None else hamming + term
+    rep_pairs = (
+        a.join(
+            b,
+            (F.col("a.ci") == F.col("b.ci"))
+            & (F.col("a.cv") == F.col("b.cv"))
+            & (F.col("a.rep_id") < F.col("b.rep_id")),
+        )
+        .select(
+            F.col("a.rep_id").alias("rep_a"),
+            F.col("b.rep_id").alias("rep_b"),
+            hamming.alias("hamming"),
+        )
+        .where(F.col("hamming") <= t)
+        # One row per matching chunk survives the Hamming gate; min() is
+        # over identical values — the agg collapses multiplicity with
+        # map-side combine, over distinct-signature pairs only.
+        .groupBy("rep_a", "rep_b")
+        .agg(F.min("hamming").alias("hamming"))
+    )
+    # Expansion. Cross-cluster: each surviving rep pair fans out to its
+    # two clusters' members (disjoint clusters => each unordered doc
+    # pair appears exactly once; least/greatest restores doc_a < doc_b).
+    ma = members.select(
+        F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("da")
+    )
+    mb = members.select(
+        F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("db")
+    )
+    cross = rep_pairs.join(ma, "rep_a").join(mb, "rep_b").select(
+        F.least("da", "db").alias("doc_a"),
+        F.greatest("da", "db").alias("doc_b"),
+        "hamming",
+    )
+    # Intra-cluster: identical signatures are Hamming-0 near-dups by
+    # definition — emit all within-cluster pairs directly.
+    intra = ma.join(
+        mb,
+        (F.col("rep_a") == F.col("rep_b")) & (F.col("da") < F.col("db")),
+    ).select(
+        F.col("da").alias("doc_a"),
+        F.col("db").alias("doc_b"),
+        F.lit(0).cast("integer").alias("hamming"),
+    )
+    return cross.unionByName(intra)
 
 
 @query(
@@ -694,9 +916,9 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered signature query: sorted presentation of
+    """Registered signature query: sorted presentation of the 60-bit
     :func:`_simhash_signatures`."""
-    return _simhash_signatures(spark, sf_dir).orderBy("doc_id")
+    return _simhash_signatures(spark, sf_dir, _SIMHASH_WORDS).orderBy("doc_id")
 
 
 @query(
@@ -717,14 +939,13 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     this form pairs via an all-pairs theta self-join, which Spark plans
     as a BroadcastNestedLoopJoin — O(n²) comparisons, never acceptable
     on a scale path and deliberately excluded from the headline bench
-    and from any scale claim. The production forms with identical
-    output are ``q_simhash_blocked_pairs_loose`` (13-chunk pigeonhole
-    equi-join) and ``q_simhash_wide_blocked_pairs`` (120-bit widened
-    signatures, ~n²/39 candidates), both plan-guarded BNLJ-free in
-    ``tests/test_plans.py``. This one exists so the banded forms can be
-    equivalence-checked against ground truth at oracle scale.
+    and from any scale claim. The production form with identical
+    output is ``q_simhash_blocked_pairs_loose`` (13-chunk pigeonhole
+    equi-join, plan-guarded BNLJ-free in ``tests/test_plans.py``).
+    This one exists so the blocked forms can be equivalence-checked
+    against ground truth at oracle scale.
     """
-    sig = materialize(_simhash_signatures(spark, sf_dir))
+    sig = materialize(_simhash_signatures(spark, sf_dir, _SIMHASH_WORDS))
     a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"))
     b = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"))
     hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
@@ -982,16 +1203,10 @@ def q_neardup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # F2e: SimHash near-pairs via pigeonhole blocking (exact-output scale path)
 # --------------------------------------------------------------------------
 
-# Pigeonhole blocking wins only when chunks are WIDE (many bucket
-# values): t+1 chunks of w bits generate ~n²·(t+1)/2^w candidate pairs,
-# so w must exceed log2(n) comfortably. For the tight-duplicate regime
-# (Hamming ≤ 3) four 15-bit chunks give 32k buckets — candidates
-# collapse to near-exact matches and the n² scan disappears. (At t=12
-# the chunks would be 4–5 bits: more candidates than brute force —
-# measured 4.7× slower at sf0.1 — so the loose threshold stays on the
-# all-pairs form, q_simhash_near_pairs.)
+# Four 15-bit chunks give 32k bucket values per chunk: at Hamming <= 3
+# the candidates collapse to near-exact matches.
 _HAMMING_T_BLOCKED = 3
-_CHUNKS = [(i * 15, 15) for i in range(4)]
+_CHUNKS = [("simhash", off, 15) for off in range(0, 60, 15)]
 
 
 @query(
@@ -1008,50 +1223,13 @@ _CHUNKS = [(i * 15, 15) for i in range(4)]
 def q_simhash_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming ≤ 3 pairs WITHOUT the n² self-join: pigeonhole blocking.
 
-    Each 60-bit signature splits into 4 chunks of 15 bits; candidates
-    are pairs agreeing on (chunk_index, chunk_value) — an equi-join on
-    a compound key — then the exact Hamming test filters. Guaranteed
-    identical output to the all-pairs scan at this threshold (3 flipped
-    bits cannot touch all 4 chunks), so the oracle is the brute-force
-    SQL. The candidate join shuffles on a 32k-value uniform key; AQE
-    splits any hot bucket.
+    Each 60-bit signature splits into 4 chunks of 15 bits and
+    :func:`_blocked_hamming_pairs` joins on them. 3 flipped bits cannot
+    touch all 4 chunks, so the output is identical to the all-pairs
+    scan and the oracle is the brute-force SQL.
     """
-    sig = materialize(_simhash_signatures(spark, sf_dir))
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(idx).alias("ci"),
-                F.shiftright("simhash", off).bitwiseAND((1 << w) - 1).alias("cv"),
-            )
-            for idx, (off, w) in enumerate(_CHUNKS)
-        ]
-    )
-    chunks = sig.select(
-        "doc_id", "simhash", F.explode(chunk_structs).alias("c")
-    ).select("doc_id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    # Unordered pair dump, as in q_simhash_near_pairs: no terminal sort.
-    return (
-        cand.select("doc_a", "doc_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= _HAMMING_T_BLOCKED)
-    )
+    sig = _simhash_signatures(spark, sf_dir, _SIMHASH_WORDS)
+    return _blocked_hamming_pairs(sig, ("simhash",), _CHUNKS, _HAMMING_T_BLOCKED)
 
 
 # --------------------------------------------------------------------------
@@ -1062,8 +1240,9 @@ def q_simhash_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 60 bits → 13 chunks (8×5-bit + 5×4-bit). ≤12 flipped bits cannot
 # touch all 13 chunks, so every qualifying pair agrees exactly on ≥1
 # chunk — candidates from 13 equi-joins, recall 1.0 by pigeonhole.
-_LOOSE_OFFS = [0, 5, 10, 15, 20, 25, 30, 35, 40, 44, 48, 52, 56]
-_LOOSE_MASKS = [31] * 8 + [15] * 5
+_LOOSE_CHUNKS = [("simhash", off, 5) for off in range(0, 40, 5)] + [
+    ("simhash", off, 4) for off in range(40, 60, 4)
+]
 
 
 @query(
@@ -1081,57 +1260,20 @@ def q_simhash_blocked_pairs_loose(spark: SparkSession, sf_dir: str) -> DataFrame
     """Hamming ≤ 12 pairs with NO all-pairs join: 13-chunk pigeonhole.
 
     Identical output to q_simhash_near_pairs (the brute SQL is the
-    oracle), but the plan is 13 shuffled equi-joins on (chunk_index,
-    chunk_value) — distributable, AQE-splittable — instead of the
-    BroadcastNestedLoopJoin the naive form needs. The codegen'd
-    Hamming gate (xor + bit_count) runs map-side straight off the
-    join; surviving multiplicity (one row per agreeing chunk, <= 13)
-    collapses in a narrow (doc_a, doc_b) groupBy with map-side combine
-    — same post-join ordering rationale as
-    q_simhash_wide_blocked_pairs (an interpreted first-matching-chunk
-    filter over raw candidates was ~10x slower on dup-dense data).
+    oracle), but the plan is :func:`_blocked_hamming_pairs`' shuffled
+    chunk equi-join instead of the BroadcastNestedLoopJoin the naive
+    form needs.
 
     Honest scale math: at t/bits = 12/60 the chunks are only 4–5 bits
     wide, so random-signature candidate volume is Σ n²/2^w ≈ 0.28 n² —
     the pigeonhole fixes the plan SHAPE (shuffle instead of a driver
-    broadcast of the corpus) but not the asymptotics. The loose-t
-    regime becomes genuinely sub-quadratic by WIDENING the signature
-    (128-bit SimHash → 13 chunks of 9–10 bits ⇒ n²/50-ish), which is a
-    parameter change in this same plan; at 60 bits t=12 is test-scale.
+    broadcast of the corpus) but not the asymptotics. The loose
+    threshold becomes sub-quadratic by WIDENING the signature:
+    q_simhash_wide_blocked_pairs and q_simhash_wide240_blocked_pairs
+    run the same join over 120 and 240 bits.
     """
-    sig = materialize(_simhash_signatures(spark, sf_dir))
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(idx).alias("ci"),
-                F.shiftright("simhash", off).bitwiseAND(mask).alias("cv"),
-            )
-            for idx, (off, mask) in enumerate(zip(_LOOSE_OFFS, _LOOSE_MASKS))
-        ]
-    )
-    chunks = sig.select(
-        "doc_id", "simhash", F.explode(chunk_structs).alias("c")
-    ).select("doc_id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    # Unordered pair dump (oracle compare is order-insensitive).
-    return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .where(F.col("hamming") <= _HAMMING_T)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.min("hamming").alias("hamming"))
-    )
+    sig = _simhash_signatures(spark, sf_dir, _SIMHASH_WORDS)
+    return _blocked_hamming_pairs(sig, ("simhash",), _LOOSE_CHUNKS, _HAMMING_T)
 
 
 # --------------------------------------------------------------------------
@@ -1245,10 +1387,11 @@ def q_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sum(n^2/2^w) ~ n^2/39 vs ~0.28 n^2 for the 60-bit loose query —
 # the width upgrade is what makes the loose threshold sub-quadratic
 # in practice, at the cost of 2x signature build.
+_WIDE_WORDS = (("sim_lo", md5_long, ""), ("sim_hi", md5_hi, ""))
 _WIDE_CHUNKS = (
-    [("lo", off, 9) for off in (0, 9, 18, 27)]
-    + [("lo", off, 8) for off in (36, 44, 52)]
-    + [("hi", off, 10) for off in (0, 10, 20, 30, 40, 50)]
+    [("sim_lo", off, 9) for off in (0, 9, 18, 27)]
+    + [("sim_lo", off, 8) for off in (36, 44, 52)]
+    + [("sim_hi", off, 10) for off in (0, 10, 20, 30, 40, 50)]
 )
 _SQL_HI = "CAST(('0x' || substr(md5({expr}), 16, 15)) AS BIGINT)"
 
@@ -1288,128 +1431,10 @@ def _sql_simhash_wide_cte() -> str:
     )"""
 
 
-def _simhash_wide_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sim_lo, sim_hi) 120-bit SimHash: one explode + one
-    doc_id shuffle of the narrow hashed rows, then the shared numpy
-    bit-count/pack kernel (mapInArrow) — the r12 rewrite applied to
-    the 240-bit production form first (see _simhash_w240_signatures
-    for the measurement: the N-sum SQL aggregate cannot whole-stage-
-    codegen past ~100 fields, so its 121 interpreted buffers were the
-    stage's cost; the kernel computes the identical integer counts
-    and majority packing, asserted bit-identical)."""
-    d = load_table(spark, sf_dir, "documents")
-    words = spread(
-        d.select("doc_id", F.array_distinct(tokens("text")).alias("ws"))
-    ).select("doc_id", F.explode("ws").alias("w"))
-    hashed = words.select(
-        "doc_id",
-        md5_long(F.col("w")).alias("hlo"),
-        F.conv(F.substring(F.md5(F.col("w")), 16, 15), 16, 10)
-        .cast("long")
-        .alias("hhi"),
-    )
-    return hashed.repartition("doc_id").mapInArrow(
-        _sig_bitcount_kernel(("hlo", "hhi"), ("sim_lo", "sim_hi")),
-        "doc_id bigint, sim_lo bigint, sim_hi bigint",
-    )
 
 
 
 
-def _blocked_hamming_pairs(
-    sig: DataFrame,
-    sig_cols: tuple[str, ...],
-    chunks: list[tuple[str, int, int]],
-    t: int,
-) -> DataFrame:
-    """Exact-then-near blocked Hamming pair join over a multi-word
-    signature — the shared engine behind the 120- and 240-bit wide
-    SimHash queries (see q_simhash_wide_blocked_pairs's docstring for
-    the full narrative): (1) collapse identical signatures to
-    min(doc_id) representatives, (2) pigeonhole chunk equi-join over
-    DISTINCT signatures with a codegen Hamming gate, (3) expand back
-    to doc pairs (cross-cluster inherits the rep-pair Hamming;
-    intra-cluster is Hamming 0 by definition). `chunks` is a list of
-    (signature column, bit offset, width); with len(chunks) > t the
-    pigeonhole guarantees exact recall."""
-    wsig = Window.partitionBy(*sig_cols)
-    members = materialize(
-        sig.withColumn("rep_id", F.min("doc_id").over(wsig))
-    )
-    reps = members.where(F.col("doc_id") == F.col("rep_id")).select(
-        "rep_id", *sig_cols
-    )
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(idx).alias("ci"),
-                F.shiftright(F.col(colname), off)
-                .bitwiseAND((1 << w) - 1)
-                .alias("cv"),
-            )
-            for idx, (colname, off, w) in enumerate(chunks)
-        ]
-    )
-    chunked = reps.select(
-        "rep_id", *sig_cols, F.explode(chunk_structs).alias("c")
-    ).select(
-        "rep_id",
-        *sig_cols,
-        F.col("c.ci").alias("ci"),
-        F.col("c.cv").alias("cv"),
-    )
-    a = chunked.alias("a")
-    b = chunked.alias("b")
-    hamming = None
-    for cname in sig_cols:
-        term = F.bit_count(
-            F.col(f"a.{cname}").bitwiseXOR(F.col(f"b.{cname}"))
-        )
-        hamming = term if hamming is None else hamming + term
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.rep_id") < F.col("b.rep_id")),
-        )
-        .select(
-            F.col("a.rep_id").alias("rep_a"),
-            F.col("b.rep_id").alias("rep_b"),
-            hamming.alias("hamming"),
-        )
-        .where(F.col("hamming") <= t)
-        # One row per matching chunk survives the Hamming gate; min() is
-        # over identical values — the agg collapses multiplicity with
-        # map-side combine, over distinct-signature pairs only.
-        .groupBy("rep_a", "rep_b")
-        .agg(F.min("hamming").alias("hamming"))
-    )
-    # Expansion. Cross-cluster: each surviving rep pair fans out to its
-    # two clusters' members (disjoint clusters => each unordered doc
-    # pair appears exactly once; least/greatest restores doc_a < doc_b).
-    ma = members.select(
-        F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("da")
-    )
-    mb = members.select(
-        F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("db")
-    )
-    cross = rep_pairs.join(ma, "rep_a").join(mb, "rep_b").select(
-        F.least("da", "db").alias("doc_a"),
-        F.greatest("da", "db").alias("doc_b"),
-        "hamming",
-    )
-    # Intra-cluster: identical signatures are Hamming-0 near-dups by
-    # definition — emit all within-cluster pairs directly.
-    intra = ma.join(
-        mb,
-        (F.col("rep_a") == F.col("rep_b")) & (F.col("da") < F.col("db")),
-    ).select(
-        F.col("da").alias("doc_a"),
-        F.col("db").alias("doc_b"),
-        F.lit(0).cast("integer").alias("hamming"),
-    )
-    return cross.unionByName(intra)
 
 
 @query(
@@ -1446,41 +1471,20 @@ def q_simhash_wide_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity measure, which the brute-force oracle certifies
     independently.
 
-    Exact-then-near composition (the standard 100 TB dedup shape):
-    duplicate-dense corpora — the NORMAL case for a dedup workload —
-    put many docs on one identical signature (sf0.1: 5000 docs but
-    only 3930 distinct 120-bit signatures, one 3058-doc chunk bucket),
-    and a naive per-doc chunk join pays O(c^2) join rows per hot
-    signature cluster (23.7 M candidates here — MORE than the 12.5 M
-    brute-force pairs). So: (1) collapse identical (sim_lo, sim_hi)
-    signatures — Hamming-0 exact-dup families — electing min(doc_id)
-    as representative (one window shuffle on the signature); (2) run
-    the 13-chunk pigeonhole join over DISTINCT signatures only
-    (3930 vs 5000 rows; candidates drop ~60x to ~0.4 M), Hamming gate
-    codegen-cheap at the join, rep-pair multiplicity (<=13, one row
-    per matching chunk) collapsed by a rep-level groupBy — the
-    collapse shuffle is now rep-pair-sized, not doc-pair-sized;
-    (3) expand back to doc pairs: intra-cluster pairs at Hamming 0
-    (a members self-join on the cluster key, output-bound) plus
-    cross-cluster pairs inheriting the rep-pair Hamming (two
-    rep_id-keyed expansion joins, output-bound). Output is identical
-    to the per-doc form — cross-cluster Hamming depends only on the
-    signatures, intra-cluster is Hamming 0 — so the existing
-    brute-force oracle certifies the rewrite unchanged
-    (tests/test_llm_ops.py asserts blocked == brute at two scales).
+    Exact-then-near composition via :func:`_blocked_hamming_pairs`:
+    identical signatures collapse to one representative before the
+    chunk join, so duplicate-dense corpora do not pay O(c²) candidates
+    per cluster; tests/test_llm_ops.py asserts blocked == brute at two
+    scales.
 
     Known parameter ceiling (SCALE.md): at t=12 over 120 bits the
     pigeonhole forces 8-10-bit blocks, so random-collision candidates
     grow ~quadratically once distinct signatures >> 2^10 (measured
     3.6x at 8x volume). q_simhash_wide240_blocked_pairs below is the
     scale variant that removes the ceiling."""
-    sig = _simhash_wide_signatures(spark, sf_dir)
-    chunks = [
-        ("sim_lo" if half == "lo" else "sim_hi", off, w)
-        for half, off, w in _WIDE_CHUNKS
-    ]
+    sig = _simhash_signatures(spark, sf_dir, _WIDE_WORDS)
     return _blocked_hamming_pairs(
-        sig, ("sim_lo", "sim_hi"), chunks, _HAMMING_T
+        sig, ("sim_lo", "sim_hi"), _WIDE_CHUNKS, _HAMMING_T
     )
 
 
@@ -1551,154 +1555,15 @@ def _sql_simhash_w240_cte() -> str:
     )"""
 
 
-_W240_HASH_COLS = ("s1lo_h", "s1hi_h", "s2lo_h", "s2hi_h")
-
-# Per-task partial-merge threshold for _sig_bitcount_kernel: partial
-# (doc, counts) rows are compacted whenever they exceed this many rows,
-# bounding task memory at O(#docs) even for degenerate one-word docs.
-_SIG_PARTIAL_CAP = 1_500_000
-
-
-def _sig_bitcount_kernel(hash_cols: tuple[str, ...], out_cols: tuple[str, ...]):
-    """mapInArrow kernel factory for wide-SimHash signature
-    aggregation (shared by the 120- and 240-bit builders): per task,
-    reduce each Arrow batch to per-doc bit-position counts, then
-    merge the doc-sized partials and emit each doc's packed 60-bit
-    words with the EXACT integer majority rule the SQL form spelled
-    (bit b set iff 2·count_b > n_words). The caller repartitions by
-    doc_id, so every doc's rows land wholly in one task and the
-    packing here is final, not partial.
-
-    Per-batch reduction is argsort + np.add.reduceat over the bit
-    matrix; the matrix itself comes from np.unpackbits on the raw
-    int64 bytes (little-endian: byte-order asserted at import of the
-    task, shift/mask fallback otherwise). Two's-complement bytes give
-    the identical bits 0..59 that (h >> b) & 1 read. Measured 12x
-    over the previous pandas groupby-sum form on a 2M-row replica
-    (1.05 s vs 13.0 s single-thread). Partials are merged whenever
-    they exceed _SIG_PARTIAL_CAP rows so task memory stays O(#docs)
-    even for degenerate one-word docs."""
-
-    def kernel(it):
-        import sys
-
-        import numpy as np
-        import pyarrow as pa
-
-        little = sys.byteorder == "little"
-        shifts = np.arange(60, dtype=np.int64)
-        cap = _SIG_PARTIAL_CAP
-        pids: list = []
-        pnw: list = []
-        pcnt: list = []
-        rows = 0
-
-        def merged():
-            ids = np.concatenate(pids)
-            nw = np.concatenate(pnw).astype(np.int64)
-            cnt = np.concatenate(pcnt)
-            order = np.argsort(ids, kind="stable")
-            ids, nw, cnt = ids[order], nw[order], cnt[order]
-            starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
-            return (
-                ids[starts],
-                np.add.reduceat(nw, starts),
-                np.add.reduceat(cnt, starts, axis=0),
-            )
-
-        for batch in it:
-            if batch.num_rows == 0:
-                # An empty Arrow batch (possible under future MapInBatch
-                # versions) would otherwise crash below: np.r_[True, ...]
-                # on empty ds yields a spurious start index 0 and
-                # ds[starts] raises IndexError.
-                continue
-            doc = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            order = np.argsort(doc, kind="stable")
-            ds = doc[order]
-            cols = []
-            for c in hash_cols:
-                h = (
-                    batch.column(c)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)[order]
-                )
-                if little:
-                    bits = np.unpackbits(
-                        h.view(np.uint8).reshape(-1, 8),
-                        axis=1,
-                        bitorder="little",
-                    )[:, :60]
-                else:  # pragma: no cover - big-endian fallback
-                    bits = ((h[:, None] >> shifts) & 1).astype(np.uint8)
-                cols.append(bits)
-            # int16 partial counts are safe while one batch holds
-            # < 32k rows (Arrow default 10k); guard larger batches
-            mat = np.hstack(cols).astype(
-                np.int16 if len(ds) < 32_000 else np.int64
-            )
-            starts = np.flatnonzero(np.r_[True, ds[1:] != ds[:-1]])
-            pids.append(ds[starts])
-            pnw.append(np.diff(np.r_[starts, len(ds)]))
-            # per-batch counts fit int16 only up to 32k rows; Arrow
-            # batches are ~10k rows, but cast up before merging anyway
-            pcnt.append(np.add.reduceat(mat, starts, axis=0).astype(np.int64))
-            rows += len(pids[-1])
-            if rows > cap:
-                ids, nw, cnt = merged()
-                pids, pnw, pcnt = [ids], [nw], [cnt]
-                rows = len(ids)
-        if not pids:
-            return
-        ids, nw, cnt = merged()
-        out = {"doc_id": ids.astype(np.int64)}
-        for k, name in enumerate(out_cols):
-            blk = cnt[:, k * 60 : (k + 1) * 60]
-            out[name] = (
-                (((blk * 2) > nw[:, None]).astype(np.int64) << shifts)
-            ).sum(axis=1)
-        yield pa.RecordBatch.from_pydict(out)
-
-    return kernel
+_W240_WORDS = (
+    ("s1lo", md5_long, ""),
+    ("s1hi", md5_hi, ""),
+    ("s2lo", md5_long, _W240_SALT),
+    ("s2hi", md5_hi, _W240_SALT),
+)
 
 
-def _simhash_w240_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, s1lo, s1hi, s2lo, s2hi) 240-bit SimHash: one explode +
-    one doc_id shuffle of the NARROW hashed rows (doc_id + 4 longs),
-    then a vectorized numpy bit-count/pack per task (mapInArrow).
 
-    Optimization r12 (guide §4.2): the previous form aggregated 240
-    separate SUM((h >> b) & 1) columns in SQL — a 241-buffer hash
-    aggregate that Spark cannot whole-stage-codegen (measured: WSCG
-    span count 0 at any codegen.maxFields; the interpreted agg cost
-    ~1.3 s of the query's 2.5 s wall at sf0.1). Handing whole Arrow
-    batches to numpy (shift/mask over an (n, 240) matrix + one
-    groupby-sum) computes the identical integer bit counts and packs
-    the same majority-rule words — asserted bit-identical against the
-    SQL form (exceptAll both ways = 0 rows) and re-certified by the
-    brute-force oracle. Shuffle trade at 100 TB: the exchange carries
-    (doc_id, 4 longs) word rows instead of 240-long partial buffers —
-    narrow metadata rows, the §8 'decide with small rows' shape."""
-    d = load_table(spark, sf_dir, "documents")
-    words = spread(
-        d.select("doc_id", F.array_distinct(tokens("text")).alias("ws"))
-    ).select("doc_id", F.explode("ws").alias("w"))
-    w2 = F.concat(F.col("w"), F.lit(_W240_SALT))
-    hashed = words.select(
-        "doc_id",
-        md5_long(F.col("w")).alias("s1lo_h"),
-        F.conv(F.substring(F.md5(F.col("w")), 16, 15), 16, 10)
-        .cast("long")
-        .alias("s1hi_h"),
-        md5_long(w2).alias("s2lo_h"),
-        F.conv(F.substring(F.md5(w2), 16, 15), 16, 10)
-        .cast("long")
-        .alias("s2hi_h"),
-    )
-    return hashed.repartition("doc_id").mapInArrow(
-        _sig_bitcount_kernel(_W240_HASH_COLS, _W240_COLS),
-        "doc_id bigint, s1lo bigint, s1hi bigint, s2lo bigint, s2hi bigint",
-    )
 
 
 # Each bit_count is cast up front: DuckDB's bit_count returns an
@@ -1740,7 +1605,7 @@ def q_simhash_wide240_blocked_pairs(
     The Hamming<=12 ball over 240 bits is tighter relative to
     signature width than over 120 — a sharper similarity measure,
     certified independently by its own brute-force oracle."""
-    sig = _simhash_w240_signatures(spark, sf_dir)
+    sig = _simhash_signatures(spark, sf_dir, _W240_WORDS)
     return _blocked_hamming_pairs(sig, _W240_COLS, _W240_CHUNKS, _HAMMING_T)
 
 
@@ -2271,7 +2136,7 @@ def q_dedup_layer_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sim = materialize(
         _blocked_hamming_pairs(
-            _simhash_w240_signatures(spark, sf_dir),
+            _simhash_signatures(spark, sf_dir, _W240_WORDS),
             _W240_COLS,
             _W240_CHUNKS,
             _HAMMING_T,

@@ -118,11 +118,12 @@ def run_to_memory_table(
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
     # Scale-adaptive state-partition count for THIS drain (see the
-    # module note above): set spark.sql.shuffle.partitions around the
-    # query start — the stream's plan freezes the count at its first
-    # micro-batch — and restore the session value afterwards so batch
-    # plans are untouched. Stateless (map-only) streams simply have no
-    # shuffle for the setting to size; harmless there.
+    # module note above): set spark.sql.shuffle.partitions only around
+    # start() — the stream copies the session conf when it starts and
+    # records the count in its offset log — and restore the session
+    # value before the drain, so batch plans built meanwhile by other
+    # threads are untouched. Stateless (map-only) streams simply have
+    # no shuffle for the setting to size; harmless there.
     rows = source_rows
     prev = None
     if rows:
@@ -142,11 +143,11 @@ def run_to_memory_table(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
     finally:
         if prev is not None:
             try:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
             except Exception:
                 pass
+    q.awaitTermination()
     return name

@@ -248,6 +248,29 @@ def test_write_empty_dataframe_is_readable(spark, sf_dir_small, tmp_out):
     assert "geometry" in back.columns
 
 
+def test_rewrite_removes_stale_part_files(spark, tmp_out):
+    """Rewriting a path replaces the dataset: no part file of the
+    previous write survives, so neither its rows nor its footer bbox
+    leak into the read-back — for a smaller rewrite and an empty one."""
+    from geoparquet_python_spark.geo.functions import st_point
+
+    def pts(n, parts, scale):
+        return spark.range(n, numPartitions=parts).select(
+            F.col("id").alias("k"),
+            st_point(F.col("id") * scale, F.col("id") * 0.5).alias("geometry"),
+        )
+
+    assert gio.write_geoparquet(pts(1000, 4, 0.1), tmp_out, "geometry") == 1000
+    assert gio.write_geoparquet(pts(10, 1, 0.01), tmp_out, "geometry") == 10
+    assert gio.read_geoparquet(spark, tmp_out).count() == 10
+    bbox = gio.geo_metadata(tmp_out)["columns"]["geometry"]["bbox"]
+    assert bbox == [0.0, 0.0, 0.09, 4.5]
+
+    assert gio.write_geoparquet(pts(0, 2, 0.1), tmp_out, "geometry") == 0
+    assert gio.read_geoparquet(spark, tmp_out).count() == 0
+    assert gio.geo_metadata(tmp_out)["columns"]["geometry"].get("bbox") is None
+
+
 def test_root_level_reference_parity_api(spark, tmp_path):
     """The reference exposes read_geoparquet as a module function and
     to_geoparquet as the writer name — both work from the package

@@ -630,72 +630,46 @@ def test_packing_and_batching_invariants_hypothesis():
     check()
 
 
-def test_simhash_wide_blocked_equals_brute(spark, sf_dir, sf_dir_small):
-    """Pigeonhole recall invariant guarding the signature-collapse
-    rewrite (VERDICT r4 #1): the 13-chunk blocked pair set must equal
-    the brute-force Hamming<=12 pair set over the same 120-bit
-    signatures, at two scales. Recall 1.0 is a theorem (t=12 over 13
-    chunks leaves >=1 chunk untouched); this asserts the implementation
-    — collapse, chunk join, expansion — didn't break it."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_simhash_blocked_pairs",
+        "q_simhash_blocked_pairs_loose",
+        "q_simhash_wide_blocked_pairs",
+        "q_simhash_wide240_blocked_pairs",
+    ],
+)
+def test_simhash_blocked_equals_brute(spark, sf_dir, sf_dir_small, name):
+    """Pigeonhole recall invariant of the shared blocked pair join: each
+    blocked query's pair set must equal the brute-force Hamming <= t
+    pair set over the same signatures, at two scales. Recall 1.0 is a
+    theorem (t flipped bits cannot touch all of the > t chunks); this
+    asserts the implementation — collapse, chunk join, expansion —
+    didn't break it."""
+    import operator
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    from geoparquet_python_spark.operators.dedup import (
-        _HAMMING_T,
-        _simhash_wide_signatures,
-    )
+    from geoparquet_python_spark.operators import dedup
 
+    words, t = {
+        "q_simhash_blocked_pairs": (dedup._SIMHASH_WORDS, dedup._HAMMING_T_BLOCKED),
+        "q_simhash_blocked_pairs_loose": (dedup._SIMHASH_WORDS, dedup._HAMMING_T),
+        "q_simhash_wide_blocked_pairs": (dedup._WIDE_WORDS, dedup._HAMMING_T),
+        "q_simhash_wide240_blocked_pairs": (dedup._W240_WORDS, dedup._HAMMING_T),
+    }[name]
     for d in (sf_dir_small, sf_dir):
-        sig = _simhash_wide_signatures(spark, d).cache()
+        sig = dedup._simhash_signatures(spark, d, words).cache()
         a = sig.alias("a")
         b = sig.alias("b")
-        hamming = F.bit_count(
-            F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo"))
-        ) + F.bit_count(F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi")))
-        brute = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                hamming.alias("hamming"),
-            )
-            .where(F.col("hamming") <= _HAMMING_T)
-            .collect()
-        }
-        blocked = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in registry.QUERIES["q_simhash_wide_blocked_pairs"](
-                spark, d
-            ).collect()
-        }
-        sig.unpersist()
-        assert blocked == brute, (
-            f"{d}: blocked {len(blocked)} pairs != brute {len(brute)}"
+        hamming = reduce(
+            operator.add,
+            [
+                F.bit_count(F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}")))
+                for c, _, _ in words
+            ],
         )
-
-
-def test_simhash_w240_blocked_equals_brute(spark, sf_dir, sf_dir_small):
-    """240-bit twin of the guard above (VERDICT r5 #1): the 13-chunk
-    (15-20-bit blocks) pair set must equal the brute-force Hamming<=12
-    set over the same 240-bit signatures, at two scales — certifying
-    that the wider chunks changed only candidate volume, never the
-    output."""
-    from pyspark.sql import functions as F
-
-    from geoparquet_python_spark.operators.dedup import (
-        _HAMMING_T,
-        _W240_COLS,
-        _simhash_w240_signatures,
-    )
-
-    for d in (sf_dir_small, sf_dir):
-        sig = _simhash_w240_signatures(spark, d).cache()
-        a = sig.alias("a")
-        b = sig.alias("b")
-        hamming = None
-        for c in _W240_COLS:
-            term = F.bit_count(F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}")))
-            hamming = term if hamming is None else hamming + term
         brute = {
             (r.doc_a, r.doc_b, r.hamming)
             for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
@@ -704,14 +678,12 @@ def test_simhash_w240_blocked_equals_brute(spark, sf_dir, sf_dir_small):
                 F.col("b.doc_id").alias("doc_b"),
                 hamming.alias("hamming"),
             )
-            .where(F.col("hamming") <= _HAMMING_T)
+            .where(F.col("hamming") <= t)
             .collect()
         }
         blocked = {
             (r.doc_a, r.doc_b, r.hamming)
-            for r in registry.QUERIES["q_simhash_wide240_blocked_pairs"](
-                spark, d
-            ).collect()
+            for r in registry.QUERIES[name](spark, d).collect()
         }
         sig.unpersist()
         assert blocked == brute, (
@@ -2166,46 +2138,43 @@ def test_msprt_matches_numpy_mixture_lr(spark, sf_dir_small):
 
 
 def test_sig_bitcount_kernel_matches_sql_aggregate(spark, sf_dir_small):
-    """r12 optimization guard: the numpy mapInArrow bit-count/pack
-    kernel (guide §4.2 rewrite of the never-codegens N-sum aggregate)
-    must be BIT-IDENTICAL to the SQL form it replaced — per-bit
-    SUM((h >> b) & 1) counts packed by the exact integer majority rule
-    (bit set iff 2·count > n_words) — for both the 120-bit and 240-bit
-    builders."""
+    """The numpy mapInArrow bit-count/pack kernel behind the one SimHash
+    builder must be BIT-IDENTICAL to the SQL aggregate it replaced —
+    per-bit SUM((h >> b) & 1) counts packed by the exact integer
+    majority rule (bit set iff 2·count > n_words) — at 60, 120 and 240
+    bits. This is the only copy of that aggregate."""
     from pyspark.sql import functions as F
 
-    from geoparquet_python_spark.functions.text import md5_long, tokens
+    from geoparquet_python_spark.functions.text import md5_hi, md5_long, tokens
     from geoparquet_python_spark.io import load_table
     from geoparquet_python_spark.operators.dedup import (
+        _SIMHASH_WORDS,
         _W240_SALT,
-        _simhash_w240_signatures,
-        _simhash_wide_signatures,
+        _W240_WORDS,
+        _WIDE_WORDS,
+        _simhash_signatures,
     )
 
     d = load_table(spark, sf_dir_small, "documents")
     words = d.select(
         "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("w")
     )
-    w2 = F.concat(F.col("w"), F.lit(_W240_SALT))
-    hi = lambda col: (  # noqa: E731 — upper-60-bit md5 half, as the builders
-        F.conv(F.substring(F.md5(col), 16, 15), 16, 10).cast("long")
-    )
+    w = F.col("w")
+    w2 = F.concat(w, F.lit(_W240_SALT))
     cases = [
+        (_SIMHASH_WORDS, [("simhash", md5_long(w))]),
+        (_WIDE_WORDS, [("sim_lo", md5_long(w)), ("sim_hi", md5_hi(w))]),
         (
-            _simhash_wide_signatures,
-            [("sim_lo", md5_long(F.col("w"))), ("sim_hi", hi(F.col("w")))],
-        ),
-        (
-            _simhash_w240_signatures,
+            _W240_WORDS,
             [
-                ("s1lo", md5_long(F.col("w"))),
-                ("s1hi", hi(F.col("w"))),
+                ("s1lo", md5_long(w)),
+                ("s1hi", md5_hi(w)),
                 ("s2lo", md5_long(w2)),
-                ("s2hi", hi(w2)),
+                ("s2hi", md5_hi(w2)),
             ],
         ),
     ]
-    for builder, cols in cases:
+    for spec, cols in cases:
         hashed = words.select(
             "doc_id", *[e.alias(f"h_{name}") for name, e in cols]
         )
@@ -2228,7 +2197,7 @@ def test_sig_bitcount_kernel_matches_sql_aggregate(spark, sf_dir_small):
             f"SELECT doc_id, {packs} FROM (SELECT doc_id, COUNT(1) AS nw, "
             f"{sums} FROM __t_sig_kernel_ref GROUP BY doc_id)"
         )
-        got = builder(spark, sf_dir_small)
+        got = _simhash_signatures(spark, sf_dir_small, spec)
         assert got.exceptAll(ref).count() == 0
         assert ref.exceptAll(got).count() == 0
 
@@ -2493,16 +2462,16 @@ def _kernel_case(name):
     if name == "sig_bitcount":
         from geoparquet_python_spark.operators.dedup import (
             _W240_COLS,
-            _W240_HASH_COLS,
             _sig_bitcount_kernel,
         )
 
-        kernel = _sig_bitcount_kernel(_W240_HASH_COLS, _W240_COLS)
+        hash_cols = tuple(f"{c}_h" for c in _W240_COLS)
+        kernel = _sig_bitcount_kernel(hash_cols, _W240_COLS)
         schema = pa.schema(
-            [("doc_id", pa.int64())] + [(c, pa.int64()) for c in _W240_HASH_COLS]
+            [("doc_id", pa.int64())] + [(c, pa.int64()) for c in hash_cols]
         )
         data = {"doc_id": [1, 1, 2]}
-        for c in _W240_HASH_COLS:
+        for c in hash_cols:
             data[c] = [3, 5, 7]
     elif name.startswith("lloyd_m"):
         from geoparquet_python_spark.operators.kmeans import _lloyd_stats_kernel

@@ -176,10 +176,20 @@ def test_q19_part_side_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, "part join not broadcast"
 
 
-def test_loose_simhash_no_nested_loop(spark, sf_dir):
-    """t=12 blocked SimHash must plan 13 shuffled equi-joins, never the
-    all-pairs BroadcastNestedLoopJoin of the naive form."""
-    plan = plan_of(spark, sf_dir, "q_simhash_blocked_pairs_loose")
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_simhash_blocked_pairs",
+        "q_simhash_blocked_pairs_loose",
+        "q_simhash_wide_blocked_pairs",
+        "q_simhash_wide240_blocked_pairs",
+    ],
+)
+def test_blocked_simhash_no_nested_loop(spark, sf_dir, name):
+    """Every blocked SimHash query must plan the shuffled chunk
+    equi-join, never the all-pairs BroadcastNestedLoopJoin of the
+    naive form."""
+    plan = plan_of(spark, sf_dir, name)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

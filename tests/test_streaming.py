@@ -68,6 +68,50 @@ def test_release_drops_streaming_sink_views(spark, sf_dir):
         assert sorted(map(tuple, df.collect())) == expected
 
 
+def test_stream_sizing_restores_session_conf_before_drain(
+    spark, sf_dir, monkeypatch
+):
+    """run_to_memory_table sizes the stream's state partitions only
+    around start(): by the time the drain waits, the session has its
+    own shuffle-partition count back, and the stream's state operator
+    still runs at the sized count."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from geoparquet_python_spark.functions.exact import release_dead_checkpoints
+    from geoparquet_python_spark.streaming.source import (
+        _ROWS_PER_STATE_PARTITION,
+        _suggest_state_partitions,
+        read_events_stream,
+        run_to_memory_table,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    rows = 7 * _ROWS_PER_STATE_PARTITION
+    sized = _suggest_state_partitions(spark, rows)
+    own = str(sized + 3)
+    stream = read_events_stream(spark, sf_dir).groupBy("event_type").count()
+    seen = {}
+    wait = StreamingQuery.awaitTermination
+
+    def recording_wait(self, *args, **kwargs):
+        seen["session"] = spark.conf.get(key)
+        done = wait(self, *args, **kwargs)
+        progress = json.loads(self.lastProgress.json)
+        seen["state"] = progress["stateOperators"][0]["numShufflePartitions"]
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", recording_wait)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, own)
+    try:
+        run_to_memory_table(stream, "complete", source_rows=rows)
+    finally:
+        spark.conf.set(key, prev)
+        release_dead_checkpoints()
+    assert seen["session"] == own
+    assert seen["state"] == sized
+
+
 def test_stateful_sessions_subset_of_session_windows(spark, sf_dir):
     """applyInPandasWithState emits exactly the sessions that a later
     event closed — i.e. every session from the batch session_window
