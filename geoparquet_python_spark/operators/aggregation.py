@@ -255,19 +255,19 @@ def q_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_grouping_sets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS via the SQL API (spark.sql over a temp view)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("gps_lineitem")
+    """GROUPING SETS via the SQL API (spark.sql with the lineitem frame
+    bound by name)."""
     return spark.sql(
         """
         SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
                COALESCE(l_linestatus, 'ALL') AS linestatus,
                CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
                  AS sum_price
-        FROM gps_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         ORDER BY returnflag, linestatus
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -866,15 +866,13 @@ def q_reachable_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound, so recursion depth never touches corpus rows. The oracle
     is the same recursive SQL on DuckDB — both engines execute true
     recursive plans."""
-    e = load_table(spark, sf_dir, "events")
-    e.createOrReplaceTempView("__reach_events")
     return spark.sql(
         f"""
     WITH RECURSIVE seq AS (
       SELECT event_type,
              lead(event_type) OVER w AS next_type,
              unix_micros(lead(ts) OVER w) - unix_micros(ts) AS gap_us
-      FROM __reach_events
+      FROM {{events}}
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ),
     edges AS (
@@ -893,7 +891,8 @@ def q_reachable_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT t AS event_type, CAST(MIN(hops) AS BIGINT) AS min_hops
     FROM reach GROUP BY t
     ORDER BY min_hops, event_type
-    """
+    """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 

@@ -4,10 +4,18 @@ north-star: exact, n-gram Jaccard, MinHash+LSH, SimHash).
 Scale design:
 - exact dedup: hash-groupBy — one shuffle on the content hash, perfect
   partitioning, no skew (hashes are uniform).
-- n-gram Jaccard: inverted-index join on shingles — candidate pairs
-  are only docs sharing ≥1 shingle (never the n² cross join).
-- MinHash-LSH: band-bucket join — candidates are docs agreeing on a
-  full band; b/r tune the recall/candidate-count tradeoff.
+- shingle-set similarity (exact Jaccard, containment, prefix
+  filtering, the MinHash-LSH refine): every query builds one overlap
+  frame (doc_a, doc_b, i = |A∩B|, sza, szb) over `_shingle_sets` and
+  reads it through `_jaccard_filter` or `_containment_filter`. The
+  frame has two routes: `_shingle_overlaps` counts an inverted-index
+  self-join on the shingle (only docs sharing ≥1 shingle meet, never
+  the n² cross join), and `_set_overlaps` intersects the full sets of
+  candidate id pairs — from prefix filtering (`_rarity_prefix`) or
+  from MinHash banding, whose candidates are docs agreeing on a full
+  band (b/r tune the recall/candidate-count tradeoff).
+- near-dup clusters: one connected-components routine,
+  `star_contraction_components`, over the Jaccard pair graph.
 - SimHash: one builder, `_simhash_signatures`, makes 60-, 120- and
   240-bit signatures (one doc_id shuffle, then the numpy bit-count
   kernel `_sig_bitcount_kernel`); one pair join,
@@ -162,51 +170,13 @@ def q_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ |A|/|B| → 0 but containment ≈ 1; dedup pipelines run BOTH
     measures (Broder's resemblance vs containment distinction).
 
-    Same inverted-index plan as q_ngram_jaccard_pairs — one extra
-    projection, no new shuffle: the intersection counts and size
-    table are shared shapes, the score divides by the SMALLER set
-    (integer DIV on micro-units — exact on both engines), and the
-    direction normalizes to (contained=smaller, ties→lower doc_id).
-    Scale path identical to Jaccard's (stop-shingle cap + AQE skew
-    split); the sketch screen for containment at 100 TB is
-    asymmetric MinHash over the smaller set's signature."""
-    d = load_table(spark, sf_dir, "documents")
-    sh = spread(
-        d.select("doc_id", tokens("text").alias("toks"))
-    ).select("doc_id", F.explode(shingles("toks", k=3)).alias("s"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"))
-    scored = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("c_micro", F.expr("i * 1000000 DIV least(sza, szb)"))
-        .where(F.col("c_micro") >= _CONTAIN_T_MICRO)
-    )
-    small_first = F.col("sza") <= F.col("szb")
-    return scored.select(
-        F.when(small_first, F.col("doc_a"))
-        .otherwise(F.col("doc_b"))
-        .alias("contained_doc"),
-        F.when(small_first, F.col("doc_b"))
-        .otherwise(F.col("doc_a"))
-        .alias("container_doc"),
-        F.col("c_micro").cast("bigint").alias("containment_micro"),
-    ).orderBy("contained_doc", "container_doc")
+    Reads the same uncapped inverted-index overlap frame as
+    q_ngram_jaccard_pairs; only the filter differs: the score divides
+    by the SMALLER set (integer DIV on micro-units — exact on both
+    engines), and the direction normalizes to (contained=smaller,
+    ties→lower doc_id). The sketch screen for containment at 100 TB
+    is asymmetric MinHash over the smaller set's signature."""
+    return _containment_filter(_shingle_overlaps(spark, sf_dir, stop_shingle_df=None))
 
 
 # Default stop-shingle document-frequency cap for _exact_jaccard_pairs
@@ -241,135 +211,192 @@ def _has_hot_shingles(spark: SparkSession, sh, sf_dir: str, cap: int) -> bool:
     return _HOT_SHINGLE_CACHE[key]
 
 
-def _exact_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, stop_shingle_df: int | None = _STOP_SHINGLE_DF
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh): each document's distinct 3-word shingle array,
+    spread over the session's cores for the shingle projection."""
+    d = load_table(spark, sf_dir, "documents")
+    return spread(d.select("doc_id", tokens("text").alias("toks"))).select(
+        "doc_id", shingles("toks", k=3).alias("sh")
+    )
+
+
+def _shingle_overlaps(
+    spark: SparkSession, sf_dir: str, stop_shingle_df: int | None
 ) -> DataFrame:
-    """Jaccard ≥ t pairs via the inverted-index join.
+    """Overlap frame (doc_a < doc_b, i = |A∩B|, sza = |A|, szb = |B|)
+    for every pair of docs sharing a shingle, by the inverted-index
+    route: explode shingles, self-equi-join on the shingle, count the
+    join rows per pair. Only docs sharing a shingle ever meet (never
+    the n² cross join; the skew join is AQE-split).
 
     ``stop_shingle_df``: document-frequency cutoff for the index. A
     boilerplate shingle present in d documents contributes O(d²) pairs
     to the index join — the quadratic hot-bucket at corpus scale. With
-    the cap set (the default — see _STOP_SHINGLE_DF), shingles with
-    df > cap are dropped from CANDIDATE GENERATION only; the exact
-    Jaccard is then RECONSTRUCTED per pair (i_kept + the shared
-    stop-shingle count — see the guarded branch), so any pair that
-    still shares one sub-cap shingle gets its exact, uncapped score.
-    Recall loss is confined to pairs whose entire overlap is stop
-    shingles — by construction not near-duplicates of each other but
-    of the boilerplate. Pass None for the exact uncapped semantics
-    (q_ngram_jaccard_pairs, whose contract IS the exact pair set).
+    a cap, shingles with df > cap are dropped from CANDIDATE GENERATION
+    only; ``i`` is then RECONSTRUCTED per pair as i_kept + the shared
+    stop-shingle count, so any pair that still shares one sub-cap
+    shingle gets its exact, uncapped overlap. Recall loss is confined
+    to pairs whose entire overlap is stop shingles — by construction
+    not near-duplicates of each other but of the boilerplate. None
+    means the exact uncapped pair set.
 
     FAST PATH: one cached linear probe (per appId x sf_dir x cap —
     the _capped_bucket_pairs precheck contract: the branch choice is
     frozen from the data observed at plan-build time) asks whether ANY
     shingle exceeds the cap. When none does — true at every driver
-    scale, where max df is 25 — the capped semantics and the uncapped
-    plan are PROVABLY identical, so the guarded machinery (df-tagging
-    join, checkpoint, stop-set correction) is skipped entirely and the
-    cap costs nothing. Real boilerplate flips the same call sites onto
-    the guarded plan unchanged.
+    scale, where max df is 25 — the capped and uncapped plans are
+    PROVABLY identical, so the guarded machinery (df-tagging join,
+    checkpoint, stop-set correction) is skipped and the cap costs
+    nothing. Real boilerplate flips the same call sites onto the
+    guarded plan unchanged.
     """
-    d = load_table(spark, sf_dir, "documents")
+    # explode_outer plus a null filter, not explode: an inner explode of
+    # the sh column lets the optimizer infer size(sh) > 0 and push that
+    # shingle computation below spread()'s exchange, so every document
+    # would be shingled once more on the scan side.
     sh = (
-        spread(d.select("doc_id", tokens("text").alias("toks")))
-        .select("doc_id", F.explode(shingles("toks", k=3)).alias("s"))
+        _shingle_sets(spark, sf_dir)
+        .select("doc_id", F.explode_outer("sh").alias("s"))
+        .where(F.col("s").isNotNull())
     )
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     if stop_shingle_df is not None and not _has_hot_shingles(
         spark, sh, sf_dir, stop_shingle_df
     ):
         stop_shingle_df = None  # proven equivalent — take the lean plan
-    if stop_shingle_df is None:
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("i"))
+    index = sh
+    if stop_shingle_df is not None:
+        # Candidate generation AND the intersection count run over the
+        # stop-shingle-free index: the self-join emits at most
+        # cap x |occurrences| rows, and each collision costs one
+        # aggregate row, never a per-pair array pass. The correction
+        # intersects the per-doc STOP-shingle arrays, which are short by
+        # construction (a doc's own boilerplate), so per-pair work never
+        # scales with document size (a first cut that re-intersected
+        # FULL sets measured 28 s at sf0.1 vs 1.7 s uncapped). No
+        # broadcast hints: the stop list is corpus-proportional in the
+        # worst case, and AQE broadcasts by MEASURED size when it is
+        # small.
+        dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+        # ONE df-tagging join splits the occurrence stream into the kept
+        # index and the (tiny) stop-occurrence stream — an anti- plus
+        # semi-join formulation paid a third shuffle of the same stream.
+        # materialize is load-bearing: the tagged stream feeds the
+        # self-join's two branches AND stop_sets, and the iterative
+        # consumers (star contraction, k-core peeling) re-execute the
+        # pair frame's lineage per round — without the checkpoint the
+        # shingle+df pipeline re-runs each time (measured +1.5-2 s on
+        # q_leakage_safe_split / q_corpus_clean_pipeline at sf0.1).
+        tagged = materialize(sh.join(dfreq, "s"))
+        index = tagged.where(F.col("df") <= stop_shingle_df).select("doc_id", "s")
+        stop_sets = (
+            tagged.where(F.col("df") > stop_shingle_df)
+            .groupBy("doc_id")
+            .agg(F.collect_set("s").alias("stop_sh"))
         )
-        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"))
-        jac = F.col("i") * F.lit(1.0) / (F.col("sza") + F.col("szb") - F.col("i"))
-        return (
-            inter.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= _JACCARD_T)
-            .orderBy("doc_a", "doc_b")
+        empty = F.expr("CAST(array() AS ARRAY<STRING>)")
+        sizes = sizes.join(stop_sets, "doc_id", "left").select(
+            "doc_id", "sz", F.coalesce("stop_sh", empty).alias("stop")
         )
-    # Capped path (round-11 form). Candidate generation AND the
-    # intersection COUNT run over the stop-shingle-free index — the
-    # index self-join emits at most cap x |occurrences| rows (linear in
-    # the corpus at constant cap), and the groupBy count prices each
-    # collision at an aggregate row, never a per-pair array pass. The
-    # exact score is then RECONSTRUCTED, not re-derived: for a pair,
-    # i_exact = i_kept + |stop_a ∩ stop_b|, where stop_a/stop_b are the
-    # per-doc STOP-shingle arrays — short by construction (a doc's own
-    # boilerplate), empty for most docs, so the correction intersect is
-    # O(boilerplate density) per pair instead of O(|doc|) (a first cut
-    # that re-intersected FULL shingle sets per candidate measured 28 s
-    # at sf0.1 vs the uncapped path's 1.7 s — per-pair work must never
-    # scale with document size). No broadcast hints anywhere: the stop
-    # list's size bound is |occurrences|/cap — corpus-proportional in
-    # the worst case — so the anti/semi joins stay plain shuffle joins
-    # and AQE broadcasts by MEASURED size when the list is small.
-    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    # ONE df-tagging join splits the occurrence stream into the kept
-    # index and the (tiny) stop-occurrence stream — an anti- plus
-    # semi-join formulation paid a third shuffle of the same stream.
-    # materialize is load-bearing: the tagged stream feeds the
-    # self-join's two branches AND stop_sets, and the iterative
-    # consumers (star contraction, k-core peeling) re-execute the
-    # pair frame's lineage per round — without the checkpoint the
-    # shingle+df pipeline re-runs each time (measured +1.5-2 s on
-    # q_leakage_safe_split / q_corpus_clean_pipeline at sf0.1).
-    tagged = materialize(sh.join(dfreq, "s"))
-    kept = tagged.where(F.col("df") <= stop_shingle_df).select("doc_id", "s")
-    a = kept.alias("a")
-    b = kept.alias("b")
+    a, b = index.alias("a"), index.alias("b")
     inter = (
         a.join(
             b,
             (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("i_kept"))
+        .agg(F.count(F.lit(1)).alias("i"))
     )
-    stop_sets = (
-        tagged.where(F.col("df") > stop_shingle_df)
-        .groupBy("doc_id")
-        .agg(F.collect_set("s").alias("stop_sh"))
-    )
-    # |set| == size of the per-doc distinct shingle ARRAY — map-only,
-    # no shuffle (the uncapped path's groupBy-count form mirrors the
-    # oracle CTE; here the cheaper identity is fine, values identical).
-    docsz = d.select("doc_id", tokens("text").alias("toks")).select(
-        "doc_id", F.size(shingles("toks", k=3)).alias("sz")
-    )
-    empty = F.expr("CAST(array() AS ARRAY<STRING>)")
-    sa = docsz.join(stop_sets, "doc_id", "left").select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sza"),
-        F.coalesce("stop_sh", empty).alias("stop_a"),
-    )
-    sb = docsz.join(stop_sets, "doc_id", "left").select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("szb"),
-        F.coalesce("stop_sh", empty).alias("stop_b"),
-    )
-    i_exact = F.col("i_kept") + F.size(F.array_intersect("stop_a", "stop_b"))
-    jac = i_exact * F.lit(1.0) / (F.col("sza") + F.col("szb") - i_exact)
+    sa = sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sza", "stop": "stop_a"})
+    sb = sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "szb", "stop": "stop_b"})
+    ov = inter.join(sa, "doc_a").join(sb, "doc_b")
+    if stop_shingle_df is None:
+        return ov
+    i_exact = F.col("i") + F.size(F.array_intersect("stop_a", "stop_b"))
+    return ov.select("doc_a", "doc_b", i_exact.alias("i"), "sza", "szb")
+
+
+def _set_overlaps(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """Overlap frame (doc_a, doc_b, i, sza, szb) for candidate id pairs,
+    the refine route: attach both docs' full shingle sets from
+    ``sets`` (doc_id, sh) by doc id and intersect them. The sets stay
+    on the left of the first join, so a broadcast-hinted ``cand``
+    joins map-side against the corpus."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (
-        inter.join(sa, "doc_a")
+        sa.join(cand, "doc_a")
         .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("i"),
+            F.size("sh_a").alias("sza"),
+            F.size("sh_b").alias("szb"),
+        )
+    )
+
+
+def _jaccard_filter(ov: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard ≥ _JACCARD_T) from an overlap frame:
+    J = i/(|A|+|B|−i) on integer counts, one exact double division."""
+    jac = F.col("i") * F.lit(1.0) / (F.col("sza") + F.col("szb") - F.col("i"))
+    return (
+        ov.select("doc_a", "doc_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= _JACCARD_T)
         .orderBy("doc_a", "doc_b")
     )
+
+
+def _containment_filter(ov: DataFrame) -> DataFrame:
+    """(contained_doc, container_doc, containment_micro ≥
+    _CONTAIN_T_MICRO) from an overlap frame: |A∩B|·10⁶ DIV
+    min(|A|, |B|); the smaller doc (ties → doc_a) is the contained
+    one."""
+    small_first = F.col("sza") <= F.col("szb")
+    return (
+        ov.withColumn("c_micro", F.expr("i * 1000000 DIV least(sza, szb)"))
+        .where(F.col("c_micro") >= _CONTAIN_T_MICRO)
+        .select(
+            F.when(small_first, F.col("doc_a"))
+            .otherwise(F.col("doc_b"))
+            .alias("contained_doc"),
+            F.when(small_first, F.col("doc_b"))
+            .otherwise(F.col("doc_a"))
+            .alias("container_doc"),
+            F.col("c_micro").cast("bigint").alias("containment_micro"),
+        )
+        .orderBy("contained_doc", "container_doc")
+    )
+
+
+def _rarity_prefix(sets: DataFrame, tenths: int) -> DataFrame:
+    """(doc_id, s, sz, in_prefix) per shingle occurrence, for prefix
+    filtering at threshold t = tenths/10: each doc's shingles ordered
+    by global rarity (df asc, shingle asc), and ``in_prefix`` marks
+    the first sz − ⌈t·sz⌉ + 1 of them. ⌈t·sz⌉ is the integer
+    floor((tenths·sz + 9)/10) — double 0.3·n rounds up spuriously
+    (10·0.3 → 3.0000000000000004), which would shorten prefixes and
+    silently break the lossless guarantee."""
+    sh = sets.select("doc_id", F.explode("sh").alias("s"))
+    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    wdoc = Window.partitionBy("doc_id")
+    ranked = (
+        sh.join(dfreq, "s")
+        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
+        .withColumn("rn", F.row_number().over(wdoc.orderBy(F.col("df"), F.col("s"))))
+    )
+    plen = F.col("sz") - F.floor((tenths * F.col("sz") + 9) / 10) + 1
+    return ranked.select("doc_id", "s", "sz", (F.col("rn") <= plen).alias("in_prefix"))
+
+
+def _exact_jaccard_pairs(
+    spark: SparkSession, sf_dir: str, stop_shingle_df: int | None = _STOP_SHINGLE_DF
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) pairs with Jaccard ≥ 0.3 over the
+    inverted-index overlap frame; the stop-shingle cap defaults to
+    _STOP_SHINGLE_DF (see :func:`_shingle_overlaps`)."""
+    return _jaccard_filter(_shingle_overlaps(spark, sf_dir, stop_shingle_df))
 
 
 # --------------------------------------------------------------------------
@@ -562,14 +589,11 @@ def _minhash_lsh_pairs(
     the capped candidate volume is Σ min(d, cap)² — linear in corpus
     size for fixed cap. Default None = uncapped (oracle semantics).
     """
-    d = load_table(spark, sf_dir, "documents")
     # The shingle projection feeds the signature pipeline and both
     # refine sides; recomputing it is cheaper than checkpointing the
     # wide shingle arrays (measured both ways at sf0.1 — the narrow
     # candidate set is what's worth materializing, via broadcast below).
-    docs = spread(d.select("doc_id", tokens("text").alias("toks"))).select(
-        "doc_id", shingles("toks", k=3).alias("sh")
-    )
+    docs = _shingle_sets(spark, sf_dir)
     banded = minhash_bands(docs)
     # Candidates by bucket-grouping, not a self-join: the self-join form
     # evaluates the whole signature lineage once per side; grouping runs
@@ -607,18 +631,7 @@ def _minhash_lsh_pairs(
     # the corpus — and AQE downgrades it to a runtime broadcast when
     # the enriched side is actually small, which is the scale-safe way
     # to get the map-side plan back.
-    sets_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sets_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter * F.lit(1.0) / union
-    enriched = sets_a.join(broadcast_narrow(cand), "doc_a")
-    return (
-        enriched.join(sets_b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= _JACCARD_T)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_filter(_set_overlaps(broadcast_narrow(cand), docs))
 
 
 # --------------------------------------------------------------------------
@@ -979,9 +992,9 @@ _SQL_JACCARD_PAIRS = f"""
       WHERE i * 1.0 / (sa.sz + sb.sz - i) >= {_JACCARD_T}
     )"""
 
-# Transitive-closure oracle shared by both connected-components queries
-# (label propagation and star contraction): the cluster representative
-# is the component's min doc_id, computed by recursive reachability.
+# Transitive-closure oracle of the two connected-components query names:
+# the cluster representative is the component's min doc_id, computed by
+# recursive reachability.
 _SQL_CLUSTERS_ORACLE = f"""
     WITH RECURSIVE {sql_shingles_cte(k=3)},
     {_SQL_JACCARD_PAIRS},
@@ -1000,79 +1013,6 @@ _SQL_CLUSTERS_ORACLE = f"""
     GROUP BY s
     ORDER BY doc_id
     """
-
-
-@query("q_neardup_clusters", oracle=_SQL_CLUSTERS_ORACLE)
-def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the Jaccard≥0.3 pair graph: every doc
-    involved in near-duplication mapped to its cluster representative
-    (the component's min doc_id) — the canonical-doc choice that turns
-    pair detection into an actual dedup pass.
-
-    Distributed min-label propagation (no GraphFrames on box): labels
-    start as doc_id; each round every node takes min(own, neighbors')
-    label; converged when no label changes. Rounds ≤ graph diameter —
-    near-dup clusters are shallow (duplicates of a common source), so
-    this terminates in a handful of rounds; the candidate-pair graph is
-    orders smaller than the corpus, so per-round joins are cheap at any
-    corpus scale (the 100 TB variant swaps in large-star/small-star to
-    bound rounds at O(log n)). Oracle: recursive-CTE transitive closure.
-    """
-    pairs = _exact_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).toDF("s", "d")
-    labels = edges.select(F.col("s").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    edges = edges.persist()
-    labels = labels.persist()
-    _MAX_ROUNDS = 20
-    changed = -1
-    for _ in range(_MAX_ROUNDS):
-        neigh = (
-            edges.join(labels, edges.d == labels.node)
-            .groupBy("s")
-            .agg(F.min("label").alias("nmin"))
-        )
-        updated = (
-            labels.join(neigh, labels.node == neigh.s, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("new_label"),
-                F.col("label").alias("old_label"),
-            )
-        ).persist()
-        changed = updated.where(F.col("new_label") < F.col("old_label")).count()
-        # localCheckpoint (not just persist): truncates the per-round
-        # lineage so round k's plan doesn't nest k self-joins deep.
-        new_labels = (
-            updated.select("node", F.col("new_label").alias("label")).localCheckpoint()
-        )
-        updated.unpersist()
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # Silently returning unconverged labels would diverge from the
-        # transitive-closure oracle with no signal. A component whose
-        # diameter exceeds the round cap needs the O(log n)-round
-        # large-star/small-star variant, not more silent rounds.
-        raise RuntimeError(
-            f"q_neardup_clusters: min-label propagation did not converge in "
-            f"{_MAX_ROUNDS} rounds ({changed} labels still changing) — "
-            f"component diameter exceeds the cap; use large-star/small-star"
-        )
-    edges.unpersist()
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep")
-    ).orderBy("doc_id")
-
-
-# --------------------------------------------------------------------------
-# F2d': connected components via large-star/small-star contraction
-# --------------------------------------------------------------------------
 
 
 def _canon_edges(e: DataFrame) -> DataFrame:
@@ -1120,8 +1060,8 @@ def star_contraction_components(
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14): converges in O(log n) rounds REGARDLESS of
-    component diameter — the scale path where min-label propagation
-    (rounds = diameter, see q_neardup_clusters) degrades on long chains.
+    component diameter, so a long near-dup chain costs no more rounds
+    than a shallow cluster.
 
     ``edges``: two integer-ish columns (any names), undirected pairs.
     Returns (node, label) where label = the component's min node id.
@@ -1133,13 +1073,15 @@ def star_contraction_components(
     Convergence = edge-set fixpoint, detected by (count, xor-of-
     xxhash64) snapshot equality: a star forest is stable under both
     steps, and the fixpoint of the alternation IS a star forest rooted
-    at component minima (SoCC'14 Thm 1–2). localCheckpoint per round
-    truncates the O(rounds)-deep lineage.
+    at component minima (SoCC'14 Thm 1–2). Each round's edge set goes
+    through :func:`materialize`, which truncates the O(rounds)-deep
+    lineage and lets ``release_dead_checkpoints()`` free the blocks of
+    every round whose frame is gone.
     """
     a_name, b_name = edges.columns[0], edges.columns[1]
-    e = _canon_edges(
-        edges.select(F.col(a_name).alias("a"), F.col(b_name).alias("b"))
-    ).localCheckpoint()
+    e = materialize(
+        _canon_edges(edges.select(F.col(a_name).alias("a"), F.col(b_name).alias("b")))
+    )
     prev: tuple[int, int] | None = None
     for _ in range(max_rounds):
         # Optimization r13 (guide §2.4): no dedup between the two star
@@ -1156,7 +1098,7 @@ def star_contraction_components(
         ls = _large_star(e).select(
             F.col("b").alias("lo"), F.col("a").alias("hi")
         )
-        e_new = _canon_edges(_small_star(ls)).localCheckpoint()
+        e_new = materialize(_canon_edges(_small_star(ls)))
         snap = e_new.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
@@ -1186,12 +1128,16 @@ def star_contraction_components(
 
 
 @query("q_neardup_clusters_bigstar", oracle=_SQL_CLUSTERS_ORACLE)
-def q_neardup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering as q_neardup_clusters (same oracle), computed by
-    large-star/small-star contraction instead of label propagation —
-    the variant that holds at 100 TB, where a pathological near-dup
-    CHAIN (scraped mirror-of-mirror sites) gives the propagation loop
-    diameter-many rounds while star contraction stays O(log n)."""
+@query("q_neardup_clusters", oracle=_SQL_CLUSTERS_ORACLE)
+def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Connected components over the Jaccard≥0.3 pair graph: every doc
+    involved in near-duplication mapped to its cluster representative
+    (the component's min doc_id) — the canonical-doc choice that turns
+    pair detection into an actual dedup pass. Computed by
+    :func:`star_contraction_components`, whose O(log n) rounds hold on
+    a pathological near-dup CHAIN (scraped mirror-of-mirror sites) as
+    well as on shallow clusters. Oracle: recursive-CTE transitive
+    closure."""
     pairs = _exact_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = star_contraction_components(pairs)
     return labels.select(
@@ -1333,11 +1279,11 @@ def q_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     step most pipelines get wrong by keeping whichever duplicate
     arrived first.
 
-    Reuses the connected-components labels (min-label propagation)
-    and joins the per-doc quality projection; the argmax is a
-    row_number window partitioned by cluster — cluster count is
-    orders smaller than the corpus, keys uniform. The canonical-id
-    set is what the actual dedup pass anti-joins against.
+    Reuses the q_neardup_clusters labels and joins the per-doc
+    quality projection; the argmax is one aggregate per cluster —
+    cluster count is orders smaller than the corpus, keys uniform.
+    The canonical-id set is what the actual dedup pass anti-joins
+    against.
     """
     clusters = QUERIES["q_neardup_clusters"](spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
@@ -1707,31 +1653,11 @@ def q_jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     losslessly, where the stop_shingle_df cap trades recall. A length
     filter (t·|A| ≤ |B| ≤ |A|/t, integer arithmetic) prunes
     cross-size pairs before the refine; the exact array_intersect
-    refine then scores survivors from FULL sets.
-
-    ⌈0.3·n⌉ is computed as integer floor((3n+9)/10) — double 0.3·n
-    rounds up spuriously (10·0.3 → 3.0000000000000004), which would
-    shorten prefixes and silently break the lossless guarantee.
+    refine then scores survivors from FULL sets. Prefix lengths are
+    exact integers (:func:`_rarity_prefix`).
     """
-    d = load_table(spark, sf_dir, "documents")
-    docs = spread(
-        d.select("doc_id", tokens("text").alias("toks"))
-    ).select("doc_id", shingles("toks", k=3).alias("shset"))
-    docs = materialize(docs)
-    sh = docs.select("doc_id", F.explode("shset").alias("s"))
-    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-
-    wdoc = Window.partitionBy("doc_id")
-    worder = wdoc.orderBy(F.col("df"), F.col("s"))
-    ranked = (
-        sh.join(dfreq, "s")
-        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
-        .withColumn("rn", F.row_number().over(worder))
-    )
-    # prefix length = sz - ceil(0.3*sz) + 1, in exact integer math
-    plen = F.col("sz") - F.floor((3 * F.col("sz") + 9) / 10) + 1
-    prefix = ranked.where(F.col("rn") <= plen).select("doc_id", "s", "sz")
-
+    sets = materialize(_shingle_sets(spark, sf_dir))
+    prefix = _rarity_prefix(sets, 3).where("in_prefix").select("doc_id", "s", "sz")
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
         a.join(
@@ -1748,17 +1674,7 @@ def q_jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .distinct()
     )
-    sets_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sh_a"))
-    sets_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sh_b"))
-    inter_sz = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter_sz * F.lit(1.0) / (F.size("sh_a") + F.size("sh_b") - inter_sz)
-    return (
-        cand.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= _JACCARD_T)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_filter(_set_overlaps(cand, sets))
 
 
 @query(
@@ -1811,30 +1727,13 @@ def q_containment_prefix_filter_pairs(
     join are pruned without losing a single qualifying pair. At
     t = 0.8 the probe side shrinks to the rarest ~20%+1 of each doc.
 
-    ⌈0.8·n⌉ = floor((8n+9)/10) in exact integer math (double 0.8·n
-    mis-rounds); direction normalizes to (contained = smaller,
-    ties → lower doc_id), matching the exact query."""
-    d = load_table(spark, sf_dir, "documents")
-    docs = spread(
-        d.select("doc_id", tokens("text").alias("toks"))
-    ).select("doc_id", shingles("toks", k=3).alias("shset"))
-    docs = materialize(docs)
-    sh = docs.select("doc_id", F.explode("shset").alias("s"))
-    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-
-    wdoc = Window.partitionBy("doc_id")
-    ranked = (
-        sh.join(dfreq, "s")
-        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
-        .withColumn(
-            "rn", F.row_number().over(wdoc.orderBy(F.col("df"), F.col("s")))
-        )
-    )
-    plen = F.col("sz") - F.floor((8 * F.col("sz") + 9) / 10) + 1
-    prefix = ranked.where(F.col("rn") <= plen).select("doc_id", "s", "sz")
-    full = ranked.select("doc_id", "s", "sz")
-
-    a, b = prefix.alias("a"), full.alias("b")
+    Prefix lengths are exact integers (:func:`_rarity_prefix`); each
+    candidate puts the contained doc (smaller, ties → lower doc_id)
+    in doc_a, the direction the exact query's filter normalizes to.
+    """
+    sets = materialize(_shingle_sets(spark, sf_dir))
+    ranked = _rarity_prefix(sets, 8)
+    a, b = ranked.where("in_prefix").alias("a"), ranked.alias("b")
     smaller = (F.col("a.sz") < F.col("b.sz")) | (
         (F.col("a.sz") == F.col("b.sz"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
@@ -1842,32 +1741,12 @@ def q_containment_prefix_filter_pairs(
     cand = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & smaller)
         .select(
-            F.col("a.doc_id").alias("contained_doc"),
-            F.col("b.doc_id").alias("container_doc"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .distinct()
     )
-    sets_a = docs.select(
-        F.col("doc_id").alias("contained_doc"), F.col("shset").alias("sh_a")
-    )
-    sets_b = docs.select(
-        F.col("doc_id").alias("container_doc"), F.col("shset").alias("sh_b")
-    )
-    c_micro = F.expr(
-        "CAST(size(array_intersect(sh_a, sh_b)) * 1000000 DIV size(sh_a)"
-        " AS BIGINT)"
-    )
-    return (
-        cand.join(sets_a, "contained_doc")
-        .join(sets_b, "container_doc")
-        .select(
-            "contained_doc",
-            "container_doc",
-            c_micro.alias("containment_micro"),
-        )
-        .where(F.col("containment_micro") >= _CONTAIN_T_MICRO)
-        .orderBy("contained_doc", "container_doc")
-    )
+    return _containment_filter(_set_overlaps(cand, sets))
 
 
 # --------------------------------------------------------------------------

@@ -595,9 +595,11 @@ def q_correlated_subquery_balance(spark: SparkSession, sf_dir: str) -> DataFrame
     compare is exact: balance·count > sum in DECIMAL(38,6) on both
     engines (a double AVG would be summation-order-dependent at the
     boundary). Same SQL text runs on DuckDB as the oracle."""
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("csq_supplier")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("csq_customer")
-    return spark.sql(_SQL_CORR_SUBQ.format(sup="csq_supplier", cust="csq_customer"))
+    return spark.sql(
+        _SQL_CORR_SUBQ,
+        sup=load_table(spark, sf_dir, "supplier"),
+        cust=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -635,12 +637,10 @@ def q_lateral_topk_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes, O(|nation|) scans of supplier). Ties are broken by
     s_suppkey so the k-th row is deterministic cross-engine; decimal
     s_acctbal ordering is exact."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("lat_nation")
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
-        "lat_supplier"
-    )
     return spark.sql(
-        _SQL_LATERAL_TOPK.format(nat="lat_nation", sup="lat_supplier")
+        _SQL_LATERAL_TOPK,
+        nat=load_table(spark, sf_dir, "nation"),
+        sup=load_table(spark, sf_dir, "supplier"),
     )
 
 

@@ -57,13 +57,11 @@ class TokenExplode:
 def q_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL Python-UDTF token expansion over a 50-doc slice."""
     spark.udtf.register("token_explode", TokenExplode)
-    load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 50
-    ).createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
         SELECT t.doc_id, t.pos, t.token
-        FROM _udtf_docs d, LATERAL token_explode(d.doc_id, d.text) t
+        FROM {docs} d, LATERAL token_explode(d.doc_id, d.text) t
         ORDER BY t.doc_id, t.pos
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50),
     )

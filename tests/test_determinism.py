@@ -25,6 +25,8 @@ CASES = [
     "q_mmr_diverse_topk",  # greedy argmax with (score, vec_id) tie-break
     "q_events_gapfill_hourly",  # (ts, event_id) bucket-last + LOCF window
     "q_jaccard_prefix_filter_pairs",  # rarity-ordered prefixes, exact refine
+    "q_containment_prefix_filter_pairs",  # asymmetric prefix, direction rule
+    "q_neardup_clusters",  # star contraction over the Jaccard pair graph
     # round-5 (late) operators
     "q_semdedup_dropped",  # trained cells + Arrow fixed-point refine
     "q_cdc_merge_upsert",  # (ts, event_id) total-order compaction
@@ -214,3 +216,51 @@ def test_spread_skips_exchange_when_splits_suffice(spark):
     assert out.agg({"id": "sum"}).collect()[0][0] == narrow.agg(
         {"id": "sum"}
     ).collect()[0][0]
+
+
+def test_star_contraction_releases_round_checkpoints(spark):
+    """Every round of star_contraction_components checkpoints through
+    materialize(), so once its result is dropped the dead-checkpoint
+    sweep frees those blocks: no RDD persisted during the run stays
+    persistent. (Ids, not a count: RDDs that earlier tests left to
+    Spark's asynchronous cleaner may vanish meanwhile.)"""
+    import gc
+
+    from geoparquet_python_spark.functions.exact import release_dead_checkpoints
+    from geoparquet_python_spark.operators.dedup import star_contraction_components
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    gc.collect()
+    release_dead_checkpoints()  # drain whatever earlier tests left
+    before = persistent()
+    chain = spark.createDataFrame([(i, i + 1) for i in range(20)], ["a", "b"])
+    labels = star_contraction_components(chain)
+    assert {r.label for r in labels.collect()} == {0}
+    assert persistent() - before, "the run persisted no checkpoint"
+    del labels
+    gc.collect()
+    assert release_dead_checkpoints() >= 1
+    assert not persistent() - before
+
+
+def test_sql_queries_leave_no_temp_views(spark, sf_dir):
+    """The spark.sql-over-frames queries bind their inputs by name, so
+    running them leaves the session's temp views as they were."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+
+    def views():
+        v = catalog.listLocalTempViews("*")
+        return sorted(v.apply(i).table() for i in range(v.size()))
+
+    before = views()
+    for name in (
+        "q_correlated_subquery_balance",
+        "q_lateral_topk_suppliers",
+        "q_udtf_tokens",
+        "q_reachable_event_types",
+        "q_grouping_sets_sql",
+    ):
+        registry.QUERIES[name](spark, sf_dir).collect()
+    assert views() == before
