@@ -7,10 +7,20 @@ Split by execution tier, fastest first:
   whole-stage-codegen, usable in pushdown-able predicates. The
   reference computed these shapely-side per row
   (geoparquet/__init__.py:60≈ decodes everything eagerly first).
-* Arrow-vectorized pandas UDFs over the numpy WKB codec
+* pandas UDFs over the numpy WKB codec
   (geoparquet_python_spark.geo.wkb) for anything that must touch
-  coordinates of arbitrary geometries. One Python hop per Arrow batch,
-  never per row.
+  coordinates of arbitrary geometries. Each is one Python hop per Arrow
+  batch; inside it, only some are vectorized:
+
+  - ``st_point``, ``st_x``, ``st_y`` and ``st_distance`` use the batch
+    point encoder/decoder (the decoder loops per row over a batch holding
+    a null or anything but 21-byte little-endian points);
+  - ``st_envelope`` and ``st_envelope_intersects`` use
+    ``wkb.envelopes`` (a per-row decode only for multi-part, big-endian
+    and NaN/EMPTY rows);
+  - ``st_area``, ``st_length``, ``st_centroid``, ``st_astext``,
+    ``st_contains_point``, ``st_buffer``, ``st_simplify`` and
+    ``st_num_geometries`` decode every row in a Python loop.
 
 ``register_sql(spark)`` exposes every UDF to SQL-string users.
 """
@@ -18,9 +28,11 @@ Split by execution tier, fastest first:
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -152,11 +164,26 @@ def st_y(g: pd.Series) -> pd.Series:
 @pandas_udf(_BBOX_TYPE)
 def st_envelope(g: pd.Series) -> pd.DataFrame:
     """Bounding box struct (D4) — also the GeoParquet-1.1 covering column."""
-    out = np.full((len(g), 4), np.nan)
-    for i, v in enumerate(g):
-        if v is not None:
-            out[i] = wkb.bbox(wkb.decode(v))
+    out = wkb.envelopes(pa.array(g, type=pa.large_binary()))
     return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
+
+
+def _bound(s: pd.Series, up: bool) -> np.ndarray:
+    """A window-bound column as float64, each value rounded to the nearest
+    float toward +inf (``up``) or -inf, so that comparing a float against
+    it gives what Python's exact comparison against the original value
+    gives. SQL literals such as ``-90.5`` arrive as ``decimal.Decimal``;
+    nulls become NaN, which no comparison passes."""
+    if s.dtype.kind == "f":
+        return s.to_numpy("f8")
+    codes, uniq = pd.factorize(s)
+    table = np.empty(len(uniq) + 1)
+    table[-1] = np.nan  # factorize codes nulls as -1
+    for i, v in enumerate(np.asarray(uniq).tolist()):  # Python scalars compare exactly
+        f = float(v)
+        exact = f >= v if up else f <= v
+        table[i] = f if exact else np.nextafter(f, np.inf if up else -np.inf)
+    return table[codes]
 
 
 @pandas_udf(BooleanType())
@@ -167,14 +194,15 @@ def st_envelope_intersects(
     envelope overlap the window? The exact per-row refine behind the
     SQL-string pushdown rewrite (geo/sqlrewrite.py) — same predicate
     spatial_window_filter applies through the DataFrame API."""
-    out = []
-    for v, a, b, c, d in zip(g, x0, y0, x1, y1):
-        if v is None:
-            out.append(None)
-            continue
-        xmin, ymin, xmax, ymax = wkb.bbox(wkb.decode(v))
-        out.append(bool(xmin <= c and xmax >= a and ymin <= d and ymax >= b))
-    return pd.Series(out, dtype="object")
+    env = wkb.envelopes(pa.array(g, type=pa.large_binary()))
+    hit = (
+        (env[:, 0] <= _bound(x1, up=False))
+        & (env[:, 2] >= _bound(x0, up=True))
+        & (env[:, 1] <= _bound(y1, up=False))
+        & (env[:, 3] >= _bound(y0, up=True))
+    ).astype(object)
+    hit[g.isna().to_numpy()] = None
+    return pd.Series(hit, dtype="object")
 
 
 @pandas_udf(DoubleType())
@@ -340,7 +368,15 @@ _UDFS = {
 }
 
 
+_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
 def register_sql(spark: SparkSession) -> None:
-    """Expose the ST_* UDFs to spark.sql string queries (§2.G)."""
+    """Expose the ST_* UDFs to spark.sql string queries (§2.G), once per
+    session: each ``spark.udf.register`` is a JVM round trip, and a
+    ``newSession()`` has its own function registry."""
+    if spark in _REGISTERED:
+        return
     for name, fn in _UDFS.items():
         spark.udf.register(name, fn)
+    _REGISTERED.add(spark)

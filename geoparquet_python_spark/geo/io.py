@@ -84,32 +84,11 @@ def _geo_metadata_json(
 
 
 def _wkb_type_codes(arr: pa.Array) -> set[int]:
-    """Vectorized WKB geometry-type-code extraction from a pyarrow
-    binary array: byte 0 is the byte order, bytes 1-4 the uint32 type
-    code. Runs on numpy views of the Arrow offsets/data buffers — no
-    per-row Python in the write hot path."""
-    if arr.null_count == len(arr) or len(arr) == 0:
-        return set()
-    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    validity, offsets_buf, data_buf = arr.buffers()
-    offsets = np.frombuffer(offsets_buf, dtype=off_dtype)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    data = np.frombuffer(data_buf, dtype=np.uint8)
-    starts = offsets[:-1].astype(np.int64)
-    if validity is not None:
-        mask = np.unpackbits(
-            np.frombuffer(validity, dtype=np.uint8), bitorder="little"
-        )[arr.offset : arr.offset + len(arr)].astype(bool)
-        starts = starts[mask]
-    if starts.size == 0:
-        return set()
-    order = data[starts]  # 1 = little-endian, 0 = big-endian
-    b = [data[starts + i].astype(np.uint32) for i in (1, 2, 3, 4)]
-    le = b[0] | (b[1] << 8) | (b[2] << 16) | (b[3] << 24)
-    be = (b[0] << 24) | (b[1] << 16) | (b[2] << 8) | b[3]
-    codes = np.where(order == 1, le, be)
-    return set(int(c) for c in np.unique(codes))
+    """Raw WKB geometry type codes present in a pyarrow binary array, read
+    from its buffers by ``wkb.headers`` — no per-row Python in the write
+    hot path. Nulls and values shorter than a WKB header carry no type."""
+    h = wkb.headers(arr)
+    return set(int(c) for c in np.unique(h.code[h.headed]))
 
 
 def _type_code_names(codes: set[int]) -> list[str]:

@@ -61,11 +61,13 @@ def rewrite_spatial_sql(sql: str, bbox_col: str = "bbox") -> str:
 
 
 def geo_sql(
-    spark: SparkSession, sql: str, bbox_col: str = "bbox"
+    spark: SparkSession, sql: str, bbox_col: str = "bbox", **frames: DataFrame
 ) -> DataFrame:
-    """``spark.sql`` for spatial queries: registers the ST_* UDFs and
-    runs the pushdown-rewritten statement."""
+    """``spark.sql`` for spatial queries: registers the ST_* UDFs (once
+    per session) and runs the pushdown-rewritten statement. ``frames``
+    bind ``{name}`` placeholders in the text to DataFrames, as in
+    ``spark.sql(text, **frames)``, so no temp view outlives the call."""
     from geoparquet_python_spark.geo.functions import register_sql
 
     register_sql(spark)
-    return spark.sql(rewrite_spatial_sql(sql, bbox_col=bbox_col))
+    return spark.sql(rewrite_spatial_sql(sql, bbox_col=bbox_col), **frames)

@@ -8,6 +8,18 @@ Series of WKB bytes inside one pandas-UDF call, with a numpy
 ``frombuffer`` fast path for the all-points case (zero per-row Python in
 the common layout).
 
+Two kernels work on the buffers of an Arrow binary column instead of
+per-row bytes objects:
+
+* ``headers(arr)`` reads every row's byte order and type code from the
+  offset, validity and data buffers (the GeoParquet writer's
+  ``geometry_types`` come from it);
+* ``envelopes(arr)`` gives the ``(n, 4)`` bounding boxes behind
+  ``ST_Envelope``, the covering ``bbox`` column and the window refine.
+  Little-endian Points and single-ring LineStrings/Polygons are reduced
+  with one numpy gather; every other row goes through ``bbox(decode(v))``,
+  so the result equals the per-row path bit for bit.
+
 Supported: 2-D Point, LineString, Polygon (with holes), MultiPoint,
 MultiLineString, MultiPolygon, GeometryCollection; both byte orders on
 decode, little-endian on encode (the de-facto standard).
@@ -25,8 +37,10 @@ Internal geometry representation (no classes — cheap to build in UDFs):
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 _POINT, _LINESTRING, _POLYGON = 1, 2, 3
 _MULTIPOINT, _MULTILINESTRING, _MULTIPOLYGON = 4, 5, 6
@@ -180,6 +194,109 @@ def decode_points(bufs) -> tuple[np.ndarray, np.ndarray]:
             raise ValueError(f"expected Point, got {kind}")
         xs[i], ys[i] = val
     return xs, ys
+
+
+# ------------------------------------------------- Arrow-buffer kernels
+
+
+class Headers(NamedTuple):
+    """The WKB header of every row of an Arrow binary array."""
+
+    data: np.ndarray  # uint8 view of the values buffer
+    start: np.ndarray  # int64 byte offset of each row in ``data``
+    size: np.ndarray  # int64 byte length of each row
+    valid: np.ndarray  # bool: not null
+    headed: np.ndarray  # bool: not null and long enough for the 5-byte header
+    little: np.ndarray  # bool: headed and the byte-order byte is 1
+    code: np.ndarray  # uint32 type code in the row's byte order (0 if not headed)
+
+
+def _unaligned(data: np.ndarray, dtype: str) -> np.ndarray:
+    """``data`` as ``dtype`` values starting at every byte: element ``i`` is
+    the value whose first byte is ``data[i]`` (WKB fields are unaligned)."""
+    size = np.dtype(dtype).itemsize
+    return np.ndarray(
+        (max(len(data) - size + 1, 0),), dtype, data, 0, (1,)
+    )
+
+
+def headers(arr: pa.BinaryArray | pa.LargeBinaryArray) -> Headers:
+    """Byte order and type code of every row, read from the Arrow offset,
+    validity and data buffers with no per-row Python."""
+    n = len(arr)
+    large = pa.types.is_large_binary(arr.type)
+    if not (large or pa.types.is_binary(arr.type)):
+        raise TypeError(f"expected a binary array, got {arr.type}")
+    _, offsets_buf, data_buf = arr.buffers()
+    if n:
+        offsets = np.frombuffer(offsets_buf, np.int64 if large else np.int32)
+        offsets = offsets[arr.offset : arr.offset + n + 1].astype(np.int64)
+    else:
+        offsets = np.zeros(1, np.int64)
+    data = (
+        np.frombuffer(data_buf, np.uint8)
+        if data_buf is not None
+        else np.empty(0, np.uint8)
+    )
+    start = offsets[:-1]
+    size = np.diff(offsets)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    headed = valid & (size >= 5)
+    at = start[headed]
+    little = np.zeros(n, bool)
+    little[headed] = data[at] == 1
+    code = np.zeros(n, np.uint32)
+    code[headed] = np.where(
+        little[headed],
+        _unaligned(data, "<u4")[at + 1],
+        _unaligned(data, ">u4")[at + 1],
+    )
+    return Headers(data, start, size, valid, headed, little, code)
+
+
+def envelopes(arr: pa.BinaryArray | pa.LargeBinaryArray) -> np.ndarray:
+    """``(n, 4)`` float64 (xmin, ymin, xmax, ymax) of every row of a WKB
+    binary array, NaN for nulls; equal bit for bit to ``bbox(decode(v))``.
+
+    Little-endian Points and single-ring LineStrings/Polygons keep their
+    coordinates in one run, so one gather and ``reduceat`` bound them all.
+    Every other row takes the per-row path: big-endian, multi-part and
+    collections, and rows whose box has a NaN (NaN coordinates, POINT
+    EMPTY) or a zero (whose sign would depend on reduction order)."""
+    h = headers(arr)
+    n = len(h.start)
+    out = np.full((n, 4), np.nan)
+    u4 = _unaligned(h.data, "<u4")
+    first = np.zeros(n, np.int64)  # byte offset of the first coordinate
+    count = np.zeros(n, np.int64)  # coordinates in the run
+    pt = h.little & (h.code == _POINT) & (h.size == 21)
+    first[pt], count[pt] = h.start[pt] + 5, 1
+    ls = np.flatnonzero(h.little & (h.code == _LINESTRING) & (h.size >= 9))
+    first[ls], count[ls] = h.start[ls] + 9, u4[h.start[ls] + 5]
+    pg = np.flatnonzero(h.little & (h.code == _POLYGON) & (h.size >= 13))
+    pg = pg[u4[h.start[pg] + 5] == 1]
+    first[pg], count[pg] = h.start[pg] + 13, u4[h.start[pg] + 9]
+    run = np.flatnonzero((count > 0) & (first + 16 * count == h.start + h.size))
+    done = np.zeros(n, bool)
+    if run.size:
+        k = count[run]
+        seg = np.cumsum(k) - k  # each row's first index in the gather
+        pos = np.repeat(first[run] - 16 * seg, k) + 16 * np.arange(int(k.sum()))
+        f8 = _unaligned(h.data, "<f8")
+        xs, ys = f8[pos], f8[pos + 8]
+        box = np.column_stack([
+            np.minimum.reduceat(xs, seg),
+            np.minimum.reduceat(ys, seg),
+            np.maximum.reduceat(xs, seg),
+            np.maximum.reduceat(ys, seg),
+        ])
+        ok = ~np.isnan(box).any(axis=1) & ((k == 1) | (box != 0.0).all(axis=1))
+        out[run[ok]] = box[ok]
+        done[run[ok]] = True
+    for i in np.flatnonzero(h.valid & ~done):
+        s = h.start[i]
+        out[i] = bbox(decode(h.data[s : s + h.size[i]]))
+    return out
 
 
 # ------------------------------------------------------ geometry measures

@@ -124,7 +124,6 @@ def q_geo_sql_pushdown_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gio.write_geoparquet(pts, out, "geometry", crs="OGC:CRS84")
 
-    gio.read_geoparquet(spark, out).createOrReplaceTempView("geo_pts")
     return geo_sql(
         spark,
         f"""
@@ -132,11 +131,12 @@ def q_geo_sql_pushdown_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n,
                MIN(ST_X(geometry)) AS min_x,
                MAX(ST_X(geometry)) AS max_x
-        FROM geo_pts
+        FROM {{geo_pts}}
         WHERE ST_EnvelopeIntersects(geometry, {_X0}, {_Y0}, {_X1}, {_Y1})
         GROUP BY c_nationkey
         ORDER BY c_nationkey
         """,
+        geo_pts=gio.read_geoparquet(spark, out),
     )
 
 

@@ -77,8 +77,21 @@ def get_spark(app_name: str = "geoparquet-python-spark") -> SparkSession:
     the cores; on a real cluster you size shuffle.partitions so each
     partition is ~100-200 MB at the target scale (documented knob, see
     SURVEY.md §4.3).
+
+    Python workers fork from ``geoparquet_python_spark._daemon``
+    (``spark.python.daemon.module``, a static conf): on Python < 3.12 the
+    stock daemon's workers re-read every zip-archive directory on the
+    import path before each task, ~120 ms of CPU a task over
+    ``pyspark.zip``; this one re-reads an archive only when it changed.
+    ``spark.executorEnv.PYTHONPATH`` carries the package's parent
+    directory so workers can import the daemon from any working
+    directory. Sessions built elsewhere (the verify driver's, any handed
+    to :func:`prepare`) keep the stock daemon; nothing else depends on it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    package_root = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -86,6 +99,8 @@ def get_spark(app_name: str = "geoparquet-python-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.python.daemon.module", "geoparquet_python_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", package_root)
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -261,6 +261,7 @@ def test_sql_queries_leave_no_temp_views(spark, sf_dir):
         "q_udtf_tokens",
         "q_reachable_event_types",
         "q_grouping_sets_sql",
+        "q_geo_sql_pushdown_window",
     ):
         registry.QUERIES[name](spark, sf_dir).collect()
     assert views() == before

@@ -4,6 +4,7 @@ reference's implicit round-trip test with hypothesis properties)."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -161,3 +162,136 @@ def test_wkt():
     assert wkb.to_wkt(("Point", (1.5, -2.0))) == "POINT (1.5 -2)"
     sq = ring([(0, 0), (1, 0), (1, 1), (0, 1)])
     assert wkb.to_wkt(("Polygon", [sq])).startswith("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
+
+
+# ------------------------------------------- Arrow-buffer envelope kernel
+
+
+def _per_row_boxes(vals) -> np.ndarray:
+    out = np.full((len(vals), 4), np.nan)
+    for i, v in enumerate(vals):
+        if v is not None:
+            out[i] = wkb.bbox(wkb.decode(v))
+    return out
+
+
+def _assert_bit_identical(got: np.ndarray, want: np.ndarray) -> None:
+    """Equal bit for bit: NaN matches NaN at the same position only, and
+    -0.0 does not match 0.0."""
+    assert got.shape == want.shape and got.dtype == want.dtype
+    np.testing.assert_array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
+def _be_point(x: float, y: float) -> bytes:
+    import struct
+
+    return b"\x00" + struct.pack(">Idd", 1, x, y)
+
+
+_SQ = ring([(0, 0), (4, 0), (4, 4), (0, 4)])
+_CORPUS = [
+    wkb.encode(("Point", (1.5, -2.0))),
+    _be_point(3.5, -7.25),
+    None,
+    wkb.encode(("Point", (np.nan, np.nan))),  # POINT EMPTY
+    wkb.encode(("Point", (np.nan, 2.0))),
+    wkb.encode(("LineString", np.array([[0.0, 1.0], [2.0, -3.0], [-1.0, 5.0]]))),
+    wkb.encode(("LineString", np.array([[0.0, 0.5], [np.nan, 1.0]]))),
+    wkb.encode(("LineString", np.array([[0.0, -0.0], [-0.0, 0.0]]))),
+    wkb.encode(("LineString", np.zeros((0, 2)))),
+    wkb.encode(("Polygon", [_SQ - 9.0])),
+    wkb.encode(("Polygon", [_SQ, _SQ / 4 + 1])),  # with a hole
+    None,
+    wkb.encode(("MultiPolygon", [[_SQ], [_SQ + 10.0, _SQ / 4 + 11.0]])),
+    wkb.encode(
+        (
+            "GeometryCollection",
+            [("Point", (9.0, -9.0)), ("LineString", np.array([[0.0, 0.0], [1.0, 1.0]]))],
+        )
+    ),
+    wkb.encode(("MultiPoint", np.array([[1.0, 2.0], [-3.0, 4.0]]))),
+]
+
+
+@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()], ids=str)
+def test_envelopes_match_per_row_bbox(typ):
+    arr = pa.array(_CORPUS, typ)
+    _assert_bit_identical(wkb.envelopes(arr), _per_row_boxes(_CORPUS))
+
+
+@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()], ids=str)
+def test_envelopes_on_sliced_empty_and_null_arrays(typ):
+    arr = pa.array(_CORPUS, typ)
+    for lo, hi in [(1, 7), (4, 15), (11, 12), (5, 5)]:
+        _assert_bit_identical(
+            wkb.envelopes(arr.slice(lo, hi - lo)), _per_row_boxes(_CORPUS[lo:hi])
+        )
+    assert wkb.envelopes(pa.array([], typ)).shape == (0, 4)
+    _assert_bit_identical(wkb.envelopes(pa.array([None, None], typ)), np.full((2, 4), np.nan))
+
+
+@given(st.lists(st.one_of(st.none(), coord), min_size=1, max_size=40))
+@settings(max_examples=50)
+def test_envelopes_points_and_rings_property(items):
+    vals = []
+    for i, p in enumerate(items):
+        if p is None:
+            vals.append(None)
+        elif i % 3 == 0:
+            vals.append(wkb.encode(("Point", p)))
+        elif i % 3 == 1:
+            vals.append(wkb.encode(("LineString", np.array([p, (p[1], p[0])]))))
+        else:
+            vals.append(wkb.encode(("Polygon", [ring([p, (p[0] + 1, p[1]), (p[0], p[1] - 1)])])))
+    _assert_bit_identical(wkb.envelopes(pa.array(vals, pa.binary())), _per_row_boxes(vals))
+
+
+def test_headers_read_byte_order_and_type_code():
+    arr = pa.array([_CORPUS[0], _CORPUS[1], None, b"\x01\x02", _CORPUS[12]], pa.binary())
+    h = wkb.headers(arr.slice(1))
+    assert h.valid.tolist() == [True, False, True, True]
+    assert h.headed.tolist() == [True, False, False, True]
+    assert h.little.tolist() == [False, False, False, True]
+    assert h.code.tolist() == [1, 0, 0, 6]
+
+
+def test_envelope_intersects_decimal_bounds_match_exact_comparison():
+    """SQL literal bounds arrive as Decimal, and comparing a float against
+    a Decimal in Python is exact; the vectorized refine must give the
+    same answers as that per-row comparison, nulls included."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from geoparquet_python_spark.geo.functions import st_envelope_intersects
+
+    def per_row(g, x0, y0, x1, y1):
+        out = []
+        for v, a, b, c, d in zip(g, x0, y0, x1, y1):
+            if v is None:
+                out.append(None)
+                continue
+            xmin, ymin, xmax, ymax = wkb.bbox(wkb.decode(v))
+            out.append(bool(xmin <= c and xmax >= a and ymin <= d and ymax >= b))
+        return out
+
+    g = pd.Series(
+        [
+            wkb.encode(("Point", (0.1, 0.2))),
+            None,
+            wkb.encode(("Point", (0.1, 0.1))),
+            wkb.encode(("Point", (np.nan, np.nan))),
+            wkb.encode(("Polygon", [_SQ / 40])),
+            _be_point(0.1, 0.1),
+        ],
+        dtype=object,
+    )
+    n = len(g)
+    bounds = [Decimal("0.1"), 0.1, Decimal("0.2"), Decimal("1e400"), 2**53 + 1]
+    for lo in bounds:
+        for hi in bounds:
+            args = [pd.Series([lo] * n), pd.Series([lo] * n),
+                    pd.Series([hi] * n), pd.Series([hi] * n)]
+            got = st_envelope_intersects.func(g, *args).tolist()
+            assert got == per_row(g, *args), (lo, hi)
+            assert [type(v) for v in got] == [type(v) for v in per_row(g, *args)]

@@ -315,6 +315,7 @@ def test_sql_pushdown_query_prunes_and_matches_unrewritten(spark, sf_dir):
     SQL returns WITHOUT the rewrite (soundness end-to-end)."""
     from geoparquet_python_spark import registry
     from geoparquet_python_spark.geo.functions import register_sql
+    from geoparquet_python_spark.io import run_scratch_dir
     from geoparquet_python_spark.testing import canonicalize
 
     registry.load_all()
@@ -324,17 +325,20 @@ def test_sql_pushdown_query_prunes_and_matches_unrewritten(spark, sf_dir):
         "bbox conjuncts did not reach the Parquet scan"
     )
 
-    # same statement, no rewrite (UDF-only filter; geo_pts view was
-    # registered by the query above)
+    # same statement, no rewrite (UDF-only filter), over the dataset the
+    # query above wrote
     register_sql(spark)
     raw = spark.sql(
         """
         SELECT c_nationkey, COUNT(*) AS n,
                MIN(ST_X(geometry)) AS min_x, MAX(ST_X(geometry)) AS max_x
-        FROM geo_pts
+        FROM {geo_pts}
         WHERE ST_EnvelopeIntersects(geometry, -90.0, -40.0, 60.0, 55.0)
         GROUP BY c_nationkey ORDER BY c_nationkey
-        """
+        """,
+        geo_pts=gio.read_geoparquet(
+            spark, run_scratch_dir(spark, "gpq_sqlpush", sf_dir)
+        ),
     )
     assert canonicalize(df.toPandas()).equals(canonicalize(raw.toPandas()))
 
@@ -388,3 +392,41 @@ def test_multi_geometry_metadata_on_both_columns(spark, sf_dir, tmp_path):
     assert fields["geometry"].metadata["geo_primary"] is True
     assert fields["dest"].metadata["geo_primary"] is False
     assert fields["dest"].metadata["geo"]["encoding"] == "WKB"
+
+
+def test_geo_sql_registers_udfs_once_per_session(spark, monkeypatch):
+    """geo_sql registers the ST_* UDFs on a session's first call only;
+    a new session gets its own registration."""
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    geo_sql(spark, "SELECT 1 AS one")
+    calls = []
+    stock = type(spark.udf).register
+
+    def counting(self, name, f, *args, **kwargs):
+        calls.append(name)
+        return stock(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark.udf), "register", counting)
+    geo_sql(spark, "SELECT 1 AS one")
+    assert calls == []
+
+    other = spark.newSession()
+    row = geo_sql(other, "SELECT ST_X(ST_Point(2.5D, 1.0D)) AS x").first()
+    assert row.x == 2.5
+    assert "ST_X" in calls
+
+
+def test_geo_sql_binds_frames_by_name(spark):
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 5.0, 5.0)], ["id", "x", "y"])
+    pts = gio.add_bbox_column(
+        pts.select("id", st_point(F.col("x"), F.col("y")).alias("geometry"))
+    )
+    got = geo_sql(
+        spark,
+        "SELECT id FROM {pts} WHERE ST_EnvelopeIntersects(geometry, 0, 0, 1, 1)",
+        pts=pts,
+    )
+    assert [r.id for r in got.collect()] == [1]
