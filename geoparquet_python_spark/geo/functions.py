@@ -7,17 +7,18 @@ Split by execution tier, fastest first:
   whole-stage-codegen, usable in pushdown-able predicates. The
   reference computed these shapely-side per row
   (geoparquet/__init__.py:60≈ decodes everything eagerly first).
-* pandas UDFs over the numpy WKB codec
-  (geoparquet_python_spark.geo.wkb) for anything that must touch
-  coordinates of arbitrary geometries. Each is one Python hop per Arrow
-  batch; inside it, only some are vectorized:
+* UDFs over the numpy WKB codec (geoparquet_python_spark.geo.wkb) for
+  anything that must touch coordinates of arbitrary geometries. Each is
+  one Python hop per Arrow batch; inside it, only some are vectorized:
 
-  - ``st_point``, ``st_x``, ``st_y`` and ``st_distance`` use the batch
-    point encoder/decoder (the decoder loops per row over a batch holding
-    a null or anything but 21-byte little-endian points);
-  - ``st_envelope`` and ``st_envelope_intersects`` use
-    ``wkb.envelopes`` (a per-row decode only for multi-part, big-endian
-    and NaN/EMPTY rows);
+  - ``st_envelope`` is an Arrow UDF: ``wkb.envelope_struct`` reads the
+    batch's WKB buffers directly, with no Arrow → pandas → Arrow round
+    trip (a per-row decode only for multi-part, big-endian and
+    NaN/EMPTY rows);
+  - the rest are pandas UDFs. ``st_envelope_intersects`` uses
+    ``wkb.envelopes``; ``st_point``, ``st_x``, ``st_y`` and
+    ``st_distance`` use the batch point encoder/decoder (the decoder
+    decodes per row only what is not a 21-byte little-endian point);
   - ``st_area``, ``st_length``, ``st_centroid``, ``st_astext``,
     ``st_contains_point``, ``st_buffer``, ``st_simplify`` and
     ``st_num_geometries`` decode every row in a Python loop.
@@ -36,7 +37,7 @@ import pyarrow as pa
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -47,11 +48,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-_BBOX_TYPE = StructType(
-    [StructField(n, DoubleType()) for n in ("xmin", "ymin", "xmax", "ymax")]
-)
-
 from geoparquet_python_spark.geo import wkb
+
+_BBOX_TYPE = StructType([StructField(n, DoubleType()) for n in wkb.ENVELOPE_FIELDS])
 
 # ------------------------------------------------------------- built-ins
 
@@ -161,11 +160,11 @@ def st_y(g: pd.Series) -> pd.Series:
     return pd.Series(ys)
 
 
-@pandas_udf(_BBOX_TYPE)
-def st_envelope(g: pd.Series) -> pd.DataFrame:
-    """Bounding box struct (D4) — also the GeoParquet-1.1 covering column."""
-    out = wkb.envelopes(pa.array(g, type=pa.large_binary()))
-    return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
+@arrow_udf(_BBOX_TYPE)
+def st_envelope(g: pa.Array) -> pa.Array:
+    """Bounding box struct (D4) — also the GeoParquet-1.1 covering column;
+    a NaN bound is a null field."""
+    return wkb.envelope_struct(g)
 
 
 def _bound(s: pd.Series, up: bool) -> np.ndarray:

@@ -11,14 +11,18 @@ Spark re-design: Spark's parquet sink cannot stamp footer key-value
 metadata, so the writer runs as ``mapInArrow`` — every partition writes
 its own footer-correct part file with pyarrow IN PARALLEL on the
 executors (one pass, no post-hoc rewrite; at 100 TB there is no
-driver-side step proportional to data size). The reader is a plain
-``spark.read.parquet`` (vectorized scan, pushdown intact); only the
-footer metadata hop is pyarrow-on-the-driver, reading ONE footer.
+driver-side step proportional to data size). That one Arrow pass is the
+only time rows cross into Python: the kernel also computes the
+GeoParquet 1.1-style ``bbox`` covering struct (``wkb.envelope_struct``)
+that lets spatial predicates push down to row-group stats (§4.3).
+
+The reader is a vectorized ``spark.read.parquet`` (pushdown intact)
+given the memoized schema of ``io.parquet_schema``, so only the first
+read of a freshly written dataset spends Spark's schema-inference job;
+the footer metadata hop is pyarrow-on-the-driver, reading the footers.
 
 Geometry stays WKB ``BinaryType`` end-to-end; nothing decodes at scan
-time (decode is per-operator, SURVEY.md §1.1). An optional GeoParquet
-1.1-style ``bbox`` covering struct is materialized at write so spatial
-predicates push down to row-group stats (§4.3).
+time (decode is per-operator, SURVEY.md §1.1).
 """
 
 from __future__ import annotations
@@ -39,6 +43,7 @@ from pyspark.sql import functions as F
 
 from geoparquet_python_spark.geo import wkb
 from geoparquet_python_spark.geo.functions import st_envelope
+from geoparquet_python_spark.io import read_parquet
 
 GEO_KEY = b"geo"
 # Pre-spec key the reference used (SURVEY.md §0.2 — exact name uncertain,
@@ -108,7 +113,9 @@ def add_bbox_column(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Materialize the GeoParquet-1.1 covering column: a
     {xmin,ymin,xmax,ymax} struct. Plain comparisons against its fields
     are pushed to Parquet row-group stats by Spark's scan — this column
-    IS the spatial index at 100 TB."""
+    IS the spatial index at 100 TB. ``write_geoparquet`` builds the same
+    column inside its own kernel instead; this is for frames used
+    without a write."""
     return df.withColumn("bbox", st_envelope(F.col(geometry_col)))
 
 
@@ -126,7 +133,11 @@ def write_geoparquet(
     OGC ``geo`` key-value metadata — written by pyarrow inside
     ``mapInArrow``, so the stamping is executor-side and single-pass
     (the reference's ``replace_schema_metadata`` + ``pq.write_table``,
-    geoparquet/__init__.py:35–40≈, parallelized).
+    geoparquet/__init__.py:35–40≈, parallelized). With ``bbox_covering``
+    and no ``bbox`` column in ``df``, the same kernel appends the covering
+    struct to every batch (a null field where a bound is NaN, as Spark's
+    pandas conversion gives), so the rows cross into Python once; the
+    schema-only part of an all-empty write carries the field too.
 
     Task-commit protocol (retries/speculation are routine at 100 TB):
     each attempt writes to a hidden temp name derived from
@@ -143,8 +154,7 @@ def write_geoparquet(
     for c in [geometry_col, *secondary]:
         if c not in df.columns:
             raise ValueError(f"geometry column {c!r} not in {df.columns}")
-    if bbox_covering and "bbox" not in df.columns:
-        df = add_bbox_column(df, geometry_col)
+    add_bbox = bbox_covering and "bbox" not in df.columns
 
     os.makedirs(path, exist_ok=True)
 
@@ -168,6 +178,10 @@ def write_geoparquet(
         codes: set[int] = set()
         sec_codes: dict[str, set[int]] = {c: set() for c in secondary}
         for batch in batches:
+            if add_bbox:
+                batch = batch.append_column(
+                    "bbox", wkb.envelope_struct(batch.column(geometry_col))
+                )
             buffered.append(batch)
             rows += batch.num_rows
             codes |= _wkb_type_codes(batch.column(geometry_col))
@@ -224,6 +238,11 @@ def write_geoparquet(
         # Every partition was empty: emit one schema-only part so the
         # directory is a valid (zero-row) GeoParquet dataset.
         tbl = df.limit(0).toArrow()
+        if add_bbox:
+            empty = wkb.envelope_struct(pa.array([], pa.binary()))
+            tbl = tbl.append_column(
+                "bbox", pa.chunked_array([], type=empty.type)
+            )
         tbl = tbl.replace_schema_metadata(
             {**(tbl.schema.metadata or {}),
              GEO_KEY: _geo_metadata_json(
@@ -295,11 +314,13 @@ def geo_metadata(path: str) -> dict | None:
 
 def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     """GeoParquet scan: vectorized Spark parquet read (pushdown/pruning
-    intact); geo footer metadata (one driver-side footer read) attached
-    to the geometry column's schema metadata. WKB stays binary — decode
-    is lazy, per-operator (the reference decodes every row up front,
-    geoparquet/__init__.py:60≈ — the 100 TB anti-pattern)."""
-    df = spark.read.parquet(path)
+    intact) with the memoized ``io.parquet_schema`` — no Spark job once
+    the file set's schema is known; geo footer metadata (driver-side
+    footer reads) attached to the geometry column's schema metadata. WKB
+    stays binary — decode is lazy, per-operator (the reference decodes
+    every row up front, geoparquet/__init__.py:60≈ — the 100 TB
+    anti-pattern)."""
+    df = read_parquet(spark, path)
     meta = geo_metadata(path)
     if meta is not None:
         # Attach metadata to EVERY geometry column the footer declares

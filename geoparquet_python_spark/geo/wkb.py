@@ -3,22 +3,26 @@
 Reference parity: the reference round-trips geometry as WKB via shapely
 (`geoparquet/__init__.py:30≈` encode ``geom.wkb`` per row, `:60≈` decode
 ``shapely.wkb.loads`` per row — both per-row Python loops). Here the
-codec is a self-contained batch library: decode/encode whole pandas
-Series of WKB bytes inside one pandas-UDF call, with a numpy
-``frombuffer`` fast path for the all-points case (zero per-row Python in
-the common layout).
+codec is a self-contained batch library: encode/decode whole batches
+of WKB inside one UDF call, with no per-row Python for the common
+layouts.
 
-Two kernels work on the buffers of an Arrow binary column instead of
-per-row bytes objects:
+The batch kernels work on the buffers of an Arrow binary column instead
+of per-row bytes objects:
 
 * ``headers(arr)`` reads every row's byte order and type code from the
   offset, validity and data buffers (the GeoParquet writer's
   ``geometry_types`` come from it);
+* ``decode_points(arr)`` gathers the coordinates of every 21-byte
+  little-endian Point at once, nulls included;
 * ``envelopes(arr)`` gives the ``(n, 4)`` bounding boxes behind
-  ``ST_Envelope``, the covering ``bbox`` column and the window refine.
+  ``ST_Envelope``, the covering ``bbox`` column and the window refine,
+  and ``envelope_struct(arr)`` gives them as that column's Arrow struct.
   Little-endian Points and single-ring LineStrings/Polygons are reduced
-  with one numpy gather; every other row goes through ``bbox(decode(v))``,
-  so the result equals the per-row path bit for bit.
+  with one numpy gather.
+
+Rows a gather does not cover go through the per-row ``decode``, so every
+kernel equals the per-row path bit for bit.
 
 Supported: 2-D Point, LineString, Polygon (with holes), MultiPoint,
 MultiLineString, MultiPolygon, GeometryCollection; both byte orders on
@@ -170,26 +174,22 @@ def encode_points(x: np.ndarray, y: np.ndarray) -> list[bytes]:
 
 
 def decode_points(bufs) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized Point decoder. Fast path: every value is a 21-byte LE
-    point -> one frombuffer over the concatenation. Falls back to the
-    general decoder (taking the first point / centroid-of-nothing rule:
-    non-points raise)."""
-    vals = list(bufs)
-    if vals and all(
-        v is not None and len(v) == 21 and v[0] == 1 for v in vals
-    ):
-        raw = b"".join(vals)
-        rec = np.frombuffer(
-            raw, dtype=[("bo", "u1"), ("code", "<u4"), ("xy", "<f8", 2)]
-        )
-        if (rec["code"] == _POINT).all():
-            return rec["xy"][:, 0].copy(), rec["xy"][:, 1].copy()
-    xs = np.full(len(vals), np.nan)
-    ys = np.full(len(vals), np.nan)
-    for i, v in enumerate(vals):
-        if v is None:
-            continue
-        kind, val = decode(v)
+    """Vectorized Point decoder over a WKB binary array or a sequence of
+    WKB bytes (``None`` for null); nulls give NaN. Every 21-byte
+    little-endian Point is read with one gather over the Arrow data
+    buffer; only the other rows take the per-row ``decode``, where
+    non-points raise."""
+    arr = bufs if isinstance(bufs, pa.Array) else pa.array(bufs, pa.large_binary())
+    h = headers(arr)
+    xs = np.full(len(arr), np.nan)
+    ys = np.full(len(arr), np.nan)
+    fast = h.little & (h.code == _POINT) & (h.size == 21)
+    f8 = _unaligned(h.data, "<f8")
+    xs[fast] = f8[h.start[fast] + 5]
+    ys[fast] = f8[h.start[fast] + 13]
+    for i in np.flatnonzero(h.valid & ~fast):
+        s = h.start[i]
+        kind, val = decode(h.data[s : s + h.size[i]])
         if kind != "Point":
             raise ValueError(f"expected Point, got {kind}")
         xs[i], ys[i] = val
@@ -297,6 +297,21 @@ def envelopes(arr: pa.BinaryArray | pa.LargeBinaryArray) -> np.ndarray:
         s = h.start[i]
         out[i] = bbox(decode(h.data[s : s + h.size[i]]))
     return out
+
+
+ENVELOPE_FIELDS = ("xmin", "ymin", "xmax", "ymax")
+
+
+def envelope_struct(arr: pa.BinaryArray | pa.LargeBinaryArray) -> pa.StructArray:
+    """``envelopes(arr)`` as the {xmin, ymin, xmax, ymax} struct of the
+    covering ``bbox`` column: a NaN bound (null row, POINT EMPTY, NaN
+    coordinate) becomes a null field, the struct itself is never null."""
+    box = envelopes(arr)
+    nan = np.isnan(box)
+    return pa.StructArray.from_arrays(
+        [pa.array(box[:, i], mask=nan[:, i]) for i in range(4)],
+        names=list(ENVELOPE_FIELDS),
+    )
 
 
 # ------------------------------------------------------ geometry measures

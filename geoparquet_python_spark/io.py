@@ -6,12 +6,25 @@ Here every scan is a lazy ``spark.read.parquet`` DataFrame, so Catalyst
 column pruning and Parquet row-group predicate pushdown apply for free
 (SURVEY.md §4.2); at 100 TB that is the difference between reading the
 footprint of the query and reading the table.
+
+Every Parquet read in the package goes through :func:`parquet_schema`,
+so only the first read of a file set spends Spark's schema-inference
+job. Memo policy: the memo holds Spark's own inferred ``StructType`` —
+catalog metadata, the role a metastore plays, not a derived result — so
+``registry.clear_derived_caches()`` does not clear it and a timed rerun
+does not re-infer. It is keyed by the session (held weakly), the path
+and the ``(name, size, st_mtime_ns)`` of every non-hidden file under
+the path: a rewrite misses the memo and infers again, and each path
+keeps only its latest entry. The schema is never built from the
+pyarrow footer, which gives ``timestamp`` where Spark infers
+``timestamp_ntz``.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,9 +74,61 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple, T.StructType]]
+] = weakref.WeakKeyDictionary()
+
+
+def _file_set(path: str) -> tuple:
+    """``(name, size, st_mtime_ns)`` of every file Spark would list under
+    ``path``: names starting with ``_`` or ``.`` (commit markers, temp
+    parts) are skipped, as Spark skips them."""
+    if not os.path.isdir(path):
+        try:
+            st = os.stat(path)
+        except OSError:
+            return ()
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.startswith(("_", ".")):
+                continue
+            full = os.path.join(d, f)
+            try:
+                st = os.stat(full)
+            except OSError:
+                continue  # removed while listing: the next read re-keys
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Spark's inferred schema of the Parquet data at ``path``, memoized
+    per session and file set (see the module docstring for the policy).
+    ``spark.read.schema(parquet_schema(spark, p)).parquet(p)`` equals
+    ``spark.read.parquet(p)`` without its inference job once warm."""
+    # Listed before inferring: a rewrite racing the inference leaves an
+    # entry keyed by the old files, which the next read misses.
+    files = _file_set(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == files:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    memo[path] = (files, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the memoized schema."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     prepare(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from geoparquet_python_spark.geo import io as gio
 from geoparquet_python_spark.geo.functions import st_point, st_x, st_y
-from geoparquet_python_spark.io import load_table, run_scratch_dir
+from geoparquet_python_spark.io import load_table, read_parquet, run_scratch_dir
 from geoparquet_python_spark.registry import query
 
 _LON_SQL = "(((c_custkey * 7919) % 3600) / 10.0 - 180.0)"
@@ -188,7 +188,7 @@ def q_geo_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts.write.mode("overwrite").partitionBy("cell_x").parquet(out)
 
-    back = spark.read.parquet(out).where(F.col("cell_x").between(-3, 0))
+    back = read_parquet(spark, out).where(F.col("cell_x").between(-3, 0))
     return (
         back.groupBy("cell_x")
         .agg(

@@ -54,7 +54,7 @@ from geoparquet_python_spark.functions.vector import (
     sql_pair_dot_scaled,
     vec_side,
 )
-from geoparquet_python_spark.io import register_scratch
+from geoparquet_python_spark.io import read_parquet, register_scratch
 from geoparquet_python_spark.operators import kmeans as km
 from geoparquet_python_spark.operators import pq
 from geoparquet_python_spark.registry import query
@@ -484,5 +484,5 @@ def q_ivfpq_cell_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hand Spark one) — bounded to <= NQ x NPROBE ids by contract, the
     # same bounded-driver-literal class as the k-means/PQ trainers.
     lut, probed = _driver_lut(spark, sf_dir)
-    store = spark.read.parquet(path).where(F.col("cell").isin(probed))
+    store = read_parquet(spark, path).where(F.col("cell").isin(probed))
     return _adc_rerank(spark, sf_dir, _code_rows(store, "cell"), lut)

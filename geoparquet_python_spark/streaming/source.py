@@ -14,7 +14,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geoparquet_python_spark.io import normalize_event_ts, parquet_row_count
+from geoparquet_python_spark.io import (
+    normalize_event_ts,
+    parquet_row_count,
+    parquet_schema,
+)
 from geoparquet_python_spark.session import prepare
 
 # Optimization r12 (guide §2, "make partitioning scale-adaptive"):
@@ -74,13 +78,12 @@ def read_table_stream(
     it, every streaming super-scaling leg would silently time an empty
     stream (the reason streaming was excluded from DEFAULT_QUERIES).
 
-    Streaming sources need an explicit schema: taken from one footer
-    read of the same path (driver-side, metadata only).
+    Streaming sources need an explicit schema: the same memoized
+    inferred schema ``load_table`` reads with (``io.parquet_schema``).
     """
     prepare(spark)
     path = f"{sf_dir}/{table}.parquet"
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).format("parquet")
+    reader = spark.readStream.schema(parquet_schema(spark, path)).format("parquet")
     if os.path.isdir(path):
         return reader.load(path)
     return reader.option("pathGlobFilter", f"{table}.parquet").load(sf_dir)

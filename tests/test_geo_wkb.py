@@ -295,3 +295,96 @@ def test_envelope_intersects_decimal_bounds_match_exact_comparison():
             got = st_envelope_intersects.func(g, *args).tolist()
             assert got == per_row(g, *args), (lo, hi)
             assert [type(v) for v in got] == [type(v) for v in per_row(g, *args)]
+
+
+# ----------------------------------------------- batch point decoder
+
+
+def _per_row_points(vals) -> tuple[np.ndarray, np.ndarray]:
+    xs = np.full(len(vals), np.nan)
+    ys = np.full(len(vals), np.nan)
+    for i, v in enumerate(vals):
+        if v is not None:
+            xs[i], ys[i] = wkb.decode(v)[1]
+    return xs, ys
+
+
+_POINTS = [
+    wkb.encode(("Point", (1.5, -2.0))),
+    None,
+    _be_point(3.5, -7.25),
+    wkb.encode(("Point", (np.nan, np.nan))),  # POINT EMPTY
+    wkb.encode(("Point", (-0.0, 0.0))),
+    None,
+    wkb.encode(("Point", (np.nan, 2.0))),
+    _be_point(-0.0, np.inf),
+]
+
+
+@pytest.mark.parametrize(
+    "as_input",
+    [list, lambda v: pa.array(v, pa.binary()), lambda v: pa.array(v, pa.large_binary())],
+    ids=["list", "binary", "large_binary"],
+)
+def test_decode_points_with_nulls_matches_per_row_decode(as_input):
+    """Nulls and big-endian rows no longer send the whole batch through
+    the per-row loop; the result stays bit-identical to it."""
+    vals = _POINTS * 3
+    got = wkb.decode_points(as_input(vals))
+    want = _per_row_points(vals)
+    for g, w in zip(got, want):
+        _assert_bit_identical(g, w)
+    for lo, hi in [(1, 7), (5, 6), (3, 3)]:
+        got = wkb.decode_points(pa.array(vals, pa.binary()).slice(lo, hi - lo))
+        for g, w in zip(got, _per_row_points(vals[lo:hi])):
+            _assert_bit_identical(g, w)
+
+
+def test_decode_points_decodes_per_row_only_off_the_fast_path(monkeypatch):
+    """One null in a batch of little-endian points used to send every
+    row through ``decode``; now only the big-endian row takes it."""
+    calls = []
+    real = wkb.decode
+    monkeypatch.setattr(wkb, "decode", lambda v: calls.append(v) or real(v))
+    vals = [_POINTS[0]] * 100 + [None, _be_point(3.5, -7.25)]
+    xs, _ = wkb.decode_points(vals)
+    assert len(calls) == 1 and xs[-1] == 3.5
+
+
+@given(st.lists(st.one_of(st.none(), coord), max_size=40))
+@settings(max_examples=50)
+def test_decode_points_property(items):
+    vals = [
+        None if p is None else (_be_point(*p) if i % 4 == 3 else wkb.encode(("Point", p)))
+        for i, p in enumerate(items)
+    ]
+    for g, w in zip(wkb.decode_points(vals), _per_row_points(vals)):
+        _assert_bit_identical(g, w)
+
+
+@pytest.mark.parametrize(
+    "geom", [("Polygon", [_SQ]), ("LineString", _SQ)], ids=["polygon", "linestring"]
+)
+def test_decode_points_raises_on_non_points(geom):
+    with pytest.raises(ValueError, match="expected Point"):
+        wkb.decode_points([_POINTS[0], None, wkb.encode(geom)])
+
+
+# ------------------------------------------------ covering bbox struct
+
+
+def test_envelope_struct_nulls_exactly_the_nan_bounds():
+    from geoparquet_python_spark.geo.functions import st_envelope
+
+    arr = pa.array(_CORPUS, pa.binary())
+    got = wkb.envelope_struct(arr)
+    assert [f.name for f in got.type] == list(wkb.ENVELOPE_FIELDS)
+    assert got.null_count == 0  # the struct itself is never null
+    box = wkb.envelopes(arr)
+    for i, name in enumerate(wkb.ENVELOPE_FIELDS):
+        col = got.field(name)
+        assert col.is_null().to_numpy(zero_copy_only=False).tolist() == np.isnan(box[:, i]).tolist()
+        _assert_bit_identical(col.fill_null(np.nan).to_numpy(), box[:, i])
+    # the Arrow UDF returns the same struct
+    assert st_envelope.func(arr).equals(got)
+    assert len(wkb.envelope_struct(pa.array([], pa.binary()))) == 0

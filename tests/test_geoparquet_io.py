@@ -6,14 +6,16 @@ from __future__ import annotations
 import json
 import shutil
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from geoparquet_python_spark.geo import io as gio
 from geoparquet_python_spark.geo import wkb
-from geoparquet_python_spark.geo.functions import st_point
+from geoparquet_python_spark.geo.functions import _BBOX_TYPE, st_point
 from geoparquet_python_spark.io import load_table
 
 
@@ -430,3 +432,98 @@ def test_geo_sql_binds_frames_by_name(spark):
         pts=pts,
     )
     assert [r.id for r in got.collect()] == [1]
+
+
+# ------------------------------------------------ one Python pass per write
+
+
+def _mixed_frame(spark):
+    """LE/BE Points, POINT EMPTY, a NaN coordinate, a Polygon, a
+    MultiPolygon and a null geometry, in 3 fixed partitions."""
+    import struct
+
+    import numpy as np
+
+    sq = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], dtype="f8")
+    geoms = [
+        wkb.encode(("Point", (1.5, -2.0))),
+        b"\x00" + struct.pack(">Idd", 1, 3.5, -7.25),
+        wkb.encode(("Point", (np.nan, np.nan))),
+        wkb.encode(("Point", (np.nan, 2.0))),
+        wkb.encode(("Polygon", [sq - 9.0])),
+        wkb.encode(("MultiPolygon", [[sq], [sq + 10.0]])),
+        None,
+    ]
+    rows = [(k, geoms[k % len(geoms)]) for k in range(40)]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3), "k long, geometry binary"
+    )
+
+
+def _part_bytes(path):
+    from pathlib import Path
+
+    return {f.name: f.read_bytes() for f in sorted(Path(path).glob("*.parquet"))}
+
+
+@pandas_udf(_BBOX_TYPE)
+def _pandas_envelope(g: pd.Series) -> pd.DataFrame:
+    """``st_envelope`` as the pandas UDF it was: Spark's pandas
+    conversion turns each NaN bound into a null field."""
+    out = wkb.envelopes(pa.array(g, type=pa.large_binary()))
+    return pd.DataFrame(out, columns=list(wkb.ENVELOPE_FIELDS))
+
+
+def test_write_builds_bbox_in_its_kernel_byte_identical(spark, tmp_path):
+    """The writer kernel's own ``bbox`` gives the same part files, byte
+    for byte, as a ``bbox`` built first by the pandas envelope UDF (the
+    old route, NaN bounds nulled by Spark's pandas conversion) or by the
+    Arrow ``st_envelope``; for an all-empty write too."""
+    routes = {
+        "kernel": lambda d: d,
+        "pandas_udf": lambda d: d.withColumn("bbox", _pandas_envelope(F.col("geometry"))),
+        "arrow_udf": gio.add_bbox_column,
+    }
+    for label, frame in [("rows", _mixed_frame(spark)),
+                         ("empty", _mixed_frame(spark).where(F.lit(False)))]:
+        parts = {}
+        for route, add in routes.items():
+            out = str(tmp_path / f"{label}_{route}")
+            gio.write_geoparquet(add(frame), out, "geometry")
+            parts[route] = _part_bytes(out)
+        assert len(parts["kernel"]) == (3 if label == "rows" else 1)
+        assert parts["kernel"] == parts["pandas_udf"] == parts["arrow_udf"], label
+
+
+def test_empty_write_schema_only_part_keeps_bbox(spark, tmp_out):
+    gio.write_geoparquet(_mixed_frame(spark).where(F.lit(False)), tmp_out, "geometry")
+    (part,) = _part_bytes(tmp_out)
+    schema = pq.read_schema(f"{tmp_out}/{part}")
+    assert schema.names == ["k", "geometry", "bbox"]
+    assert schema.field("bbox").type == wkb.envelope_struct(pa.array([], pa.binary())).type
+    assert gio.read_geoparquet(spark, tmp_out).columns == ["k", "geometry", "bbox"]
+
+
+def test_write_plan_is_one_map_in_arrow(spark, tmp_path, monkeypatch):
+    """The write's executed plan holds one MapInArrow and no
+    ArrowEvalPython: rows cross into Python once. A ``bbox`` built
+    before the write adds the ArrowEvalPython hop the probe would see."""
+    df = _mixed_frame(spark)
+    plans = []
+    cls = type(df)
+    stock = cls.collect
+
+    def recording(self):
+        rows = stock(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(cls, "collect", recording)
+    gio.write_geoparquet(df, str(tmp_path / "kernel"), "geometry")
+    (plan,) = plans
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+    plans.clear()
+    gio.write_geoparquet(gio.add_bbox_column(df), str(tmp_path / "udf"), "geometry")
+    assert "ArrowEvalPython" in plans[0]

@@ -303,20 +303,25 @@ PACKING_QUERIES = [
 @pytest.mark.parametrize("name", PACKING_QUERIES)
 def test_packing_construction_launches_no_jobs(spark, sf_dir, name):
     """Shard sizing reads Parquet footer metadata on the driver
-    (io.parquet_row_count); building the query must not spend a Spark
-    job (the old shard_count(df.count()) cost one full-table count
-    BEFORE the main query — an extra pass at 100 TB)."""
+    (io.parquet_row_count); building the query over tables already read
+    once must not spend a Spark job (the old shard_count(df.count())
+    cost one full-table count BEFORE the main query — an extra pass at
+    100 TB)."""
+    from geoparquet_python_spark.io import load_tables
+
+    load_tables(spark, sf_dir)  # the tables' schemas are known from here on
     sc = spark.sparkContext
     group = f"construct_probe_{name}"
-    sc.setJobGroup(group, "query construction: schema read only")
+    sc.setJobGroup(group, "query construction")
     try:
         registry.QUERIES[name](spark, sf_dir)  # construction only
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # spark.read.parquet itself spends one schema-inference job; the
-    # old shard_count(df.count()) added a second (the full-table scan).
-    assert len(jobs) <= 1, f"{name} construction launched extra jobs: {jobs}"
+    # A warm read reuses the memoized schema (io.parquet_schema), so no
+    # schema-inference job; the old shard_count(df.count()) added a
+    # full-table scan.
+    assert jobs == [], f"{name} construction launched jobs: {jobs}"
 
 
 NEVER_CARTESIAN_R6 = [
