@@ -191,7 +191,7 @@ def write_geoparquet(
                 import pyarrow.compute as pc
 
                 box = batch.column("bbox")
-                for i, field in enumerate(("xmin", "ymin", "xmax", "ymax")):
+                for i, field in enumerate(wkb.ENVELOPE_FIELDS):
                     key, pick = ("min", min) if i < 2 else ("max", max)
                     v = pc.min_max(pc.struct_field(box, field)).as_py()[key]
                     if v is not None:

@@ -15,7 +15,10 @@ catalog metadata, the role a metastore plays, not a derived result — so
 does not re-infer. It is keyed by the session (held weakly), the path
 and the ``(name, size, st_mtime_ns)`` of every non-hidden file under
 the path: a rewrite misses the memo and infers again, and each path
-keeps only its latest entry. The schema is never built from the
+keeps only its latest entry. A path the driver cannot list (a URI such
+as ``s3a://`` or ``file:/``) is never memoized: it infers on every
+read. A miss returns the inferring read itself, so a first read costs
+what it did without the memo. The schema is never built from the
 pyarrow footer, which gives ``timestamp`` where Spark infers
 ``timestamp_ntz``.
 """
@@ -104,26 +107,41 @@ def _file_set(path: str) -> tuple:
     return tuple(out)
 
 
+def _memo_lookup(spark: SparkSession, path: str) -> tuple[tuple, T.StructType | None]:
+    """The file set under ``path`` and the schema memoized for it, if any."""
+    files = _file_set(path)
+    hit = _SCHEMAS.get(spark, {}).get(path)
+    return files, (hit[1] if hit is not None and hit[0] == files else None)
+
+
+def _inferring_read(spark: SparkSession, path: str, files: tuple) -> DataFrame:
+    """``spark.read.parquet(path)``, its inferred schema memoized under
+    ``files`` (listed before inferring: a rewrite racing the inference
+    leaves an entry keyed by the old files, which the next read misses).
+    An empty file set (a URI such as ``s3a://`` or ``file:/``, or a path
+    not visible here) is never memoized: no entry could see a rewrite."""
+    df = spark.read.parquet(path)
+    if files:
+        _SCHEMAS.setdefault(spark, {})[path] = (files, df.schema)
+    return df
+
+
 def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     """Spark's inferred schema of the Parquet data at ``path``, memoized
     per session and file set (see the module docstring for the policy).
     ``spark.read.schema(parquet_schema(spark, p)).parquet(p)`` equals
     ``spark.read.parquet(p)`` without its inference job once warm."""
-    # Listed before inferring: a rewrite racing the inference leaves an
-    # entry keyed by the old files, which the next read misses.
-    files = _file_set(path)
-    memo = _SCHEMAS.setdefault(spark, {})
-    hit = memo.get(path)
-    if hit is not None and hit[0] == files:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    memo[path] = (files, schema)
-    return schema
+    files, schema = _memo_lookup(spark, path)
+    return schema if schema is not None else _inferring_read(spark, path, files).schema
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the memoized schema."""
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    """``spark.read.parquet(path)`` with the memoized schema; a miss is
+    the inferring read itself."""
+    files, schema = _memo_lookup(spark, path)
+    if schema is None:
+        return _inferring_read(spark, path, files)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

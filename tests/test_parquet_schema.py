@@ -92,3 +92,17 @@ def test_partitioned_read_keeps_partition_columns(spark, tmp_path):
     assert sorted(r.id for r in pruned.collect()) == [1, 4, 7, 10]
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(cell" in plan
+
+
+def test_unlistable_path_is_never_memoized(spark, tmp_path):
+    """A URI the driver cannot list has no file set to key a rewrite on,
+    so it infers on every read and a rewrite is seen at once."""
+    local = str(tmp_path / "uri")
+    uri = "file://" + local
+    spark.range(3).write.parquet(local)
+    assert io.parquet_schema(spark, uri).names == ["id"]
+    assert len(_jobs(spark, lambda: io.parquet_schema(spark, uri))) == 1
+    assert uri not in io._SCHEMAS.get(spark, {})
+
+    spark.range(3).select(F.col("id").alias("k")).write.mode("overwrite").parquet(local)
+    assert io.read_parquet(spark, uri).columns == ["k"]

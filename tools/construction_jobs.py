@@ -5,7 +5,7 @@ derived caches and dead checkpoints released before it, so every query
 pays its full construction and no query inherits another's.
 
 Usage:
-  python tools/construction_jobs.py SF_DIR [--top N] [--queries q1,q2]
+  python tools/construction_jobs.py SF_DIR [--top N]
 
 where SF_DIR is a testdata directory holding the ten tables
 (``<sf_dir>/<table>.parquet``).
@@ -34,12 +34,12 @@ from geoparquet_python_spark.functions.exact import release_dead_checkpoints  # 
 from geoparquet_python_spark.session import get_spark  # noqa: E402
 
 
-def construction_jobs(spark, sf_dir: str, names: list[str]) -> tuple[dict, dict]:
-    """Jobs each query's construction launched, and the constructions
-    that raised (name -> error)."""
+def construction_jobs(spark, sf_dir: str) -> tuple[dict, dict]:
+    """Jobs each registered query's construction launched, and the
+    constructions that raised (name -> error)."""
     sc = spark.sparkContext
     jobs, failed = {}, {}
-    for name in names:
+    for name in registry.QUERIES:
         registry.clear_derived_caches()
         release_dead_checkpoints()
         group = f"construct_{name}"
@@ -62,15 +62,13 @@ def main() -> None:
     )
     ap.add_argument("sf_dir")
     ap.add_argument("--top", type=int, default=10)
-    ap.add_argument("--queries", default="", help="comma-separated names (default: all)")
     args = ap.parse_args()
 
     registry.load_all()
-    names = args.queries.split(",") if args.queries else list(registry.QUERIES)
     spark = get_spark("construction-jobs")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    jobs, failed = construction_jobs(spark, args.sf_dir, names)
+    jobs, failed = construction_jobs(spark, args.sf_dir)
     wall = time.perf_counter() - t0
     for name, err in failed.items():
         print(f"FAILED {name}: {err}")
