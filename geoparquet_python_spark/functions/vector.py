@@ -1,17 +1,29 @@
-"""Vector math over `array<float>` embedding columns — pure built-in
-higher-order functions (zip_with / aggregate / transform), no UDFs.
+"""Vector math over `array<float>` embedding columns, in two forms
+that give the same bits: built-in JVM higher-order functions
+(zip_with / aggregate / transform) and numpy over Arrow batches.
 
 Determinism: dot products and squared norms are accumulated in
 **fixed-point int64** (each term `floor(x*y*1e12)`), because float
 addition is order-dependent but integer addition is not — the same
 trick as functions/exact.py, without decimal-type precision juggling.
-Each term is computed in IEEE double (bit-identical on any engine);
-`floor` rounds toward −∞ identically everywhere; the int64 sum is
-order-independent. 64-dim unit-scale vectors: |term| ≤ ~2×10^12,
-sums ≤ ~10^14 — far inside int64.
+Exactness: float32 → float64 widening, the float64 product, `* 1e12`,
+`floor`, the int64 sum, `sqrt` and division are each exactly
+specified by IEEE 754, and the int64 sum is order-independent, so the
+JVM expressions, the numpy kernels and the DuckDB oracles compute the
+same bits. 64-dim unit-scale vectors: |term| ≤ ~2×10^12, sums ≤
+~10^14 — far inside int64.
 
-Cost: one fused JVM expression per pair, inside whole-stage codegen;
-no Python, no explode, no shuffle for the arithmetic itself.
+JVM side: :func:`dot_scaled` is one fused expression per pair, inside
+whole-stage codegen; no Python, no explode, no shuffle.
+
+Numpy side, shared by every vector kernel (Arrow UDFs, ``mapInArrow``
+and ``applyInArrow`` functions):
+- :func:`arrow_matrix` reads an Arrow ``list<…>`` column as a
+  fixed-width matrix, with no pandas hop;
+- :func:`fixed_dot` is :func:`dot_scaled`'s numpy twin, broadcasting,
+  so it serves row-wise dots and (q × c) tiles alike;
+- :func:`cosine_tile` is :func:`cosine_from_scaled`'s numpy twin over
+  a (q × c) tile of fixed-point dots.
 
 Cosine search helpers, shared by every exact and approximate top-k,
 kNN-graph and near-duplicate query of the vector family:
@@ -30,10 +42,12 @@ spelling.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import LongType
 
 FIXED_POINT = 1e12
 
@@ -91,36 +105,63 @@ def cosine_top_k(pairs: DataFrame, k: int, cid: str = "cid") -> DataFrame:
     )
 
 
+def arrow_matrix(col: pa.Array | pa.ChunkedArray, dtype) -> np.ndarray:
+    """An Arrow ``list<…>`` column as an (n × width) ``dtype`` matrix.
+
+    Reads the values between the first and last offsets, so a sliced
+    array gives its own rows. Zero rows give a (0 × 0) matrix; rows of
+    unequal width raise ``ValueError``."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if len(col) == 0:
+        return np.empty((0, 0), dtype)
+    off = col.offsets.to_numpy(zero_copy_only=False)
+    widths = np.diff(off)
+    if (widths != widths[0]).any():
+        raise ValueError("arrow_matrix: ragged list widths")
+    vals = col.values.to_numpy(zero_copy_only=False)[off[0] : off[-1]]
+    return vals.astype(dtype, copy=False).reshape(len(col), int(widths[0]))
+
+
+def fixed_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Σ floor((x·y)·1e12) over the last axis as int64 — :func:`dot_scaled`
+    in numpy. Broadcasts: two (n × d) matrices give n row-wise dots,
+    ``x[:, None, :]`` against ``y[None, :, :]`` a (q × c) tile."""
+    return np.floor((x * y) * FIXED_POINT).astype(np.int64).sum(axis=-1)
+
+
+def cosine_tile(d: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """(q × c) cosines :func:`cosine_from_scaled` computes, from a tile
+    ``d`` of fixed-point dots and the fixed-point squared norms ``na``
+    (q) and ``nb`` (c) of its rows and columns."""
+    ra = np.sqrt(na / FIXED_POINT)
+    rb = np.sqrt(nb / FIXED_POINT)
+    return (d / FIXED_POINT) / (ra[:, None] * rb[None, :])
+
+
+@arrow_udf(LongType())
+def _dot_arrow(xs: pa.Array, ys: pa.Array) -> pa.Array:
+    x, y = arrow_matrix(xs, np.float64), arrow_matrix(ys, np.float64)
+    return pa.array(fixed_dot(x, y))
+
+
 def dot_scaled_arrow(a: Column | str, b: Column | str) -> Column:
     """Arrow-vectorized twin of :func:`dot_scaled` — bit-identical
-    result (IEEE double products, floor, int64 sum are all deterministic
-    in numpy exactly as in the JVM), but evaluated as a numpy batch
-    matmul instead of an interpreted higher-order function.
+    result, evaluated as :func:`fixed_dot` over each Arrow batch
+    instead of an interpreted higher-order function.
 
     Use in REFINE hot paths: Spark's array HOFs (zip_with/aggregate)
     never enter whole-stage codegen — measured ~50 µs per 64-dim pair
     interpreted, which dominated the LSH refine (108 k candidates ⇒
-    ~6 s). The pandas UDF amortizes to <0.1 µs/pair after Arrow
+    ~6 s). The Arrow UDF amortizes to <0.1 µs/pair after Arrow
     transfer, and—as a Python predicate—is evaluated ONCE after the
     join instead of being pushed into the join condition and re-run
     per probe. Keep :func:`dot_scaled` for per-ROW projections
     (norms) where batches are small and JVM locality wins.
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.vstack(xs.to_numpy()).astype(np.float64)
-        B = np.vstack(ys.to_numpy()).astype(np.float64)
-        terms = np.floor(A * B * FIXED_POINT).astype(np.int64)
-        return pd.Series(terms.sum(axis=1))
-
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    return _dot(a, b)
+    return _dot_arrow(a, b)
 
 
 # ---- DuckDB SQL mirrors (positional unnest; decimal-free, same math) ----

@@ -11,14 +11,13 @@ Split by execution tier, fastest first:
   anything that must touch coordinates of arbitrary geometries. Each is
   one Python hop per Arrow batch; inside it, only some are vectorized:
 
-  - ``st_envelope`` is an Arrow UDF: ``wkb.envelope_struct`` reads the
+  - ``st_envelope``, ``st_x``, ``st_y`` and ``st_distance`` are Arrow
+    UDFs: ``wkb.envelope_struct`` and the batch point decoder read the
     batch's WKB buffers directly, with no Arrow → pandas → Arrow round
     trip (a per-row decode only for multi-part, big-endian and
-    NaN/EMPTY rows);
+    NaN/EMPTY rows, and for what is not a 21-byte little-endian point);
   - the rest are pandas UDFs. ``st_envelope_intersects`` uses
-    ``wkb.envelopes``; ``st_point``, ``st_x``, ``st_y`` and
-    ``st_distance`` use the batch point encoder/decoder (the decoder
-    decodes per row only what is not a 21-byte little-endian point);
+    ``wkb.envelopes``; ``st_point`` uses the batch point encoder;
   - ``st_area``, ``st_length``, ``st_centroid``, ``st_astext``,
     ``st_contains_point``, ``st_buffer``, ``st_simplify`` and
     ``st_num_geometries`` decode every row in a Python loop.
@@ -139,7 +138,7 @@ def spatial_window_filter(
     return df.where(fine)
 
 
-# ------------------------------------------------------------ pandas UDFs
+# ------------------------------------------------------- Arrow and pandas UDFs
 
 
 @pandas_udf(BinaryType())
@@ -148,16 +147,22 @@ def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(wkb.encode_points(x.to_numpy("f8"), y.to_numpy("f8")))
 
 
-@pandas_udf(DoubleType())
-def st_x(g: pd.Series) -> pd.Series:
+def _doubles(xs: np.ndarray) -> pa.Array:
+    """float64 values as an Arrow array, a NaN as null (the rule of
+    Spark's pandas conversion)."""
+    return pa.array(xs, pa.float64(), from_pandas=True)
+
+
+@arrow_udf(DoubleType())
+def st_x(g: pa.Array) -> pa.Array:
     xs, _ = wkb.decode_points(g)
-    return pd.Series(xs)
+    return _doubles(xs)
 
 
-@pandas_udf(DoubleType())
-def st_y(g: pd.Series) -> pd.Series:
+@arrow_udf(DoubleType())
+def st_y(g: pa.Array) -> pa.Array:
     _, ys = wkb.decode_points(g)
-    return pd.Series(ys)
+    return _doubles(ys)
 
 
 @arrow_udf(_BBOX_TYPE)
@@ -233,14 +238,14 @@ def st_astext(g: pd.Series) -> pd.Series:
     return pd.Series([None if v is None else wkb.to_wkt(wkb.decode(v)) for v in g])
 
 
-@pandas_udf(DoubleType())
-def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
+@arrow_udf(DoubleType())
+def st_distance(a: pa.Array, b: pa.Array) -> pa.Array:
     """Planar point-point distance on WKB columns (D7). General
     geometry-geometry minimum distance is out of reference scope
     (SURVEY.md §2.D)."""
     ax, ay = wkb.decode_points(a)
     bx, by = wkb.decode_points(b)
-    return pd.Series(np.hypot(bx - ax, by - ay))
+    return _doubles(np.hypot(bx - ax, by - ay))
 
 
 @pandas_udf(BooleanType())

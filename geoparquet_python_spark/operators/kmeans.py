@@ -44,13 +44,18 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from geoparquet_python_spark.functions.vector import (
     SQL_COSINE,
     SQL_FLAT_EMBEDDINGS,
     SQL_NORMS,
+    arrow_matrix,
     cosine_top_k,
     norm2_scaled,
     pair_cosine,
@@ -88,8 +93,6 @@ def _fixed_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _argmin_prep(cents: list[list[int]]):
     """(c, c2, c_blas) for the shared argmin math — see _assign_expr's
     exactness notes (argmin over |c|²−2x·c; dgemm-safe below 2^23)."""
-    import numpy as np
-
     c = np.asarray(cents, dtype=np.int64)  # K×d
     c2 = (c * c).sum(axis=1)  # |c_k|^2, int64
     c_blas = c.astype(np.float64) if np.abs(c).max() < _F64_SAFE else None
@@ -100,8 +103,6 @@ def _argmin_cells(x, c, c2, c_blas):
     """First-minimum nearest-centroid ids for an (n × d) int64 batch —
     the exact math of _assign_expr, shared with the trainer's kernel
     (via _argmin_subspaces) so the two paths can never diverge."""
-    import numpy as np
-
     if c_blas is not None and (len(x) == 0 or np.abs(x).max() < _F64_SAFE):
         dots = (x.astype(np.float64) @ c_blas.T).astype(np.int64)
     else:  # exact fallback: naive int64 matmul
@@ -131,10 +132,6 @@ def _assign_expr(cents: list[list[int]]) -> F.Column:
     flop count at ~100× the throughput, and is exactly what a 100 TB
     deployment does with its centroid matrix (a few MB broadcast into
     each Arrow worker)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     # BLAS eligibility (round 12): numpy has NO BLAS kernel for int64 —
     # an integer matmul falls back to naive C loops, and at the
     # SemDeDup K-scaling contract (K ∝ n) the resulting O(K·n·d)
@@ -151,16 +148,11 @@ def _assign_expr(cents: list[list[int]]) -> F.Column:
     # trainer's kernel, _lloyd_stats_kernel.)
     c, c2, c_blas = _argmin_prep(cents)
 
-    # No type annotations on the UDF: the module's `from __future__
-    # import annotations` stringifies them and pandas_udf can't
-    # resolve 'pd.Series' against this closure — the return-type
-    # argument carries the typing instead.
-    @pandas_udf("bigint")
-    def assign(xf):
+    @arrow_udf("bigint")
+    def assign(xf: pa.Array) -> pa.Array:
         if len(xf) == 0:
-            return pd.Series([], dtype="int64")
-        x = np.vstack(xf.to_numpy()).astype(np.int64, copy=False)  # B×d
-        return pd.Series(_argmin_cells(x, c, c2, c_blas))
+            return pa.array([], pa.int64())
+        return pa.array(_argmin_cells(arrow_matrix(xf, np.int64), c, c2, c_blas))
 
     return assign(F.col("xfix"))
 
@@ -170,8 +162,6 @@ def _argmin_subspaces(x, preps):
     subvectors — one _argmin_cells call per subspace, ``preps`` holding
     one _argmin_prep per subspace codebook. k-means is M = 1; the PQ
     encoder (pq._codes_udf) and the trainer kernel share this loop."""
-    import numpy as np
-
     subd = x.shape[1] // len(preps)
     out = np.empty((len(x), len(preps)), dtype=np.int64)
     for m, prep in enumerate(preps):
@@ -189,9 +179,6 @@ def _lloyd_stats_kernel(cents: list[list[list[int]]]):
     codebook-sized at any corpus size."""
 
     def kernel(it):
-        import numpy as np
-        import pyarrow as pa
-
         preps = [_argmin_prep(sub) for sub in cents]
         m_n, k, subd = len(cents), len(cents[0]), len(cents[0][0])
         sv = np.zeros((m_n, k, subd), dtype=np.int64)
@@ -201,14 +188,7 @@ def _lloyd_stats_kernel(cents: list[list[list[int]]]):
             if batch.num_rows == 0:
                 continue
             seen = True
-            col = batch.column("xfix")
-            off = col.offsets.to_numpy(zero_copy_only=False)
-            vals = col.values.to_numpy(zero_copy_only=False)
-            x = (
-                vals[off[0] : off[-1]]
-                .astype(np.int64, copy=False)
-                .reshape(len(col), m_n * subd)
-            )
+            x = arrow_matrix(batch.column("xfix"), np.int64)
             codes = _argmin_subspaces(x, preps)
             for m in range(m_n):
                 order = np.argsort(codes[:, m], kind="stable")

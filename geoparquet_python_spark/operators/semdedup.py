@@ -48,16 +48,23 @@ engines.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from geoparquet_python_spark.functions.exact import materialize
 from geoparquet_python_spark.functions.vector import (
     SQL_COSINE,
     SQL_FLAT_EMBEDDINGS,
     SQL_NORMS,
+    arrow_matrix,
     cosine_from_scaled,
+    cosine_tile,
     dot_scaled_arrow,
+    fixed_dot,
     norm2_scaled,
     sql_pair_dot_scaled,
 )
@@ -144,33 +151,24 @@ def _cell_pairs(
 
     With ``min_cosine`` set (every registered consumer — they all gate
     at tau), the stream comes from ONE per-cell numpy pass
-    (applyInPandas): each cell's |c| x dim matrix crosses Arrow once
-    (~|c|·550 B), all |c|^2 fixed-point dots evaluate as chunked
-    vectorized ops, and only the pairs at or above the threshold are
-    ever MATERIALIZED AS ROWS. The round-11 64x weak-scaling super-leg
-    measured why this matters: the previous form (collect_list struct
-    explode + per-pair Arrow dot refine) built 16M pair rows each
-    carrying BOTH 64-float embeddings — ~17 GB streamed through the
-    stage and ~8 GB across Arrow for a tau-hit set of a few thousand
-    rows (217 s; the kernel: ~7 s). Arithmetic is bit-identical to the
-    row form, term by term: per-dim floor(x·y·1e12) summed as int64
-    (products < 2^53, so float64 is exact — the dot_scaled contract),
-    cosine as (d/1e12)/(sqrt(na/1e12)·sqrt(nb/1e12)) in the same IEEE
-    op order, and the tau compare against the same float literal, so
-    the emitted pair set and every cosine hash-match the unchanged
-    DuckDB oracles.
+    (_tau_pairs_kernel): each cell's |c| x dim matrix crosses Arrow
+    once, all |c|^2 fixed-point dots evaluate as chunked vectorized
+    ops, and only the pairs at or above the threshold are ever
+    MATERIALIZED AS ROWS. The cosines are the fixed-point ones of
+    functions/vector.py, and the tau compare is against the same float
+    literal, so the emitted pair set and every cosine match the DuckDB
+    oracles.
 
     Scale shape: one corpus shuffle on the cell id (the groupBy under
-    applyInPandas), then map-side kernel work; per-worker memory is
+    applyInArrow), then per-cell kernel work; per-worker memory is
     O(|c|·dim) for the group plus the _PAIR_CHUNK block — never
     O(|c|^2). The K-grows-with-corpus contract bounds |c| at the cell
     target; a semantically-hot cell past the occupancy cap flips the
     WHOLE call onto the capped explode machinery below (sub-bucketed,
     spill-safe at any occupancy) with the same tau filter applied
     after — identical rows, degraded wall, never a memory cliff. The
-    one-aggregate occupancy probe that decides the branch is the
-    _capped_bucket_pairs precheck contract: eager at plan-build time,
-    frozen from the data observed then.
+    one-aggregate occupancy probe that decides the branch is
+    _max_cell_occupancy.
 
     With ``min_cosine=None`` the full unfiltered pair stream is
     returned via the capped explode machinery (no registered consumer;
@@ -179,15 +177,9 @@ def _cell_pairs(
     if base is None:
         base = _assigned_base(spark, sf_dir)
     if min_cosine is not None:
-        occ = (
-            base.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .agg(F.max("__bn").alias("mx"))
-            .collect()[0]["mx"]
-        )
         from geoparquet_python_spark.operators.similarity import _BUCKET_CAP
 
-        if occ is not None and int(occ) <= _BUCKET_CAP:
+        if _max_cell_occupancy(base) <= _BUCKET_CAP:
             return _tau_pairs_kernel(base, float(min_cosine))
     full = _cell_pairs_full(base)
     if min_cosine is not None:
@@ -198,7 +190,8 @@ def _cell_pairs(
 def _max_cell_occupancy(base: DataFrame) -> int:
     """One aggregate over the (materialized) assignment frame — the
     eager plan-build-time probe that picks kernel vs capped machinery
-    (the _capped_bucket_pairs precheck contract)."""
+    (the _capped_bucket_pairs precheck contract), frozen from the data
+    observed then; 0 for an empty frame."""
     mx = (
         base.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("__bn"))
@@ -208,12 +201,24 @@ def _max_cell_occupancy(base: DataFrame) -> int:
     return int(mx or 0)
 
 
+_PAIR_SCHEMA = pa.schema(
+    [
+        ("cell", pa.int64()),
+        ("vec_a", pa.int64()),
+        ("vec_b", pa.int64()),
+        ("cosine", pa.float64()),
+    ]
+)
+
+
 def _tau_pairs_kernel(
     base: DataFrame, tau: float, fine_bands: bool = False
 ) -> DataFrame:
-    """The vectorized per-cell pair pass (see _cell_pairs). Emits
-    (cell, vec_a, vec_b, cosine) rows with cosine >= tau, vec_a <
-    vec_b by vec_id sort — the array_sort(collect_list) convention.
+    """The vectorized per-cell pair pass (see _cell_pairs):
+    ``groupBy("cell").applyInArrow`` over (vec_id, embedding, n2,
+    cell). Emits (cell, vec_a, vec_b, cosine) rows with cosine >= tau,
+    vec_a < vec_b by vec_id sort — the array_sort(collect_list)
+    convention.
 
     With ``fine_bands`` (the two-level gear), a pair must also agree
     on at least one of the _FINE_BANDS hyperplane fine-key bands; the
@@ -223,11 +228,18 @@ def _tau_pairs_kernel(
     the _fine_bits_expr int64 signs, bit for bit), and the OR-combined
     band mask already emits each candidate pair ONCE, so the old
     per-band-duplicate distinct disappears for free."""
-    import numpy as np
-    import pandas as pd
+    return (
+        base.select("vec_id", "embedding", "n2", "cell")
+        .groupBy("cell")
+        .applyInArrow(
+            _tau_pairs_fn(tau, fine_bands), from_arrow_schema(_PAIR_SCHEMA)
+        )
+    )
 
-    from geoparquet_python_spark.functions.vector import FIXED_POINT
 
+def _tau_pairs_fn(tau: float, fine_bands: bool):
+    """The per-cell function of _tau_pairs_kernel: one cell's Table in,
+    its tau pairs out (none for fewer than two members)."""
     if fine_bands:
         from geoparquet_python_spark.operators.similarity import (
             _plane_components,
@@ -238,23 +250,15 @@ def _tau_pairs_kernel(
         )  # 32 x 64
         band_w = (1 << np.arange(_FINE_BITS, dtype=np.int64))
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        empty = {
-            "cell": pd.Series([], dtype="int64"),
-            "vec_a": pd.Series([], dtype="int64"),
-            "vec_b": pd.Series([], dtype="int64"),
-            "cosine": pd.Series([], dtype="float64"),
-        }
+    def _pairs(t: pa.Table) -> pa.Table:
+        m = t.num_rows
         if m < 2:
-            return pd.DataFrame(empty)
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        E = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        # sqrt(n2/1e12) once per member — cosine_from_scaled's to_d
-        # + sqrt, hoisted out of the pair loop (same IEEE value).
-        rootn = np.sqrt(pdf["n2"].to_numpy(dtype=np.int64) / FIXED_POINT)
-        cell = np.int64(pdf["cell"].iloc[0])
+            return _PAIR_SCHEMA.empty_table()
+        ids = t.column("vec_id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        E = arrow_matrix(t.column("embedding"), np.float64)[order]
+        n2 = t.column("n2").to_numpy()[order]
         if fine_bands:
             # m x _FINE_BANDS packed band values from the sign bits
             # (exact: |xfix| <= ~1e6·max|x|, 64-term sums << 2^53).
@@ -275,14 +279,10 @@ def _tau_pairs_kernel(
         for i0 in range(0, m - 1, _PAIR_CHUNK):
             i1 = min(i0 + _PAIR_CHUNK, m - 1)
             c0 = i0 + 1  # columns j in (i0, m); mask enforces j > i
-            # (x*y)*1e12, floor, int64, sum — dot_scaled's exact op
-            # order (dot_scaled_arrow does the identical sequence).
-            terms = np.floor(
-                (E[i0:i1, None, :] * E[None, c0:, :]) * FIXED_POINT
-            ).astype(np.int64)
-            d = terms.sum(axis=2)
-            cos = (d.astype(np.float64) / FIXED_POINT) / (
-                rootn[i0:i1, None] * rootn[None, c0:]
+            cos = cosine_tile(
+                fixed_dot(E[i0:i1, None, :], E[None, c0:, :]),
+                n2[i0:i1],
+                n2[c0:],
             )
             jcol = np.arange(c0, m)[None, :]
             irow = np.arange(i0, i1)[:, None]
@@ -292,29 +292,21 @@ def _tau_pairs_kernel(
                     bvals[i0:i1, None, :] == bvals[None, c0:, :]
                 ).any(axis=2)
             ii, jj = np.nonzero(keep)
-            if len(ii):
-                out_a.append(ids[ii + i0])
-                out_b.append(ids[jj + c0])
-                out_c.append(cos[ii, jj])
-        if not out_a:
-            return pd.DataFrame(empty)
+            out_a.append(ids[ii + i0])
+            out_b.append(ids[jj + c0])
+            out_c.append(cos[ii, jj])
         va = np.concatenate(out_a)
-        return pd.DataFrame(
-            {
-                "cell": np.full(len(va), cell, dtype=np.int64),
-                "vec_a": va,
-                "vec_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
+        return pa.table(
+            [
+                np.full(len(va), t.column("cell")[0].as_py(), dtype=np.int64),
+                va,
+                np.concatenate(out_b),
+                np.concatenate(out_c),
+            ],
+            schema=_PAIR_SCHEMA,
         )
 
-    return (
-        base.select("vec_id", "embedding", "n2", "cell")
-        .groupBy("cell")
-        .applyInPandas(
-            _pairs, "cell bigint, vec_a bigint, vec_b bigint, cosine double"
-        )
-    )
+    return _pairs
 
 
 def _cell_pairs_full(base: DataFrame) -> DataFrame:

@@ -15,8 +15,12 @@ cells with a trained quantizer; the operator shape is identical.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from geoparquet_python_spark.functions.exact import (
     broadcast_bounded,
@@ -27,10 +31,13 @@ from geoparquet_python_spark.functions.exact import (
 from geoparquet_python_spark.functions.vector import (
     SQL_FLAT_EMBEDDINGS,
     SQL_NORMS,
+    arrow_matrix,
     cosine_from_scaled,
+    cosine_tile,
     cosine_top_k,
     dot_scaled,
     dot_scaled_arrow,
+    fixed_dot,
     norm2_scaled,
     pair_cosine,
     vec_side,
@@ -450,9 +457,6 @@ def _hyperplane_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     values bv0..bv11 pack the first 96 bits as 12 8-bit ints, same as
     the SQL bands CTE.
     """
-    import numpy as np
-    import pyarrow as pa
-
     plane_mat = np.array(_plane_components(_FP_PLANES), dtype=np.float64)
     n_bands = _N_PLANES // _BAND_BITS
 
@@ -460,19 +464,10 @@ def _hyperplane_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_w = 1 << np.arange(_BAND_BITS, dtype=np.int64)
         word_w = np.arange(64, dtype=np.uint64)
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            vec_id = rb.column(rb.schema.get_field_index("vec_id")).to_numpy()
-            arr = rb.column(rb.schema.get_field_index("embedding"))
-            offs = arr.offsets.to_numpy()
-            vals = arr.values.to_numpy(zero_copy_only=False)
-            if (np.diff(offs) == 64).all():
-                X = vals[offs[0]:offs[-1]].astype(np.float64).reshape(n, 64)
-            else:  # ragged guard — contract says fixed 64 dims
-                X = np.stack(
-                    [vals[offs[i]:offs[i + 1]].astype(np.float64) for i in range(n)]
-                )
+            vec_id = rb.column("vec_id").to_numpy()
+            X = arrow_matrix(rb.column("embedding"), np.float64)
             xi = np.floor(X * _COMPONENT_SCALE)
             bits = (xi @ plane_mat.T) >= 0  # n x 256, exact integer signs
             out = {"vec_id": vec_id.astype(np.int64)}
@@ -1087,116 +1082,57 @@ def _sql_cell_knn_ctes(k: int) -> str:
 _KNN_EDGE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
-def _cell_knn_kernel(k: int):
-    """mapInArrow kernel: exact within-cell top-k cosine neighbors.
+_KNN_SCHEMA = pa.schema([("qid", pa.int64()), ("cid", pa.int64())])
 
-    The caller repartitions by cell, so every cell's rows land wholly
-    in one task. Per task: buffer the task's rows, then per cell
-    compute every in-cell pair's FIXED-POINT cosine with the identical
-    IEEE arithmetic the JVM expressions spelled — per-term
-    floor((x·y)·1e12) accumulated as int64 (dot_scaled), then
-    (dot/1e12) / (sqrt(na/1e12)·sqrt(nb/1e12)) in double
-    (cosine_from_scaled) — and keep each row's top-k by
-    (cosine DESC, cid ASC). float32→float64 widening, f64
-    multiplication, floor, int64 summation, sqrt and division are all
-    exactly specified by IEEE 754, so the numpy batch computes
-    bit-identical cosines to the JVM form it replaced (pinned:
-    tests/test_llm_ops.py::test_cell_knn_kernel_matches_jvm_form).
+
+def _cell_knn_kernel(k: int):
+    """Per-cell function of the kNN edge build
+    (``groupBy("cell").applyInArrow``): one cell's (vec_id, embedding,
+    cell) Table in, each member's top-k in-cell neighbors as (qid, cid)
+    rows out, ranked by the fixed-point cosine of functions/vector.py;
+    no rows for a cell of fewer than two members.
+
     Tie-breaking: candidates are sorted cid-ascending and the top-k
     argsort on -cosine is STABLE, which is exactly row_number() over
     (cosine DESC, cid ASC); −0.0 == 0.0 in both engines' sort
-    comparators, so signed zeros tie-break identically too.
+    comparators, so signed zeros tie-break identically too (pinned:
+    tests/test_llm_ops.py::test_cell_knn_kernel_matches_jvm_form).
+    Memory per Python worker is O(cell rows × dim)."""
 
-    Why (optimization r13, guide §4.2): the previous form self-joined
-    the cell-assigned corpus and evaluated dot_scaled as an
-    interpreted higher-order function per pair — ~50 µs per 64-dim
-    pair (the dot_scaled_arrow measurement), ~500 k in-cell pairs at
-    sf0.1 ⇒ ~25 core-seconds spread over only |cells| join tasks; the
-    whole build was 5–7 s of the exposed 7.7 s q_knn_label_propagation
-    wall. The numpy form computes the same pair count as one
-    vectorized broadcast per cell (chunked so the temp stays ~32 MB).
-    Task memory is O(cell rows × dim); parallelism is |cells| — the
-    same bound the 8-key self-join had, and K grows with the corpus
-    (kmeans module contract) so cluster scale widens, not narrows."""
-
-    def kernel(it):
-        import numpy as np
-        import pyarrow as pa
-
-        ids_l: list = []
-        cell_l: list = []
-        emb_l: list = []
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            ids_l.append(
-                batch.column("vec_id").to_numpy(zero_copy_only=False)
-            )
-            cell_l.append(
-                batch.column("cell").to_numpy(zero_copy_only=False)
-            )
-            col = batch.column("embedding")
-            off = col.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(off)
-            if len(widths) and not (widths == widths[0]).all():
-                raise ValueError("_cell_knn_kernel: ragged embedding widths")
-            vals = col.values.to_numpy(zero_copy_only=False)
-            emb_l.append(
-                vals[off[0] : off[-1]]
-                .astype(np.float64)
-                .reshape(len(col), int(widths[0]) if len(widths) else 0)
-            )
-        if not ids_l:
-            return
-        ids = np.concatenate(ids_l).astype(np.int64)
-        cells = np.concatenate(cell_l).astype(np.int64)
-        emb = np.vstack(emb_l)
-        # exact fixed-point squared norms (norm2_scaled twin)
-        n2 = np.floor((emb * emb) * 1e12).astype(np.int64).sum(axis=1)
+    def per_cell(t: pa.Table) -> pa.Table:
+        ids = t.column("vec_id").to_numpy()
+        emb = arrow_matrix(t.column("embedding"), np.float64)
+        n2 = fixed_dot(emb, emb)
         if not (n2 > 0).all():
             # cosine is undefined and the JVM/numpy NaN sort orders
             # would diverge — fail loudly instead of silently differing
             raise ValueError("_cell_knn_kernel: zero-norm embedding")
-        order = np.argsort(cells, kind="stable")
-        ids, cells, emb, n2 = ids[order], cells[order], emb[order], n2[order]
-        starts = np.flatnonzero(np.r_[True, cells[1:] != cells[:-1]])
-        bounds = np.r_[starts, len(cells)]
-        out_q: list = []
+        m = len(ids)
+        if m < 2:
+            return _KNN_SCHEMA.empty_table()
+        # candidates cid-ascending so stable -cos argsort ties to the
+        # lowest cid
+        cord = np.argsort(ids, kind="stable")
+        cid, emb, n2 = ids[cord], emb[cord], n2[cord]
+        take = min(k, m - 1)
+        # chunk queries so the (chunk × m × dim) f64 temp stays
+        # bounded (~32 MB)
+        chunk = max(1, 4_000_000 // max(m * emb.shape[1], 1))
         out_c: list = []
-        for b0, b1 in zip(bounds[:-1], bounds[1:]):
-            m = int(b1 - b0)
-            if m < 2:
-                continue  # singleton cell: no neighbors
-            cid = ids[b0:b1]
-            ec = emb[b0:b1]
-            # candidates cid-ascending so stable -cos argsort ties to
-            # the lowest cid
-            cord = np.argsort(cid, kind="stable")
-            cid, ec = cid[cord], ec[cord]
-            sq = np.sqrt(n2[b0:b1][cord] / 1e12)
-            take = min(k, m - 1)
-            # chunk queries so the (chunk × m × dim) f64 temp stays
-            # bounded (~32 MB)
-            chunk = max(1, 4_000_000 // max(m * ec.shape[1], 1))
-            for q0 in range(0, m, chunk):
-                q1 = min(m, q0 + chunk)
-                terms = np.floor((ec[q0:q1, None, :] * ec[None, :, :]) * 1e12)
-                dots = terms.astype(np.int64).sum(axis=2)
-                cos = (dots / 1e12) / (sq[q0:q1, None] * sq[None, :])
-                # self-exclusion: rank self strictly last
-                cos[np.arange(q1 - q0), np.arange(q0, q1)] = -np.inf
-                idx = np.argsort(-cos, axis=1, kind="stable")[:, :take]
-                out_q.append(np.repeat(cid[q0:q1], take))
-                out_c.append(cid[idx].ravel())
-        if out_q:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "qid": np.concatenate(out_q),
-                    "cid": np.concatenate(out_c),
-                }
+        for q0 in range(0, m, chunk):
+            q1 = min(m, q0 + chunk)
+            cos = cosine_tile(
+                fixed_dot(emb[q0:q1, None, :], emb[None, :, :]), n2[q0:q1], n2
             )
+            # self-exclusion: rank self strictly last
+            cos[np.arange(q1 - q0), np.arange(q0, q1)] = -np.inf
+            idx = np.argsort(-cos, axis=1, kind="stable")[:, :take]
+            out_c.append(cid[idx].ravel())
+        return pa.table(
+            [np.repeat(cid, take), np.concatenate(out_c)], schema=_KNN_SCHEMA
+        )
 
-    return kernel
+    return per_cell
 
 
 def _cell_knn_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1214,8 +1150,7 @@ def _cell_knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """(qid, cid) edge frame of each vector's top-k cosine neighbors
     within its trained k-means cell — the Spark twin of
     _sql_cell_knn_ctes, computed by the vectorized per-cell kernel
-    (see _cell_knn_kernel for the exactness argument; the replaced
-    self-join + row_number form lives in
+    (_cell_knn_kernel; the replaced self-join + row_number form lives in
     tests/test_llm_ops.py::test_cell_knn_kernel_matches_jvm_form,
     which pins the two equal).
 
@@ -1232,8 +1167,8 @@ def _cell_knn_edges(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         return _KNN_EDGE_CACHE[cache_key]
     base = _cell_knn_base(spark, sf_dir)
     edges = materialize(
-        base.repartition("cell").mapInArrow(
-            _cell_knn_kernel(k), "qid bigint, cid bigint"
+        base.groupBy("cell").applyInArrow(
+            _cell_knn_kernel(k), from_arrow_schema(_KNN_SCHEMA)
         )
     )
     _KNN_EDGE_CACHE[cache_key] = edges

@@ -10,6 +10,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -414,9 +415,66 @@ def test_geo_sql_registers_udfs_once_per_session(spark, monkeypatch):
     assert calls == []
 
     other = spark.newSession()
-    row = geo_sql(other, "SELECT ST_X(ST_Point(2.5D, 1.0D)) AS x").first()
+    try:
+        row = geo_sql(other, "SELECT ST_X(ST_Point(2.5D, 1.0D)) AS x").first()
+    finally:
+        # a later frame binds to the active session (Python and JVM),
+        # so hand it back to the fixture's
+        SparkSession._activeSession = spark
+        spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
     assert row.x == 2.5
     assert "ST_X" in calls
+    assert SparkSession.getActiveSession() is spark
+    assert spark._jvm.SparkSession.getActiveSession().get().equals(
+        spark._jsparkSession
+    )
+
+
+def test_point_udfs_keep_pandas_null_rules(spark):
+    """ST_X, ST_Y and ST_Distance on null, POINT EMPTY, a NaN coordinate,
+    -0.0 and points in both byte orders: a null or NaN result is null,
+    as Spark's pandas conversion made it, and every value is exact."""
+    import math
+    import struct
+
+    from geoparquet_python_spark.geo.functions import st_distance, st_x, st_y
+
+    def le(x, y):
+        return wkb.encode(("Point", (x, y)))
+
+    def be(x, y):
+        return b"\x00" + struct.pack(">Idd", 1, x, y)
+
+    nan = float("nan")
+    rows = [
+        (0, le(1.5, -2.0), be(3.5, -7.25)),
+        (1, be(3.5, -7.25), le(1.5, -2.0)),
+        (2, None, le(1.5, -2.0)),
+        (3, le(nan, nan), le(1.5, -2.0)),  # POINT EMPTY
+        (4, le(nan, 2.0), be(0.0, 2.0)),
+        (5, le(-0.0, 0.0), None),
+        (6, be(-1e300, 1e-300), le(0.0, 0.0)),
+    ]
+    df = spark.createDataFrame(rows, "i bigint, a binary, b binary")
+    got = sorted(
+        df.select(
+            "i",
+            st_x("a").alias("x"),
+            st_y("a").alias("y"),
+            st_distance("a", "b").alias("d"),
+        ).collect()
+    )
+    want = [
+        (0, 1.5, -2.0, math.hypot(2.0, -5.25)),
+        (1, 3.5, -7.25, math.hypot(-2.0, 5.25)),
+        (2, None, None, None),
+        (3, None, None, None),
+        (4, None, 2.0, None),
+        (5, -0.0, 0.0, None),
+        (6, -1e300, 1e-300, math.hypot(1e300, -1e-300)),
+    ]
+    assert [tuple(r) for r in got] == want
+    assert math.copysign(1.0, got[5].x) == -1.0
 
 
 def test_geo_sql_binds_frames_by_name(spark):

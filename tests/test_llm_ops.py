@@ -2478,7 +2478,7 @@ def _kernel_case(name):
             "h1": [[11, 12, 13], [], [14]],
             "h2": [[21, 22, 23], [], [24]],
         }
-    else:
+    elif name == "cell_knn":
         from geoparquet_python_spark.operators.similarity import _cell_knn_kernel
 
         kernel = _cell_knn_kernel(2)
@@ -2491,9 +2491,30 @@ def _kernel_case(name):
         )
         emb = np.random.default_rng(5).normal(size=(7, 4)).astype(np.float32)
         data = {
-            "vec_id": list(range(7)),
-            "cell": [0, 1, 0, 1, 0, 2, 1],  # cell 2 is a singleton
+            "vec_id": [5, 3, 0, 6, 1, 4, 2],
+            "cell": [1] * 7,
             "embedding": emb.tolist(),
+        }
+    else:
+        from geoparquet_python_spark.functions.vector import fixed_dot
+        from geoparquet_python_spark.operators.semdedup import _tau_pairs_fn
+
+        kernel = _tau_pairs_fn(-1.0, fine_bands=False)
+        schema = pa.schema(
+            [
+                ("vec_id", pa.int64()),
+                ("embedding", pa.list_(pa.float32())),
+                ("n2", pa.int64()),
+                ("cell", pa.int64()),
+            ]
+        )
+        emb = np.random.default_rng(6).normal(size=(7, 4)).astype(np.float32)
+        e64 = emb.astype(np.float64)
+        data = {
+            "vec_id": [5, 3, 0, 6, 1, 4, 2],
+            "embedding": emb.tolist(),
+            "n2": fixed_dot(e64, e64).tolist(),
+            "cell": [1] * 7,
         }
     empty = pa.RecordBatch.from_pydict(
         {n: [] for n in schema.names}, schema=schema
@@ -2501,8 +2522,14 @@ def _kernel_case(name):
     return kernel, empty, pa.RecordBatch.from_pydict(data, schema=schema)
 
 
+# applyInArrow functions: called once per cell with the cell's Table
+_PER_CELL_KERNELS = ("cell_knn", "tau_pairs")
+
+
 @pytest.mark.parametrize(
-    "name", ["sig_bitcount", "lloyd_m1", "lloyd_m8", "minhash_band", "cell_knn"]
+    "name",
+    ["sig_bitcount", "lloyd_m1", "lloyd_m8", "minhash_band"]
+    + list(_PER_CELL_KERNELS),
 )
 def test_kernel_tolerates_empty_batches(name):
     """ADVICE r12: MapInBatch paths may hand a kernel a zero-row Arrow
@@ -2510,9 +2537,22 @@ def test_kernel_tolerates_empty_batches(name):
     crashing (np.r_[True, ...] on an empty array fabricates a start
     index 0 and ds[starts] raises IndexError). For every mapInArrow
     kernel: all-empty input yields no batch, and empty batches
-    interleaved with data give the output of the data alone.
-    Pure-Python: the kernel closures run directly, no Spark session."""
+    interleaved with data give the output of the data alone. For every
+    per-cell applyInArrow function: an empty group and a one-row cell
+    give no rows, and empty chunks around the cell's rows change
+    nothing. Pure-Python: the kernel closures run directly, no Spark
+    session."""
+    import pyarrow as pa
+
     kernel, empty, rb = _kernel_case(name)
+    if name in _PER_CELL_KERNELS:
+        table = pa.Table.from_batches
+        assert kernel(table([empty])).num_rows == 0
+        assert kernel(table([rb.slice(0, 1)])).num_rows == 0
+        got = kernel(table([empty, rb, empty]))
+        assert got.num_rows >= 1
+        assert got.equals(kernel(table([rb])))
+        return
     assert list(kernel(iter([empty]))) == []
     assert list(kernel(iter([empty, empty]))) == []
     with_empties = list(kernel(iter([empty, rb, empty])))
