@@ -120,23 +120,23 @@ def spread(df):
     AQE stage) deserves the same treatment. The shuffled payload is
     the narrow pre-signature projection, not the signatures.
 
-    Guarded (optimization r12): when the source already plans enough
-    input splits to feed every core — the normal case at cluster
-    scale, where a 100 TB table arrives as thousands of splits — the
-    round-robin exchange is pure overhead and is skipped. The split
-    probe reads the physical plan's partition count (driver-side
-    split enumeration, no job). Round-robin repartition cannot change
-    any result: every consumer is an aggregate/join keyed on data
-    columns, and the round-robin sort makes it retry-deterministic.
+    Guarded: when the source already plans at least one input split
+    per core (the normal case at cluster scale, where a 100 TB table
+    arrives as thousands of splits), the round-robin exchange is pure
+    overhead and is skipped. A streaming frame is returned unchanged:
+    it has no input split to probe, and each micro-batch is sized by
+    its source. Round-robin repartition cannot change any result:
+    every consumer is an aggregate/join keyed on data columns, and the
+    round-robin sort makes it retry-deterministic.
 
-    Probe cost (ADVICE r12, measured r13): getNumPartitions() does
-    plan the query via the non-AQE path, but every spread() call site
-    sits directly above a narrow source projection, where the probe
-    measures 0.4 ms warm — cheaper than inputFiles() (1.2 ms) and far
-    below one py4j Column construction budget, so no caching layer is
-    warranted. The count can differ from what AQE later coalesces;
-    the guard only needs the INPUT split count, which AQE never
-    changes."""
+    The probe is the physical plan's partition count: driver-side
+    split enumeration, no job. Every call site sits directly above a
+    narrow source projection, where the probe costs well under a
+    millisecond, so its answer is not cached. The count can differ
+    from what AQE later coalesces; the guard only needs the INPUT
+    split count, which AQE never changes."""
+    if df.isStreaming:
+        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

@@ -10,8 +10,10 @@ making MinHash/SimHash pipelines oracle-checkable end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from geoparquet_python_spark.functions.exact import spread
 
 
 def tokens(col: Column | str) -> Column:
@@ -35,20 +37,13 @@ SQL_MD5_LONG = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def shingles(tokens_col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles via zip-with-shifted-self (no explode,
-    no shuffle: the shingle set is built inside one projection).
-
-    Round 8 rewrite: the original transform-with-index form read
-    ``toks[i + j]`` inside the lambda — per-element array INDEXING in
-    an interpreted HOF, the expression-layout trap the repo's memory
-    notes flag as ~10x (each element_at re-walks the array). Zipping
-    the array with its own shifted slices touches every element once
-    per shift instead: measured 4.9 s -> 0.8 s at sf0.1 for the
-    corpus shingle build every dedup/contamination pipeline pays.
-    Output is the identical shingle set (same first-occurrence order
-    from array_distinct); the guard keeps slice lengths >= 0 so docs
-    shorter than k tokens yield an empty array like the old CASE
-    filter did.
+    """Distinct k-word shingles of a token-array column, built in one
+    projection (no explode, no shuffle) by zipping the array with its
+    own shifted slices, so every element is touched once per shift.
+    Order is first occurrence (array_distinct); a doc shorter than k
+    tokens yields an empty array (the slice length is clamped at 0).
+    Takes a column NAME: the zip references the column k times.
+    Documents go through :func:`shingle_sets` / :func:`shingle_rows`.
     """
     name = tokens_col if isinstance(tokens_col, str) else None
     if name is None:
@@ -61,6 +56,50 @@ def shingles(tokens_col: Column | str, k: int = 3) -> Column:
             "(a, b) -> concat(a, ' ', b))"
         )
     return F.expr(f"array_distinct({expr})")
+
+
+def shingle_sets(docs: DataFrame, k: int = 3, *keep: str) -> DataFrame:
+    """(doc_id, *keep, sh): each document's distinct k-shingle array.
+
+    `docs` is any frame with doc_id, text and the `keep` columns, batch
+    or stream. The narrow tokenized projection is spread over the
+    session's cores (:func:`spread`) before the shingle build."""
+    toks = spread(docs.select("doc_id", *keep, tokens("text").alias("toks")))
+    return toks.select("doc_id", *keep, shingles("toks", k).alias("sh"))
+
+
+def shingle_rows(docs: DataFrame, k: int = 3, *keep: str) -> DataFrame:
+    """(doc_id, *keep, s): one row per distinct k-shingle of each
+    document of `docs` (as for :func:`shingle_sets`)."""
+    return explode_sets(shingle_sets(docs, k, *keep), *keep)
+
+
+def explode_sets(sets: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, s): the rows of a :func:`shingle_sets` frame.
+
+    explode_outer plus a null filter, not explode: an inner explode of
+    the sh column lets the optimizer infer size(sh) > 0 and push that
+    second shingle build below the projection (and below spread()'s
+    exchange), so every document would be shingled twice."""
+    return sets.select("doc_id", *keep, F.explode_outer("sh").alias("s")).where(
+        F.col("s").isNotNull()
+    )
+
+
+def quality_score(text: Column | str) -> Column:
+    """Heuristic document quality score: token count / 64 (capped at
+    1) and type-token ratio weigh 0.4 each, mean word length / 8 weighs
+    0.2. Ratios of ints and power-of-two divisions, so the score is
+    IEEE-identical to the oracles', which add the terms in this same
+    order (float addition order is part of the value)."""
+    t = F.col(text) if isinstance(text, str) else text
+    toks = tokens(t)
+    n = F.size(toks)
+    ttr = F.size(F.array_distinct(toks)) * F.lit(1.0) / n
+    mwl = (F.length(t) - (n - 1)) * F.lit(1.0) / n
+    return (
+        F.least(n / F.lit(64.0), F.lit(1.0)) * 0.4 + ttr * 0.4
+    ) + mwl / 8.0 * 0.2
 
 
 def sql_shingles_cte(k: int = 3, source: str = "documents") -> str:

@@ -45,6 +45,17 @@ from geoparquet_python_spark.registry import query
 _ROUNDS = 3
 
 
+def _token_seq(df: DataFrame, *keep: str) -> DataFrame:
+    """seq(doc_id, *keep, p, w): each document's whitespace tokens with
+    their 1-based positions, the BPE corpus before any merge. The narrow
+    tokenized projection is spread over the cores before the explode."""
+    return (
+        spread(df.select("doc_id", *keep, tokens("text").alias("toks")))
+        .select("doc_id", *keep, F.posexplode("toks").alias("i", "w"))
+        .select("doc_id", *keep, (F.col("i") + 1).cast("bigint").alias("p"), "w")
+    )
+
+
 def _pair_frame(seq: DataFrame) -> DataFrame:
     wdoc = Window.partitionBy("doc_id").orderBy("p")
     return seq.withColumn("wn", F.lead("w").over(wdoc))
@@ -230,13 +241,7 @@ def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the pair is doubled and overlaps resolve left-to-right —
     the "a a a" → "(a a) a" rule)."""
     d = load_table(spark, sf_dir, "documents")
-    seq = (
-        spread(d.select("doc_id", tokens("text").alias("toks")))
-        .select("doc_id", F.posexplode("toks").alias("i", "w"))
-        .select(
-            "doc_id", (F.col("i") + 1).cast("bigint").alias("p"), "w"
-        )
-    )
+    seq = _token_seq(d)
     stats = []
     for t in range(_ROUNDS):
         seq, st = _merge_round(seq, t)
@@ -285,11 +290,7 @@ def q_bpe_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     at identical content). Reuses the full merge chain; the only
     additions are two doc-keyed counts and a lang rollup."""
     d = load_table(spark, sf_dir, "documents")
-    seq = (
-        spread(d.select("doc_id", tokens("text").alias("toks")))
-        .select("doc_id", F.posexplode("toks").alias("i", "w"))
-        .select("doc_id", (F.col("i") + 1).cast("bigint").alias("p"), "w")
-    )
+    seq = _token_seq(d)
     before = seq.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n0")
     )
@@ -441,16 +442,8 @@ def q_bpe_encode_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a broadcast literal; no shuffle ever touches the encoded
     corpus except the per-doc window."""
     d = load_table(spark, sf_dir, "documents")
-
-    def seq_of(df: DataFrame) -> DataFrame:
-        return (
-            spread(df.select("doc_id", tokens("text").alias("toks")))
-            .select("doc_id", F.posexplode("toks").alias("i", "w"))
-            .select("doc_id", (F.col("i") + 1).cast("bigint").alias("p"), "w")
-        )
-
-    train = seq_of(d.where(F.col("doc_id") % _HELD_MOD != 0))
-    held = seq_of(d.where(F.col("doc_id") % _HELD_MOD == 0))
+    train = _token_seq(d.where(F.col("doc_id") % _HELD_MOD != 0))
+    held = _token_seq(d.where(F.col("doc_id") % _HELD_MOD == 0))
     before = held.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_before")
     )
@@ -562,11 +555,7 @@ def q_bpe_batch_merge_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     hundreds — same plan, a deeper selection unroll or a
     conflict-graph greedy pass over the M-row count head."""
     d = load_table(spark, sf_dir, "documents")
-    seq = (
-        spread(d.select("doc_id", tokens("text").alias("toks")))
-        .select("doc_id", F.posexplode("toks").alias("i", "w"))
-        .select("doc_id", (F.col("i") + 1).cast("bigint").alias("p"), "w")
-    )
+    seq = _token_seq(d)
     wdoc = Window.partitionBy("doc_id").orderBy("p")
     pr = seq.withColumn("wn", F.lead("w").over(wdoc))
     cnt = (
@@ -684,13 +673,7 @@ def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized stages are the bigram count and the coverage scan —
     both single-shuffle with full map-side combine."""
     d = load_table(spark, sf_dir, "documents")
-    seq = (
-        spread(d.select("doc_id", "lang", tokens("text").alias("toks")))
-        .select("doc_id", "lang", F.posexplode("toks").alias("i", "w"))
-        .select(
-            "doc_id", "lang", (F.col("i") + 1).cast("bigint").alias("p"), "w"
-        )
-    )
+    seq = _token_seq(d, "lang")
     wdoc = Window.partitionBy("doc_id").orderBy("p")
     bgn = (
         seq.select(

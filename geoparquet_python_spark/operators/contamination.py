@@ -16,8 +16,8 @@ Scale design (the part that matters at 100 TB):
   training corpus's exploded shingles never shuffle for the probe.
 - the per-doc hit count aggregates on doc_id — uniform keys, full
   map-side combine; output is |contaminated docs|, not |shingles|.
-- shingling is one in-row projection (functions/text.shingles:
-  transform-with-index + array_distinct, no shuffle) followed by a
+- shingling is functions/text.shingle_rows: one in-row shingle
+  projection (zip-with-shifted-self + array_distinct) followed by a
   single explode that stays map-local until the aggregation.
 k=3 here because the synthetic corpus's near-dups perturb words every
 few tokens (longer grams never collide at test scale); production
@@ -33,9 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.text import (
-    shingles,
+    explode_sets,
+    shingle_rows,
+    shingle_sets,
     sql_shingles_cte,
-    tokens,
 )
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.registry import query
@@ -76,14 +77,9 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id. hit_frac = n_hits / n_shingles is exact IEEE division of
     two int64s (identical in DuckDB), so no rounding is needed.
     """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens("text").alias("toks")
-    )
-    with_sh = docs.select("doc_id", shingles("toks", _K).alias("sh_arr"))
-    exploded = with_sh.select(
-        "doc_id",
-        F.size("sh_arr").alias("n_shingles"),
-        F.explode("sh_arr").alias("s"),
+    sets = shingle_sets(load_table(spark, sf_dir, "documents"), _K)
+    exploded = explode_sets(
+        sets.withColumn("n_shingles", F.size("sh")), "n_shingles"
     )
     is_bench = F.col("doc_id") % _BENCH_MOD == 0
     bench_set = exploded.where(is_bench).select("s").distinct()
@@ -143,13 +139,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the first-seen index is the same vocabulary-sized frame the
     TF-IDF/DF operators already build; incremental crawls maintain it
     as a running MIN under union — the aggregate is mergeable."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens("text").alias("toks")
-    )
-    exploded = docs.select(
-        "doc_id",
-        F.explode(shingles("toks", _K)).alias("s"),
-    )
+    exploded = shingle_rows(load_table(spark, sf_dir, "documents"), _K)
     first_seen = exploded.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     return (
         exploded.join(first_seen, "s")
@@ -212,12 +202,7 @@ def q_source_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     novelty DERIVATIVE — the marginal n-gram value of continuing to
     crawl it. Same two linear shuffles as q_ngram_novelty plus a
     |sources|x2-key rollup."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", tokens("text").alias("toks")
-    )
-    exploded = docs.select(
-        "doc_id", "source", F.explode(shingles("toks", _K)).alias("s")
-    )
+    exploded = shingle_rows(load_table(spark, sf_dir, "documents"), _K, "source")
     first_seen = exploded.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         exploded.join(first_seen, "s")

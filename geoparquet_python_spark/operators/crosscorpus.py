@@ -29,17 +29,17 @@ pandas; SURVEY.md §0) — BASELINE.json north-star scope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.text import (
     SQL_MD5_LONG,
     md5_long,
-    shingles,
+    shingle_rows,
+    shingle_sets,
     sql_shingles_cte,
-    tokens,
 )
-from geoparquet_python_spark.functions.exact import materialize, spread
+from geoparquet_python_spark.functions.exact import materialize
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.operators.dedup import _sql_minhash, minhash_bands
 from geoparquet_python_spark.registry import query
@@ -102,9 +102,7 @@ def q_crosscorpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id")
     )
-    sh = d.select("doc_id", tokens("text").alias("toks")).select(
-        "doc_id", F.explode(shingles("toks", 3)).alias("s")
-    )
+    sh = shingle_rows(d)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     batch_sh = sh.where(is_batch)
     corpus_sh = sh.where(~is_batch)
@@ -221,11 +219,7 @@ def q_lsh_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exact ints; tie order (jaccard DESC, frozen_id) is
     total."""
     d = load_table(spark, sf_dir, "documents")
-    docs = materialize(
-        spread(d.select("doc_id", tokens("text").alias("toks"))).select(
-            "doc_id", shingles("toks", k=3).alias("sh")
-        )
-    )
+    docs = materialize(shingle_sets(d))
     bands = minhash_bands(docs)
     newb = bands.where(F.expr("doc_id % 2 = 1")).select(
         F.col("doc_id").alias("new_id"), "band", "sig"

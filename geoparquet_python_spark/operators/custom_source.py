@@ -111,9 +111,9 @@ def q_pyds_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SimpleDataSourceStreamReader): {ROWS} docs arrive in micro-batches
     of {BATCH} (genuinely 3 batches — Spark's availableNow falls back
     to single-batch for Python stream sources, so the drain polls the
-    sink until the offset-bounded stream is exhausted, then stops).
-    Content-addressed generation makes the offsets replayable, so the
-    drained result equals the batch regeneration the oracle runs —
+    stream's progress until the offset-bounded stream is exhausted, then
+    stops). Content-addressed generation makes the offsets replayable, so
+    the drained result equals the batch regeneration the oracle runs —
     the exactly-once story for a custom streaming source.
     """
     import time
@@ -137,7 +137,10 @@ def q_pyds_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         deadline = time.time() + 120
-        while spark.table(name).count() < _STREAM_ROWS:
+        # A batch's progress is reported once the sink has committed it,
+        # and reading it launches no job, so the jobs this construction
+        # runs do not depend on how long the micro-batches take.
+        while sum(p["numInputRows"] for p in q.recentProgress) < _STREAM_ROWS:
             if time.time() > deadline:
                 raise TimeoutError("stream drain did not finish")
             time.sleep(0.2)

@@ -6,7 +6,7 @@ Scale design:
   partitioning, no skew (hashes are uniform).
 - shingle-set similarity (exact Jaccard, containment, prefix
   filtering, the MinHash-LSH refine): every query builds one overlap
-  frame (doc_a, doc_b, i = |A∩B|, sza, szb) over `_shingle_sets` and
+  frame (doc_a, doc_b, i = |A∩B|, sza, szb) over `text.shingle_sets` and
   reads it through `_jaccard_filter` or `_containment_filter`. The
   frame has two routes: `_shingle_overlaps` counts an inverted-index
   self-join on the shingle (only docs sharing ≥1 shingle meet, never
@@ -45,7 +45,9 @@ from geoparquet_python_spark.functions.text import (
     SQL_MD5_LONG,
     md5_hi,
     md5_long,
-    shingles,
+    quality_score,
+    shingle_rows,
+    shingle_sets,
     sql_shingles_cte,
     tokens,
 )
@@ -211,15 +213,6 @@ def _has_hot_shingles(spark: SparkSession, sh, sf_dir: str, cap: int) -> bool:
     return _HOT_SHINGLE_CACHE[key]
 
 
-def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh): each document's distinct 3-word shingle array,
-    spread over the session's cores for the shingle projection."""
-    d = load_table(spark, sf_dir, "documents")
-    return spread(d.select("doc_id", tokens("text").alias("toks"))).select(
-        "doc_id", shingles("toks", k=3).alias("sh")
-    )
-
-
 def _shingle_overlaps(
     spark: SparkSession, sf_dir: str, stop_shingle_df: int | None
 ) -> DataFrame:
@@ -250,15 +243,7 @@ def _shingle_overlaps(
     nothing. Real boilerplate flips the same call sites onto the
     guarded plan unchanged.
     """
-    # explode_outer plus a null filter, not explode: an inner explode of
-    # the sh column lets the optimizer infer size(sh) > 0 and push that
-    # shingle computation below spread()'s exchange, so every document
-    # would be shingled once more on the scan side.
-    sh = (
-        _shingle_sets(spark, sf_dir)
-        .select("doc_id", F.explode_outer("sh").alias("s"))
-        .where(F.col("s").isNotNull())
-    )
+    sh = shingle_rows(load_table(spark, sf_dir, "documents"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     if stop_shingle_df is not None and not _has_hot_shingles(
         spark, sh, sf_dir, stop_shingle_df
@@ -593,7 +578,7 @@ def _minhash_lsh_pairs(
     # refine sides; recomputing it is cheaper than checkpointing the
     # wide shingle arrays (measured both ways at sf0.1 — the narrow
     # candidate set is what's worth materializing, via broadcast below).
-    docs = _shingle_sets(spark, sf_dir)
+    docs = shingle_sets(load_table(spark, sf_dir, "documents"))
     banded = minhash_bands(docs)
     # Candidates by bucket-grouping, not a self-join: the self-join form
     # evaluates the whole signature lineage once per side; grouping runs
@@ -1287,14 +1272,7 @@ def q_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     clusters = QUERIES["q_neardup_clusters"](spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    n_tokens = F.size(toks)
-    ttr = F.size(F.array_distinct(toks)) * F.lit(1.0) / n_tokens
-    mwl = (F.length("text") - (n_tokens - 1)) * F.lit(1.0) / n_tokens
-    quality = (
-        F.least(n_tokens / F.lit(64.0), F.lit(1.0)) * 0.4 + ttr * 0.4
-    ) + mwl / 8.0 * 0.2
-    q = d.select("doc_id", quality.alias("quality"))
+    q = d.select("doc_id", quality_score("text").alias("quality"))
     joined = clusters.join(q, "doc_id")
     # Optimization r12 (guide §2.3): argmax-per-cluster as ONE max_by
     # aggregate ordered on (quality, -doc_id) — the same total order
@@ -1656,7 +1634,7 @@ def q_jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     refine then scores survivors from FULL sets. Prefix lengths are
     exact integers (:func:`_rarity_prefix`).
     """
-    sets = materialize(_shingle_sets(spark, sf_dir))
+    sets = materialize(shingle_sets(load_table(spark, sf_dir, "documents")))
     prefix = _rarity_prefix(sets, 3).where("in_prefix").select("doc_id", "s", "sz")
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
@@ -1731,7 +1709,7 @@ def q_containment_prefix_filter_pairs(
     candidate puts the contained doc (smaller, ties → lower doc_id)
     in doc_a, the direction the exact query's filter normalizes to.
     """
-    sets = materialize(_shingle_sets(spark, sf_dir))
+    sets = materialize(shingle_sets(load_table(spark, sf_dir, "documents")))
     ranked = _rarity_prefix(sets, 8)
     a, b = ranked.where("in_prefix").alias("a"), ranked.alias("b")
     smaller = (F.col("a.sz") < F.col("b.sz")) | (
@@ -1800,18 +1778,15 @@ def q_source_minhash_similarity(
     |sources|×32 rows, then a slot-keyed self-join over that tiny
     frame. The heavy corpus never shuffles: only per-doc 32-int
     signatures do."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.split(F.col("text"), " ").alias("toks"),
-    )
     # A doc under 3 tokens has an EMPTY shingle set — no sketch. Drop
     # it here so a source whose every doc is sub-trigram contributes
     # no signature at all (min over the empty set is undefined), the
     # same absence the oracle's shingle CTE produces; keeping such
     # rows would emit NULL-slot signatures and phantom source pairs.
-    base = d.select("source", shingles("toks", k=3).alias("sh")).where(
-        F.size("sh") > 0
+    base = (
+        shingle_sets(load_table(spark, sf_dir, "documents"), 3, "source")
+        .select("source", "sh")
+        .where(F.size("sh") > 0)
     )
     hs = F.transform("sh", lambda s: F.md5(s))
     hashed = base.select("source", hs.alias("hs"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from geoparquet_python_spark.functions.text import quality_score, tokens
 from geoparquet_python_spark.io import load_table, parquet_row_count
 # Shard-domain sizing (shard_count/_SQL_N_SHARDS and their constants)
 # lives beside the hash helpers in sampling.py — one home for "how the
@@ -389,19 +390,13 @@ def q_token_pack_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ratios + power-of-two divisions), so the order — and therefore
     every bin assignment — is engine-identical."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_toks = F.size(toks)
-    ttr = F.size(F.array_distinct(toks)) * F.lit(1.0) / n_toks
-    mwl = (F.length("text") - (n_toks - 1)) * F.lit(1.0) / n_toks
-    quality = (
-        F.least(n_toks / F.lit(64.0), F.lit(1.0)) * 0.4 + ttr * 0.4
-    ) + mwl / 8.0 * 0.2
+    n_toks = F.size(tokens("text"))
     n_shards = shard_count(parquet_row_count(spark, sf_dir, "documents"))
     base = d.select(
         "doc_id",
         hash_bucket_wide(F.col("doc_id"), n_shards).cast("long").alias("shard"),
         n_toks.cast("long").alias("n_tokens"),
-        quality.alias("quality"),
+        quality_score("text").alias("quality"),
     )
     return (
         base.groupBy("shard")

@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geoparquet_python_spark.functions.text import sql_shingles_cte, tokens
+from geoparquet_python_spark.functions.text import (
+    quality_score,
+    shingle_rows,
+    sql_shingles_cte,
+    tokens,
+)
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.operators.dedup import _JACCARD_T, _exact_jaccard_pairs
 from geoparquet_python_spark.registry import query
@@ -246,7 +251,6 @@ def q_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     still (pair-graph work ≪ corpus) + three map-side probes + one
     |langs|-key aggregate.
     """
-    from geoparquet_python_spark.functions.text import shingles
     from geoparquet_python_spark.registry import QUERIES
 
     d = load_table(spark, sf_dir, "documents")
@@ -259,26 +263,20 @@ def q_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     clusters = QUERIES["q_neardup_clusters"](spark, sf_dir)
-    n_toks = F.size(toks)
-    ttr = F.size(F.array_distinct(toks)) * F.lit(1.0) / n_toks
-    mwl = (F.length("text") - (n_toks - 1)) * F.lit(1.0) / n_toks
-    quality = (
-        F.least(n_toks / F.lit(64.0), F.lit(1.0)) * 0.4 + ttr * 0.4
-    ) + mwl / 8.0 * 0.2
     wq = Window.partitionBy("cluster_rep").orderBy(
         F.col("quality").desc(), F.col("doc_id")
     )
     dupes = (
-        clusters.join(d.select("doc_id", quality.alias("quality")), "doc_id")
+        clusters.join(
+            d.select("doc_id", quality_score("text").alias("quality")), "doc_id"
+        )
         .withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") > 1)
         .select("doc_id")
     )
 
     # stage 3: decontamination probe (broadcast eval shingle set)
-    sh = d.select("doc_id", toks.alias("toks")).select(
-        "doc_id", F.explode(shingles("toks", 3)).alias("s")
-    )
+    sh = shingle_rows(d)
     # The eval shingle set is CORPUS-PROPORTIONAL (~1/97 of docs x
     # shingles/doc), so it must NOT carry a size-threshold-overriding
     # broadcast hint (ADVICE r7 on the v4 twin — the exact driver-OOM
@@ -622,27 +620,18 @@ def q_curation_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    from geoparquet_python_spark.functions.text import shingles
-
     from geoparquet_python_spark.functions.exact import (
         build_concurrently,
         materialize,
-        spread,
     )
 
     def _text_leg() -> DataFrame:
-        # shingles() wants a column NAME, so tokenize into a named
-        # column first, then build the distinct shingle array in-row.
-        # Materialized: the exploded frame feeds the shingle-stats
+        # Materialized: the shingle rows feed the shingle-stats
         # aggregate twice (the s-keyed pass and the join back) —
         # without the barrier each consumer re-runs the
         # tokenize+shingle projection over the whole corpus (measured
         # ~4 s of the funnel's wall at sf0.1).
-        ex = materialize(
-            spread(d.select("doc_id", tokens("text").alias("toks")))
-            .select("doc_id", shingles("toks", 3).alias("sh_arr"))
-            .select("doc_id", F.explode("sh_arr").alias("s"))
-        )
+        ex = materialize(shingle_rows(d))
         # Round-8 fusion: the r7 form ran THREE shingle-keyed passes
         # (the eval distinct + semi-join for n_hits, the min(doc_id)
         # aggregate + join for n_novel, a per-doc count for n_sh). All

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.functions.text import (
+    quality_score,
+    shingle_rows,
     shingles,
     sql_shingles_cte,
     tokens,
@@ -144,10 +146,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-document duplicated content. The df aggregate is keyed on the
     shingle (uniform md5-like distribution of text), so the shuffle has
     no inherent skew; output is vocabulary-sized."""
-    d = load_table(spark, sf_dir, "documents")
-    sh = d.select("doc_id", tokens("text").alias("toks")).select(
-        "doc_id", F.explode(shingles("toks", k=5)).alias("s")
-    )
+    sh = shingle_rows(load_table(spark, sf_dir, "documents"), 5)
     return (
         sh.groupBy("s")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -183,10 +182,7 @@ def q_boilerplate_doc_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 worst offenders — the filter list a curation pipeline feeds
     back into its drop rules. (boiler_frac, doc_id) is a total order,
     so the LIMIT is deterministic."""
-    d = load_table(spark, sf_dir, "documents")
-    sh = d.select("doc_id", tokens("text").alias("toks")).select(
-        "doc_id", F.explode(shingles("toks", k=5)).alias("s")
-    )
+    sh = shingle_rows(load_table(spark, sf_dir, "documents"), 5)
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     per = (
         sh.join(dfreq, "s")
@@ -293,14 +289,7 @@ def q_quality_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ints and /64, /8 (powers of two) — IEEE-exact on both engines;
     only the interpolated cutoff is rounded (1e-6, final-ulp)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    n_tokens = F.size(toks)
-    ttr = F.size(F.array_distinct(toks)) * F.lit(1.0) / n_tokens
-    mwl = (F.length("text") - (n_tokens - 1)) * F.lit(1.0) / n_tokens
-    quality = (
-        F.least(n_tokens / F.lit(64.0), F.lit(1.0)) * 0.4 + ttr * 0.4
-    ) + mwl / 8.0 * 0.2
-    q = d.select("doc_id", "lang", quality.alias("quality"))
+    q = d.select("doc_id", "lang", quality_score("text").alias("quality"))
     cutoffs = q.groupBy("lang").agg(
         F.round(F.percentile("quality", F.lit(0.4)), 6).alias("cutoff")
     )
@@ -877,14 +866,9 @@ def q_mannwhitney_auc_contam(spark: SparkSession, sf_dir: str) -> DataFrame:
     functionals)."""
     from pyspark.sql import Window
 
-    from geoparquet_python_spark.functions.exact import spread
-    from geoparquet_python_spark.functions.text import shingles, tokens
-
     d = load_table(spark, sf_dir, "documents")
     is_eval = F.col("doc_id") % _AUC_EVAL_MOD == 0
-    ex = spread(d.select("doc_id", tokens("text").alias("toks"))).select(
-        "doc_id", F.explode(shingles("toks", 3)).alias("s")
-    )
+    ex = shingle_rows(d)
     bench = ex.where(is_eval).select("s").distinct()
     hits = (
         ex.where(~is_eval)

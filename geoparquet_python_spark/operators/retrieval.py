@@ -35,7 +35,7 @@ from geoparquet_python_spark.functions.exact import (
     materialize,
 )
 from geoparquet_python_spark.functions.text import (
-    shingles,
+    shingle_rows,
     sql_shingles_cte,
     tokens,
 )
@@ -533,12 +533,7 @@ def _jaccard_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-set-sized by contract and broadcasts; the corpus's exploded
     shingles join it map-side, so the only corpus-wide aggregate runs
     on shingle-matching (query, doc) rows."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens("text").alias("toks")
-    )
-    sh = materialize(
-        d.select("doc_id", F.explode(shingles("toks", 3)).alias("s"))
-    )
+    sh = materialize(shingle_rows(load_table(spark, sf_dir, "documents")))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nsh"))
     qsh = sh.where(F.expr(_QUERY_PRED)).select(
         F.col("doc_id").alias("query_id"), "s"
@@ -944,15 +939,7 @@ def q_bm25_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the per-query label set. Queries are the held-out
     slice (|corpus|/101), so every query-keyed frame is
     corpus/101-bounded."""
-    from geoparquet_python_spark.functions.exact import spread
-    from geoparquet_python_spark.functions.text import shingles
-
-    d = load_table(spark, sf_dir, "documents")
-    ex = materialize(
-        spread(d.select("doc_id", tokens("text").alias("toks"))).select(
-            "doc_id", F.explode(shingles("toks", 3)).alias("s")
-        )
-    )
+    ex = materialize(shingle_rows(load_table(spark, sf_dir, "documents")))
     qsh = ex.where(F.expr(_QUERY_PRED)).select(
         F.col("doc_id").alias("query_id"), "s"
     )

@@ -17,7 +17,7 @@ from geoparquet_python_spark.functions.text import (
     SQL_MD5_LONG,
     bigram_structs,
     md5_long,
-    shingles,
+    shingle_sets,
     sql_shingles_cte,
     tokens,
 )
@@ -285,15 +285,13 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprint: min 60-bit hash over distinct 3-word
     shingles (the r=1 MinHash — a winnowing-style representative).
 
-    Spark computes the shingle set per row with transform-with-index
-    (no explode, no shuffle, map-only); the reference-style per-row
+    Spark computes the shingle set per row in one projection
+    (text.shingle_sets: no explode, no aggregate; only the narrow token
+    projection is spread over the cores); the reference-style per-row
     Python loop is exactly what this avoids.
     """
-    d = load_table(spark, sf_dir, "documents")
-    sh = shingles("toks", k=3)
     return (
-        d.select("doc_id", tokens("text").alias("toks"))
-        .select("doc_id", sh.alias("sh"))
+        shingle_sets(load_table(spark, sf_dir, "documents"))
         .select(
             "doc_id",
             F.array_min(F.transform("sh", md5_long)).alias("fingerprint"),

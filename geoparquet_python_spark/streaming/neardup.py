@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geoparquet_python_spark.functions.text import shingles, sql_shingles_cte, tokens
+from geoparquet_python_spark.functions.text import shingle_sets, sql_shingles_cte
 from geoparquet_python_spark.io import load_table
 from geoparquet_python_spark.operators.dedup import _sql_minhash, minhash_bands
 from geoparquet_python_spark.registry import query
@@ -80,21 +80,11 @@ def q_stream_neardup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sig to the same empty string, band-matching every short stream doc
     # to every short corpus doc. The oracle's sh CTE naturally emits no
     # rows for them, so drop them here BEFORE banding — on both sides.
-    stream_docs = (
-        read_documents_stream(spark, sf_dir)
-        .select("doc_id", tokens("text").alias("toks"))
-        .select("doc_id", shingles("toks", k=3).alias("sh"))
-        .where(F.size("sh") > 0)
-    )
-    stream_bands = minhash_bands(stream_docs)
+    stream = read_documents_stream(spark, sf_dir)
+    stream_bands = minhash_bands(shingle_sets(stream).where(F.size("sh") > 0))
 
-    corpus_docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.expr(_CORPUS_PRED))
-        .select("doc_id", tokens("text").alias("toks"))
-        .select("doc_id", shingles("toks", k=3).alias("sh"))
-        .where(F.size("sh") > 0)
-    )
+    corpus = load_table(spark, sf_dir, "documents").where(F.expr(_CORPUS_PRED))
+    corpus_docs = shingle_sets(corpus).where(F.size("sh") > 0)
     corpus_bands = minhash_bands(corpus_docs).select(
         F.col("doc_id").alias("corpus_doc"),
         F.col("band").alias("cband"),

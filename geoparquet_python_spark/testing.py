@@ -8,6 +8,10 @@ aggregates are designed to be order-independent; see functions/exact.py).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 import numpy as np
 import pandas as pd
 
@@ -15,10 +19,18 @@ from geoparquet_python_spark.io import TABLES
 
 
 def duckdb_connect(sf_dir: str):
-    """DuckDB connection with the driver's table views pre-registered."""
+    """DuckDB connection with the driver's table views pre-registered.
+
+    DuckDB spills to `.tmp/` under the current directory by default,
+    which puts gigabytes of spill into the checkout on a large oracle;
+    each connection spills to a fresh directory under the system temp
+    dir instead, removed at exit. The memory limit stays DuckDB's
+    default."""
     import duckdb
 
-    con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="duckdb-oracle-spill-")
+    atexit.register(shutil.rmtree, spill, True)
+    con = duckdb.connect(config={"temp_directory": spill})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

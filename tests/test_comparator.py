@@ -284,3 +284,47 @@ def test_run_compare_engine_side_end_to_end(spark):
             "SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'a'), (3, NULL)) t(k, s)",
             "_unused_",
         )
+
+
+def test_oracle_spill_stays_outside_checkout(sf_dir_small):
+    """duckdb_connect spills under the system temp dir, one fresh
+    directory per connection, never into the checkout or the current
+    directory (DuckDB's default is `.tmp/` under the cwd); the memory
+    limit stays DuckDB's own default."""
+    import os
+    import tempfile
+
+    import duckdb
+
+    from geoparquet_python_spark.testing import duckdb_connect
+
+    repo = os.path.realpath(os.path.join(os.path.dirname(__file__), ".."))
+    cons = [duckdb_connect(sf_dir_small) for _ in range(2)]
+    try:
+        dirs = [
+            os.path.realpath(
+                c.execute("SELECT current_setting('temp_directory')").fetchone()[0]
+            )
+            for c in cons
+        ]
+        limits = {
+            c.execute("SELECT current_setting('memory_limit')").fetchone()[0]
+            for c in cons
+        }
+    finally:
+        for c in cons:
+            c.close()
+    default = duckdb.connect()
+    try:
+        default_limit = default.execute(
+            "SELECT current_setting('memory_limit')"
+        ).fetchone()[0]
+    finally:
+        default.close()
+    tmp = os.path.realpath(tempfile.gettempdir())
+    assert dirs[0] != dirs[1]
+    for d in dirs:
+        assert d.startswith(tmp + os.sep), d
+        assert not d.startswith(repo + os.sep), d
+        assert not d.startswith(os.path.realpath(os.getcwd()) + os.sep), d
+    assert limits == {default_limit}

@@ -1969,10 +1969,17 @@ def test_shingles_zipped_equals_indexed(spark):
     identical per-doc shingle SET as the original transform-with-index
     form (guarded here so future edits can't silently change shingle
     semantics), including the short-doc edge cases (n < k, n == k) and
-    repeated-token docs."""
+    repeated-token docs. The document helpers built on it
+    (shingle_sets, shingle_rows) must give the same sets and carry
+    their `keep` columns through."""
     from pyspark.sql import functions as F
 
-    from geoparquet_python_spark.functions.text import shingles, tokens
+    from geoparquet_python_spark.functions.text import (
+        shingle_rows,
+        shingle_sets,
+        shingles,
+        tokens,
+    )
 
     def indexed(name, k):
         parts = ", ".join(f"{name}[i + {j}]" for j in range(k))
@@ -2005,6 +2012,47 @@ def test_shingles_zipped_equals_indexed(spark):
             .count()
         )
         assert bad == 0, f"shingle mismatch at k={k}"
+
+    docs = spark.createDataFrame(
+        [(i, t, f"tag{i}") for i, (t,) in enumerate(rows)],
+        "doc_id long, text string, tag string",
+    )
+    for k in (3, 5):
+        want = {
+            r.doc_id: sorted(r.sh)
+            for r in docs.select("doc_id", tokens("text").alias("toks"))
+            .select("doc_id", indexed("toks", k).alias("sh"))
+            .collect()
+        }
+        sets = shingle_sets(docs, k, "tag").collect()
+        assert [list(r.asDict()) for r in sets[:1]] == [["doc_id", "tag", "sh"]]
+        assert {r.doc_id: sorted(r.sh) for r in sets} == want, f"sets at k={k}"
+        assert all(r.tag == f"tag{r.doc_id}" for r in sets)
+
+        got_rows = shingle_rows(docs, k, "tag").collect()
+        assert [list(r.asDict()) for r in got_rows[:1]] == [["doc_id", "tag", "s"]]
+        per_doc: dict = {}
+        for r in got_rows:
+            assert r.tag == f"tag{r.doc_id}"
+            per_doc.setdefault(r.doc_id, []).append(r.s)
+        # one row per distinct shingle; a doc with none emits no row
+        assert {d: sorted(v) for d, v in per_doc.items()} == {
+            d: v for d, v in want.items() if v
+        }, f"rows at k={k}"
+
+
+def test_spread_passes_streams_through(spark, sf_dir_small):
+    """A stream has no input split to probe: spread() hands it back
+    unchanged, and the shingle helpers build on it like on a batch."""
+    from geoparquet_python_spark.functions.exact import spread
+    from geoparquet_python_spark.functions.text import shingle_rows, shingle_sets
+    from geoparquet_python_spark.streaming.source import read_documents_stream
+
+    stream = read_documents_stream(spark, sf_dir_small)
+    assert stream.isStreaming
+    assert spread(stream) is stream
+    assert shingle_sets(stream).isStreaming
+    assert shingle_rows(stream, 3, "source").columns == ["doc_id", "source", "s"]
 
 
 def test_cluster_clip_invariants(spark, sf_dir):

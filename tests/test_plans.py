@@ -283,6 +283,55 @@ def test_decontaminate_broadcasts_bench_side(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, "bench shingle set not broadcast"
 
 
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _v4_text_leg(spark, sf_dir, monkeypatch):
+    """The frame q_curation_pipeline_v4 checkpoints for its text leg,
+    caught at its materialize() call."""
+    from geoparquet_python_spark.functions import exact
+
+    seen = []
+    real = exact.materialize
+
+    def record(df):
+        seen.append(df)
+        return real(df)
+
+    monkeypatch.setattr(exact, "materialize", record)
+    registry.QUERIES["q_curation_pipeline_v4"](spark, sf_dir)
+    monkeypatch.undo()
+    legs = [df for df in seen if "zip_with(" in _optimized(df)]
+    assert len(legs) == 1, f"{len(legs)} shingle checkpoints in v4"
+    return legs[0]
+
+
+# Shingle builds each frame's plan holds: the eval side and the probe
+# side; the one checkpointed row frame; both self-join sides and both
+# size lookups.
+SHINGLE_BUILDS = {"decontaminate": 2, "v4_text_leg": 1, "overlaps": 4}
+
+
+@pytest.mark.parametrize("name", sorted(SHINGLE_BUILDS))
+def test_each_shingle_build_runs_once(spark, sf_dir_small, monkeypatch, name):
+    """An inner explode of a named shingle-array column lets the
+    optimizer infer size(sh) > 0 and push a second copy of the shingle
+    build below the projection; text.shingle_rows / explode_sets
+    explode with explode_outer plus a null filter, so every build is
+    evaluated once (k = 3: 2 zip_with per build)."""
+    from geoparquet_python_spark.operators.dedup import _shingle_overlaps
+
+    if name == "decontaminate":
+        df = registry.QUERIES["q_decontaminate_overlap"](spark, sf_dir_small)
+    elif name == "v4_text_leg":
+        df = _v4_text_leg(spark, sf_dir_small, monkeypatch)
+    else:
+        df = _shingle_overlaps(spark, sf_dir_small, stop_shingle_df=None)
+    zips = _optimized(df).count("zip_with(")
+    assert zips == 2 * SHINGLE_BUILDS[name], f"{zips} zip_with"
+
+
 def test_ivf_broadcasts_probe_list(spark, sf_dir):
     """IVF search must broadcast the (qid, cell) probe list; the
     cell-assigned corpus is probed map-side, and assignment itself is

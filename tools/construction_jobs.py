@@ -13,7 +13,10 @@ where SF_DIR is a testdata directory holding the ten tables
 Prints one line per failed construction, then the total job count, the
 number of queries built with no job, and the N queries with the most.
 Streaming micro-batch jobs run under their stream's own job group and
-are not counted here.
+are not counted here; a query that drains a stream counts only the jobs
+its building thread launches, so a count that depended on how long the
+micro-batches took would not repeat (tests/test_construction_jobs.py
+rebuilds the streaming queries three times and pins equal counts).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ import argparse
 import os
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -34,15 +38,17 @@ from geoparquet_python_spark.functions.exact import release_dead_checkpoints  # 
 from geoparquet_python_spark.session import get_spark  # noqa: E402
 
 
-def construction_jobs(spark, sf_dir: str) -> tuple[dict, dict]:
-    """Jobs each registered query's construction launched, and the
-    constructions that raised (name -> error)."""
+def construction_jobs(spark, sf_dir: str, names=None) -> tuple[dict, dict]:
+    """Jobs each registered query's construction launched (every query,
+    or those in `names`), and the constructions that raised
+    (name -> error). Each build gets a job group of its own, so building
+    a query again counts only the new build's jobs."""
     sc = spark.sparkContext
     jobs, failed = {}, {}
-    for name in registry.QUERIES:
+    for name in names or registry.QUERIES:
         registry.clear_derived_caches()
         release_dead_checkpoints()
-        group = f"construct_{name}"
+        group = f"construct_{name}_{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, f"construction of {name}")
         try:
             registry.QUERIES[name](spark, sf_dir)

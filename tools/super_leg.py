@@ -143,8 +143,8 @@ def cmd_v4(sf_dir: str) -> None:
     s-keyed stats + join-back → SemDeDup drop set → full funnel."""
     from pyspark.sql import functions as F
 
-    from geoparquet_python_spark.functions.exact import materialize, spread
-    from geoparquet_python_spark.functions.text import shingles, tokens
+    from geoparquet_python_spark.functions.exact import materialize
+    from geoparquet_python_spark.functions.text import shingle_rows
     from geoparquet_python_spark.io import load_table
     from geoparquet_python_spark.operators import pipeline as P
     from geoparquet_python_spark.operators.semdedup import (
@@ -161,11 +161,7 @@ def cmd_v4(sf_dir: str) -> None:
     d = load_table(spark, sf_dir, "documents")
     ex = _timed(
         "shingle_explode_materialize",
-        lambda: materialize(
-            spread(d.select("doc_id", tokens("text").alias("toks")))
-            .select("doc_id", shingles("toks", 3).alias("sh_arr"))
-            .select("doc_id", F.explode("sh_arr").alias("s"))
-        ),
+        lambda: materialize(shingle_rows(d)),
     )
     _timed("n_shingle_rows", lambda: ex.count())
     stats_s = ex.groupBy("s").agg(
