@@ -259,8 +259,19 @@ def release_dead_checkpoints() -> int:
     mid-query would make recomputation impossible). Between bench /
     gate / weak-scaling queries every per-query frame is dead and the
     only live wrappers are the module caches, which hold the
-    materialized DataFrame itself."""
-    gc.collect()  # collect dropped wrappers so their weakrefs clear
+    materialized DataFrame itself.
+
+    A full ``gc.collect()`` (tens of ms on a warm driver heap) runs only
+    when some registered wrapper is still alive by refcount: only then
+    can a reference cycle be hiding a dead one. A collection clears
+    weakrefs but never revives one, so when every wrapper is already
+    dead the sweep frees exactly what it would after collecting. The
+    collection runs outside ``_LIVE_LOCK``, so a threaded build's
+    ``materialize()`` never waits behind it."""
+    with _LIVE_LOCK:
+        any_alive = any(ref() is not None for ref, _ in _LIVE_CHECKPOINTS)
+    if any_alive:
+        gc.collect()  # collect dropped wrappers so their weakrefs clear
     kept, freed = [], 0
     with _LIVE_LOCK:
         for ref, jrdd in _LIVE_CHECKPOINTS:

@@ -50,6 +50,9 @@ from pyspark.sql.types import (
 from geoparquet_python_spark.geo import wkb
 
 _BBOX_TYPE = StructType([StructField(n, DoubleType()) for n in wkb.ENVELOPE_FIELDS])
+# Field metadata key on a ``bbox`` column: the geometry column whose exact
+# envelope it holds (the envelope mark, geo/io.py).
+ENVELOPE_OF = "envelope_of"
 
 # ------------------------------------------------------------- built-ins
 
@@ -101,6 +104,22 @@ def bbox_contains_point(b: Column, x: Column, y: Column) -> Column:
     return (b["xmin"] <= x) & (x <= b["xmax"]) & (b["ymin"] <= y) & (y <= b["ymax"])
 
 
+def _covering_is_envelope(df, bbox_col: str, geometry_col: str) -> bool:
+    """Is ``bbox_col`` known to hold exactly ``st_envelope(geometry_col)``
+    in every row? Only for a frame over one ``read_geoparquet`` of a
+    dataset written with the envelope mark (geo/io.py): its ``bbox_col``
+    metadata names ``geometry_col``, which still carries the reader's
+    primary ``geo`` metadata (a ``withColumn`` over either column drops
+    it), and the analyzed plan has that one relation as its only leaf (a
+    union or join takes each column's metadata from one side alone)."""
+    meta = {f.name: f.metadata for f in df.schema.fields}
+    return (
+        meta[bbox_col].get(ENVELOPE_OF) == geometry_col
+        and meta.get(geometry_col, {}).get("geo_primary") is True
+        and df._jdf.queryExecution().analyzed().collectLeaves().size() == 1
+    )
+
+
 def spatial_window_filter(
     df,
     window: tuple[float, float, float, float],
@@ -112,8 +131,15 @@ def spatial_window_filter(
     Catalyst rule needed): ``ST_Intersects(geom, window)`` becomes plain
     bbox-field comparisons — which Spark pushes to Parquet row-group
     stats when ``bbox_col`` is a materialized covering column — plus an
-    exact per-geometry envelope refine for rows whose covering box
-    over-approximates (multi-part geometries).
+    exact per-geometry envelope refine (a Python hop per batch) for rows
+    whose covering box is coarser than the geometry's envelope, since
+    ``bbox_col`` may hold any box that contains the envelope.
+
+    The refine is skipped, and the filter stays in the JVM, when the
+    covering is known to be the envelope itself (``_covering_is_envelope``:
+    a ``read_geoparquet`` of a dataset this engine's writer marked); there
+    the refine could drop no row the comparisons keep. Without
+    ``bbox_col`` the refine alone runs; ``exact=False`` skips it always.
 
     window = (xmin, ymin, xmax, ymax)."""
     x0, y0, x1, y1 = window
@@ -126,7 +152,7 @@ def spatial_window_filter(
             & (b["ymax"] >= y0)
         )
         df = df.where(coarse)  # pushdown-able: plain struct-field compares
-        if not exact:
+        if not exact or _covering_is_envelope(df, bbox_col, geometry_col):
             return df
     env = st_envelope(F.col(geometry_col))
     fine = (

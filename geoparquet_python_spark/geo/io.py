@@ -23,6 +23,18 @@ the footer metadata hop is pyarrow-on-the-driver, reading the footers.
 
 Geometry stays WKB ``BinaryType`` end-to-end; nothing decodes at scan
 time (decode is per-operator, SURVEY.md §1.1).
+
+The envelope mark: when a part file's ``bbox`` is exactly
+``wkb.envelope_struct`` of its primary geometry column (always for the
+kernel-built column; a caller's column only after the kernel compares
+it field by field, nulls included), the writer stamps the Arrow field
+metadata ``{"envelope_of": <geometry column>}`` on ``bbox``. It lives in
+the footer's Arrow schema, outside the spec ``geo`` document, so other
+readers ignore it. When every file Spark would read under the path
+carries the same mark, ``read_geoparquet`` stamps the Spark ``bbox``
+field with it, and ``spatial_window_filter`` skips its per-row Python
+refine: on such a column the refine can drop no row the bbox
+comparisons keep.
 """
 
 from __future__ import annotations
@@ -42,8 +54,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoparquet_python_spark.geo import wkb
-from geoparquet_python_spark.geo.functions import st_envelope
-from geoparquet_python_spark.io import read_parquet
+from geoparquet_python_spark.geo.functions import ENVELOPE_OF, st_envelope
+from geoparquet_python_spark.io import file_set, read_parquet
 
 GEO_KEY = b"geo"
 # Pre-spec key the reference used (SURVEY.md §0.2 — exact name uncertain,
@@ -51,18 +63,24 @@ GEO_KEY = b"geo"
 LEGACY_KEY = b"geometry_fields"
 
 SPEC_VERSION = "1.1.0"
+# GeoParquet 1.1 ``covering`` of the primary column: where the ``bbox``
+# struct's bounds live, so spec readers can prune on them too.
+COVERING = {"bbox": {f: ["bbox", f] for f in wkb.ENVELOPE_FIELDS}}
 
 
 def _geo_column_entry(
     crs: Any,
     bbox: list | None,
     geometry_types: list[str] | None = None,
+    covering: bool = False,
 ) -> dict[str, Any]:
     col: dict[str, Any] = {"encoding": "WKB", "geometry_types": geometry_types or []}
     if crs is not None:
         col["crs"] = crs
     if bbox is not None:
         col["bbox"] = bbox
+    if covering:
+        col["covering"] = COVERING
     return col
 
 
@@ -72,20 +90,42 @@ def _geo_metadata_json(
     bbox: list | None,
     geometry_types: list[str] | None = None,
     extra_cols: dict[str, dict] | None = None,
+    covering: bool = False,
 ) -> bytes:
     """Spec `geo` doc: the primary column entry plus any SECONDARY
     geometry columns (GeoParquet allows several; exactly one is
     primary_column). Secondaries carry encoding/crs/geometry_types;
-    the dataset bbox rides on the primary."""
+    the dataset bbox, and the ``covering`` when the file has a ``bbox``
+    column, ride on the primary."""
     doc = {
         "version": SPEC_VERSION,
         "primary_column": geometry_col,
         "columns": {
-            geometry_col: _geo_column_entry(crs, bbox, geometry_types),
+            geometry_col: _geo_column_entry(crs, bbox, geometry_types, covering),
             **(extra_cols or {}),
         },
     }
     return json.dumps(doc).encode("utf-8")
+
+
+def _is_envelope(box: pa.Array, geom: pa.Array) -> bool:
+    """Is ``box`` exactly ``wkb.envelope_struct(geom)``: the same type,
+    and each bound equal, with its nulls in the same rows?"""
+    import pyarrow.compute as pc
+
+    env = wkb.envelope_struct(geom)
+    return box.type == env.type and all(
+        pc.struct_field(box, f).equals(pc.struct_field(env, f))
+        for f in wkb.ENVELOPE_FIELDS
+    )
+
+
+def _marked(schema: pa.Schema, geometry_col: str) -> pa.Schema:
+    """``schema`` with the envelope mark on its ``bbox`` field."""
+    i = schema.get_field_index("bbox")
+    field = schema.field(i)
+    return schema.set(i, field.with_metadata(
+        {**(field.metadata or {}), ENVELOPE_OF: geometry_col}))
 
 
 def _wkb_type_codes(arr: pa.Array) -> set[int]:
@@ -137,7 +177,10 @@ def write_geoparquet(
     and no ``bbox`` column in ``df``, the same kernel appends the covering
     struct to every batch (a null field where a bound is NaN, as Spark's
     pandas conversion gives), so the rows cross into Python once; the
-    schema-only part of an all-empty write carries the field too.
+    schema-only part of an all-empty write carries the field too. A part
+    file with a ``bbox`` column declares it as the primary column's 1.1
+    ``covering``, and carries the envelope mark (module docstring) when
+    the kernel built it or found it equal to the geometry's envelope.
 
     Task-commit protocol (retries/speculation are routine at 100 TB):
     each attempt writes to a hidden temp name derived from
@@ -155,6 +198,7 @@ def write_geoparquet(
         if c not in df.columns:
             raise ValueError(f"geometry column {c!r} not in {df.columns}")
     add_bbox = bbox_covering and "bbox" not in df.columns
+    has_bbox = bbox_covering or "bbox" in df.columns
 
     os.makedirs(path, exist_ok=True)
 
@@ -177,11 +221,14 @@ def write_geoparquet(
         ext = [inf, inf, -inf, -inf]  # xmin, ymin, xmax, ymax
         codes: set[int] = set()
         sec_codes: dict[str, set[int]] = {c: set() for c in secondary}
+        exact = has_bbox  # is every row's bbox its geometry's envelope?
         for batch in batches:
             if add_bbox:
                 batch = batch.append_column(
                     "bbox", wkb.envelope_struct(batch.column(geometry_col))
                 )
+            elif exact:
+                exact = _is_envelope(batch.column("bbox"), batch.column(geometry_col))
             buffered.append(batch)
             rows += batch.num_rows
             codes |= _wkb_type_codes(batch.column(geometry_col))
@@ -206,6 +253,7 @@ def write_geoparquet(
                 c: _geo_column_entry(crs, None, _type_code_names(sec_codes[c]))
                 for c in secondary
             },
+            covering=has_bbox,
         )
         writer = None
         try:
@@ -214,6 +262,8 @@ def write_geoparquet(
                     schema = batch.schema.with_metadata(
                         {**(batch.schema.metadata or {}), GEO_KEY: meta_json}
                     )
+                    if exact:
+                        schema = _marked(schema, geometry_col)
                     writer = pq.ParquetWriter(tmp, schema)
                 writer.write_batch(batch)
             if writer is not None:
@@ -250,28 +300,38 @@ def write_geoparquet(
                  extra_cols={
                      c: _geo_column_entry(crs, None, []) for c in secondary
                  },
+                 covering=has_bbox,
              )}
         )
+        if has_bbox and _is_envelope(
+            tbl.column("bbox").combine_chunks(),
+            tbl.column(geometry_col).combine_chunks(),
+        ):
+            tbl = tbl.cast(_marked(tbl.schema, geometry_col))
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
         return 0
     return sum(r.rows for r in stats)
 
 
-def geo_metadata(path: str) -> dict | None:
-    """Parse geo metadata from the dataset's part-file footers. Accepts
-    the OGC spec form (``geo``) and the reference's legacy pre-spec form
-    (``geometry_fields`` — normalized into the spec shape).
-
-    Each part file carries its own true ``bbox`` / ``geometry_types``
-    (stamped executor-side at write); this merges them into the
-    dataset-level extent and type union. Footer reads are KB-sized and
-    O(num_files) on the driver — independent of data volume."""
+def _read_footers(path: str) -> tuple[dict | None, str | None]:
+    """The merged ``geo`` document of ``geo_metadata`` and the geometry
+    column whose exact envelope the dataset's ``bbox`` is: the name that
+    every file Spark would read under ``path`` carries as its envelope
+    mark, else None."""
     files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
+    # A file Spark reads but this listing misses (not named *.parquet)
+    # could hold any bbox: then no mark holds for the dataset.
+    read = {os.path.join(path, rel) if rel else path for rel, _, _ in file_set(path)}
+    marks = set() if read == set(files) else {None}
     merged: dict | None = None
     for f in files:
-        md = pq.ParquetFile(f).schema_arrow.metadata or {}
+        schema = pq.ParquetFile(f).schema_arrow
+        md = schema.metadata or {}
         if GEO_KEY not in md:
+            marks.add(None)
             break
+        bbox_md = schema.field("bbox").metadata if "bbox" in schema.names else None
+        marks.add((bbox_md or {}).get(ENVELOPE_OF.encode()))
         doc = json.loads(md[GEO_KEY].decode("utf-8"))
         if merged is None:
             merged = doc
@@ -290,8 +350,12 @@ def geo_metadata(path: str) -> dict | None:
                              max(ba[2], bb[2]), max(ba[3], bb[3])]
             elif bb:
                 a["bbox"] = bb
+            if a.get("covering") != b.get("covering"):
+                a.pop("covering", None)  # only a covering every file shares
+    mark = marks.pop() if len(marks) == 1 else None
+    envelope_of = mark.decode("utf-8") if mark else None
     if merged is not None:
-        return merged
+        return merged, envelope_of
     md = pq.ParquetFile(files[0]).schema_arrow.metadata or {}
     if LEGACY_KEY in md:
         legacy = json.loads(md[LEGACY_KEY].decode("utf-8"))
@@ -308,8 +372,22 @@ def geo_metadata(path: str) -> dict | None:
                         "crs": first.get("crs"),
                     }
                 },
-            }
-    return None
+            }, None
+    return None, None
+
+
+def geo_metadata(path: str) -> dict | None:
+    """Parse geo metadata from the dataset's part-file footers. Accepts
+    the OGC spec form (``geo``) and the reference's legacy pre-spec form
+    (``geometry_fields`` — normalized into the spec shape).
+
+    Each part file carries its own true ``bbox`` / ``geometry_types``
+    (stamped executor-side at write); this merges them into the
+    dataset-level extent and type union, and keeps the primary column's
+    ``covering`` when every file declares the same one. Footer reads are
+    KB-sized and O(num_files) on the driver — independent of data
+    volume."""
+    return _read_footers(path)[0]
 
 
 def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
@@ -319,9 +397,13 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     footer reads) attached to the geometry column's schema metadata. WKB
     stays binary — decode is lazy, per-operator (the reference decodes
     every row up front, geoparquet/__init__.py:60≈ — the 100 TB
-    anti-pattern)."""
+    anti-pattern). When every file carries the envelope mark (module
+    docstring), the ``bbox`` column's metadata names the geometry column
+    it is the exact envelope of."""
     df = read_parquet(spark, path)
-    meta = geo_metadata(path)
+    meta, envelope_of = _read_footers(path)
+    if envelope_of is not None and "bbox" in df.columns:
+        df = df.withMetadata("bbox", {ENVELOPE_OF: envelope_of})
     if meta is not None:
         # Attach metadata to EVERY geometry column the footer declares
         # (multi-geometry files are spec-legal; primary_column marks the

@@ -29,6 +29,12 @@ the window bounds must be NUMERIC LITERALS (the Catalyst rule would
 also handle foldable expressions), and the frame the query reads must
 expose the covering column under ``bbox_col``. Atoms that don't match
 are left untouched — the query still runs, just without pruning.
+
+The UDF atom is kept even over a dataset whose ``bbox`` carries the
+writer's envelope mark (geo/io.py), where ``spatial_window_filter``
+drops its refine: the SQL text does not say which relation the atom's
+column comes from, and the atom is FALSE for POINT EMPTY where the
+``bbox`` comparisons are NULL, which differ under NOT.
 """
 
 from __future__ import annotations

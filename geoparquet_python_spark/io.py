@@ -82,7 +82,7 @@ _SCHEMAS: weakref.WeakKeyDictionary[
 ] = weakref.WeakKeyDictionary()
 
 
-def _file_set(path: str) -> tuple:
+def file_set(path: str) -> tuple:
     """``(name, size, st_mtime_ns)`` of every file Spark would list under
     ``path``: names starting with ``_`` or ``.`` (commit markers, temp
     parts) are skipped, as Spark skips them."""
@@ -109,7 +109,7 @@ def _file_set(path: str) -> tuple:
 
 def _memo_lookup(spark: SparkSession, path: str) -> tuple[tuple, T.StructType | None]:
     """The file set under ``path`` and the schema memoized for it, if any."""
-    files = _file_set(path)
+    files = file_set(path)
     hit = _SCHEMAS.get(spark, {}).get(path)
     return files, (hit[1] if hit is not None and hit[0] == files else None)
 

@@ -158,6 +158,82 @@ def test_checkpoint_registry_survives_concurrent_sweeps(monkeypatch):
     exact.release_dead_checkpoints()
 
 
+def _gen2_collections(fn) -> int:
+    """Run ``fn`` with automatic collection off and count the
+    generation-2 (full-heap) collections it starts itself."""
+    import gc
+
+    starts = []
+
+    def probe(phase, info):
+        if phase == "start" and info["generation"] == 2:
+            starts.append(info)
+
+    was_enabled = gc.isenabled()
+    gc.disable()
+    gc.callbacks.append(probe)
+    try:
+        fn()
+    finally:
+        gc.callbacks.remove(probe)
+        if was_enabled:
+            gc.enable()
+    return len(starts)
+
+
+def test_release_frees_a_wrapper_held_only_by_a_cycle(monkeypatch):
+    """A wrapper kept alive only by a reference cycle is freed by one
+    release: the sweep collects when some wrapper is still alive."""
+    from geoparquet_python_spark.functions import exact
+
+    monkeypatch.setattr(exact, "_LIVE_CHECKPOINTS", [])
+    monkeypatch.setattr(exact, "_drop_sink_views", lambda: None)
+    frame = exact.materialize(_FakeFrame())
+    frame.cycle = frame
+    rdd = frame.rdd
+    del frame
+    assert exact.release_dead_checkpoints() == 1
+    assert rdd.unpersisted
+    assert exact._LIVE_CHECKPOINTS == []
+
+
+def test_release_skips_full_collection_when_nothing_is_alive(monkeypatch):
+    """An empty registry, or one whose wrappers are all dead by
+    refcount, is swept without a generation-2 collection, and every dead
+    checkpoint is still freed."""
+    from geoparquet_python_spark.functions import exact
+
+    monkeypatch.setattr(exact, "_LIVE_CHECKPOINTS", [])
+    monkeypatch.setattr(exact, "_drop_sink_views", lambda: None)
+    freed = []
+    assert _gen2_collections(lambda: freed.append(exact.release_dead_checkpoints())) == 0
+    assert freed == [0]
+
+    frames = [exact.materialize(_FakeFrame()) for _ in range(5)]
+    rdds = [f.rdd for f in frames]
+    del frames
+    assert _gen2_collections(lambda: freed.append(exact.release_dead_checkpoints())) == 0
+    assert freed == [0, 5]
+    assert all(r.unpersisted for r in rdds)
+    assert exact._LIVE_CHECKPOINTS == []
+
+
+def test_release_collects_outside_the_registry_lock(monkeypatch):
+    """With a live wrapper the sweep still collects, but never while it
+    holds ``_LIVE_LOCK``: a threaded ``materialize()`` must not wait
+    behind a full-heap collection."""
+    from geoparquet_python_spark.functions import exact
+
+    monkeypatch.setattr(exact, "_LIVE_CHECKPOINTS", [])
+    monkeypatch.setattr(exact, "_drop_sink_views", lambda: None)
+    held = []
+    monkeypatch.setattr(exact.gc, "collect", lambda: held.append(exact._LIVE_LOCK.locked()))
+    live = exact.materialize(_FakeFrame())
+    assert exact.release_dead_checkpoints() == 0
+    assert held == [False]
+    assert not live.rdd.unpersisted
+
+
 def test_prepare_is_atomic_across_threads(spark):
     """ADVICE r13 #2: build_concurrently legs reach session.prepare (via
     load_table) from several threads at once. On a session reset to the

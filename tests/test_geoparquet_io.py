@@ -16,7 +16,12 @@ from pyspark.sql.functions import pandas_udf
 
 from geoparquet_python_spark.geo import io as gio
 from geoparquet_python_spark.geo import wkb
-from geoparquet_python_spark.geo.functions import _BBOX_TYPE, st_point
+from geoparquet_python_spark.geo.functions import (
+    _BBOX_TYPE,
+    spatial_window_filter,
+    st_envelope,
+    st_point,
+)
 from geoparquet_python_spark.io import load_table
 
 
@@ -92,6 +97,9 @@ def test_footer_carries_true_bbox_and_geometry_types(spark, sf_dir_small, tmp_ou
             [min(p[0] for p in pts), min(p[1] for p in pts),
              max(p[0] for p in pts), max(p[1] for p in pts)]
         )
+        assert c["covering"] == {"bbox": {
+            f: ["bbox", f] for f in ("xmin", "ymin", "xmax", "ymax")}}
+    assert col["covering"] == gio.COVERING
 
     # read side surfaces merged bbox + types on the column metadata
     back = gio.read_geoparquet(spark, tmp_out)
@@ -585,3 +593,163 @@ def test_write_plan_is_one_map_in_arrow(spark, tmp_path, monkeypatch):
     plans.clear()
     gio.write_geoparquet(gio.add_bbox_column(df), str(tmp_path / "udf"), "geometry")
     assert "ArrowEvalPython" in plans[0]
+
+
+def test_no_covering_without_bbox(spark, tmp_path):
+    """``bbox_covering=False`` on a frame without ``bbox`` writes no
+    ``bbox`` column, so no file declares a 1.1 ``covering``."""
+    out = str(tmp_path / "nobbox")
+    gio.write_geoparquet(_mixed_frame(spark), out, "geometry", bbox_covering=False)
+    for f in _part_bytes(out):
+        doc = json.loads(pq.read_schema(f"{out}/{f}").metadata[gio.GEO_KEY])
+        assert "covering" not in doc["columns"]["geometry"]
+    assert "covering" not in gio.geo_metadata(out)["columns"]["geometry"]
+    assert "bbox" not in gio.read_geoparquet(spark, out).columns
+
+
+# ------------------------------------------------ the envelope mark
+
+
+_ROUTES = {
+    "kernel": lambda d: d,
+    "pandas_udf": lambda d: d.withColumn("bbox", _pandas_envelope(F.col("geometry"))),
+    "arrow_udf": gio.add_bbox_column,
+}
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _padded(df, pad: float = 3.0):
+    """``df`` with a ``bbox`` that contains each envelope but is wider."""
+    env = st_envelope(F.col("geometry"))
+    return df.withColumn("bbox", F.struct(
+        (env["xmin"] - pad).alias("xmin"), (env["ymin"] - pad).alias("ymin"),
+        (env["xmax"] + pad).alias("xmax"), (env["ymax"] + pad).alias("ymax")))
+
+
+def _envelope_hits(df, win) -> set:
+    """Brute force: the ``(k, geometry)`` rows whose geometry's envelope
+    meets ``win``, computed on the driver row by row."""
+    out = set()
+    for r in df.select("k", "geometry").collect():
+        if r.geometry is None:
+            continue
+        xmin, ymin, xmax, ymax = wkb.bbox(wkb.decode(bytes(r.geometry)))
+        if xmin <= win[2] and xmax >= win[0] and ymin <= win[3] and ymax >= win[1]:
+            out.add((r.k, bytes(r.geometry)))
+    return out
+
+
+def _window_rows(df, win, exact: bool = True) -> set:
+    rows = spatial_window_filter(df, win, exact=exact).select("k", "geometry").collect()
+    return {(r.k, None if r.geometry is None else bytes(r.geometry)) for r in rows}
+
+
+# Around the MultiPolygon's gap; the point and the polygon; the big-endian
+# point alone; everything with a finite envelope.
+_EDGE_WINDOWS = [(5.0, 5.0, 9.0, 9.0), (-10.0, -10.0, 2.0, 0.0),
+                 (3.0, -8.0, 4.0, -7.0), (-100.0, -100.0, 100.0, 100.0)]
+# Meets the padded boxes of the points at (1.5, -2) and (3.5, -7.25) but
+# only the MultiPolygon's envelope.
+_PADDED_WINDOW = (4.2, -3.0, 6.0, 0.0)
+
+
+@pytest.mark.parametrize("route", list(_ROUTES))
+def test_window_read_of_a_marked_dataset_stays_in_the_jvm(spark, sf_dir_small, tmp_out, route):
+    """Every write route marks its ``bbox`` as the geometry's envelope;
+    a window read of the dataset then runs no Python refine and still
+    returns exactly the brute-force rows."""
+    gio.write_geoparquet(_ROUTES[route](_points_df(spark, sf_dir_small)), tmp_out, "geometry")
+    for f in _part_bytes(tmp_out):
+        field = pq.read_schema(f"{tmp_out}/{f}").field("bbox")
+        assert field.metadata == {b"envelope_of": b"geometry"}
+    back = gio.read_geoparquet(spark, tmp_out)
+    assert back.schema["bbox"].metadata == {"envelope_of": "geometry"}
+    win = (-30.0, -20.0, 90.0, 70.0)
+    q = spatial_window_filter(back, win, "geometry")
+    plan = _executed(q)
+    assert "ArrowEvalPython" not in plan, plan
+    assert "PushedFilters" in plan and "xmin" in plan
+    want = set()
+    for r in back.collect():
+        x, y = wkb.decode(bytes(r.geometry))[1]
+        if win[0] <= x <= win[2] and win[1] <= y <= win[3]:
+            want.add(bytes(r.geometry))
+    assert {bytes(r.geometry) for r in q.collect()} == want
+
+
+@pytest.mark.parametrize("route", list(_ROUTES))
+def test_marked_window_read_keeps_edge_rows_exact(spark, tmp_path, route):
+    """Null, POINT EMPTY, NaN-coordinate, big-endian and MultiPolygon
+    rows: without the refine the window read still equals the envelope
+    brute force."""
+    frame = _mixed_frame(spark)
+    out = str(tmp_path / route)
+    gio.write_geoparquet(_ROUTES[route](frame), out, "geometry")
+    back = gio.read_geoparquet(spark, out)
+    for win in _EDGE_WINDOWS:
+        assert "ArrowEvalPython" not in _executed(spatial_window_filter(back, win))
+        assert _window_rows(back, win) == _envelope_hits(frame, win), win
+
+
+def _assert_refined(df, frame, win=_PADDED_WINDOW):
+    """The window read of ``df`` runs the refine, which drops rows the
+    ``bbox`` comparisons keep, and equals the brute force over ``frame``."""
+    assert "ArrowEvalPython" in _executed(spatial_window_filter(df, win))
+    want = _envelope_hits(frame, win)
+    assert _window_rows(df, win) == want
+    assert _window_rows(df, win, exact=False) > want
+
+
+def test_padded_caller_bbox_is_not_marked_and_keeps_the_refine(spark, tmp_path):
+    frame = _mixed_frame(spark)
+    out = str(tmp_path / "padded")
+    gio.write_geoparquet(_padded(frame), out, "geometry")
+    for f in _part_bytes(out):
+        assert not pq.read_schema(f"{out}/{f}").field("bbox").metadata
+    back = gio.read_geoparquet(spark, out)
+    assert not back.schema["bbox"].metadata
+    _assert_refined(back, frame)
+
+
+def test_columns_replaced_after_a_marked_read_keep_the_refine(spark, tmp_path):
+    """A replaced ``bbox`` or geometry column (by an expression, or by
+    the secondary geometry column, which keeps its own ``geo``
+    metadata), or a union with an unmarked frame, drops the guarantee
+    the mark gave."""
+    frame = _mixed_frame(spark)
+    halved = F.when(F.col("k") % 2 == 0, F.col("geometry"))
+    out = str(tmp_path / "marked")
+    gio.write_geoparquet(frame.withColumn("dest", halved), out, "geometry",
+                         secondary_geometry_cols=["dest"])
+    back = gio.read_geoparquet(spark, out).drop("dest")
+
+    _assert_refined(_padded(back), frame)
+    _assert_refined(back.withColumn("geometry", halved), frame.withColumn("geometry", halved))
+    swapped = gio.read_geoparquet(spark, out).withColumn("geometry", F.col("dest"))
+    assert swapped.schema["geometry"].metadata["geo_primary"] is False
+    _assert_refined(swapped.drop("dest"), frame.withColumn("geometry", halved))
+    # A union takes each column's metadata from its first side.
+    loose = _padded(frame.withColumn("k", F.col("k") + 1000))
+    union = back.unionByName(loose)
+    assert union.schema["bbox"].metadata == {"envelope_of": "geometry"}
+    _assert_refined(union, frame.unionByName(loose.drop("bbox")))
+
+
+@pytest.mark.parametrize("extra", ["part-09999.parquet", "extra-part"])
+def test_one_unmarked_file_keeps_the_refine(spark, tmp_path, extra):
+    """One file Spark reads without the mark (another writer's, or one
+    written before the mark existed) makes the whole dataset unmarked,
+    whether or not its name ends in ``.parquet``."""
+    frame = _mixed_frame(spark)
+    out, loose_out = str(tmp_path / "marked"), str(tmp_path / "loose")
+    gio.write_geoparquet(frame, out, "geometry")
+    loose = _padded(frame.withColumn("k", F.col("k") + 1000).coalesce(1))
+    gio.write_geoparquet(loose, loose_out, "geometry")
+    shutil.copy(f"{loose_out}/part-00000.parquet", f"{out}/{extra}")
+    back = gio.read_geoparquet(spark, out)
+    assert back.count() == 80
+    assert not back.schema["bbox"].metadata
+    _assert_refined(back, frame.unionByName(loose.drop("bbox")))
