@@ -2,11 +2,11 @@
 
 Split by execution tier, fastest first:
 
-* pure-Column functions (``haversine_km``, ``mercator_x/y``, bbox
-  conjuncts) — built-in pyspark.sql.functions only: JVM-side,
-  whole-stage-codegen, usable in pushdown-able predicates. The
-  reference computed these shapely-side per row
-  (geoparquet/__init__.py:60≈ decodes everything eagerly first).
+* pure-Column functions (``haversine_km``, ``mercator_x/y``) and the
+  bbox conjuncts of ``spatial_window_filter`` — built-in
+  pyspark.sql.functions only: JVM-side, whole-stage-codegen, usable in
+  pushdown-able predicates. The reference computed these shapely-side
+  per row (geoparquet/__init__.py:60≈ decodes everything eagerly first).
 * UDFs over the numpy WKB codec (geoparquet_python_spark.geo.wkb) for
   anything that must touch coordinates of arbitrary geometries. Each is
   one Python hop per Arrow batch; inside it, only some are vectorized:
@@ -70,10 +70,6 @@ def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Colu
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.atan2(F.sqrt(a), F.sqrt(1 - a))
 
 
-def planar_distance(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    return F.sqrt(F.pow(x2 - x1, 2) + F.pow(y2 - y1, 2))
-
-
 _WEB_MERCATOR_R = 6378137.0
 
 
@@ -86,22 +82,6 @@ def mercator_y(lat: Column) -> Column:
     return F.lit(_WEB_MERCATOR_R) * F.log(
         F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / 2)
     )
-
-
-def bbox_intersects(a: Column, b: Column) -> Column:
-    """Plain conjuncts over two {xmin,ymin,xmax,ymax} structs — the
-    spatial-pushdown prefilter (SURVEY.md §4.3): comparisons on struct
-    fields reach the Parquet row-group stats."""
-    return (
-        (a["xmin"] <= b["xmax"])
-        & (a["xmax"] >= b["xmin"])
-        & (a["ymin"] <= b["ymax"])
-        & (a["ymax"] >= b["ymin"])
-    )
-
-
-def bbox_contains_point(b: Column, x: Column, y: Column) -> Column:
-    return (b["xmin"] <= x) & (x <= b["xmax"]) & (b["ymin"] <= y) & (y <= b["ymax"])
 
 
 def _covering_is_envelope(df, bbox_col: str, geometry_col: str) -> bool:
@@ -198,21 +178,26 @@ def st_envelope(g: pa.Array) -> pa.Array:
     return wkb.envelope_struct(g)
 
 
+def outward(v, up: bool) -> float:
+    """The number ``v`` (an int, a float or a ``decimal.Decimal``) as the
+    nearest float toward +inf (``up``) or -inf, so that comparing a float
+    against it gives what Python's exact comparison against ``v`` gives."""
+    f = float(v)
+    exact = f >= v if up else f <= v
+    return f if exact else float(np.nextafter(f, np.inf if up else -np.inf))
+
+
 def _bound(s: pd.Series, up: bool) -> np.ndarray:
-    """A window-bound column as float64, each value rounded to the nearest
-    float toward +inf (``up``) or -inf, so that comparing a float against
-    it gives what Python's exact comparison against the original value
-    gives. SQL literals such as ``-90.5`` arrive as ``decimal.Decimal``;
-    nulls become NaN, which no comparison passes."""
+    """A window-bound column as float64, each value ``outward`` rounded.
+    SQL literals such as ``-90.5`` arrive as ``decimal.Decimal``; nulls
+    become NaN, which no comparison passes."""
     if s.dtype.kind == "f":
         return s.to_numpy("f8")
     codes, uniq = pd.factorize(s)
     table = np.empty(len(uniq) + 1)
     table[-1] = np.nan  # factorize codes nulls as -1
     for i, v in enumerate(np.asarray(uniq).tolist()):  # Python scalars compare exactly
-        f = float(v)
-        exact = f >= v if up else f <= v
-        table[i] = f if exact else np.nextafter(f, np.inf if up else -np.inf)
+        table[i] = outward(v, up)
     return table[codes]
 
 
@@ -222,8 +207,9 @@ def st_envelope_intersects(
 ) -> pd.Series:
     """ST_EnvelopeIntersects(geom, x0, y0, x1, y1): does the geometry's
     envelope overlap the window? The exact per-row refine behind the
-    SQL-string pushdown rewrite (geo/sqlrewrite.py) — same predicate
-    spatial_window_filter applies through the DataFrame API."""
+    SQL-string pushdown rewrite (geo/sqlrewrite.py), where it cannot be
+    lowered to JVM comparisons — same predicate spatial_window_filter
+    applies through the DataFrame API."""
     env = wkb.envelopes(pa.array(g, type=pa.large_binary()))
     hit = (
         (env[:, 0] <= _bound(x1, up=False))

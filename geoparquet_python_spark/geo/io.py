@@ -17,9 +17,28 @@ GeoParquet 1.1-style ``bbox`` covering struct (``wkb.envelope_struct``)
 that lets spatial predicates push down to row-group stats (§4.3).
 
 The reader is a vectorized ``spark.read.parquet`` (pushdown intact)
-given the memoized schema of ``io.parquet_schema``, so only the first
-read of a freshly written dataset spends Spark's schema-inference job;
-the footer metadata hop is pyarrow-on-the-driver, reading the footers.
+given the memoized schema of ``io.parquet_schema`` with the geo field
+metadata already on its fields: one listing of the path and one
+``spark.read.schema(...)`` call. The footers' ``geo`` documents and
+envelope marks come from the dataset ``Manifest``, read once per file
+set (``io.file_set``, the key of the schema memo) and memoized in the
+process, not per session: footers are file content, and
+``geo_metadata`` takes no session.
+
+Memo policy. After its commit, ``write_geoparquet`` seeds both memos
+for the files it has just written, when the directory holds no other
+file Spark would read: the manifest from its kernel's stats rows (the
+very ``geo`` document and mark each footer got), and the schema memo
+with what Spark's Parquet inference gives for those files —
+``df.schema`` with every level nullable (a file source reads its data
+schema as nullable), no field metadata (pyarrow writes no Spark schema
+into the footer), then the kernel's ``bbox`` struct. That equality is
+tested per type (``tests/test_parquet_schema.py``); a column of any
+other type, or a session setting that changes what Spark infers for
+binary or ``timestamp_ntz`` columns, leaves the schema unseeded and the
+first read infers as before. So the first read of a fresh write runs no
+job and no read of an unchanged dataset opens a footer. Any change to
+the file set (a rewrite, a file added by hand) misses both memos.
 
 Geometry stays WKB ``BinaryType`` end-to-end; nothing decodes at scan
 time (decode is per-operator, SURVEY.md §1.1).
@@ -32,18 +51,21 @@ metadata ``{"envelope_of": <geometry column>}`` on ``bbox``. It lives in
 the footer's Arrow schema, outside the spec ``geo`` document, so other
 readers ignore it. When every file Spark would read under the path
 carries the same mark, ``read_geoparquet`` stamps the Spark ``bbox``
-field with it, and ``spatial_window_filter`` skips its per-row Python
+field with it, ``geo_sql`` lowers its window atom to JVM comparisons
+(geo/sqlrewrite.py), and ``spatial_window_filter`` skips its per-row Python
 refine: on such a column the refine can drop no row the bbox
 comparisons keep.
 """
 
 from __future__ import annotations
 
+import copy
 import glob
 import json
 import os
 import uuid
 from collections.abc import Iterator
+from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
@@ -52,10 +74,11 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from geoparquet_python_spark import io as pio
 from geoparquet_python_spark.geo import wkb
-from geoparquet_python_spark.geo.functions import ENVELOPE_OF, st_envelope
-from geoparquet_python_spark.io import file_set, read_parquet
+from geoparquet_python_spark.geo.functions import _BBOX_TYPE, ENVELOPE_OF, st_envelope
 
 GEO_KEY = b"geo"
 # Pre-spec key the reference used (SURVEY.md §0.2 — exact name uncertain,
@@ -272,12 +295,11 @@ def write_geoparquet(
         finally:
             if os.path.exists(tmp):
                 os.remove(tmp)  # abort path: never leak half-written files
-        yield pa.RecordBatch.from_pylist(
-            [{"file": final, "rows": rows}] if rows else [],
-            schema=pa.schema([("file", pa.string()), ("rows", pa.int64())]),
-        )
+        stat = {"file": final, "rows": rows, "geo": meta_json.decode("utf-8"),
+                "mark": geometry_col if exact else None}
+        yield pa.RecordBatch.from_pylist([stat] if rows else [], schema=_STATS)
 
-    stats = df.mapInArrow(write_partition, "file string, rows long").collect()
+    stats = df.mapInArrow(write_partition, _STATS_DDL).collect()
     committed = {os.path.basename(r.file) for r in stats} or {"part-00000.parquet"}
     # A rewrite of an existing path must not leave the previous write's
     # parts behind: readers would see their rows and footer bboxes.
@@ -310,36 +332,115 @@ def write_geoparquet(
             tbl = tbl.cast(_marked(tbl.schema, geometry_col))
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
         return 0
+    _seed_memos(df, path, add_bbox, {
+        os.path.basename(r.file): (json.loads(r.geo), r.mark) for r in stats})
     return sum(r.rows for r in stats)
 
 
-def _read_footers(path: str) -> tuple[dict | None, str | None]:
-    """The merged ``geo`` document of ``geo_metadata`` and the geometry
-    column whose exact envelope the dataset's ``bbox`` is: the name that
-    every file Spark would read under ``path`` carries as its envelope
-    mark, else None."""
-    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
-    # A file Spark reads but this listing misses (not named *.parquet)
-    # could hold any bbox: then no mark holds for the dataset.
-    read = {os.path.join(path, rel) if rel else path for rel, _, _ in file_set(path)}
-    marks = set() if read == set(files) else {None}
-    merged: dict | None = None
-    for f in files:
-        schema = pq.ParquetFile(f).schema_arrow
-        md = schema.metadata or {}
-        if GEO_KEY not in md:
-            marks.add(None)
-            break
-        bbox_md = schema.field("bbox").metadata if "bbox" in schema.names else None
-        marks.add((bbox_md or {}).get(ENVELOPE_OF.encode()))
-        doc = json.loads(md[GEO_KEY].decode("utf-8"))
-        if merged is None:
-            merged = doc
-            continue
+# One row per committed part file: its path, rows, ``geo`` document and
+# envelope mark, as the writer kernel stamped them into the footer.
+_STATS = pa.schema([("file", pa.string()), ("rows", pa.int64()),
+                    ("geo", pa.string()), ("mark", pa.string())])
+_STATS_DDL = "file string, rows long, geo string, mark string"
+
+# The Spark types checked to come back from a part file as themselves
+# under Spark's Parquet schema inference (tests/test_parquet_schema.py),
+# and the containers built from them.
+_ROUND_TRIP_TYPES = (
+    T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.DoubleType,
+    T.FloatType, T.BooleanType, T.BinaryType, T.DateType, T.TimestampType,
+    T.TimestampNTZType, T.DecimalType,
+)
+
+
+def _inferred_type(dt: T.DataType) -> T.DataType | None:
+    """What Spark infers back from a part file for a column of Spark type
+    ``dt`` written through Arrow by pyarrow: ``dt`` with every level
+    nullable (a file source reads its data schema as nullable) and no
+    field metadata (pyarrow writes no Spark schema into the footer).
+    None for a type outside ``_ROUND_TRIP_TYPES``, strings and the
+    containers of those."""
+    if isinstance(dt, _ROUND_TRIP_TYPES) or dt == T.StringType():
+        return dt
+    if isinstance(dt, T.ArrayType):
+        el = _inferred_type(dt.elementType)
+        return None if el is None else T.ArrayType(el, True)
+    if isinstance(dt, T.MapType):
+        k, v = _inferred_type(dt.keyType), _inferred_type(dt.valueType)
+        return None if k is None or v is None else T.MapType(k, v, True)
+    if isinstance(dt, T.StructType):
+        fields = [_inferred_type(f.dataType) for f in dt.fields]
+        if any(f is None for f in fields):
+            return None
+        return T.StructType([T.StructField(f.name, t, True)
+                             for f, t in zip(dt.fields, fields)])
+    return None
+
+
+def _seed_memos(df: DataFrame, path: str, add_bbox: bool,
+                parts: dict[str, tuple[dict, str | None]]) -> None:
+    """Seed the memos of a read of ``path`` from what this write
+    committed, so that read launches no inference job and opens no
+    footer: the manifest from the kernel's stats rows, and Spark's
+    inferred schema from ``df.schema`` (``_inferred_type`` of each
+    column, then the kernel's ``bbox``). Neither is seeded when the
+    directory holds a file this write did not commit; the schema is not
+    seeded when a column's type is outside the checked set, or when a
+    session setting changes what Spark infers for binary or
+    ``timestamp_ntz`` columns."""
+    files = pio.file_set(path)
+    if {rel for rel, _, _ in files} != set(parts):
+        return
+    _MANIFESTS[path] = (files, _manifest_of(parts))
+    spark = df.sparkSession
+    fields = [(f.name, _inferred_type(f.dataType)) for f in df.schema.fields]
+    if add_bbox:
+        fields.append(("bbox", _BBOX_TYPE))
+    if any(t is None for _, t in fields):
+        return
+    conf = spark.conf
+    if conf.get("spark.sql.parquet.binaryAsString").lower() != "false":
+        return
+    if any("timestamp_ntz" in t.simpleString() for _, t in fields) and conf.get(
+            "spark.sql.parquet.inferTimestampNTZ.enabled").lower() != "true":
+        return
+    pio.seed_schema(spark, path, files,
+                    T.StructType([T.StructField(n, t, True) for n, t in fields]))
+
+
+@dataclass(frozen=True)
+class Manifest:
+    """What the footers of one GeoParquet dataset say, read once per file
+    set: each part's ``geo`` document and envelope mark (None where the
+    footer has none), the merged document of ``geo_metadata`` and the
+    geometry column whose exact envelope the dataset's ``bbox`` is (the
+    mark every part carries, else None)."""
+
+    parts: dict[str, tuple[dict | None, str | None]]
+    merged: dict | None
+    envelope_of: str | None
+
+
+# path -> (io.file_set(path), its Manifest); a rewrite changes the file
+# set, so the next lookup misses and reads the footers again.
+_MANIFESTS: dict[str, tuple[tuple, Manifest]] = {}
+
+
+def _merge(docs: list[dict | None]) -> dict | None:
+    """The dataset ``geo`` document of the parts' documents: the first
+    part's, with every geometry column's extent and type union taken
+    over all parts, and the ``covering`` kept only where every part
+    declares the same one. A part without ``geo`` adds no extent or
+    type, and it declares no covering."""
+    first = next((i for i, d in enumerate(docs) if d is not None), None)
+    if first is None:
+        return None
+    merged = copy.deepcopy(docs[first])
+    for doc in docs[:first] + docs[first + 1:]:
         # Merge EVERY geometry column's per-file stats (multi-geometry
         # datasets carry one entry per column; exactly one is primary).
         for cname, a in merged["columns"].items():
-            b = doc.get("columns", {}).get(cname, {})
+            b = (doc or {}).get("columns", {}).get(cname, {})
             a["geometry_types"] = sorted(
                 set(a.get("geometry_types", []))
                 | set(b.get("geometry_types", []))
@@ -352,28 +453,77 @@ def _read_footers(path: str) -> tuple[dict | None, str | None]:
                 a["bbox"] = bb
             if a.get("covering") != b.get("covering"):
                 a.pop("covering", None)  # only a covering every file shares
-    mark = marks.pop() if len(marks) == 1 else None
-    envelope_of = mark.decode("utf-8") if mark else None
-    if merged is not None:
-        return merged, envelope_of
-    md = pq.ParquetFile(files[0]).schema_arrow.metadata or {}
-    if LEGACY_KEY in md:
-        legacy = json.loads(md[LEGACY_KEY].decode("utf-8"))
-        if isinstance(legacy, list) and legacy:
-            first = legacy[0]
-            name = first.get("field_name", "geometry")
-            return {
-                "version": "legacy",
-                "primary_column": name,
-                "columns": {
-                    name: {
-                        "encoding": first.get("geometry_format", "wkb").upper(),
-                        "geometry_types": [],
-                        "crs": first.get("crs"),
-                    }
-                },
-            }, None
-    return None, None
+    return merged
+
+
+def _manifest_of(parts: dict[str, tuple[dict | None, str | None]]) -> Manifest:
+    marks = {mark for _, mark in parts.values()}
+    return Manifest(parts, _merge([doc for doc, _ in parts.values()]),
+                    marks.pop() if len(marks) == 1 else None)
+
+
+def _legacy_doc(md: dict) -> dict | None:
+    """The reference's pre-spec ``geometry_fields`` footer entry in the
+    spec shape, if ``md`` has one."""
+    legacy = json.loads(md[LEGACY_KEY].decode("utf-8")) if LEGACY_KEY in md else None
+    if not (isinstance(legacy, list) and legacy):
+        return None
+    first = legacy[0]
+    name = first.get("field_name", "geometry")
+    return {
+        "version": "legacy",
+        "primary_column": name,
+        "columns": {
+            name: {
+                "encoding": first.get("geometry_format", "wkb").upper(),
+                "geometry_types": [],
+                "crs": first.get("crs"),
+            }
+        },
+    }
+
+
+def _read_manifest(path: str, files: tuple) -> Manifest:
+    """The manifest of every file in ``files`` (``io.file_set(path)``),
+    each footer opened once. A file pyarrow cannot open as Parquet has
+    no ``geo`` and no mark. With no part in the spec form, the first
+    part's legacy entry stands for the dataset."""
+    parts: dict[str, tuple[dict | None, str | None]] = {}
+    legacy = None
+    for rel, _, _ in files:
+        try:
+            schema = pq.ParquetFile(os.path.join(path, rel) if rel else path).schema_arrow
+        except (OSError, pa.ArrowException):
+            parts[rel] = (None, None)
+            continue
+        md = schema.metadata or {}
+        if legacy is None and not parts:
+            legacy = _legacy_doc(md)
+        bbox_md = schema.field("bbox").metadata if "bbox" in schema.names else None
+        mark = (bbox_md or {}).get(ENVELOPE_OF.encode())
+        parts[rel] = (json.loads(md[GEO_KEY].decode("utf-8")) if GEO_KEY in md else None,
+                      mark.decode("utf-8") if mark else None)
+    man = _manifest_of(parts)
+    if man.merged is None and legacy is not None:
+        man = Manifest(parts, legacy, None)
+    return man
+
+
+def manifest(path: str, files: tuple | None = None) -> Manifest:
+    """The dataset manifest of ``path``, memoized per file set (``files``,
+    when given, is ``io.file_set(path)`` as the caller listed it). A hit
+    opens no footer; ``write_geoparquet`` seeds the entry of the dataset
+    it has just committed. A path the driver cannot list (an empty file
+    set) has no parts and is never memoized."""
+    if files is None:
+        files = pio.file_set(path)
+    hit = _MANIFESTS.get(path)
+    if hit is not None and hit[0] == files:
+        return hit[1]
+    man = _read_manifest(path, files)
+    if files:
+        _MANIFESTS[path] = (files, man)
+    return man
 
 
 def geo_metadata(path: str) -> dict | None:
@@ -383,39 +533,43 @@ def geo_metadata(path: str) -> dict | None:
 
     Each part file carries its own true ``bbox`` / ``geometry_types``
     (stamped executor-side at write); this merges them into the
-    dataset-level extent and type union, and keeps the primary column's
-    ``covering`` when every file declares the same one. Footer reads are
-    KB-sized and O(num_files) on the driver — independent of data
-    volume."""
-    return _read_footers(path)[0]
+    dataset-level extent and type union over every part that has a
+    ``geo`` key, and keeps the primary column's ``covering`` when every
+    file declares the same one. Footers are read once per file set
+    (``manifest``); the caller gets its own copy of the document."""
+    return copy.deepcopy(manifest(path).merged)
+
+
+def _with_geo_fields(schema: T.StructType, man: Manifest) -> T.StructType:
+    """``schema`` with the field metadata ``read_geoparquet`` promises:
+    ``geo`` and ``geo_primary`` on every geometry column the merged
+    document declares, and the envelope mark on ``bbox``."""
+    meta = man.merged
+    fields = []
+    for f in schema.fields:
+        md = f.metadata
+        if meta is not None and f.name in meta["columns"]:
+            md = {"geo": meta["columns"][f.name],
+                  "geo_primary": f.name == meta["primary_column"]}
+        elif f.name == "bbox" and man.envelope_of is not None:
+            md = {ENVELOPE_OF: man.envelope_of}
+        fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
+    return T.StructType(fields)
 
 
 def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     """GeoParquet scan: vectorized Spark parquet read (pushdown/pruning
-    intact) with the memoized ``io.parquet_schema`` — no Spark job once
-    the file set's schema is known; geo footer metadata (driver-side
-    footer reads) attached to the geometry column's schema metadata. WKB
-    stays binary — decode is lazy, per-operator (the reference decodes
-    every row up front, geoparquet/__init__.py:60≈ — the 100 TB
-    anti-pattern). When every file carries the envelope mark (module
-    docstring), the ``bbox`` column's metadata names the geometry column
-    it is the exact envelope of."""
-    df = read_parquet(spark, path)
-    meta, envelope_of = _read_footers(path)
-    if envelope_of is not None and "bbox" in df.columns:
-        df = df.withMetadata("bbox", {ENVELOPE_OF: envelope_of})
-    if meta is not None:
-        # Attach metadata to EVERY geometry column the footer declares
-        # (multi-geometry files are spec-legal; primary_column marks the
-        # default one). The primary keeps an extra marker so consumers
-        # can find it without re-reading footers.
-        for cname, entry in meta["columns"].items():
-            if cname in df.columns:
-                df = df.withMetadata(
-                    cname,
-                    {
-                        "geo": entry,
-                        "geo_primary": cname == meta["primary_column"],
-                    },
-                )
-    return df
+    intact) given the memoized ``io.parquet_schema`` with the geo field
+    metadata already on it, so a warm read lists the path once, opens no
+    footer and launches no job. Every geometry column the footers
+    declare carries its merged ``geo`` entry and ``geo_primary`` (true
+    on the primary column only). WKB stays binary — decode is lazy,
+    per-operator (the reference decodes every row up front,
+    geoparquet/__init__.py:60≈ — the 100 TB anti-pattern). When every
+    file carries the envelope mark (module docstring), the ``bbox``
+    column's metadata names the geometry column it is the exact
+    envelope of."""
+    files = pio.file_set(path)
+    man = manifest(path, files)
+    schema = pio.parquet_schema(spark, path, files)
+    return spark.read.schema(_with_geo_fields(schema, man)).parquet(path)

@@ -21,6 +21,15 @@ read. A miss returns the inferring read itself, so a first read costs
 what it did without the memo. The schema is never built from the
 pyarrow footer, which gives ``timestamp`` where Spark infers
 ``timestamp_ntz``.
+
+One writer seeds entries (``seed_schema``): ``geo.io.write_geoparquet``
+memoizes, under the file set it has just committed, the schema it knows
+Spark infers from those files — its input's Spark schema made nullable
+at every level, without field metadata, plus its ``bbox`` struct — for
+the column types checked to infer back as themselves, and only when no
+other file sits in the directory (geo/io.py). That is the same
+``StructType`` the inference would give, so the first read of a fresh
+write runs no job.
 """
 
 from __future__ import annotations
@@ -107,9 +116,13 @@ def file_set(path: str) -> tuple:
     return tuple(out)
 
 
-def _memo_lookup(spark: SparkSession, path: str) -> tuple[tuple, T.StructType | None]:
-    """The file set under ``path`` and the schema memoized for it, if any."""
-    files = file_set(path)
+def _memo_lookup(
+    spark: SparkSession, path: str, files: tuple | None = None
+) -> tuple[tuple, T.StructType | None]:
+    """The file set under ``path`` (listed here unless given) and the
+    schema memoized for it, if any."""
+    if files is None:
+        files = file_set(path)
     hit = _SCHEMAS.get(spark, {}).get(path)
     return files, (hit[1] if hit is not None and hit[0] == files else None)
 
@@ -121,17 +134,30 @@ def _inferring_read(spark: SparkSession, path: str, files: tuple) -> DataFrame:
     An empty file set (a URI such as ``s3a://`` or ``file:/``, or a path
     not visible here) is never memoized: no entry could see a rewrite."""
     df = spark.read.parquet(path)
-    if files:
-        _SCHEMAS.setdefault(spark, {})[path] = (files, df.schema)
+    seed_schema(spark, path, files, df.schema)
     return df
 
 
-def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+def seed_schema(
+    spark: SparkSession, path: str, files: tuple, schema: T.StructType
+) -> None:
+    """Memoize ``schema`` as Spark's inferred schema of ``path`` under
+    ``files``: the inferring read's own, or what a writer knows Spark
+    infers from the files it has just committed (module docstring). An
+    empty file set is never memoized."""
+    if files:
+        _SCHEMAS.setdefault(spark, {})[path] = (files, schema)
+
+
+def parquet_schema(
+    spark: SparkSession, path: str, files: tuple | None = None
+) -> T.StructType:
     """Spark's inferred schema of the Parquet data at ``path``, memoized
-    per session and file set (see the module docstring for the policy).
+    per session and file set (see the module docstring for the policy);
+    ``files``, when given, is ``file_set(path)`` as the caller listed it.
     ``spark.read.schema(parquet_schema(spark, p)).parquet(p)`` equals
     ``spark.read.parquet(p)`` without its inference job once warm."""
-    files, schema = _memo_lookup(spark, path)
+    files, schema = _memo_lookup(spark, path, files)
     return schema if schema is not None else _inferring_read(spark, path, files).schema
 
 

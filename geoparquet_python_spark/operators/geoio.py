@@ -107,10 +107,12 @@ def q_geo_sql_pushdown_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §4.3 SQL-STRING pushdown path: the same windowed extent
     query phrased as a plain SQL string with an ST_EnvelopeIntersects
     predicate, run through geo_sql() — the rewriter conjoins sargable
-    bbox.{{xmin..ymax}} comparisons to the UDF atom, so the Parquet
-    scan prunes row groups exactly as the DataFrame API's
-    spatial_window_filter does (tests/test_geoparquet_io.py asserts
-    PushedFilters and rewrite soundness under OR/NOT)."""
+    bbox.{{xmin..ymax}} comparisons to the atom, so the Parquet scan
+    prunes row groups exactly as the DataFrame API's
+    spatial_window_filter does, and over this envelope-marked dataset
+    it lowers the atom itself to JVM comparisons, with no Python hop
+    (tests/test_geoparquet_io.py asserts PushedFilters and rewrite
+    soundness under OR/NOT)."""
     from geoparquet_python_spark.geo.sqlrewrite import geo_sql
 
     out = run_scratch_dir(spark, "gpq_sqlpush", sf_dir)

@@ -753,3 +753,227 @@ def test_one_unmarked_file_keeps_the_refine(spark, tmp_path, extra):
     assert back.count() == 80
     assert not back.schema["bbox"].metadata
     _assert_refined(back, frame.unionByName(loose.drop("bbox")))
+
+
+# ------------------------------------------------ the dataset manifest
+
+
+def test_manifest_merges_every_part(tmp_path):
+    """A part without ``geo`` clears the dataset's mark and its covering,
+    but the parts sorted after it still merge into the extent and the
+    type union."""
+    out = tmp_path / "three"
+    out.mkdir()
+
+    def part(name, geometry_types=None, bbox=None):
+        table = pa.table({"geometry": pa.array([b"\x01"], pa.binary())})
+        if bbox is not None:
+            doc = {"version": gio.SPEC_VERSION, "primary_column": "geometry",
+                   "columns": {"geometry": {"encoding": "WKB", "bbox": bbox,
+                                            "geometry_types": geometry_types,
+                                            "covering": gio.COVERING}}}
+            table = table.replace_schema_metadata({gio.GEO_KEY: json.dumps(doc)})
+        pq.write_table(table, out / name)
+
+    part("part-00000.parquet", ["Point"], [0, 0, 1, 1])
+    part("part-00001.parquet")
+    part("part-00002.parquet", ["Polygon"], [5, 5, 9, 9])
+    meta = gio.geo_metadata(str(out))
+    col = meta["columns"]["geometry"]
+    assert col["bbox"] == [0, 0, 9, 9]
+    assert col["geometry_types"] == ["Point", "Polygon"]
+    assert "covering" not in col
+    man = gio.manifest(str(out))
+    assert man.envelope_of is None
+    assert man.parts["part-00001.parquet"] == (None, None)
+    # Each caller gets its own copy: the memoized document stays whole.
+    col["bbox"] = None
+    assert gio.geo_metadata(str(out))["columns"]["geometry"]["bbox"] == [0, 0, 9, 9]
+
+
+def test_write_seeds_the_manifest_it_would_read(spark, tmp_path):
+    """The manifest a write seeds from its kernel's stats rows equals the
+    one read from the footers it committed."""
+    out = str(tmp_path / "seeded")
+    frame = _mixed_frame(spark)
+    gio.write_geoparquet(frame.withColumn("dest", F.col("geometry")), out, "geometry",
+                         secondary_geometry_cols=["dest"])
+    seeded = gio._MANIFESTS[out][1]
+    assert seeded == gio._read_manifest(out, gio.pio.file_set(out))
+    assert seeded.envelope_of == "geometry" and len(seeded.parts) == 3
+
+
+# ------------------------------------------------ geo_sql lowering
+
+
+def _window_frame(spark):
+    """``_mixed_frame`` plus points on decimal bounds no double equals
+    (0.1) and on a bound a double does equal (-90.5)."""
+    extra = spark.createDataFrame(
+        [(100, wkb.encode(("Point", (0.1, 0.1)))),
+         (101, wkb.encode(("Point", (-90.5, -1.0))))], "k long, geometry binary")
+    return _mixed_frame(spark).unionByName(extra)
+
+
+# (x0, y0, x1, y1) as SQL literal text: decimal, exponent (double) and
+# integer literals, with rows on their edges.
+_SQL_WINDOWS = [("0", "0", "0.1", "1e-1"), ("0.1", "-90.5", "2", "1e-1"),
+                ("-90.5", "-10", "-1e-1", "0"), ("-100", "-100", "100", "100")]
+
+
+def _literal(text: str):
+    """The number a SQL numeric literal denotes, as Spark types it."""
+    from decimal import Decimal
+
+    if "e" in text.lower():
+        return float(text)
+    return Decimal(text) if "." in text else int(text)
+
+
+def _atom_brute(rows, geometry: str, win) -> dict:
+    """``ST_EnvelopeIntersects`` per row on the driver: None for a null
+    geometry, else whether its envelope meets the window, compared
+    exactly against the literals (a NaN bound meets nothing)."""
+    import math
+
+    x0, y0, x1, y1 = map(_literal, win)
+    out = {}
+    for r in rows:
+        g = r[geometry]
+        if g is None:
+            out[r.k] = None
+            continue
+        xmin, ymin, xmax, ymax = wkb.bbox(wkb.decode(bytes(g)))
+        out[r.k] = not any(math.isnan(v) for v in (xmin, ymin, xmax, ymax)) and (
+            xmin <= x1 and xmax >= x0 and ymin <= y1 and ymax >= y0)
+    return out
+
+
+def _sql_forms(atom: str) -> dict:
+    """Each statement over ``{t}``, and what it returns given the atom's
+    value per ``k``."""
+    return {
+        f"SELECT k FROM {{t}} WHERE {atom}":
+            lambda hits: {k for k, h in hits.items() if h is True},
+        f"SELECT k FROM {{t}} WHERE NOT {atom}":
+            lambda hits: {k for k, h in hits.items() if h is False},
+        f"SELECT k, {atom} AS hit FROM {{t}}":
+            lambda hits: set(hits.items()),
+        f"SELECT k FROM {{t}} WHERE {atom} OR k = 3":
+            lambda hits: {k for k, h in hits.items() if h is True or k == 3},
+    }
+
+
+def _rows_of(df) -> set:
+    return {r.k if len(r) == 1 else tuple(r) for r in df.collect()}
+
+
+def _runs_python(df) -> bool:
+    plan = _executed(df)
+    return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
+
+
+def _udf_form(spark, sql: str, **frames):
+    from geoparquet_python_spark.geo.functions import register_sql
+    from geoparquet_python_spark.geo.sqlrewrite import rewrite_spatial_sql
+
+    register_sql(spark)
+    return spark.sql(rewrite_spatial_sql(sql), **frames)
+
+
+@pytest.mark.parametrize("win", _SQL_WINDOWS)
+def test_geo_sql_lowers_the_atom_over_a_marked_dataset(spark, tmp_path, win):
+    """Over a marked read, through ``{t}`` and a temp view, every form of
+    the atom runs without Python and equals both the UDF form and the
+    per-row brute force on null, POINT EMPTY, NaN, big-endian,
+    MultiPolygon and bound-edge rows."""
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    frame = _window_frame(spark)
+    out = str(tmp_path / "marked")
+    gio.write_geoparquet(frame, out, "geometry")
+    back = gio.read_geoparquet(spark, out)
+    hits = _atom_brute(frame.collect(), "geometry", win)
+    atom = f"ST_EnvelopeIntersects(geometry, {', '.join(win)})"
+    for sql, want in _sql_forms(atom).items():
+        got = geo_sql(spark, sql, t=back)
+        assert not _runs_python(got), sql
+        assert _rows_of(got) == want(hits) == _rows_of(_udf_form(spark, sql, t=back)), sql
+    back.createOrReplaceTempView("gpq_lowered")
+    view = geo_sql(spark, f"SELECT k FROM gpq_lowered WHERE {atom}")
+    assert not _runs_python(view)
+    assert _rows_of(view) == {k for k, h in hits.items() if h is True}
+
+
+def test_geo_sql_keeps_the_udf_where_the_mark_does_not_hold(spark, tmp_path):
+    """An unmarked dataset, a union with an unmarked frame, a self-join,
+    a subquery that redefines ``geometry``, a ``bbox`` replaced after the
+    read and an atom over the secondary geometry column keep the UDF
+    atom, and return the brute-force rows. The window meets the padded
+    boxes of two points, and the redefined geometry is POINT EMPTY where
+    the ``bbox`` still holds a point's envelope, so a lowered atom would
+    return more rows in each case."""
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    win = ("4.2", "-3.0", "6", "0")
+    atom = f"ST_EnvelopeIntersects(geometry, {', '.join(win)})"
+    frame = _window_frame(spark)
+    empty = wkb.encode(("Point", (float("nan"), float("nan"))))
+    emptied = F.when(F.col("k") % 2 == 0, F.col("geometry")).otherwise(F.lit(empty))
+    out, padded_out = str(tmp_path / "marked"), str(tmp_path / "padded")
+    gio.write_geoparquet(frame.withColumn("dest", emptied), out, "geometry",
+                         secondary_geometry_cols=["dest"])
+    gio.write_geoparquet(_padded(frame), padded_out, "geometry")
+    back = gio.read_geoparquet(spark, out)
+    loose = _padded(frame.withColumn("k", F.col("k") + 1000))
+
+    def hits_of(rows, geometry="geometry"):
+        return {k for k, h in _atom_brute(rows, geometry, win).items() if h is True}
+
+    cases = {
+        "unmarked dataset": (f"SELECT k FROM {{t}} WHERE {atom}",
+                             gio.read_geoparquet(spark, padded_out), hits_of(frame.collect())),
+        "union": (f"SELECT k FROM {{t}} WHERE {atom}",
+                  back.drop("dest").unionByName(loose),
+                  hits_of(frame.collect()) | hits_of(loose.collect())),
+        "self-join": (f"SELECT a.k FROM {{t}} a JOIN (SELECT k AS k2 FROM {{t}}) b"
+                      f" ON a.k = b.k2 WHERE {atom.replace('(geometry', '(a.geometry')}",
+                      back, hits_of(frame.collect())),
+        "redefined geometry": (f"SELECT k FROM (SELECT k, bbox, dest AS geometry FROM {{t}})"
+                               f" WHERE {atom}", back,
+                               hits_of(frame.withColumn("geometry", emptied).collect())),
+        "replaced bbox": (f"SELECT k FROM {{t}} WHERE {atom}", _padded(back),
+                          hits_of(frame.collect())),
+        "secondary geometry": (f"SELECT k FROM {{t}} WHERE {atom.replace('(geometry', '(dest')}",
+                               back, hits_of(frame.withColumn("dest", emptied).collect(), "dest")),
+    }
+    for label, (sql, t, want) in cases.items():
+        got = geo_sql(spark, sql, t=t)
+        assert _runs_python(got), label
+        assert _rows_of(got) == want, label
+    # The brute force differs from the bbox comparisons alone: each case
+    # tests the atom.
+    assert hits_of(frame.collect()) < {r.k for r in gio.read_geoparquet(spark, padded_out)
+                                       .where(F.expr(f"bbox.xmin <= 6 AND bbox.xmax >= 4.2"
+                                                     f" AND bbox.ymin <= 0 AND bbox.ymax >= -3"))
+                                       .collect()}
+
+
+def test_geo_sql_lowers_selects_only(spark, tmp_path):
+    """A statement ``spark.sql`` runs when analyzed (a command) keeps the
+    UDF atom, and so does a WITH query; a parenthesized SELECT is
+    lowered."""
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    out = str(tmp_path / "marked")
+    gio.write_geoparquet(_window_frame(spark), out, "geometry")
+    gio.read_geoparquet(spark, out).createOrReplaceTempView("gpq_cmd_src")
+    atom = "ST_EnvelopeIntersects(geometry, 0, 0, 2, 2)"
+    geo_sql(spark, f"CREATE OR REPLACE TEMP VIEW gpq_cmd AS"
+                   f" SELECT k FROM gpq_cmd_src WHERE {atom}")
+    assert _runs_python(spark.table("gpq_cmd"))
+    cte = geo_sql(spark, f"WITH w AS (SELECT k FROM gpq_cmd_src WHERE {atom}) SELECT * FROM w")
+    assert _runs_python(cte)
+    lowered = geo_sql(spark, f" (SELECT k FROM gpq_cmd_src WHERE {atom})")
+    assert not _runs_python(lowered)
+    assert _rows_of(lowered) == _rows_of(cte) == _rows_of(spark.table("gpq_cmd")) != set()

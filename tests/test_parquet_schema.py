@@ -9,6 +9,7 @@ import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from geoparquet_python_spark import io, registry
 from geoparquet_python_spark.geo import io as gio
@@ -42,9 +43,11 @@ def test_warm_reads_launch_no_jobs(spark, sf_dir_small, tmp_path):
     registry.clear_derived_caches()
     assert _jobs(spark, lambda: io.load_table(spark, sf_dir_small, "orders")) == []
 
+    # The writer seeds the memo with the schema it committed, so even
+    # the first read of a fresh write infers nothing.
     path = str(tmp_path / "gpq")
     gio.write_geoparquet(_points(spark), path)
-    assert len(_jobs(spark, lambda: gio.read_geoparquet(spark, path))) == 1  # infers
+    assert _jobs(spark, lambda: gio.read_geoparquet(spark, path)) == []
     assert _jobs(spark, lambda: gio.read_geoparquet(spark, path)) == []
 
 
@@ -106,3 +109,101 @@ def test_unlistable_path_is_never_memoized(spark, tmp_path):
 
     spark.range(3).select(F.col("id").alias("k")).write.mode("overwrite").parquet(local)
     assert io.read_parquet(spark, uri).columns == ["k"]
+
+
+# Every type the writer seeds a schema for: Spark's inference over the
+# part files must give exactly the seeded schema.
+_TYPED = {
+    "long": "id",
+    "int": "cast(id AS int)",
+    "short": "cast(id AS short)",
+    "byte": "cast(id AS byte)",
+    "double": "id * 0.5D",
+    "float": "cast(id * 0.5 AS float)",
+    "boolean": "id % 2 = 0",
+    "string": "cast(id AS string)",
+    "binary": "cast(cast(id AS string) AS binary)",
+    "date": "date_add(DATE'2024-01-01', cast(id AS int))",
+    "timestamp": "cast(id AS timestamp)",
+    "timestamp_ntz": "cast(cast(id AS timestamp) AS timestamp_ntz)",
+    "decimal(10,2)": "cast(id AS decimal(10,2))",
+    "decimal(38,6)": "cast(id AS decimal(38,6))",
+    "array": "array(id, id + 1)",
+    "struct": "named_struct('a', cast(id AS int), 'b', cast(id AS string))",
+    "map": "map(cast(id AS string), id * 0.5D)",
+    "nested": "array(named_struct('m', map('k', array(cast(id AS int)))))",
+}
+
+
+def _typed_frame(spark):
+    """A point frame plus, for every type, a nullable column (null in
+    some rows) and a non-null one."""
+    cols = [F.col("k"), F.col("geometry")]
+    for i, e in enumerate(_TYPED.values()):
+        cols.append(F.expr(f"IF(k > 2, {e}, NULL)").alias(f"c{i}_null"))
+        cols.append(F.expr(e).alias(f"c{i}_set"))
+    return _points(spark, 6).withColumn("id", F.col("k")).select(*cols)
+
+
+def test_seeded_schema_equals_spark_inference_for_each_type(spark, tmp_path):
+    df = _typed_frame(spark)
+    assert not all(f.nullable for f in df.schema.fields)
+    path = str(tmp_path / "typed")
+    gio.write_geoparquet(df, path)
+    seeded = io._SCHEMAS[spark][path][1]
+    io._SCHEMAS[spark].pop(path)  # an unmemoized inference to compare with
+    assert seeded == spark.read.parquet(path).schema
+    assert all(not f.metadata for f in seeded.fields)
+
+
+def test_unchecked_types_and_foreign_files_are_not_seeded(spark, tmp_path):
+    """A type outside the checked set leaves the first read to infer; so
+    does a file in the directory that the writer did not commit, and
+    then no manifest is seeded either."""
+    # A collated string reads back as a plain one: seeding df.schema's
+    # type would be wrong.
+    odd = _points(spark, 6).withColumn("s", F.expr("collate('x', 'UTF8_LCASE')"))
+    path = str(tmp_path / "odd")
+    gio.write_geoparquet(odd, path)
+    assert path not in io._SCHEMAS.get(spark, {})
+    assert path in gio._MANIFESTS
+    assert len(_jobs(spark, lambda: gio.read_geoparquet(spark, path))) == 1
+    assert gio.read_geoparquet(spark, path).schema["s"].dataType == T.StringType()
+
+    path = str(tmp_path / "foreign")
+    os.makedirs(path)
+    with open(os.path.join(path, "notes.txt"), "w") as f:
+        f.write("not a part")
+    gio.write_geoparquet(_points(spark), path)
+    assert path not in io._SCHEMAS.get(spark, {})
+    assert path not in gio._MANIFESTS
+
+
+def test_warm_read_lists_once_and_opens_no_footer(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "gpq")
+    gio.write_geoparquet(_points(spark), path)
+    calls = {"file_set": 0, "footer": 0}
+    listing, footer = io.file_set, gio.pq.ParquetFile
+
+    def counted_listing(p):
+        calls["file_set"] += 1
+        return listing(p)
+
+    def counted_footer(*a, **kw):
+        calls["footer"] += 1
+        return footer(*a, **kw)
+
+    monkeypatch.setattr(io, "file_set", counted_listing)
+    monkeypatch.setattr(gio.pq, "ParquetFile", counted_footer)
+    back = gio.read_geoparquet(spark, path)
+    assert calls == {"file_set": 1, "footer": 0}
+    assert back.schema["bbox"].metadata == {"envelope_of": "geometry"}
+    assert back.schema["geometry"].metadata["geo_primary"] is True
+    assert back.count() == 20
+
+    # A rewrite changes the file set: the footers are read again, once.
+    os.utime(os.path.join(path, "part-00000.parquet"), ns=(1, 1))
+    gio.read_geoparquet(spark, path)
+    assert calls == {"file_set": 2, "footer": 2}
+    gio.read_geoparquet(spark, path)
+    assert calls == {"file_set": 3, "footer": 2}

@@ -13,6 +13,11 @@ appended to ``--out`` as JSON lines, if given). At the end, for every
 end-to-end metric that ``CHANGE/BENCHMARK.json`` declares, it prints
 each side's median and quartiles and the number of pairs the change
 won (ties count for neither side), and the runs that were not correct.
+With ``--ops`` it also summarizes the per-op walls of each run's record
+line by op family (``write``, ``read…columns``, ``read…geo_sql``, or
+the op kind for the ``queries`` workload): one median wall per run and
+family, then each side's median and quartiles of those and the pairs
+the change won, so a claim can name the ops that moved.
 
 This tool only invokes the benchmark; it changes nothing in either
 checkout beyond what a perfbench run itself leaves there.
@@ -45,7 +50,30 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
                 "metrics": {}}
     # perfbench reports each metric as {"value": v, "unit": u}.
     result["metrics"] = {k: v["value"] for k, v in result["metrics"].items()}
+    record = next((json.loads(ln)["record"] for ln in reversed(lines[:-1])
+                   if ln.startswith('{"record"')), {})
+    result["op_walls"] = family_walls(record.get("ops") or [])
     return result
+
+
+def op_family(op: dict) -> str:
+    """``write`` or ``read…<path>`` for a ``geoparquet_io`` op
+    (``write[tile]``, ``read[tile,w0,geo_sql]``), else the op's kind."""
+    name = op.get("op", "")
+    if name.startswith("read[") and name.endswith("]"):
+        return "read…" + name[:-1].rsplit(",", 1)[-1]
+    if name.startswith("write["):
+        return "write"
+    return op.get("kind") or name
+
+
+def family_walls(ops: list[dict]) -> dict[str, float]:
+    """The median ``wall_s`` of each op family over one run's ops."""
+    walls: dict[str, list[float]] = {}
+    for op in ops:
+        if op.get("wall_s") is not None:
+            walls.setdefault(op_family(op), []).append(op["wall_s"])
+    return {fam: statistics.median(ws) for fam, ws in sorted(walls.items())}
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -56,14 +84,16 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(pairs: list[tuple[dict, dict]], metrics: list[dict]) -> list[str]:
-    """One line per end-to-end metric: each side's median [q1, q3] and
-    the change's wins over the pairs where both sides reported it."""
+def summarize(pairs: list[tuple[dict, dict]], metrics: list[dict],
+              key: str = "metrics") -> list[str]:
+    """One line per metric: each side's median [q1, q3] and the change's
+    wins over the pairs where both sides reported it. ``key`` names the
+    per-run dict the values come from (``op_walls`` for ``--ops``)."""
     out = []
     for m in metrics:
         name, lower = m["name"], m.get("better", "lower") == "lower"
-        both = [(p["metrics"][name], c["metrics"][name]) for p, c in pairs
-                if name in p["metrics"] and name in c["metrics"]]
+        both = [(p[key][name], c[key][name]) for p, c in pairs
+                if name in p.get(key, {}) and name in c.get(key, {})]
         if not both:
             out.append(f"{name}: no pair reported it")
             continue
@@ -89,6 +119,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=20.0)
     ap.add_argument("--out", help="append each run's result here as a JSON line")
+    ap.add_argument("--ops", action="store_true",
+                    help="also summarize the per-op walls by op family")
     args = ap.parse_args(argv)
 
     for d in (args.parent, args.change):
@@ -120,6 +152,13 @@ def main(argv: list[str] | None = None) -> int:
           f"{args.first_seed}-{args.first_seed + args.pairs - 1}, --seconds {args.seconds}")
     for line in summarize(pairs, metrics):
         print(line)
+    if args.ops:
+        families = sorted({f for p, c in pairs for f in (*p.get("op_walls", {}),
+                                                          *c.get("op_walls", {}))})
+        print("# per-op wall medians by op family (s)")
+        for line in summarize(pairs, [{"name": f, "unit": "s"} for f in families],
+                              key="op_walls"):
+            print(line)
     for seed, side, why in bad:
         print(f"NOT CORRECT: seed {seed} {side}: {why}")
     return 1 if bad else 0
