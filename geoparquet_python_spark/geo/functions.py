@@ -91,13 +91,18 @@ def _covering_is_envelope(df, bbox_col: str, geometry_col: str) -> bool:
     metadata names ``geometry_col``, which still carries the reader's
     primary ``geo`` metadata (a ``withColumn`` over either column drops
     it), and the analyzed plan has that one relation as its only leaf (a
-    union or join takes each column's metadata from one side alone)."""
+    union or join takes each column's metadata from one side alone), and
+    that relation's files carry the mark (``geo.io.relation_mark``: the
+    metadata alone can come from a footer Spark's writer stamped, or
+    from a schema given to the read)."""
+    from geoparquet_python_spark.geo.io import relation_mark
+
     meta = {f.name: f.metadata for f in df.schema.fields}
-    return (
-        meta[bbox_col].get(ENVELOPE_OF) == geometry_col
-        and meta.get(geometry_col, {}).get("geo_primary") is True
-        and df._jdf.queryExecution().analyzed().collectLeaves().size() == 1
-    )
+    if not (meta[bbox_col].get(ENVELOPE_OF) == geometry_col
+            and meta.get(geometry_col, {}).get("geo_primary") is True):
+        return False
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return leaves.size() == 1 and relation_mark(leaves.head()) == geometry_col
 
 
 def spatial_window_filter(

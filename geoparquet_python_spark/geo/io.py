@@ -54,7 +54,14 @@ carries the same mark, ``read_geoparquet`` stamps the Spark ``bbox``
 field with it, ``geo_sql`` lowers its window atom to JVM comparisons
 (geo/sqlrewrite.py), and ``spatial_window_filter`` skips its per-row Python
 refine: on such a column the refine can drop no row the bbox
-comparisons keep.
+comparisons keep. Only the manifest grants the mark, and the ``geo``
+and ``geo_primary`` keys: Spark's own Parquet writer stores field
+metadata in its footers, so a frame that carried the mark (a union
+takes its first child's) comes back from ``df.write.parquet`` with it.
+``read_geoparquet`` drops those keys wherever the manifest does not set
+them, and both consumers of the mark also check, through
+``relation_mark``, that the manifest of the files their one plan leaf
+reads carries it.
 """
 
 from __future__ import annotations
@@ -526,6 +533,27 @@ def manifest(path: str, files: tuple | None = None) -> Manifest:
     return man
 
 
+def relation_mark(leaf) -> str | None:
+    """The envelope mark of the files an analyzed plan leaf (a py4j
+    ``LogicalPlan``) reads: its manifest's, when the leaf is a file
+    relation over one local root path, else None. A field's
+    ``envelope_of`` alone does not tie the mark to the files: Spark's
+    Parquet writer stores field metadata in the footers it writes, and
+    ``spark.read.schema`` puts a given schema's on any path."""
+    if leaf.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = leaf.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    roots = rel.location().rootPaths()
+    if roots.size() != 1:
+        return None
+    uri = roots.head().toUri()
+    if uri.getScheme() not in (None, "file"):
+        return None
+    return manifest(uri.getPath()).envelope_of
+
+
 def geo_metadata(path: str) -> dict | None:
     """Parse geo metadata from the dataset's part-file footers. Accepts
     the OGC spec form (``geo``) and the reference's legacy pre-spec form
@@ -540,14 +568,23 @@ def geo_metadata(path: str) -> dict | None:
     return copy.deepcopy(manifest(path).merged)
 
 
+# The field metadata keys ``read_geoparquet`` sets from the manifest.
+_GEO_FIELD_KEYS = ("geo", "geo_primary", ENVELOPE_OF)
+
+
 def _with_geo_fields(schema: T.StructType, man: Manifest) -> T.StructType:
     """``schema`` with the field metadata ``read_geoparquet`` promises:
     ``geo`` and ``geo_primary`` on every geometry column the merged
-    document declares, and the envelope mark on ``bbox``."""
+    document declares, and the envelope mark on ``bbox``. Only the
+    manifest grants those keys: an inferred schema can carry them from
+    the Spark schema that Spark's own Parquet writer stores in a footer
+    (a union of a marked read with a padded frame keeps the first
+    child's metadata), and there they say nothing of the files, so they
+    are dropped wherever the manifest does not set them."""
     meta = man.merged
     fields = []
     for f in schema.fields:
-        md = f.metadata
+        md = {k: v for k, v in f.metadata.items() if k not in _GEO_FIELD_KEYS}
         if meta is not None and f.name in meta["columns"]:
             md = {"geo": meta["columns"][f.name],
                   "geo_primary": f.name == meta["primary_column"]}

@@ -57,15 +57,19 @@ atom's ``geom IS NULL`` tests that leaf's attribute that carries
 ``geo_primary``, and every ``bbox`` attribute the plan references is
 the leaf's attribute whose ``envelope_of`` names that geometry column —
 the rule of ``functions._covering_is_envelope``, read from the plan's
-attributes by expression id rather than from the output schema. An
-alias makes a new id, so a column redefined or replaced after the read
-(even by itself) keeps the UDF, as do a union or a join (two leaves).
-Only a statement that opens with SELECT is lowered: a command runs when
-``spark.sql`` analyzes it, before any check could look at its plan. A
-WITH query keeps the UDF as well, as its analyzed plan holds each
-common table expression as one more leaf. A lowered form that fails to
-analyze, or a bound whose double is not finite, also falls back to the
-UDF form.
+attributes by expression id rather than from the output schema — and
+the leaf reads one local path whose dataset manifest (geo/io.py) carries
+that same mark. The last check ties the mark to the files: field
+metadata can travel without them (Spark's own Parquet writer stores it
+in its footers, and ``spark.read.schema`` puts a given schema's on any
+path). An alias makes a new id, so a column redefined or replaced after
+the read (even by itself) keeps the UDF, as do a union or a join (two
+leaves). Only a statement that opens with SELECT is lowered: a command
+runs when ``spark.sql`` analyzes it, before any check could look at its
+plan. A WITH query keeps the UDF as well, as its analyzed plan holds
+each common table expression as one more leaf. A lowered form that
+fails to analyze, or a bound whose double is not finite, also falls
+back to the UDF form.
 
 Limits (documented, not hidden): the pattern is matched textually, so
 the window bounds must be NUMERIC LITERALS (the Catalyst rule would
@@ -85,6 +89,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from geoparquet_python_spark.geo.functions import ENVELOPE_OF, outward, register_sql
+from geoparquet_python_spark.geo.io import relation_mark
 
 _NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
 _PAT = re.compile(
@@ -126,9 +131,7 @@ def _primed(text: str, up: bool, exponent_is_double: bool) -> float | None:
     return f if math.isfinite(f) else None
 
 
-def lower_spatial_sql(
-    sql: str, bbox_col: str = "bbox", exponent_is_double: bool = True
-) -> str | None:
+def _lower_spatial_sql(sql: str, bbox_col: str, exponent_is_double: bool) -> str | None:
     """``sql`` with every ST_EnvelopeIntersects atom that has literal
     bounds replaced by its lowered form (module docstring), or None when
     there is no atom or one of them cannot be lowered. Pure text → text;
@@ -187,7 +190,7 @@ def _lowering_is_exact(df: DataFrame, bbox_col: str) -> bool:
     if len(geom) != 1 or len(box) != 1:
         return False
     (box_meta,) = [f["metadata"] for f in fields if f["name"] == box[0]]
-    if box_meta.get(ENVELOPE_OF) != geom[0]:
+    if box_meta.get(ENVELOPE_OF) != geom[0] or relation_mark(leaves.head()) != geom[0]:
         return False
     tested = set()
     for child in re.findall(r"if \(isnull\((.*?)\)\) ", text):
@@ -210,7 +213,7 @@ def geo_sql(
     register_sql(spark)
     lowered = None
     if "." not in bbox_col and _is_select(sql) and _PAT.search(sql):
-        lowered = lower_spatial_sql(
+        lowered = _lower_spatial_sql(
             sql, bbox_col, spark.conf.get(_EXPONENT_AS_DECIMAL).lower() != "true")
     if lowered is not None:
         try:

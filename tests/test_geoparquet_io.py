@@ -959,6 +959,44 @@ def test_geo_sql_keeps_the_udf_where_the_mark_does_not_hold(spark, tmp_path):
                                        .collect()}
 
 
+def test_a_spark_written_mark_keeps_the_udf_and_the_refine(spark, tmp_path):
+    """Spark's own Parquet writer stores field metadata in its footers,
+    so a union of a marked read with a padded frame, written with
+    ``df.write.parquet``, reads back with the first child's envelope mark
+    on ``bbox``; so does any path read with a marked schema. None of
+    these files carries the mark, so ``read_geoparquet`` drops it, and
+    ``geo_sql`` keeps the UDF atom and ``spatial_window_filter`` its
+    refine, each returning the brute-force rows."""
+    from geoparquet_python_spark.geo.functions import ENVELOPE_OF
+    from geoparquet_python_spark.geo.sqlrewrite import geo_sql
+
+    win = ("4.2", "-3.0", "6", "0")
+    atom = f"ST_EnvelopeIntersects(geometry, {', '.join(win)})"
+    frame = _window_frame(spark)
+    marked, written = str(tmp_path / "marked"), str(tmp_path / "spark")
+    gio.write_geoparquet(frame, marked, "geometry")
+    back = gio.read_geoparquet(spark, marked)
+    loose = _padded(frame.withColumn("k", F.col("k") + 1000))
+    union = back.unionByName(loose)
+    assert union.schema["bbox"].metadata == {ENVELOPE_OF: "geometry"}
+    union.write.parquet(written)
+    want = {k for rows in (frame.collect(), loose.collect())
+            for k, h in _atom_brute(rows, "geometry", win).items() if h is True}
+    reads = {
+        "read_geoparquet": gio.read_geoparquet(spark, written),
+        "spark.read.parquet": spark.read.parquet(written),
+        "marked schema": spark.read.schema(back.schema).parquet(written),
+    }
+    assert ENVELOPE_OF not in reads["read_geoparquet"].schema["bbox"].metadata
+    assert "geo_primary" not in reads["read_geoparquet"].schema["geometry"].metadata
+    assert reads["spark.read.parquet"].schema["bbox"].metadata == {ENVELOPE_OF: "geometry"}
+    for label, t in reads.items():
+        got = geo_sql(spark, f"SELECT k FROM {{t}} WHERE {atom}", t=t)
+        assert _runs_python(got), label
+        assert _rows_of(got) == want, label
+        _assert_refined(t, frame.unionByName(loose.drop("bbox")))
+
+
 def test_geo_sql_lowers_selects_only(spark, tmp_path):
     """A statement ``spark.sql`` runs when analyzed (a command) keeps the
     UDF atom, and so does a WITH query; a parenthesized SELECT is

@@ -22,7 +22,7 @@ ops = [{"op": "write[tile]", "kind": "geo_write", "wall_s": 1.0},
        {"op": "read[tile,w1,geo_sql]", "kind": "geo_read", "wall_s": GEO_SQL_S},
        {"op": "read[random,w1,geo_sql]", "kind": "geo_read", "wall_s": GEO_SQL_S + 0.1},
        {"op": "q_x", "kind": "sql", "wall_s": 0.5}]
-print(json.dumps({"record": {"ops": ops}}))
+print(json.dumps({"record": {"ops": ops if OPS else []}}))
 print(json.dumps({"correct": CORRECT, "attempted": 4, "failed": 0,
                   "metrics": {"run_s": {"value": RUN_S + seed, "unit": "s"},
                               "cpu_s": {"value": 2.0, "unit": "s"}}}))
@@ -30,12 +30,13 @@ print(json.dumps({"correct": CORRECT, "attempted": 4, "failed": 0,
 
 
 def _checkout(root, side: str, run_s: float, correct: bool = True,
-              geo_sql_s: float = 0.3) -> str:
+              geo_sql_s: float = 0.3, ops: bool = True) -> str:
     d = root / side
     (d / "perfbench").mkdir(parents=True)
     (d / "perfbench" / "run.py").write_text(
         _RUN.replace("SIDE", repr(side)).replace("RUN_S", repr(run_s))
-        .replace("CORRECT", repr(correct)).replace("GEO_SQL_S", repr(geo_sql_s)))
+        .replace("CORRECT", repr(correct)).replace("GEO_SQL_S", repr(geo_sql_s))
+        .replace("OPS", repr(ops)))
     (d / "BENCHMARK.json").write_text(json.dumps({"end_to_end": [
         {"name": "run_s", "unit": "s", "better": "lower", "bound": 0.25},
         {"name": "cpu_s", "unit": "s", "better": "lower", "bound": 0.25},
@@ -73,8 +74,7 @@ def test_incorrect_runs_are_reported(tmp_path, capsys):
 def test_ops_summarize_walls_by_op_family(tmp_path, capsys):
     parent = _checkout(tmp_path, "parent", 10.0, geo_sql_s=0.3)
     change = _checkout(tmp_path, "change", 9.0, geo_sql_s=0.2)
-    assert perf_pairs.main([parent, change, "--workload", "w", "--pairs", "2",
-                            "--ops"]) == 0
+    assert perf_pairs.main([parent, change, "--workload", "w", "--pairs", "2"]) == 0
     text = capsys.readouterr().out
     lines = {ln.split(" ", 1)[0]: ln for ln in text.split("# per-op wall")[1].splitlines()[1:]}
     assert set(lines) == {"read…columns", "read…geo_sql", "sql", "write"}
@@ -89,3 +89,10 @@ def test_op_family_names():
     assert fam({"op": "write[random]", "kind": "geo_write"}) == "write"
     assert fam({"op": "read[random,w2,columns]", "kind": "geo_read"}) == "read…columns"
     assert fam({"op": "q_stream_x", "kind": "stream"}) == "stream"
+
+
+def test_no_op_summary_without_ops(tmp_path, capsys):
+    parent = _checkout(tmp_path, "parent", 10.0, ops=False)
+    change = _checkout(tmp_path, "change", 9.0, ops=False)
+    assert perf_pairs.main([parent, change, "--workload", "w", "--pairs", "1"]) == 0
+    assert "# per-op" not in capsys.readouterr().out

@@ -13,8 +13,8 @@ appended to ``--out`` as JSON lines, if given). At the end, for every
 end-to-end metric that ``CHANGE/BENCHMARK.json`` declares, it prints
 each side's median and quartiles and the number of pairs the change
 won (ties count for neither side), and the runs that were not correct.
-With ``--ops`` it also summarizes the per-op walls of each run's record
-line by op family (``write``, ``read…columns``, ``read…geo_sql``, or
+When the runs' record lines carry per-op walls, it also summarizes them
+by op family (``write``, ``read…columns``, ``read…geo_sql``, or
 the op kind for the ``queries`` workload): one median wall per run and
 family, then each side's median and quartiles of those and the pairs
 the change won, so a claim can name the ops that moved.
@@ -88,7 +88,7 @@ def summarize(pairs: list[tuple[dict, dict]], metrics: list[dict],
               key: str = "metrics") -> list[str]:
     """One line per metric: each side's median [q1, q3] and the change's
     wins over the pairs where both sides reported it. ``key`` names the
-    per-run dict the values come from (``op_walls`` for ``--ops``)."""
+    per-run dict the values come from (``op_walls`` for the op families)."""
     out = []
     for m in metrics:
         name, lower = m["name"], m.get("better", "lower") == "lower"
@@ -119,8 +119,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=20.0)
     ap.add_argument("--out", help="append each run's result here as a JSON line")
-    ap.add_argument("--ops", action="store_true",
-                    help="also summarize the per-op walls by op family")
     args = ap.parse_args(argv)
 
     for d in (args.parent, args.change):
@@ -152,9 +150,9 @@ def main(argv: list[str] | None = None) -> int:
           f"{args.first_seed}-{args.first_seed + args.pairs - 1}, --seconds {args.seconds}")
     for line in summarize(pairs, metrics):
         print(line)
-    if args.ops:
-        families = sorted({f for p, c in pairs for f in (*p.get("op_walls", {}),
-                                                          *c.get("op_walls", {}))})
+    families = sorted({f for p, c in pairs for f in (*p.get("op_walls", {}),
+                                                      *c.get("op_walls", {}))})
+    if families:
         print("# per-op wall medians by op family (s)")
         for line in summarize(pairs, [{"name": f, "unit": "s"} for f in families],
                               key="op_walls"):
