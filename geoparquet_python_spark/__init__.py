@@ -16,7 +16,7 @@ Public API:
   geoparquet/__init__.py:22–45≈ writer, :47–70≈ reader)
 - :mod:`geoparquet_python_spark.functions` — vector / text / geo scalar
   function library (pure ``pyspark.sql.functions`` compositions where
-  possible; Arrow-vectorized pandas UDFs otherwise)
+  possible; Arrow UDFs otherwise)
 - :mod:`geoparquet_python_spark.operators` — query registry (each entry
   is exported through ``__spark_entry__.queries()``)
 """

@@ -7,20 +7,20 @@ Split by execution tier, fastest first:
   pyspark.sql.functions only: JVM-side, whole-stage-codegen, usable in
   pushdown-able predicates. The reference computed these shapely-side
   per row (geoparquet/__init__.py:60≈ decodes everything eagerly first).
-* UDFs over the numpy WKB codec (geoparquet_python_spark.geo.wkb) for
-  anything that must touch coordinates of arbitrary geometries. Each is
-  one Python hop per Arrow batch; inside it, only some are vectorized:
+* Arrow UDFs over the numpy WKB codec (geoparquet_python_spark.geo.wkb)
+  for anything that must touch coordinates of arbitrary geometries. Each
+  is one Python hop per Arrow batch, with no pandas conversion; inside
+  it, only some are vectorized:
 
-  - ``st_envelope``, ``st_x``, ``st_y`` and ``st_distance`` are Arrow
-    UDFs: ``wkb.envelope_struct`` and the batch point decoder read the
-    batch's WKB buffers directly, with no Arrow → pandas → Arrow round
-    trip (a per-row decode only for multi-part, big-endian and
-    NaN/EMPTY rows, and for what is not a 21-byte little-endian point);
-  - the rest are pandas UDFs. ``st_envelope_intersects`` uses
-    ``wkb.envelopes``; ``st_point`` uses the batch point encoder;
+  - ``st_envelope``, ``st_envelope_intersects``, ``st_x``, ``st_y``,
+    ``st_distance`` and ``st_point`` read or build the batch's WKB
+    buffers with numpy (a per-row decode only for multi-part,
+    big-endian and NaN/EMPTY rows, and for what is not a 21-byte
+    little-endian point);
   - ``st_area``, ``st_length``, ``st_centroid``, ``st_astext``,
     ``st_contains_point``, ``st_buffer``, ``st_simplify`` and
-    ``st_num_geometries`` decode every row in a Python loop.
+    ``st_num_geometries`` decode every row in the one Python loop of
+    ``_per_row``.
 
 ``register_sql(spark)`` exposes every UDF to SQL-string users.
 """
@@ -31,12 +31,11 @@ import math
 import weakref
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -149,13 +148,31 @@ def spatial_window_filter(
     return df.where(fine)
 
 
-# ------------------------------------------------------- Arrow and pandas UDFs
+# ------------------------------------------------------------ Arrow UDFs
 
 
-@pandas_udf(BinaryType())
-def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
+def _per_row(fn, out_type: pa.DataType, g: pa.Array, *args: pa.Array) -> pa.Array:
+    """``fn(g, *args)`` row by row, on Python scalars (a SQL literal such
+    as ``0.5`` is its exact ``decimal.Decimal``), as one array of
+    ``out_type``. A null in any column gives a null out, and so does a
+    NaN result (the rule Spark's pandas conversion applies)."""
+    rows = zip(g.to_pylist(), *(a.to_pylist() for a in args))
+    return pa.array([None if None in row else fn(*row) for row in rows],
+                    out_type, from_pandas=True)
+
+
+def _f8(a: pa.Array) -> np.ndarray:
+    """A numeric column as float64, a null as NaN. Decimals go through
+    Python's ``float``: pyarrow's decimal cast can round differently."""
+    if pa.types.is_decimal(a.type):
+        return np.array([np.nan if v is None else float(v) for v in a.to_pylist()])
+    return np.asarray(a.to_numpy(zero_copy_only=False), "f8")
+
+
+@arrow_udf(BinaryType())
+def st_point(x: pa.Array, y: pa.Array) -> pa.Array:
     """ST_Point(x, y) -> WKB (D2); vectorized single-buffer encoder."""
-    return pd.Series(wkb.encode_points(x.to_numpy("f8"), y.to_numpy("f8")))
+    return pa.array(wkb.encode_points(_f8(x), _f8(y)), pa.binary())
 
 
 def _doubles(xs: np.ndarray) -> pa.Array:
@@ -192,67 +209,56 @@ def outward(v, up: bool) -> float:
     return f if exact else float(np.nextafter(f, np.inf if up else -np.inf))
 
 
-def _bound(s: pd.Series, up: bool) -> np.ndarray:
-    """A window-bound column as float64, each value ``outward`` rounded.
-    SQL literals such as ``-90.5`` arrive as ``decimal.Decimal``; nulls
-    become NaN, which no comparison passes."""
-    if s.dtype.kind == "f":
-        return s.to_numpy("f8")
-    codes, uniq = pd.factorize(s)
-    table = np.empty(len(uniq) + 1)
-    table[-1] = np.nan  # factorize codes nulls as -1
-    for i, v in enumerate(np.asarray(uniq).tolist()):  # Python scalars compare exactly
-        table[i] = outward(v, up)
-    return table[codes]
+def _bound(a: pa.Array, up: bool) -> np.ndarray:
+    """A window-bound column as float64, each value ``outward`` rounded
+    once per distinct value. SQL literals such as ``-90.5`` arrive as
+    decimals; nulls become NaN, which no comparison passes."""
+    if pa.types.is_floating(a.type):
+        return _f8(a)
+    codes = a.dictionary_encode()
+    table = [outward(v, up) for v in codes.dictionary.to_pylist()]  # exact Python scalars
+    return np.array(table + [np.nan])[codes.indices.fill_null(len(table)).to_numpy()]
 
 
-@pandas_udf(BooleanType())
+@arrow_udf(BooleanType())
 def st_envelope_intersects(
-    g: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
-) -> pd.Series:
+    g: pa.Array, x0: pa.Array, y0: pa.Array, x1: pa.Array, y1: pa.Array
+) -> pa.Array:
     """ST_EnvelopeIntersects(geom, x0, y0, x1, y1): does the geometry's
     envelope overlap the window? The exact per-row refine behind the
     SQL-string pushdown rewrite (geo/sqlrewrite.py), where it cannot be
     lowered to JVM comparisons — same predicate spatial_window_filter
     applies through the DataFrame API."""
-    env = wkb.envelopes(pa.array(g, type=pa.large_binary()))
+    env = wkb.envelopes(g)
     hit = (
         (env[:, 0] <= _bound(x1, up=False))
         & (env[:, 2] >= _bound(x0, up=True))
         & (env[:, 1] <= _bound(y1, up=False))
         & (env[:, 3] >= _bound(y0, up=True))
-    ).astype(object)
-    hit[g.isna().to_numpy()] = None
-    return pd.Series(hit, dtype="object")
+    )
+    return pa.array(hit, mask=g.is_null().to_numpy(zero_copy_only=False))
 
 
-@pandas_udf(DoubleType())
-def st_area(g: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if v is None else wkb.area(wkb.decode(v)) for v in g], dtype="f8"
+@arrow_udf(DoubleType())
+def st_area(g: pa.Array) -> pa.Array:
+    return _per_row(lambda v: wkb.area(wkb.decode(v)), pa.float64(), g)
+
+
+@arrow_udf(DoubleType())
+def st_length(g: pa.Array) -> pa.Array:
+    return _per_row(lambda v: wkb.length(wkb.decode(v)), pa.float64(), g)
+
+
+@arrow_udf(BinaryType())
+def st_centroid(g: pa.Array) -> pa.Array:
+    return _per_row(
+        lambda v: wkb.encode(("Point", wkb.centroid(wkb.decode(v)))), pa.binary(), g
     )
 
 
-@pandas_udf(DoubleType())
-def st_length(g: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if v is None else wkb.length(wkb.decode(v)) for v in g], dtype="f8"
-    )
-
-
-@pandas_udf(BinaryType())
-def st_centroid(g: pd.Series) -> pd.Series:
-    def one(v):
-        if v is None:
-            return None
-        return wkb.encode(("Point", wkb.centroid(wkb.decode(v))))
-
-    return pd.Series([one(v) for v in g])
-
-
-@pandas_udf(StringType())
-def st_astext(g: pd.Series) -> pd.Series:
-    return pd.Series([None if v is None else wkb.to_wkt(wkb.decode(v)) for v in g])
+@arrow_udf(StringType())
+def st_astext(g: pa.Array) -> pa.Array:
+    return _per_row(lambda v: wkb.to_wkt(wkb.decode(v)), pa.string(), g)
 
 
 @arrow_udf(DoubleType())
@@ -265,48 +271,40 @@ def st_distance(a: pa.Array, b: pa.Array) -> pa.Array:
     return _doubles(np.hypot(bx - ax, by - ay))
 
 
-@pandas_udf(BooleanType())
-def st_contains_point(poly: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
+@arrow_udf(BooleanType())
+def st_contains_point(poly: pa.Array, x: pa.Array, y: pa.Array) -> pa.Array:
     """ST_Contains(polygon, point) via ray-cast (D8). Decodes each
     distinct polygon once per batch — the common shape is one query
     polygon broadcast against many points."""
-    cache: dict[bytes, tuple] = {}
-    xs = x.to_numpy("f8")
-    ys = y.to_numpy("f8")
-    out = np.zeros(len(poly), dtype=bool)
-    for i, p in enumerate(poly):
-        if p is None:
-            continue
-        key = bytes(p)
-        geom = cache.get(key)
-        if geom is None:
-            geom = cache[key] = wkb.decode(key)
-        out[i] = wkb.contains(geom, xs[i], ys[i])
-    return pd.Series(out)
+    polygons: dict[bytes, tuple] = {}
+
+    def one(p: bytes, px, py) -> bool:
+        if p not in polygons:
+            polygons[p] = wkb.decode(p)
+        return wkb.contains(polygons[p], float(px), float(py))
+
+    return _per_row(one, pa.bool_(), poly, x, y)
 
 
-@pandas_udf(BinaryType())
-def st_buffer(g: pd.Series, dist: pd.Series, segs: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def st_buffer(g: pa.Array, dist: pa.Array, segs: pa.Array) -> pa.Array:
     """Point buffer -> regular polygon approximation (D9; points only —
     the reference's shapely closure covers general buffer, flagged hard
     and lowest-priority in SURVEY.md §7.M2)."""
 
-    def one(v, d, n):
-        if v is None:
-            return None
+    def one(v: bytes, d, n) -> bytes:
         kind, val = wkb.decode(v)
         if kind != "Point":
             raise ValueError("st_buffer implemented for points only")
-        d = float(d)  # SQL literals may arrive as decimal.Decimal
-        n = int(n)
-        ang = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+        d = float(d)  # SQL literals arrive as decimal.Decimal
+        ang = np.linspace(0.0, 2 * np.pi, int(n), endpoint=False)
         ring = np.column_stack(
             [val[0] + d * np.cos(ang), val[1] + d * np.sin(ang)]
         )
         ring = np.vstack([ring, ring[:1]])
         return wkb.encode(("Polygon", [ring]))
 
-    return pd.Series([one(v, d, n) for v, d, n in zip(g, dist, segs)])
+    return _per_row(one, pa.binary(), g, dist, segs)
 
 
 def _douglas_peucker(a: np.ndarray, tol: float) -> np.ndarray:
@@ -337,13 +335,11 @@ def _douglas_peucker(a: np.ndarray, tol: float) -> np.ndarray:
     return a[keep]
 
 
-@pandas_udf(BinaryType())
-def st_simplify(g: pd.Series, tol: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def st_simplify(g: pa.Array, tol: pa.Array) -> pa.Array:
     """Douglas-Peucker simplification for LineString/Polygon rings (D9)."""
 
-    def one(v, t):
-        if v is None:
-            return None
+    def one(v: bytes, t) -> bytes:
         kind, val = wkb.decode(v)
         if kind == "LineString":
             return wkb.encode((kind, _douglas_peucker(val, t)))
@@ -351,24 +347,22 @@ def st_simplify(g: pd.Series, tol: pd.Series) -> pd.Series:
             return wkb.encode((kind, [_douglas_peucker(r, t) for r in val]))
         return v  # other kinds pass through unchanged
 
-    return pd.Series([one(v, t) for v, t in zip(g, tol)])
+    return _per_row(one, pa.binary(), g, tol)
 
 
-@pandas_udf(IntegerType())
-def st_num_geometries(g: pd.Series) -> pd.Series:
+@arrow_udf(IntegerType())
+def st_num_geometries(g: pa.Array) -> pa.Array:
     """ST_NumGeometries: part count of a Multi*/GeometryCollection,
     1 for a single geometry (PostGIS semantics), None for NULL."""
 
-    def one(v):
-        if v is None:
-            return None
+    def one(v: bytes) -> int:
         kind, val = wkb.decode(v)
         if kind in ("MultiPoint", "MultiLineString", "MultiPolygon",
                     "GeometryCollection"):
             return len(val)
         return 1
 
-    return pd.Series([one(v) for v in g], dtype="object")
+    return _per_row(one, pa.int32(), g)
 
 
 _UDFS = {

@@ -80,12 +80,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geoparquet_python_spark import io as pio
 from geoparquet_python_spark.geo import wkb
-from geoparquet_python_spark.geo.functions import _BBOX_TYPE, ENVELOPE_OF, st_envelope
+from geoparquet_python_spark.geo.functions import _BBOX_TYPE, ENVELOPE_OF
 
 GEO_KEY = b"geo"
 # Pre-spec key the reference used (SURVEY.md §0.2 — exact name uncertain,
@@ -120,18 +119,17 @@ def _geo_metadata_json(
     bbox: list | None,
     geometry_types: list[str] | None = None,
     extra_cols: dict[str, dict] | None = None,
-    covering: bool = False,
 ) -> bytes:
     """Spec `geo` doc: the primary column entry plus any SECONDARY
     geometry columns (GeoParquet allows several; exactly one is
     primary_column). Secondaries carry encoding/crs/geometry_types;
-    the dataset bbox, and the ``covering`` when the file has a ``bbox``
-    column, ride on the primary."""
+    the dataset bbox and the ``bbox`` column's ``covering`` ride on the
+    primary."""
     doc = {
         "version": SPEC_VERSION,
         "primary_column": geometry_col,
         "columns": {
-            geometry_col: _geo_column_entry(crs, bbox, geometry_types, covering),
+            geometry_col: _geo_column_entry(crs, bbox, geometry_types, covering=True),
             **(extra_cols or {}),
         },
     }
@@ -179,22 +177,11 @@ def _type_code_names(codes: set[int]) -> list[str]:
     return sorted(set(names))
 
 
-def add_bbox_column(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
-    """Materialize the GeoParquet-1.1 covering column: a
-    {xmin,ymin,xmax,ymax} struct. Plain comparisons against its fields
-    are pushed to Parquet row-group stats by Spark's scan — this column
-    IS the spatial index at 100 TB. ``write_geoparquet`` builds the same
-    column inside its own kernel instead; this is for frames used
-    without a write."""
-    return df.withColumn("bbox", st_envelope(F.col(geometry_col)))
-
-
 def write_geoparquet(
     df: DataFrame,
     path: str,
     geometry_col: str = "geometry",
     crs: Any = "OGC:CRS84",
-    bbox_covering: bool = True,
     secondary_geometry_cols: list[str] | None = None,
 ) -> int:
     """Distributed GeoParquet sink; returns rows written.
@@ -203,14 +190,14 @@ def write_geoparquet(
     OGC ``geo`` key-value metadata — written by pyarrow inside
     ``mapInArrow``, so the stamping is executor-side and single-pass
     (the reference's ``replace_schema_metadata`` + ``pq.write_table``,
-    geoparquet/__init__.py:35–40≈, parallelized). With ``bbox_covering``
-    and no ``bbox`` column in ``df``, the same kernel appends the covering
-    struct to every batch (a null field where a bound is NaN, as Spark's
-    pandas conversion gives), so the rows cross into Python once; the
-    schema-only part of an all-empty write carries the field too. A part
-    file with a ``bbox`` column declares it as the primary column's 1.1
-    ``covering``, and carries the envelope mark (module docstring) when
-    the kernel built it or found it equal to the geometry's envelope.
+    geoparquet/__init__.py:35–40≈, parallelized). When ``df`` has no
+    ``bbox`` column, the same kernel appends the covering struct to every
+    batch (a null field where a bound is NaN), so the rows cross into
+    Python once; the schema-only part of an all-empty write carries the
+    field too. Every part file declares ``bbox`` as the primary column's
+    1.1 ``covering``, and carries the envelope mark (module docstring)
+    when the kernel built it or found it equal to the geometry's
+    envelope.
 
     Task-commit protocol (retries/speculation are routine at 100 TB):
     each attempt writes to a hidden temp name derived from
@@ -227,12 +214,12 @@ def write_geoparquet(
     for c in [geometry_col, *secondary]:
         if c not in df.columns:
             raise ValueError(f"geometry column {c!r} not in {df.columns}")
-    add_bbox = bbox_covering and "bbox" not in df.columns
-    has_bbox = bbox_covering or "bbox" in df.columns
+    add_bbox = "bbox" not in df.columns
 
     os.makedirs(path, exist_ok=True)
 
     def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -251,7 +238,7 @@ def write_geoparquet(
         ext = [inf, inf, -inf, -inf]  # xmin, ymin, xmax, ymax
         codes: set[int] = set()
         sec_codes: dict[str, set[int]] = {c: set() for c in secondary}
-        exact = has_bbox  # is every row's bbox its geometry's envelope?
+        exact = True  # is every row's bbox its geometry's envelope?
         for batch in batches:
             if add_bbox:
                 batch = batch.append_column(
@@ -264,15 +251,12 @@ def write_geoparquet(
             codes |= _wkb_type_codes(batch.column(geometry_col))
             for c in secondary:
                 sec_codes[c] |= _wkb_type_codes(batch.column(c))
-            if "bbox" in batch.schema.names:
-                import pyarrow.compute as pc
-
-                box = batch.column("bbox")
-                for i, field in enumerate(wkb.ENVELOPE_FIELDS):
-                    key, pick = ("min", min) if i < 2 else ("max", max)
-                    v = pc.min_max(pc.struct_field(box, field)).as_py()[key]
-                    if v is not None:
-                        ext[i] = pick(ext[i], v)
+            box = batch.column("bbox")
+            for i, field in enumerate(wkb.ENVELOPE_FIELDS):
+                key, pick = ("min", min) if i < 2 else ("max", max)
+                v = pc.min_max(pc.struct_field(box, field)).as_py()[key]
+                if v is not None:
+                    ext[i] = pick(ext[i], v)
         bbox = ext if ext[0] <= ext[2] else None
         meta_json = _geo_metadata_json(
             geometry_col,
@@ -283,7 +267,6 @@ def write_geoparquet(
                 c: _geo_column_entry(crs, None, _type_code_names(sec_codes[c]))
                 for c in secondary
             },
-            covering=has_bbox,
         )
         writer = None
         try:
@@ -329,10 +312,9 @@ def write_geoparquet(
                  extra_cols={
                      c: _geo_column_entry(crs, None, []) for c in secondary
                  },
-                 covering=has_bbox,
              )}
         )
-        if has_bbox and _is_envelope(
+        if _is_envelope(
             tbl.column("bbox").combine_chunks(),
             tbl.column(geometry_col).combine_chunks(),
         ):

@@ -7,7 +7,7 @@ or rounded to 6 decimals where libm ulp differences could leak
 (precedent: operators/scalars.py q_math_functions).
 
 The WKB encode→decode chain (reference geoparquet/__init__.py:30≈,:60≈)
-runs INSIDE the queries via the ST_* pandas UDFs, so the oracle equality
+runs INSIDE the queries via the ST_* Arrow UDFs, so the oracle equality
 proves codec correctness end-to-end, not just query-shape parity.
 """
 
@@ -282,7 +282,7 @@ def _halfplane_sql(px: str, py: str) -> str:
     """,
 )
 def q_geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST_Contains(pentagon, customer point) via the ray-cast pandas UDF
+    """ST_Contains(pentagon, customer point) via the ray-cast Arrow UDF
     (D8); the oracle proves the same membership with five half-plane
     sign tests — two independent algorithms agreeing on every row."""
     pts = _points(spark, sf_dir, "customer", "c_custkey")
@@ -640,12 +640,11 @@ def q_geo_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # divisions by p in {1,2,3} land on integers or exact halves by
 # construction of the center grid).
 
-from pyspark.sql.functions import pandas_udf  # noqa: E402
+import pyarrow as pa  # noqa: E402
+from pyspark.sql.functions import arrow_udf  # noqa: E402
 from pyspark.sql.types import BinaryType  # noqa: E402
 
-import pandas as pd  # noqa: E402
-
-from geoparquet_python_spark.geo.functions import st_num_geometries  # noqa: E402
+from geoparquet_python_spark.geo.functions import _per_row, st_num_geometries  # noqa: E402
 
 
 def _territory_params(k: int) -> tuple[int, int]:
@@ -653,13 +652,12 @@ def _territory_params(k: int) -> tuple[int, int]:
     return k % 3 + 1, k % 4 + 1
 
 
-@pandas_udf(BinaryType())
-def _territory_wkb(keys: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def _territory_wkb(keys: pa.Array) -> pa.Array:
     """MultiPolygon of p axis-aligned squares (side s, centers
     (10k+7i, 5k-4i)) — CCW shells, no holes."""
 
-    def one(v):
-        k = int(v)
+    def one(k: int) -> bytes:
         p, s = _territory_params(k)
         h = s / 2.0
         polys = []
@@ -675,16 +673,15 @@ def _territory_wkb(keys: pd.Series) -> pd.Series:
             polys.append([ring])
         return wkb.encode(("MultiPolygon", polys))
 
-    return pd.Series([one(v) for v in keys])
+    return _per_row(one, pa.binary(), keys)
 
 
-@pandas_udf(BinaryType())
-def _routes_wkb(keys: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def _routes_wkb(keys: pa.Array) -> pa.Array:
     """MultiLineString of p segments, each a 3-4-5 hypotenuse from the
     matching square's center — per-segment length exactly 5.0."""
 
-    def one(v):
-        k = int(v)
+    def one(k: int) -> bytes:
         p, _ = _territory_params(k)
         lines = []
         for i in range(p):
@@ -692,7 +689,7 @@ def _routes_wkb(keys: pd.Series) -> pd.Series:
             lines.append([[cx, cy], [cx + 3.0, cy + 4.0]])
         return wkb.encode(("MultiLineString", lines))
 
-    return pd.Series([one(v) for v in keys])
+    return _per_row(one, pa.binary(), keys)
 
 
 @query(
@@ -752,15 +749,14 @@ def q_geo_multipart_territories(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("n_nationkey")
 
 
-@pandas_udf(BinaryType())
-def _landmark_wkb(keys: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def _landmark_wkb(keys: pa.Array) -> pa.Array:
     """GeometryCollection per nation: capital Point at (10k, 5k), one
     territory square (side s, center (10k+7, 5k-4)), one 3-4-5 route
     segment from (10k+14, 5k-8) — the heterogeneous-geometry case the
     Multi* types can't represent."""
 
-    def one(v):
-        k = int(v)
+    def one(k: int) -> bytes:
         _, s = _territory_params(k)
         h = s / 2.0
         cx, cy = 10.0 * k + 7.0, 5.0 * k - 4.0
@@ -783,7 +779,7 @@ def _landmark_wkb(keys: pd.Series) -> pd.Series:
             )
         )
 
-    return pd.Series([one(v) for v in keys])
+    return _per_row(one, pa.binary(), keys)
 
 
 @query(

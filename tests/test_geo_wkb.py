@@ -256,18 +256,17 @@ def test_headers_read_byte_order_and_type_code():
 
 
 def test_envelope_intersects_decimal_bounds_match_exact_comparison():
-    """SQL literal bounds arrive as Decimal, and comparing a float against
-    a Decimal in Python is exact; the vectorized refine must give the
-    same answers as that per-row comparison, nulls included."""
+    """SQL literal bounds arrive as decimals, and comparing a float
+    against a Decimal in Python is exact; the vectorized refine must give
+    the same answers as that per-row comparison, nulls included, for
+    decimal128, float64 and int64 bound columns."""
     from decimal import Decimal
-
-    import pandas as pd
 
     from geoparquet_python_spark.geo.functions import st_envelope_intersects
 
     def per_row(g, x0, y0, x1, y1):
         out = []
-        for v, a, b, c, d in zip(g, x0, y0, x1, y1):
+        for v, a, b, c, d in zip(*(col.to_pylist() for col in (g, x0, y0, x1, y1))):
             if v is None:
                 out.append(None)
                 continue
@@ -275,7 +274,7 @@ def test_envelope_intersects_decimal_bounds_match_exact_comparison():
             out.append(bool(xmin <= c and xmax >= a and ymin <= d and ymax >= b))
         return out
 
-    g = pd.Series(
+    g = pa.array(
         [
             wkb.encode(("Point", (0.1, 0.2))),
             None,
@@ -284,17 +283,38 @@ def test_envelope_intersects_decimal_bounds_match_exact_comparison():
             wkb.encode(("Polygon", [_SQ / 40])),
             _be_point(0.1, 0.1),
         ],
-        dtype=object,
+        pa.binary(),
     )
     n = len(g)
-    bounds = [Decimal("0.1"), 0.1, Decimal("0.2"), Decimal("1e400"), 2**53 + 1]
+    bounds = [Decimal("0.1"), 0.1, Decimal("0.2"), 2**53 + 1, Decimal("-90.5")]
     for lo in bounds:
         for hi in bounds:
-            args = [pd.Series([lo] * n), pd.Series([lo] * n),
-                    pd.Series([hi] * n), pd.Series([hi] * n)]
-            got = st_envelope_intersects.func(g, *args).tolist()
-            assert got == per_row(g, *args), (lo, hi)
-            assert [type(v) for v in got] == [type(v) for v in per_row(g, *args)]
+            args = [pa.array([lo] * n), pa.array([lo] * n),
+                    pa.array([hi] * n), pa.array([hi] * n)]
+            got = st_envelope_intersects.func(g, *args)
+            assert got.type == pa.bool_()
+            assert got.to_pylist() == per_row(g, *args), (lo, hi)
+    assert {pa.array([b]).type.id for b in bounds} == {
+        pa.decimal128(1, 1).id, pa.float64().id, pa.int64().id}
+
+
+def test_outward_rounds_a_bound_beyond_every_double_exactly():
+    """A bound no Arrow decimal holds (``sqlrewrite`` primes literals
+    with ``outward`` too) still rounds toward the outside of the window."""
+    import sys
+    from decimal import Decimal
+
+    from geoparquet_python_spark.geo.functions import outward
+
+    big = sys.float_info.max
+    assert outward(Decimal("1e400"), up=True) == np.inf
+    assert outward(Decimal("1e400"), up=False) == big
+    assert outward(Decimal("-1e400"), up=False) == -np.inf
+    assert outward(Decimal("-1e400"), up=True) == -big
+    # each is on the same side of every double as the Decimal itself
+    for f in (big, -big, 0.1):
+        assert (f <= outward(Decimal("1e400"), up=False)) == (f <= Decimal("1e400"))
+        assert (f >= outward(Decimal("-1e400"), up=True)) == (f >= Decimal("-1e400"))
 
 
 # ----------------------------------------------- batch point decoder

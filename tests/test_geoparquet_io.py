@@ -489,9 +489,8 @@ def test_geo_sql_binds_frames_by_name(spark):
     from geoparquet_python_spark.geo.sqlrewrite import geo_sql
 
     pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 5.0, 5.0)], ["id", "x", "y"])
-    pts = gio.add_bbox_column(
-        pts.select("id", st_point(F.col("x"), F.col("y")).alias("geometry"))
-    )
+    pts = pts.select("id", st_point(F.col("x"), F.col("y")).alias("geometry"))
+    pts = pts.withColumn("bbox", st_envelope(F.col("geometry")))
     got = geo_sql(
         spark,
         "SELECT id FROM {pts} WHERE ST_EnvelopeIntersects(geometry, 0, 0, 1, 1)",
@@ -548,7 +547,7 @@ def test_write_builds_bbox_in_its_kernel_byte_identical(spark, tmp_path):
     routes = {
         "kernel": lambda d: d,
         "pandas_udf": lambda d: d.withColumn("bbox", _pandas_envelope(F.col("geometry"))),
-        "arrow_udf": gio.add_bbox_column,
+        "arrow_udf": lambda d: d.withColumn("bbox", st_envelope(F.col("geometry"))),
     }
     for label, frame in [("rows", _mixed_frame(spark)),
                          ("empty", _mixed_frame(spark).where(F.lit(False)))]:
@@ -591,20 +590,9 @@ def test_write_plan_is_one_map_in_arrow(spark, tmp_path, monkeypatch):
     assert "ArrowEvalPython" not in plan, plan
 
     plans.clear()
-    gio.write_geoparquet(gio.add_bbox_column(df), str(tmp_path / "udf"), "geometry")
+    gio.write_geoparquet(
+        df.withColumn("bbox", st_envelope(F.col("geometry"))), str(tmp_path / "udf"), "geometry")
     assert "ArrowEvalPython" in plans[0]
-
-
-def test_no_covering_without_bbox(spark, tmp_path):
-    """``bbox_covering=False`` on a frame without ``bbox`` writes no
-    ``bbox`` column, so no file declares a 1.1 ``covering``."""
-    out = str(tmp_path / "nobbox")
-    gio.write_geoparquet(_mixed_frame(spark), out, "geometry", bbox_covering=False)
-    for f in _part_bytes(out):
-        doc = json.loads(pq.read_schema(f"{out}/{f}").metadata[gio.GEO_KEY])
-        assert "covering" not in doc["columns"]["geometry"]
-    assert "covering" not in gio.geo_metadata(out)["columns"]["geometry"]
-    assert "bbox" not in gio.read_geoparquet(spark, out).columns
 
 
 # ------------------------------------------------ the envelope mark
@@ -613,7 +601,7 @@ def test_no_covering_without_bbox(spark, tmp_path):
 _ROUTES = {
     "kernel": lambda d: d,
     "pandas_udf": lambda d: d.withColumn("bbox", _pandas_envelope(F.col("geometry"))),
-    "arrow_udf": gio.add_bbox_column,
+    "arrow_udf": lambda d: d.withColumn("bbox", st_envelope(F.col("geometry"))),
 }
 
 
