@@ -189,8 +189,8 @@ def test_udf_matches_the_per_row_codec_on_edge_rows(spark, edge_rows, name):
 
 def test_a_null_argument_gives_null(spark, edge_rows):
     """A NULL polygon or point coordinate makes ST_ContainsPoint NULL, not
-    FALSE; a NULL distance or tolerance makes ST_Buffer and ST_Simplify
-    NULL."""
+    FALSE; a NULL distance, segment count or tolerance makes ST_Buffer
+    and ST_Simplify NULL."""
     got = spark.sql("""
         SELECT i, ST_ContainsPoint(g, 0.5, 0.5) AS inside,
                ST_ContainsPoint(g, CAST(NULL AS DOUBLE), 0.5) AS null_x,
